@@ -29,7 +29,7 @@ import functools
 import os
 import time
 from collections.abc import Sequence
-from contextlib import contextmanager
+from contextlib import ExitStack, contextmanager
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -229,6 +229,25 @@ class GrapeVectorDB:
         )
         self._mutated()
 
+    @contextmanager
+    def _materialized(self, df: DataFrame):
+        """Evaluate ``df`` ONCE into executor storage and hand out that
+        copy; its blocks are released when the block exits, on success
+        or error. An eager localCheckpoint, not a lazy persist: the
+        first consumer may read only part of a lazy cache (a limit(1)
+        probe), and the cut lineage keeps every consumer's plan a plain
+        scan of the stored rows. This is the write path's one
+        materialization mechanism: add_documents evaluates the caller's
+        batches through it, delete_documents its doomed id set, and the
+        payload/text index publishes their posting tables."""
+        cp = df.localCheckpoint(eager=True)
+        try:
+            yield cp
+        finally:
+            # the checkpoint's blocks live under the RDD its LogicalRDD
+            # wraps; the DataFrame API has no release for them
+            cp._jdf.queryExecution().logical().rdd().unpersist(False)
+
     # -- publish-time statistics (the planner's zero-job inputs) ------------
     #
     # Every versioned publish records _STATS.json (row count + per-table
@@ -247,7 +266,12 @@ class GrapeVectorDB:
         if cached is not None and cached[0] == key:
             return cached[1]
         st = read_table_stats(self.spark, self._path(table))
-        self._stats_cache[table] = (key, st)
+        if st is not None:
+            # a missing sidecar is NOT cached: a reader landing between a
+            # version's _SUCCESS and its _STATS.json would otherwise keep
+            # None for that version (e.g. _ivf_replicas reading 1 for a
+            # replicas=2 layout) after the sidecar lands
+            self._stats_cache[table] = (key, st)
         return st
 
     def _ivf_replicas(self) -> int:
@@ -417,70 +441,88 @@ class GrapeVectorDB:
 
         Mismatched embedding dimensions are rejected up front (reference
         src/index.rs:165-175) — without this check a single bad batch
-        silently corrupts every later search."""
-        if embeddings is not None:
-            self._validate_dimension(embeddings)
-        self._merge("documents", docs)
-        if self._has("index_payload"):
-            # postings derive from DOCUMENTS metadata: any docs merge
-            # (with or without embeddings) can change indexed values, so
-            # swap the batch ids' posting rows against the post-merge
-            # table — null fields in the update preserved existing
-            # values, and the re-derivation sees exactly what the merge
-            # kept
-            self._refresh_payload_rows(
-                docs.select(F.col(self.id_col).alias("vec_id")).distinct()
-            )
-        if self._has("index_terms"):
-            # the inverted index derives from documents TEXT: any docs
-            # merge can change it — swap the batch ids' term rows
-            self._refresh_text_index(
-                docs.select(F.col(self.id_col).alias("vec_id")).distinct()
-            )
-        if self._has("index_partition"):
-            # a changed partition-column value MOVES the row's directory
-            # in the co-partitioned layout — without this, a pruned
-            # search would keep serving the id under its old value while
-            # the semi-join path sees the new one. Runs for EVERY docs
-            # batch (not just metadata-only ones): the embeddings-batch
-            # refresh in _refresh_indexes swaps only the ids carried by
-            # the EMBEDDINGS batch, so a docs-only tenant move riding
-            # alongside an unrelated embeddings batch used to be
-            # skipped (overlapping ids are swapped twice to the same
-            # values — idempotent)
-            st = self._table_stats("index_partition") or {}
-            col = st.get("partition_column")
-            if col and col in docs.columns and self._has("embeddings"):
-                ids = docs.select(
-                    F.col(self.id_col).alias("vec_id")
-                ).distinct()
-                fresh = (
-                    self.embeddings()
-                    .join(F.broadcast(ids), "vec_id", "left_semi")
-                    .select("vec_id", self.vec_col)
-                    .join(
-                        self.documents().select(
-                            F.col(self.id_col).alias("vec_id"), F.col(col)
-                        ),
-                        "vec_id",
+        silently corrupts every later search.
+
+        Evaluate-once contract: each caller batch's lineage runs exactly
+        once. Both batches are materialized at entry (_materialized) and
+        every consumer reads that one copy: the dimension check (over
+        EVERY raw embeddings row), the documents merge, the payload /
+        text / partition refresh, the embeddings merge and each index
+        refresh. Duplicate ids collapse once, with the merge's winner
+        rule, so the tables and every index absorb the same row per id.
+        A lineage that is expensive (an embedding-model UDF) costs one
+        pass, and a nondeterministic one (rand) cannot leave documents
+        and indexes disagreeing. The copies are released when the call
+        returns or raises."""
+        from .sources.tables import _dedup_updates
+
+        with ExitStack() as held:
+            if embeddings is not None:
+                # the raw copy is needed only until the collapsed one
+                # exists (a checkpoint does not read its input again)
+                with self._materialized(embeddings) as raw:
+                    self._validate_dimension(raw)
+                    embeddings = held.enter_context(
+                        self._materialized(_dedup_updates(raw, "vec_id"))
                     )
-                )
-                kept = self._read("index_partition").join(
-                    F.broadcast(ids), "vec_id", "left_anti"
-                )
-                self._publish(
-                    "index_partition", kept.unionByName(fresh),
-                    partition_by=[col],
-                    extra_stats={"partition_column": col},
-                )
-        if embeddings is not None:
-            self._merge(
-                "embeddings", embeddings, id_col="vec_id",
-                # the stored dimension rides the sidecar so the next
-                # batch's validation needs no table probe
-                stats_exprs={"dim": f"max(size({self.vec_col}))"},
+            docs = held.enter_context(
+                self._materialized(_dedup_updates(docs, self.id_col))
             )
-            self._refresh_indexes(embeddings)
+            ids = docs.select(F.col(self.id_col).alias("vec_id"))  # unique
+            self._merge("documents", docs)
+            if self._has("index_payload"):
+                # postings derive from DOCUMENTS metadata: any docs merge
+                # (with or without embeddings) can change indexed values, so
+                # swap the batch ids' posting rows against the post-merge
+                # table — null fields in the update preserved existing
+                # values, and the re-derivation sees exactly what the merge
+                # kept
+                self._refresh_payload_rows(ids)
+            if self._has("index_terms"):
+                # the inverted index derives from documents TEXT: any docs
+                # merge can change it — swap the batch ids' term rows
+                self._refresh_text_index(ids)
+            if self._has("index_partition"):
+                # a changed partition-column value MOVES the row's directory
+                # in the co-partitioned layout — without this, a pruned
+                # search would keep serving the id under its old value while
+                # the semi-join path sees the new one. Runs for EVERY docs
+                # batch (not just metadata-only ones): the embeddings-batch
+                # refresh in _refresh_indexes swaps only the ids carried by
+                # the EMBEDDINGS batch, so a docs-only tenant move riding
+                # alongside an unrelated embeddings batch used to be
+                # skipped (overlapping ids are swapped twice to the same
+                # values — idempotent)
+                st = self._table_stats("index_partition") or {}
+                col = st.get("partition_column")
+                if col and col in docs.columns and self._has("embeddings"):
+                    fresh = (
+                        self.embeddings()
+                        .join(F.broadcast(ids), "vec_id", "left_semi")
+                        .select("vec_id", self.vec_col)
+                        .join(
+                            self.documents().select(
+                                F.col(self.id_col).alias("vec_id"), F.col(col)
+                            ),
+                            "vec_id",
+                        )
+                    )
+                    kept = self._read("index_partition").join(
+                        F.broadcast(ids), "vec_id", "left_anti"
+                    )
+                    self._publish(
+                        "index_partition", kept.unionByName(fresh),
+                        partition_by=[col],
+                        extra_stats={"partition_column": col},
+                    )
+            if embeddings is not None:
+                self._merge(
+                    "embeddings", embeddings, id_col="vec_id",
+                    # the stored dimension rides the sidecar so the next
+                    # batch's validation needs no table probe
+                    stats_exprs={"dim": f"max(size({self.vec_col}))"},
+                )
+                self._refresh_indexes(embeddings)
 
     def _refresh_indexes(self, batch: DataFrame) -> None:
         """Incremental index maintenance on insert. The reference rebuilds
@@ -500,15 +542,14 @@ class GrapeVectorDB:
         ref:src/query.rs:257-269); every publish is the versioned swap,
         so a search running mid-refresh reads old-or-new, never partial.
 
-        The batch is collapsed to one row per vec_id FIRST — with the
-        same winner rule the embeddings merge applies — so the index
-        absorbs exactly the rows the merge kept. Encoding the raw batch
+        Evaluate-once contract: ``batch`` is add_documents' materialized
+        copy, already collapsed to one row per vec_id with the winner
+        rule the embeddings merge applies, so every index (ivf, packed,
+        sq, graph, partition) encodes exactly the rows the merge kept
+        and none re-runs the caller's lineage. Encoding a raw batch
         would leave duplicate posting rows per id (one pointing at a
         vector that no longer exists) whenever a client batch repeats an
         id, an explicitly supported shape."""
-        from .sources.tables import _dedup_updates
-
-        batch = _dedup_updates(batch, "vec_id")
         ids = batch.select("vec_id")
         if self._has("index_ivf"):
             cents, assigned = ann.load_index(
@@ -667,7 +708,10 @@ class GrapeVectorDB:
             )
             return
         if self._has(table):
-            merged = merge_upsert(self._read(table), updates, id_col=id_col)
+            # add_documents already collapsed the batch to one row per id
+            merged = merge_upsert(
+                self._read(table), updates, id_col=id_col, _pre_deduped=True
+            )
         else:
             merged = updates
         self._publish(table, merged, stats_exprs=stats_exprs)
@@ -706,18 +750,25 @@ class GrapeVectorDB:
         ref:src/index.rs:46-47) — otherwise searches keep returning
         dead ids that hydrate to nothing. All removals are anti-joins
         against the doomed id set; every publish is the versioned swap."""
-        from .sources.tables import delete_where
-
         docs = self.documents()
         # Materialize the doomed id set EAGERLY, before the first publish:
         # the lazy plan reads the documents table, and the cascade below
         # publishes a new documents version before the embeddings/index
         # anti-joins would otherwise evaluate it. That was only safe via an
         # implicit retention invariant (publish keeps >= 1 prior version);
-        # checkpointing removes the dependency on retention entirely.
-        doomed = docs.where(F.expr(predicate) == True).select(  # noqa: E712
-            F.col(self.id_col).alias("vec_id")
-        ).localCheckpoint(eager=True)
+        # materializing removes the dependency on retention entirely.
+        with self._materialized(
+            docs.where(F.expr(predicate) == True).select(  # noqa: E712
+                F.col(self.id_col).alias("vec_id")
+            )
+        ) as doomed:
+            self._delete_cascade(docs, predicate, doomed)
+
+    def _delete_cascade(
+        self, docs: DataFrame, predicate: str, doomed: DataFrame
+    ) -> None:
+        from .sources.tables import delete_where
+
         self._overwrite("documents", delete_where(docs, predicate))
         if self._has("embeddings"):
             self._overwrite(
@@ -1064,6 +1115,11 @@ class GrapeVectorDB:
         (operators.payload owns the layout and the BOUNDED histogram —
         shared with the streaming twin).
 
+        Evaluate-once contract: the laid-out ``postings`` (on refresh and
+        delete, ``kept ∪ fresh`` over the stored index) is materialized
+        once; both sidecar aggregates and the publish write read that
+        copy instead of each re-running the lineage.
+
         Maintenance honesty (same as the partition layout): refresh
         rewrites the whole posting table per batch. The table is three
         narrow columns — orders of magnitude below the data tables — so
@@ -1100,19 +1156,19 @@ class GrapeVectorDB:
         postings = postings.where(
             F.col("field").isin(cols) if cols else F.lit(False)
         )
-        postings = payload_layout(postings)
-        self._publish(
-            "index_payload",
-            postings,
-            partition_by=["field"],
-            extra_stats=payload_sidecar_stats(
+        with self._materialized(payload_layout(postings)) as postings:
+            self._publish(
+                "index_payload",
                 postings,
-                cols,
-                self._row_count("documents"),
-                arr_fields=array_fields(docs, cols),
-                f_types=field_types(docs, cols),
-            ),
-        )
+                partition_by=["field"],
+                extra_stats=payload_sidecar_stats(
+                    postings,
+                    cols,
+                    self._row_count("documents"),
+                    arr_fields=array_fields(docs, cols),
+                    f_types=field_types(docs, cols),
+                ),
+            )
 
     def _publish_text_index(
         self, terms: DataFrame, col: str, tombstone: bool = False
@@ -1127,29 +1183,28 @@ class GrapeVectorDB:
         can have (the min recorded df, or 0 when the vocabulary fits) —
         so match selectivity is exact for head terms and a sound upper
         bound for the tail, with zero query-time jobs. Layout + sidecar
-        are operators.sparse helpers — shared with the streaming twin."""
+        are operators.sparse helpers — shared with the streaming twin.
+        Like the payload publish, the laid-out term table is materialized
+        once and both the sidecar aggregate and the write read it."""
         from .operators.payload import HIST_MAX
 
-        stats = sparse.text_index_sidecar_stats(
-            terms, col, self._row_count("documents"), HIST_MAX
-        )
-        if tombstone:
-            # the indexed column was dropped from a re-published
-            # documents table: record text_col None (the one-column
-            # mirror of the payload index dropping a column from its
-            # sidecar's payload_columns) so match routing, _warm_terms
-            # promotion, and incremental maintenance all see the index
-            # as UNSERVABLE — even if a later re-publish restores the
-            # column, the standing postings cover nothing, and resuming
-            # O(batch) maintenance would silently serve a partial index.
-            # Only an explicit build_index("text") re-tokenizes the
-            # corpus and clears this marker.
-            stats = {**stats, "text_col": None, "dropped_column": col}
-        self._publish(
-            "index_terms",
-            sparse.text_index_layout(terms),
-            extra_stats=stats,
-        )
+        with self._materialized(sparse.text_index_layout(terms)) as terms:
+            stats = sparse.text_index_sidecar_stats(
+                terms, col, self._row_count("documents"), HIST_MAX
+            )
+            if tombstone:
+                # the indexed column was dropped from a re-published
+                # documents table: record text_col None (the one-column
+                # mirror of the payload index dropping a column from its
+                # sidecar's payload_columns) so match routing, _warm_terms
+                # promotion, and incremental maintenance all see the index
+                # as UNSERVABLE — even if a later re-publish restores the
+                # column, the standing postings cover nothing, and resuming
+                # O(batch) maintenance would silently serve a partial index.
+                # Only an explicit build_index("text") re-tokenizes the
+                # corpus and clears this marker.
+                stats = {**stats, "text_col": None, "dropped_column": col}
+            self._publish("index_terms", terms, extra_stats=stats)
 
     def _refresh_text_index(self, ids: DataFrame) -> None:
         """Swap the batch ids' term rows (the O(batch) maintenance shape

@@ -11,14 +11,38 @@ tests in this repo already key on.
 
 from __future__ import annotations
 
+import re
+from collections import Counter
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
+
+# node name at the head of a plan line, past the tree glyphs and the
+# whole-stage-codegen id ("+- *(2) Project [...]" -> "Project")
+_NODE_RE = re.compile(r"^[\s:+\-*]*(?:\(\d+\)\s*)?([A-Za-z][A-Za-z0-9]*)")
+# every operator that ships rows to a Python worker: the row UDF
+# evaluators (BatchEvalPython, ArrowEvalPython[UDTF]) and the Arrow /
+# pandas batch operators (MapInArrow, MapInPandas, FlatMapGroupsInPandas,
+# AggregateInPandas, ...)
+_PYTHON_NODE_RE = re.compile(r"Python|InPandas|InArrow")
 
 
 def plan_string(df: DataFrame) -> str:
     """Formatted executed physical plan (post-AQE initial plan)."""
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def plan_nodes(df: DataFrame) -> Counter:
+    """Occurrences of each physical operator in ``df``'s plan, keyed by
+    node name (``Sort``, ``HashAggregate``, ``MapInArrow``, ...)."""
+    return Counter(name for name, _ in _node_lines(plan_string(df)))
+
+
+def _node_lines(p: str):
+    for line in p.splitlines():
+        m = _NODE_RE.match(line)
+        if m:
+            yield m.group(1), line
 
 
 @dataclass(frozen=True)
@@ -55,9 +79,11 @@ def audit_plan(df: DataFrame) -> PlanAudit:
         assert a.shuffles <= 2
         assert a.single_partition_exchanges == 0
         assert a.cartesian_products == 0 and a.python_evals == 0
-    """
-    import re
 
+    ``python_evals`` counts every Python boundary: row UDF evaluators
+    and the Arrow/pandas batch operators (mapInArrow, mapInPandas,
+    applyInPandas) alike.
+    """
     p = plan_string(df)
     # per-scan flags: ANY scan carrying a non-empty list counts — a
     # whole-string check would false-negative whenever a second,
@@ -74,14 +100,11 @@ def audit_plan(df: DataFrame) -> PlanAudit:
     # AQEShuffleRead, BroadcastQueryStage) are deliberately NOT counted —
     # they re-describe an Exchange node that is itself printed on its own
     # line in the same plan.
-    node_re = re.compile(r"^[\s:+\-*]*(?:\(\d+\)\s*)?([A-Za-z][A-Za-z0-9]*)")
-    fresh_ex = broadcast_ex = reused_ex = single_ex = 0
-    for line in p.splitlines():
-        m = node_re.match(line)
-        if not m:
-            continue
-        name = m.group(1)
-        if name == "ReusedExchange":
+    fresh_ex = broadcast_ex = reused_ex = single_ex = python = 0
+    for name, line in _node_lines(p):
+        if _PYTHON_NODE_RE.search(name):
+            python += 1
+        elif name == "ReusedExchange":
             reused_ex += 1
         elif name == "BroadcastExchange":
             broadcast_ex += 1
@@ -101,5 +124,5 @@ def audit_plan(df: DataFrame) -> PlanAudit:
         scans=p.count("Scan parquet") + p.count("Scan orc"),
         pushed_filters=any(m.strip() for m in pushed),
         partition_filters=any(m.strip() for m in parts),
-        python_evals=p.count("BatchEvalPython") + p.count("ArrowEvalPython"),
+        python_evals=python,
     )

@@ -5,7 +5,9 @@ import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout this conftest lives in, wherever it sits: a worktree, a CI
+# clone or any second copy must test its own package
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from grape_vector_db_spark.session import get_spark  # noqa: E402
 

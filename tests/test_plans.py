@@ -602,3 +602,32 @@ def test_cluster_quota_sample_assignment_is_joinless(spark):
     plan = plan_of(em.queries()["cluster_quota_sample"](spark, SF_DIR))
     assert "Join" not in plan
     assert "MapInPandas" in plan or "mapInPandas" in plan.lower()
+
+
+def test_audit_counts_every_python_boundary(spark, emb):
+    """The RP kernel is a mapInArrow stage: the plan audit (and the
+    profiler's plan_stats, which reads through it) must count it — a
+    `python_evals == 0` assertion used to pass on this plan."""
+    import importlib.util
+    import os
+
+    from grape_vector_db_spark.operators import ann
+    from grape_vector_db_spark.plans.audit import audit_plan
+
+    rp = ann.rp_project(emb, n_out=8, dim=64)
+    assert "MapInArrow" in plan_of(rp)
+    assert audit_plan(rp).python_evals == 1
+    assert audit_plan(emb.select("vec_id")).python_evals == 0
+    assert audit_plan(emb.mapInPandas(lambda it: it, emb.schema)).python_evals == 1
+    grouped = emb.groupBy("label").applyInPandas(lambda d: d, emb.schema)
+    assert audit_plan(grouped).python_evals == 1
+
+    tool = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "tools", "profile_queries.py",
+    )
+    spec = importlib.util.spec_from_file_location("profile_queries", tool)
+    prof = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(prof)
+    assert prof.plan_stats(rp)["pyeval"] == 1
+    assert prof.plan_stats(grouped)["exchanges"] == audit_plan(grouped).shuffles

@@ -4,8 +4,9 @@ For each named query (default: the top-N of tools/bench_baseline_r11.json):
 warm the ingest caches like bench.py does, then run the query 3 times and
 record the median wall, the Spark job/stage/task counts the run generated
 (statusTracker deltas — a direct read on how many scheduler round-trips a
-single logical query costs), and the number of Exchange / Python-eval
-nodes in its formatted plan. Plans go to plans/r11/<name>_<tag>.txt.
+single logical query costs), and its plan shape as plans.audit counts it
+(shuffles, joins, Python stages, sorts, aggregates). Plans go to
+plans/r11/<name>_<tag>.txt.
 
 Usage:
   python tools/profile_queries.py [--tag before|after] [--top N] [name ...]
@@ -19,14 +20,15 @@ import argparse
 import io
 import json
 import os
-import re
 import sys
 import time
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entrymod  # noqa: E402
+from grape_vector_db_spark.plans.audit import audit_plan, plan_nodes  # noqa: E402
 from grape_vector_db_spark.session import get_spark  # noqa: E402
 
 
@@ -47,18 +49,20 @@ def plan_of(df) -> str:
     return buf.getvalue()
 
 
-def plan_stats(plan: str) -> dict:
-    tree = plan.split("\n\n")[0]
+def plan_stats(df) -> dict:
+    """Plan-shape counts of ``df``, read through the library's one plan
+    counter (plans.audit) so the profile and the plan tests agree."""
+    a = audit_plan(df)
+    nodes = plan_nodes(df)
     return {
-        "exchanges": len(re.findall(r"\bExchange\b", tree)),
-        "smj": len(re.findall(r"SortMergeJoin", tree)),
-        "bhj": len(re.findall(r"BroadcastHashJoin", tree)),
-        "bnlj": len(re.findall(r"BroadcastNestedLoopJoin", tree)),
-        "pyeval": len(
-            re.findall(r"BatchEvalPython|ArrowEvalPython|MapInPandas|MapInArrow|FlatMapGroupsInPandas", tree)
-        ),
-        "sorts": len(re.findall(r"\bSort\b", tree)),
-        "aggs": len(re.findall(r"HashAggregate|SortAggregate|ObjectHashAggregate", tree)),
+        "exchanges": a.shuffles,
+        "smj": a.sort_merge_joins,
+        "bhj": a.broadcast_hash_joins,
+        "bnlj": a.nested_loop_joins,
+        "pyeval": a.python_evals,
+        "sorts": nodes["Sort"],
+        "aggs": nodes["HashAggregate"] + nodes["SortAggregate"]
+        + nodes["ObjectHashAggregate"],
     }
 
 
@@ -69,7 +73,7 @@ def main() -> None:
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--runs", type=int, default=3)
     ap.add_argument("--dump-plans", action="store_true")
-    ap.add_argument("--plan-dir", default="/root/repo/plans/r11")
+    ap.add_argument("--plan-dir", default=os.path.join(ROOT, "plans", "r11"))
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
 
@@ -80,7 +84,8 @@ def main() -> None:
     qs = entrymod.queries()
     names = list(args.names)
     if args.top:
-        base = json.load(open("/root/repo/tools/bench_baseline_r11.json"))["queries"]
+        baseline = os.path.join(ROOT, "tools", "bench_baseline_r11.json")
+        base = json.load(open(baseline))["queries"]
         ranked = sorted(
             (n for n in base if n in qs), key=lambda n: -base[n]
         )
@@ -133,11 +138,10 @@ def main() -> None:
                                     stages += 1
                                     tasks += si.numTasks
             df = fn(spark, sf_dir)
-            plan = plan_of(df)
-            ps = plan_stats(plan)
+            ps = plan_stats(df)
             if args.dump_plans:
                 with open(f"{args.plan_dir}/{name}_{args.tag}.txt", "w") as f:
-                    f.write(plan)
+                    f.write(plan_of(df))
             results[name] = {
                 "median_s": round(sorted(walls)[len(walls) // 2], 3),
                 "min_s": round(min(walls), 3),
