@@ -396,14 +396,22 @@ class GrapeVectorDB:
     def documents(self) -> DataFrame:
         return self._read("documents")
 
-    def _warm_terms(self) -> DataFrame:
-        """doc_terms for the sparse leg. When the PERSISTED text inverted
-        index exists over this text column (build_index('text')), serve
-        it straight from parquet — the ingest already paid tokenization,
-        maintenance keeps it current, and nothing needs executor storage.
-        Otherwise fall back to the session cache: one tokenized/persisted
-        copy keyed by the documents version, so repeated hybrid searches
-        don't re-tokenize the corpus per query."""
+    def _warm_terms(self) -> tuple[DataFrame, DataFrame | None]:
+        """``(doc_terms, per-doc lengths)`` for the sparse leg. When the
+        PERSISTED text inverted index exists over this text column
+        (build_index('text')), serve the terms straight from parquet —
+        the ingest already paid tokenization, maintenance keeps it
+        current, and nothing needs executor storage; the per-doc lengths
+        are then None and BM25 aggregates them per query (publishing
+        them with the index is a ROADMAP follow-up). Otherwise fall back
+        to the session cache, keyed by the documents version: one
+        tokenized/persisted copy of the terms, so repeated hybrid
+        searches don't re-tokenize the corpus per query, and beside it
+        the per-doc ``(doc_id, doc_length, _nt)`` aggregate that
+        ``bm25_search(dstats=...)`` takes, so a query no longer
+        re-aggregates the whole term table (twice: once for the corpus
+        scalars, once for the scoring join). Both are unpersisted
+        together when the version moves."""
         tst = (
             self._table_stats("index_terms")
             if self._has("index_terms")
@@ -418,19 +426,23 @@ class GrapeVectorDB:
             # servable text
             return self._read("index_terms").withColumnRenamed(
                 "vec_id", "doc_id"
-            )
+            ), None
         vs = self._versions("documents")
         key = vs[-1] if vs else 0
         cached = getattr(self, "_terms_cache", None)
         if cached is not None and cached[0] == key:
-            return cached[1]
+            return cached[1], cached[2]
         if cached is not None:
             cached[1].unpersist()
+            cached[2].unpersist()
         terms = sparse.doc_terms(
             self.documents(), id_col=self.id_col, text_col=self.text_col
         ).persist()
-        self._terms_cache = (key, terms)
-        return terms
+        lengths = terms.groupBy("doc_id").agg(
+            F.sum("tf").alias("doc_length"), F.count("*").alias("_nt")
+        ).persist()
+        self._terms_cache = (key, terms, lengths)
+        return terms, lengths
 
     def embeddings(self) -> DataFrame:
         return self._read("embeddings")
@@ -2386,7 +2398,10 @@ class GrapeVectorDB:
                 vec_col=self.vec_col,
             ))
         if choice.strategy == "ivf":
-            cents, assigned = ann.load_index(self.spark, self._path("index_ivf"))
+            ivf_path = self._path("index_ivf")
+            # opened ONCE, without listing the assignment cells: the
+            # pruned route reads only the probed cell directories
+            ivf = ann.open_ivf_index(self.spark, ivf_path)
             # nprobe from the stored index's ACTUAL nlist at the
             # autosize rule's constant scan fraction (a fixed nprobe
             # silently decays recall as nlist grows with the corpus);
@@ -2397,7 +2412,7 @@ class GrapeVectorDB:
             nlist = (
                 int(cst["rows"])
                 if cst is not None and cst.get("rows") is not None
-                else cents.count()
+                else ivf.cents.count()
             )
             # floor 4: at tiny nlist the fraction rounds to ~1 probe,
             # below the recall the sf0.1 table documents. A
@@ -2408,18 +2423,18 @@ class GrapeVectorDB:
                 nlist,
                 max(4, _math.ceil(0.0625 * nlist)) * self._ivf_replicas(),
             )
-            if filter is None and "v" in assigned.columns:
+            if filter is None and "v" in ivf.assignments_schema.names:
                 # unfiltered + inverted-list layout: the zero-join
                 # partition-pruned scan (a directory skip touching
                 # ~nprobe/nlist of the index)
                 return _thresholded(ann.ivf_search_pruned(
-                    self.spark, self._path("index_ivf"), vector,
-                    k=limit, nprobe=nprobe,
+                    self.spark, ivf_path, vector,
+                    k=limit, nprobe=nprobe, index=ivf,
                 ))
             # filtered (or vector-less legacy layout): the join-based
             # probe against the (filtered) corpus
             return _thresholded(ann.ivf_search(
-                emb, cents, assigned.select("id", "cluster"), vector,
+                emb, ivf.cents, ivf.assignments().select("id", "cluster"), vector,
                 k=limit, nprobe=nprobe, vec_col=self.vec_col,
             ))
         if choice.strategy == "sq_two_stage":
@@ -2444,6 +2459,12 @@ class GrapeVectorDB:
                 packed_df=packed,
                 vec_col=self.vec_col,
                 index_covers_df=filter is None,
+                # the publish-time row stat sizes the unfiltered stage-1
+                # keep (no per-query count job); a filtered slice is
+                # counted, since the budget scales on what it keeps
+                known_total=(
+                    self._row_count("index_packed") if filter is None else None
+                ),
             ))
         return search.knn(
             emb, vector, k=limit, threshold=threshold,
@@ -2503,7 +2524,7 @@ class GrapeVectorDB:
         limit, _ = clamp_request(limit, None)
         overfetch = limit * 2
         docs = self.documents()
-        terms = self._warm_terms()
+        terms, lengths = self._warm_terms()
         gate_ids = None
         gate_sel = None
         if filter is not None:
@@ -2530,23 +2551,20 @@ class GrapeVectorDB:
                     self.id_col,
                     "left_semi",
                 )
-                # the warm inverted index is per-doc — restrict by the
-                # same posting ids, never rebuild (and never touch the
-                # wide documents table for this leg)
-                terms = terms.join(
-                    ids.select(F.col("vec_id").alias("doc_id")),
-                    "doc_id",
-                    "left_semi",
-                )
+                doc_gate = ids.select(F.col("vec_id").alias("doc_id"))
                 gate_ids = ids
             else:
                 docs = docs.where(filters.filter_to_column(filter))
-                terms = terms.join(
-                    docs.select(F.col(self.id_col).alias("doc_id")),
-                    "doc_id",
-                    "left_semi",
-                )
+                doc_gate = docs.select(F.col(self.id_col).alias("doc_id"))
                 gate_ids = docs.select(F.col(self.id_col).alias("vec_id"))
+            # the warm inverted index and its per-doc lengths are per-doc
+            # — restrict both by the same ids, never rebuild (and, on the
+            # posting route, never touch the wide documents table for
+            # this leg). Gating a per-doc aggregate equals aggregating
+            # the gated terms: each doc keeps all of its rows or none.
+            terms = terms.join(doc_gate, "doc_id", "left_semi")
+            if lengths is not None:
+                lengths = lengths.join(doc_gate, "doc_id", "left_semi")
             if part_skip:
                 gate_ids = None
             else:
@@ -2575,6 +2593,7 @@ class GrapeVectorDB:
                 id_col=self.id_col,
                 text_col=self.text_col,
                 terms=terms,
+                dstats=lengths,
             ),
             # _text_search, not the public search facade: the facade
             # clamp silently capped the text leg's over-fetch at

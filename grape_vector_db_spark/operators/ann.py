@@ -33,13 +33,16 @@ tables as parquet; loading = reading them.
 from __future__ import annotations
 
 import hashlib
+import heapq
 import math
 from collections.abc import Iterator
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..functions.vector import (
     cosine_from_parts,
@@ -1109,25 +1112,29 @@ def ivf_search_pruned(
     query_vector,
     k: int = 10,
     nprobe: int = 4,
+    index: IvfIndex | None = None,
 ) -> DataFrame:
     """The 100 TB IVF search shape: read ONLY the probed partitions of the
-    persisted cluster-partitioned inverted list — the ``cluster IN (...)``
-    predicate on the partition column is parquet PARTITION pruning (a
-    directory skip, not a filter), so the scan touches ~nprobe/nlist of
-    the index and there is no join anywhere in the plan.
+    persisted cluster-partitioned inverted list — each probed
+    ``cluster=`` directory is opened by path (a directory skip, not a
+    filter, at any nlist: the unprobed cells are never even listed), so
+    the scan touches ~nprobe/nlist of the index and there is no join
+    anywhere in the plan. One job picks the probed cells (a top-nprobe
+    over the tiny centroid table); the search itself is the only other.
 
     Requires an index saved from ivf_build(include_vectors=True).
+    ``index`` reuses an already opened :class:`IvfIndex` of ``path``.
     Returns (vec_id, score) — same contract as ivf_search.
     """
-    cents, assigned = load_index(spark, path)
-    if "v" not in assigned.columns:
+    idx = index if index is not None else open_ivf_index(spark, path)
+    if "v" not in idx.assignments_schema.names:
         raise ValueError(
             "index has no vector column; build with ivf_build(include_vectors=True)"
         )
     q = vector_lit(query_vector)
     probe = [
         r["cluster"]
-        for r in cents.select(
+        for r in idx.cents.select(
             "cluster",
             F.round(cosine_similarity(F.col("centroid"), q), 6).alias("csim"),
         )
@@ -1136,7 +1143,10 @@ def ivf_search_pruned(
         .collect()
     ]
     return (
-        assigned.where(F.col("cluster").isin(probe))
+        idx.cells(probe)
+        # already true of every row read; kept as the plan's partition
+        # filter, so the probed set stays visible in EXPLAIN
+        .where(F.col("cluster").isin(probe))
         .select(
             F.col("id").alias("vec_id"),
             F.round(cosine_vs_query(F.col("v"), query_vector), 6).alias("score"),
@@ -1211,22 +1221,22 @@ def load_pq_index(spark, path: str):
     return codebooks, _open_versioned(spark, path, "codes", man.get("codes"))
 
 
-def _open_versioned(spark, path: str, sub: str, version: int | None):
-    """Open ``{path}/{sub}`` at the manifest-committed version (falling
-    back to the newest committed version for legacy indexes or when
-    retention GC'd the manifest'd one — the next successful save
-    self-heals the manifest). Publish-time sidecar schemas skip footer
-    inference. Shared by load_index (centroids/assignments) and
-    load_pq_index (codebooks/codes) — both are two-table indexes whose
-    version PAIR must open together."""
-    from ..sources.tables import read_table, read_table_stats, table_versions
+def _versioned_dir(spark, path: str, sub: str, version: int | None):
+    """``(directory, sidecar schema or None)`` of ``{path}/{sub}`` at the
+    manifest-committed version (falling back to the newest committed
+    version for legacy indexes or when retention GC'd the manifest'd one
+    — the next successful save self-heals the manifest). The directory
+    is None for a legacy flat layout. Locating a table reads no data
+    and lists none of its partition directories."""
+    from ..sources.tables import read_table_stats, table_versions
 
     p = f"{path}/{sub}"
     vs = table_versions(spark, p)
     v = version if version in vs else (vs[-1] if vs else None)
     if v is None:
-        return read_table(spark, p)  # legacy flat layout (or raise)
+        return None, None
     st = read_table_stats(spark, p, version=v)
+    schema = None
     if st is not None and st.get("schema"):
         import json as _json
 
@@ -1234,32 +1244,95 @@ def _open_versioned(spark, path: str, sub: str, version: int | None):
 
         try:
             schema = StructType.fromJson(_json.loads(st["schema"]))
-            return spark.read.schema(schema).parquet(f"{p}/t={v}")
         except Exception:
-            pass
-    return spark.read.parquet(f"{p}/t={v}")
+            schema = None  # malformed sidecar: fall back to inference
+    return f"{p}/t={v}", schema
 
 
-def load_index(spark, path: str) -> tuple[DataFrame, DataFrame]:
-    """Load persisted IVF index tables; dimension/shape validation mirrors
-    the reference's load-time checks (src/query.rs:352-371).
+def _open_versioned(spark, path: str, sub: str, version: int | None):
+    """Open ``{path}/{sub}`` at the committed version of
+    :func:`_versioned_dir`. Publish-time sidecar schemas skip footer
+    inference. Shared by the IVF (centroids/assignments) and PQ
+    (codebooks/codes) loaders — both are two-table indexes whose
+    version PAIR must open together."""
+    from ..sources.tables import read_table
 
-    Opens the version PAIR the ``_INDEX_MANIFEST.json`` committed —
-    never a half-rebuilt mix of new centroids and old postings (see
-    save_index). Falls back to the newest committed versions for legacy
-    indexes (or if retention GC'd a manifest'd version — the next
-    successful save self-heals the manifest). Schemas come from the
-    publish-time sidecar when present, so opening the index costs zero
-    footer-inference jobs."""
+    d, schema = _versioned_dir(spark, path, sub, version)
+    if d is None:
+        return read_table(spark, f"{path}/{sub}")  # legacy flat layout (or raise)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(d)
+
+
+class IvfIndex(NamedTuple):
+    """An opened IVF index: the centroid table plus the LOCATION and
+    schema of the cluster-partitioned assignments. Opening lists none
+    of the assignment cells, so a pruned search reads only the
+    directories it probes (:meth:`cells`) — partition discovery over
+    every cell is a listing job once nlist passes Spark's parallel
+    discovery threshold (32 directories)."""
+
+    cents: DataFrame
+    assignments_dir: str
+    assignments_schema: StructType
+
+    def assignments(self) -> DataFrame:
+        """The whole assignments table (lists every cell)."""
+        spark = self.cents.sparkSession
+        return spark.read.schema(self.assignments_schema).parquet(
+            self.assignments_dir
+        )
+
+    def cells(self, clusters: list) -> DataFrame:
+        """The assignment rows of ``clusters`` only: each probed
+        ``cluster=`` directory read under ``basePath`` (a probed cell
+        that holds no rows has no directory and is skipped)."""
+        from ..sources.tables import _hadoop_fs
+
+        spark = self.cents.sparkSession
+        fs, P = _hadoop_fs(spark, self.assignments_dir)
+        dirs = [f"{self.assignments_dir}/cluster={c}" for c in clusters]
+        dirs = [d for d in dirs if fs.exists(P(d))]
+        if not dirs:
+            return spark.createDataFrame([], self.assignments_schema)
+        return (
+            spark.read.schema(self.assignments_schema)
+            .option("basePath", self.assignments_dir)
+            .parquet(*dirs)
+        )
+
+
+def open_ivf_index(spark, path: str) -> IvfIndex:
+    """Open a persisted IVF index at the version PAIR the
+    ``_INDEX_MANIFEST.json`` committed — never a half-rebuilt mix of new
+    centroids and old postings (see save_index); legacy indexes fall
+    back to the newest committed versions. With publish-time sidecar
+    schemas this costs zero Spark jobs."""
+    from ..sources.tables import current_table_path
+
     man = _read_index_manifest(spark, path) or {}
     cents = _open_versioned(spark, path, "centroids", man.get("centroids"))
-    assigned = _open_versioned(
-        spark, path, "assignments", man.get("assignments")
-    )
     for col in ("cluster", "centroid"):
         if col not in cents.columns:
             raise ValueError(f"centroid table missing column {col!r}")
-    return cents, assigned
+    adir, schema = _versioned_dir(
+        spark, path, "assignments", man.get("assignments")
+    )
+    if adir is None:
+        adir = current_table_path(spark, f"{path}/assignments")
+    if schema is None:
+        # legacy index without a sidecar schema: infer it once
+        schema = spark.read.parquet(adir).schema
+    return IvfIndex(cents, adir, schema)
+
+
+def load_index(spark, path: str) -> tuple[DataFrame, DataFrame]:
+    """Load persisted IVF index tables ``(centroids, assignments)`` at
+    the committed version pair (:func:`open_ivf_index`); dimension/shape
+    validation mirrors the reference's load-time checks
+    (src/query.rs:352-371)."""
+    idx = open_ivf_index(spark, path)
+    return idx.cents, idx.assignments()
 
 
 def random_projection_buckets(
@@ -2001,6 +2074,39 @@ def knn_exact_for(
     )
 
 
+def _rank_key(item):
+    """Sort key of a visited ``(id, score)`` pair in Spark's frontier
+    order: score descending with NaN greatest (Spark's double ordering),
+    then id ascending."""
+    i, s = item
+    return (0, 0.0, i) if s != s else (1, -s, i)
+
+
+def _local_scores(spark, rows, id_col: str, id_type) -> DataFrame:
+    """``(id_col, score)`` rows held on the driver as a VALUES relation:
+    a LocalTableScan keeps the rows' order, and reading it runs no Spark
+    job (id types other than integral or string fall back to
+    createDataFrame)."""
+    from pyspark.sql.types import IntegralType, StringType
+
+    from ..functions.vector import sql_double
+
+    t = id_type.simpleString()
+    if isinstance(id_type, IntegralType):
+        lit = str
+    elif isinstance(id_type, StringType):
+        # hex binary literal: no quoting or escaping of the id text
+        lit = lambda i: f"X'{i.encode('utf-8').hex()}'"  # noqa: E731
+    else:
+        return spark.createDataFrame(rows, f"`{id_col}` {t}, score double")
+    vals = ", ".join(f"({lit(i)}, {sql_double(s)})" for i, s in rows)
+    out = spark.sql(
+        f"SELECT CAST(col1 AS {t}) AS `{id_col}`, CAST(col2 AS DOUBLE) AS score"
+        f" FROM VALUES {vals or '(NULL, NULL)'}"
+    )
+    return out if rows else out.limit(0)
+
+
 def graph_beam_search(
     edges: DataFrame,
     emb: DataFrame,
@@ -2042,69 +2148,107 @@ def graph_beam_search(
     keep k passing candidates in the visited set, exactly HNSW's
     ef-expansion rule of thumb.
 
-    Scale shape: the frontier is <= beam rows, so each hop is one
-    broadcast-semi probe of the edge table (bucketed by src at 100 TB =
-    a co-located point lookup) plus an id-equi join against the vector
-    table for scoring — candidates per hop <= beam * out_degree,
-    corpus-size independent. Each hop MATERIALIZES the visited set via
-    an eager local checkpoint: beam search is inherently sequential
-    across hops, and the checkpointed table is KBs (bounded by
-    beam*out_degree*hops, never by the corpus), so the cost is one tiny
-    job per hop — whereas the fully-lazy composition re-evaluates every
-    earlier hop's subtree ~3x per later hop (visited feeds the
-    anti-join, the union, AND the frontier cut), measured 3^hops plan
-    blowup at sf0.1. The walk's data itself never returns to the driver
-    (vs HNSW's per-step pointer chase — the beam is the parallelism
-    WITHIN a hop).
+    Scale shape: the walk is a coordinator-pruned candidate search
+    (REPOSE's split: the coordinator prunes, only candidates are
+    verified). The visited map (id -> 6-dp score) lives on the driver;
+    it holds at most ``beam + hops * beam * out_degree`` entries, so its
+    size never depends on the corpus. Each hop is ONE single-stage
+    collect: the hop's new ids (<= beam * out_degree) are scored and
+    their out-edges fetched together, as two pushed ``isin`` scans
+    joined by a union (bucketed by id/src at 100 TB, each is a
+    co-located point lookup). The frontier cut runs on the driver in
+    Spark's ordering (score descending, NaN greatest, then id
+    ascending). A hop therefore costs one job and no shuffle, where a
+    Spark-side visited table needs a barrier per hop (an eager
+    checkpoint, a shuffle-bearing job chain) or, fully lazy,
+    re-evaluates every earlier hop ~3x per later hop. Ids on dangling
+    edges (absent from ``emb``) come back unscored once and are dropped,
+    as a scoring join drops them. The last hop fetches no edges, and a
+    hop that finds no new id ends the walk (nothing can change).
+
+    The gates run on the driver too: ``result_filter`` is evaluated in
+    the scoring scan, and ``result_ids_df`` is probed once for the
+    visited ids (one pushed ``isin`` collect). The result is the top
+    ``k`` passing rows as a driver-local relation in result order, so
+    reading it runs no job.
     """
     if beam < 1 or hops < 0 or k < 1:
         raise ValueError("beam, k must be >= 1; hops >= 0")
-    ids_v = emb.select(
-        F.col(id_col).alias("id"), to_double_array(vec_col).alias("v")
+    from pyspark.sql.types import StringType
+
+    spark = emb.sparkSession
+    id_type = emb.schema[id_col].dataType
+    score = F.round(cosine_vs_query(to_double_array(vec_col), query_vector), 6)
+    passes = (
+        F.lit(True)
+        if result_filter is None
+        else F.coalesce(result_filter, F.lit(False))
     )
-    score_of = lambda df: df.join(ids_v, "id").select(  # noqa: E731
-        "id", F.round(cosine_vs_query(F.col("v"), query_vector), 6).alias("score")
+    scored = emb.select(
+        F.lit(False).alias("_edge"),
+        F.col(id_col).alias("id"),
+        score.alias("score"),
+        passes.alias("_pass"),
+        F.lit(None).cast(edges.schema["dst"].dataType).alias("dst"),
     )
+    out_edges = edges.select(
+        F.lit(True).alias("_edge"),
+        F.col("src").alias("id"),
+        F.lit(None).cast("double").alias("score"),
+        F.lit(None).cast("boolean").alias("_pass"),
+        F.col("dst"),
+    )
+    visited: dict = {}  # id -> 6-dp score
+    passing: set = set()  # visited ids that pass result_filter
+    nbrs: dict = {}  # visited id -> out-neighbor ids (fetched when it may lead)
+    dangling: set = set()
+
+    def fetch(ids: list, with_edges: bool) -> None:
+        part = scored.where(F.col("id").isin(ids))
+        if with_edges:
+            part = part.unionByName(out_edges.where(F.col("id").isin(ids)))
+        for r in part.collect():
+            if not r["_edge"]:
+                visited[r["id"]] = r["score"]
+                if r["_pass"]:
+                    passing.add(r["id"])
+            elif r["dst"] is not None:
+                nbrs.setdefault(r["id"], set()).add(r["dst"])
+        dangling.update(i for i in ids if i not in visited)
+
     if entry_ids is None:
-        frontier = ids_v.select("id").orderBy("id").limit(beam)
+        entries = [
+            r[0] for r in emb.select(id_col).orderBy(id_col).limit(beam).collect()
+        ]
     else:
-        frontier = (
-            emb.sparkSession.createDataFrame(
-                [(int(i),) for i in entry_ids], "id long"
-            )
-        )
-    visited = score_of(frontier).localCheckpoint(eager=True)
-    fr = visited.orderBy(F.col("score").desc(), F.col("id").asc()).limit(beam)
-    e = edges.select(F.col("src").alias("fid"), F.col("dst").alias("id"))
-    for _ in range(hops):
-        nbrs = (
-            e.join(F.broadcast(fr.select(F.col("id").alias("fid"))), "fid")
-            .select("id")
-            .distinct()
-        )
-        # score only NEW ids; carry forward known scores. The eager
-        # checkpoint truncates lineage each hop (see docstring: the lazy
-        # chain re-evaluates prior hops ~3x per later hop).
-        fresh = score_of(nbrs.join(visited.select("id"), "id", "left_anti"))
-        visited = visited.unionByName(fresh).localCheckpoint(eager=True)
-        fr = visited.orderBy(F.col("score").desc(), F.col("id").asc()).limit(
-            beam
-        )
-    out = visited.select(F.col("id").alias(id_col), "score")
-    if result_filter is not None:
-        # visited is <= beam*out_degree*hops rows; the semi-join against
-        # the filtered id set restricts to passing candidates before the
-        # final cut (a raw .where on the RESULT would run after limit k
-        # and under-fill)
-        out = out.join(emb.where(result_filter).select(id_col), id_col, "left_semi")
-    if result_ids_df is not None:
-        # same gate, but the passing-id set comes from OUTSIDE the vector
-        # table (a metadata filter on a documents table the walk never
-        # reads) — the facade's filtered-search route
-        out = out.join(
-            result_ids_df.select(id_col), id_col, "left_semi"
-        )
-    return out.orderBy(F.col("score").desc(), F.col(id_col).asc()).limit(k)
+        cast = str if isinstance(id_type, StringType) else int
+        entries = [cast(i) for i in entry_ids]
+    entries = [i for i in dict.fromkeys(entries) if i is not None]
+    if entries:
+        fetch(entries, hops > 0)
+    for hop in range(hops):
+        frontier = heapq.nsmallest(beam, visited.items(), key=_rank_key)
+        fresh = {
+            d for i, _ in frontier for d in nbrs.get(i, ())
+        } - visited.keys() - dangling
+        if not fresh:
+            break
+        fetch(list(fresh), hop < hops - 1)
+    if result_ids_df is not None and passing:
+        # the passing-id set comes from OUTSIDE the vector table (a
+        # metadata filter on a documents table the walk never reads) —
+        # the facade's filtered-search route
+        passing &= {
+            r[0]
+            for r in result_ids_df.select(id_col)
+            .where(F.col(id_col).isin(list(passing)))
+            .collect()
+        }
+    # gate BEFORE the cut: gating the top-k would under-fill
+    top = heapq.nsmallest(
+        k, ((i, visited[i]) for i in passing), key=_rank_key
+    )
+    return _local_scores(spark, top, id_col, id_type)
 
 
 def graph_beam_search_batch(
@@ -2128,7 +2272,9 @@ def graph_beam_search_batch(
 
     State per hop is (query_id, candidate) rows — <= queries x beam x
     out_degree, corpus-size independent; the per-query top-beam cut is a
-    window over that bounded set (never over the corpus). The query
+    window over that bounded set (never over the corpus). Unlike the
+    single-query walk, this state stays distributed: it grows with the
+    number of queries, so it does not belong on the driver. The query
     table broadcasts (the small side by construction); the edge table is
     the big side and is probed by a frontier semi-join, co-located when
     bucketed by src. Entries default to the ``beam`` smallest ids for
@@ -2191,7 +2337,7 @@ def graph_beam_search_batch(
         )
         # eager checkpoint per hop: state is <= queries x beam x degree
         # rows (KBs); without it the lazy chain re-evaluates every prior
-        # hop ~3x per later hop (see graph_beam_search)
+        # hop ~3x per later hop
         visited = visited.unionByName(fresh).localCheckpoint(eager=True)
     return (
         visited.withColumn("_r", F.row_number().over(w))
@@ -2389,7 +2535,7 @@ def kcore_peel(
     semi-joins of the edge list against the (shrinking) survivor set —
     all edge-table-sized, nothing corpus-squared. Each round ends with an
     eager localCheckpoint of the surviving edge list (cf. cluster_pairs
-    and graph_beam_search): the round body references ``edges`` three
+    and graph_beam_search_batch): the round body references ``edges`` three
     times (degree agg + both semi-joins), so the lazy chain would
     re-evaluate prior rounds ~3x per later round — 3^rounds plan growth;
     the checkpoint makes each round one edge-table-sized job instead.

@@ -40,10 +40,24 @@ from ..functions.vector import (
 def cosine_vs_query(v: Column, query_vector: Sequence[float]) -> Column:
     """Cosine of a vector column vs a literal query: the query norm is a
     Python-side constant; per row the work is one dot fold + one norm fold
-    + one divide — the minimum possible."""
+    + one divide — the minimum possible.
+
+    ``|q|`` multiplies inside the norm fold's finish lambda
+    (``sqrt(acc) * |q|``, the same IEEE multiply as ``|v| * |q|``), so
+    every query-dependent literal sits inside higher-order functions,
+    which Spark evaluates outside generated code. A new query vector
+    therefore reuses the compiled projection; as a top-level literal,
+    ``|q|`` was inlined into the generated Java and every query compiled
+    a fresh class."""
     q = [float(x) for x in query_vector]
     qnorm = math.sqrt(sum(x * x for x in q))
-    return cosine_from_parts(dot(v, vector_lit(q)), l2_norm(v), F.lit(qnorm))
+    scaled_norm = F.aggregate(
+        F.transform(v, lambda x: x * x),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+        lambda acc: F.sqrt(acc) * F.lit(qnorm),
+    )
+    return F.coalesce(F.try_divide(dot(v, vector_lit(q)), scaled_norm), F.lit(0.0))
 
 
 def knn(

@@ -62,7 +62,9 @@ def test_delete_does_not_resurrect_text_tombstone(db, docs, spark):
     assert db._payload_tree_plan(
         {"must": [{"type": "match", "field": "text", "text": "vector"}]}
     ) is None
-    assert db._warm_terms().count() > 0  # session tokenize, not the tomb
+    terms, lengths = db._warm_terms()
+    # session tokenize, not the tomb
+    assert terms.count() > 0 and lengths is not None
 
 
 def test_threshold_applies_on_indexed_routes(db, emb):

@@ -176,18 +176,24 @@ def test_brute_force_route_is_take_ordered(gdb, emb):
     assert "Exchange hashpartitioning" not in plan
 
 
-def test_graph_route_final_cut_is_take_ordered(gdb, emb):
+def test_graph_route_final_cut_is_driver_local(gdb, emb, spark):
     gdb.build_index("graph", k=5)
     qv = list(emb.where(F.col("vec_id") == 0).head()["embedding"])
-    plan = (
-        gdb.search(vector=qv, limit=5, index="graph")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    # the walk's hops already ran (checkpointed); the returned plan is
-    # the final gate + cut over the KB-sized visited table
-    assert "TakeOrderedAndProject" in plan
+    out = gdb.search(vector=qv, limit=5, index="graph")
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    # the walk's hops and its top-k cut already ran on the driver over
+    # the bounded visited map; the returned plan is the k result rows
+    # themselves, so reading them sorts, shuffles and schedules nothing
+    assert plan.lstrip().startswith("LocalTableScan")
+    assert "Exchange" not in plan and "Sort" not in plan
+    sc = spark.sparkContext
+    sc.setJobGroup("graph-cut", "graph-cut")
+    try:
+        rows = out.collect()
+    finally:
+        sc.setJobGroup("graph-cut-done", "done")
+    assert len(rows) == 5
+    assert list(sc.statusTracker().getJobIdsForGroup("graph-cut")) == []
 
 
 def test_ivf_autosize_rule():

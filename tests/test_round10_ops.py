@@ -444,10 +444,11 @@ def test_warm_terms_promotes_to_persisted_index(db):
     """With build_index('text') present, the hybrid sparse leg reads the
     PERSISTED inverted index instead of re-tokenizing into a session
     cache."""
-    before = db._warm_terms()
+    before, lengths = db._warm_terms()
+    assert lengths is not None  # the session cache carries per-doc lengths
     db.build_index("text")
-    after = db._warm_terms()
-    assert "index_terms" in _plan(after)
+    after, lengths = db._warm_terms()
+    assert "index_terms" in _plan(after) and lengths is None
     key = lambda r: (r["doc_id"], r["term"], round(r["tf"], 9))  # noqa: E731
     assert sorted(map(key, after.collect())) == sorted(
         map(key, before.collect())

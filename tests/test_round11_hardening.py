@@ -230,7 +230,8 @@ class TestTextIndexTombstone:
         self._drop_then_restore(db, docs, spark)
         # the sparse leg must re-tokenize the (restored) documents, not
         # read the published-but-empty index
-        assert db._warm_terms().count() > 0
+        terms, lengths = db._warm_terms()
+        assert terms.count() > 0 and lengths is not None
 
     def test_explicit_rebuild_clears_tombstone(self, db, docs, spark):
         self._drop_then_restore(db, docs, spark)

@@ -7,10 +7,12 @@ Usage: python tools/dump_plans.py  (writes PLANS.md at the repo root)
 from __future__ import annotations
 
 import io
+import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import __spark_entry__ as entrymod  # noqa: E402
 from grape_vector_db_spark.session import get_spark  # noqa: E402
@@ -245,7 +247,7 @@ def main() -> None:
         # keep the operator tree, drop the verbose per-node sections
         tree = plan.split("\n\n")[0]
         out += [f"## {name}", "", f"_{note}_", "", "```", tree, "```", ""]
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print("wrote PLANS.md")
 

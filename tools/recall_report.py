@@ -20,13 +20,13 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from grape_vector_db_spark.operators import ann, quantization, search  # noqa: E402
 from grape_vector_db_spark.session import get_spark  # noqa: E402
 
 SF01 = "/root/testdata/sf0.1"
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF1 = f"{REPO}/.testdata/sf1"
 K = 10
 N_QUERIES = 20
@@ -402,7 +402,7 @@ def main() -> None:
         lines += _filtered_graph_section(spark)
         lines += _hybrid_fused_section(spark)
     lines += _neardup_section(spark)
-    with open("/root/repo/RECALL.md", "w") as f:
+    with open(os.path.join(REPO, "RECALL.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     print("\n".join(lines))
 
