@@ -442,8 +442,8 @@ def q_hybrid_facade_rrf_filtered(spark, sf_dir):
     end-to-end: ONE posting-algebra id set (lang equality probe of the
     payload index) gates all three legs; BM25 stats come from the
     FILTERED subcorpus (the df/avgdl/N of the slice the user searches);
-    the dense leg rides _vector_search with the precomputed gate
-    (gate_ids — round-11b: planned once, not once per leg). The oracle
+    the dense leg rides _vector_search with the same gate record
+    (db._gate: planned once, not once per leg). The oracle
     recomputes every leg from the filtered slice — the gate plumbing
     must be invisible in the results."""
     return _facade_db(spark, sf_dir).hybrid_search(

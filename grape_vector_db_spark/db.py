@@ -73,6 +73,118 @@ def _snapshot_scope(fn):
     return inner
 
 
+class _Gate:
+    """One metadata filter's gate, built once per facade call and read
+    by every leg, endpoint and EXPLAIN that filters — the one place the
+    facade decides how a filter is served:
+
+    - ``partition``: the ``(column, value)`` of a single equality on the
+      partitioned layout's column (a directory skip on the
+      co-partitioned embeddings), else None;
+    - ``tree``: the posting-servable probe tree, else None;
+    - ``kind``: ``partition`` | ``posting`` | ``predicate``;
+    - ``ids`` (``vec_id``): the posting-algebra id set when the tree is
+      servable, else the documents-predicate ids;
+    - ``docs``: documents semi-joined to ``ids`` when the tree is
+      servable, else the documents predicate scan;
+    - ``selectivity`` and its ``source``: ``sidecar`` (zero-job
+      histogram / text-df estimate of the tree), else ``sample`` (the
+      predicate on the cached documents sample).
+
+    ``ids`` and ``docs`` do not depend on ``partition``: the vector arm
+    skips directories, but hybrid's BM25/text legs still gate on ids.
+    Everything is computed on first use: EXPLAIN builds no id set, a
+    sidecar-funded posting gate never builds the filter Column, and
+    ``count`` never probes the partition layout."""
+
+    def __init__(self, db: GrapeVectorDB, flt: dict[str, Any]) -> None:
+        self._db = db
+        self.filter = flt
+
+    @functools.cached_property
+    def partition(self) -> tuple[str, Any] | None:
+        eq = filters.simple_equality(self.filter)
+        if eq is None or not self._db._has("index_partition"):
+            return None
+        pst = self._db._table_stats("index_partition") or {}
+        return eq if eq[0] == pst.get("partition_column") else None
+
+    @functools.cached_property
+    def tree(self) -> dict | None:
+        return self._db._payload_tree_plan(self.filter)
+
+    @property
+    def kind(self) -> str:
+        if self.partition is not None:
+            return "partition"
+        return "posting" if self.tree is not None else "predicate"
+
+    @functools.cached_property
+    def column(self):
+        # a full Column tree (dozens of py4j round trips for a nested
+        # filter): only the predicate path and a sample estimate read it
+        return filters.filter_to_column(self.filter)
+
+    @functools.cached_property
+    def ids(self) -> DataFrame:
+        if self.tree is not None:
+            return self._db._payload_tree_ids(self.tree)
+        return self.docs.select(F.col(self._db.id_col).alias("vec_id"))
+
+    @functools.cached_property
+    def docs(self) -> DataFrame:
+        docs, id_col = self._db.documents(), self._db.id_col
+        if self.tree is None:
+            return docs.where(self.column)
+        return docs.join(
+            self.ids.select(F.col("vec_id").alias(id_col)), id_col, "left_semi"
+        )
+
+    @functools.cached_property
+    def _estimate(self) -> tuple[float, str]:
+        if self.tree is not None:
+            sel = self._db._tree_fraction(
+                self._db._frac_env(), self.tree, False
+            )
+            if sel is not None:
+                return sel, "sidecar"
+        # sampled, zero-job estimate (an exact semi-join count would be a
+        # second corpus-scale job per filtered search)
+        return self._db._estimate_selectivity(self.column), "sample"
+
+    @property
+    def selectivity(self) -> float:
+        return self._estimate[0]
+
+    @property
+    def source(self) -> str:
+        return self._estimate[1]
+
+    def reason(self) -> str:
+        """The EXPLAIN suffix naming how the filter is served and where
+        its selectivity came from."""
+        how = f"selectivity from the {self.source}"
+        if self.kind == "partition":
+            return (
+                "; filter served by the partition-pruned layout (directory"
+                f" skip on {self.partition[0]!r}; {how})"
+            )
+        if self.kind == "posting":
+            return (
+                "; filter served by the payload posting index (posting "
+                f"algebra on {sorted(_tree_fields(self.tree))}; {how})"
+            )
+        return f"; filter served by a documents predicate scan ({how})"
+
+
+def _tree_fields(tree: dict) -> set[str]:
+    out: set[str] = set()
+    for leaves in tree.values():
+        for f, v, k in leaves:
+            out |= _tree_fields(v) if k == "tree" else {f}
+    return out
+
+
 class GrapeVectorDB:
     # Delete maintenance on the kNN graph flips from per-src repair
     # (one exact scan per affected src, cost ~ |affected| x n) to a full
@@ -1447,18 +1559,6 @@ class GrapeVectorDB:
             return None
         return tree
 
-    def _payload_probe_plan(
-        self, filter: dict[str, Any]
-    ) -> list[tuple[str, Any, str]] | None:
-        """The pure-conjunction special case of :meth:`_payload_tree_plan`
-        (kept as the named concept for EXPLAIN and tests)."""
-        tree = self._payload_tree_plan(filter)
-        if tree is None or tree["should"] or tree["must_not"]:
-            return None
-        if any(k == "tree" for _f, _v, k in tree["must"]):
-            return None
-        return tree["must"]
-
     def _payload_tree_ids(
         self, tree: dict[str, list[tuple[str, Any, str]]]
     ) -> DataFrame:
@@ -1981,45 +2081,6 @@ class GrapeVectorDB:
             s += x
         return min(1.0, s)
 
-    def _payload_filter_selectivity(
-        self, filter: dict[str, Any]
-    ) -> float | None:
-        """Zero-job selectivity for a posting-servable probe tree from
-        the sidecar histograms (recursive over nested sub-trees —
-        :meth:`_tree_fraction` holds the combination rules,
-        :meth:`_leaf_fraction` the per-leaf estimates with each leaf
-        dividing by its OWN sidecar's corpus count). Equality lookups on
-        numeric fields match histogram keys NUMERICALLY (the keys are
-        Spark string casts — "1.0" for a double column — so a Python
-        str(val) lookup would silently miss; ADVICE r8). Range leaves
-        sum matching histogram entries when the histogram is exact,
-        else interpolate uniformly over the sidecar's numeric
-        [min, max]. Floored at half a row, capped at 1. None when the
-        tree is not servable or a field lacks sidecar coverage — caller
-        falls back to the sampled estimate."""
-        tree = self._payload_tree_plan(filter)
-        if tree is None:
-            return None
-        return self._tree_fraction(self._frac_env(), tree, False)
-
-    def _payload_selectivity(self, eqs: list[tuple]) -> float | None:
-        """Conjunct convenience wrapper over
-        :meth:`_payload_filter_selectivity`: accepts (field, value) pairs
-        or (field, value, kind) probe triples, treats them as one must
-        group."""
-        return self._payload_filter_selectivity(
-            {
-                "must": [
-                    {
-                        "type": p[2] if len(p) > 2 else "equals",
-                        "field": p[0],
-                        "value": p[1],
-                    }
-                    for p in eqs
-                ]
-            }
-        )
-
     def _refresh_payload_rows(self, ids: DataFrame) -> None:
         """Swap the batch ids' posting rows: re-derive them from the
         post-merge documents table (covers inserts, value updates, AND
@@ -2144,7 +2205,10 @@ class GrapeVectorDB:
         QueryOptimizer request-rewriting hints at,
         ref:src/query_engine.rs:271-372, made explicit). Explicit values
         ``"brute_force" | "graph" | "ivf" | "sq" | "binary"`` force a
-        route and raise if its index table is missing.
+        route and raise if its index table is missing. The route is
+        :meth:`_route`, the same decision :meth:`search_plan` explains;
+        the filter is served as :meth:`_gate` decides (partition skip,
+        posting algebra or predicate scan).
 
         ``with_documents=True`` hydrates the vector arm's hits with the
         documents row (the reference returns full documents,
@@ -2172,7 +2236,9 @@ class GrapeVectorDB:
                 .orderBy(F.col("score").desc(), F.col(self.id_col).asc())
             )
         if vector is not None:
-            return self._vector_search(vector, limit, threshold, filter, index)
+            return self._vector_search(
+                vector, limit, threshold, self._gate(filter), index
+            )
         if text is not None:
             return self._text_search(text, limit, filter)
         raise ValueError("search needs a vector or a text query")
@@ -2194,10 +2260,9 @@ class GrapeVectorDB:
         already-gated documents slice so hybrid's three legs derive the
         filter gate ONCE instead of re-planning it per leg."""
         if docs is None:
-            # posting-gated docs slice when the tree is servable (the
-            # same gate the vector arm uses) — a narrow id semi-join
-            # instead of the wide predicate scan
-            docs = self._filtered_docs(self.documents(), filter)
+            docs = (
+                self.documents() if filter is None else self._gate(filter).docs
+            )
         score = text_match_score(None, F.col(self.text_col), text)
         return (
             docs.select(F.col(self.id_col), F.round(score, 6).alias("score"))
@@ -2206,129 +2271,19 @@ class GrapeVectorDB:
             .limit(limit)
         )
 
-    def _vector_search(
-        self,
-        vector: Sequence[float],
-        limit: int,
-        threshold: float | None,
-        filter: dict[str, Any] | None,
-        index: str,
-        gate_ids: DataFrame | None = None,
-        gate_selectivity: float | None = None,
-    ) -> DataFrame:
-        """:meth:`search`'s vector arm WITHOUT the facade parameter
-        clamp — shared with :meth:`hybrid_search`'s dense leg, whose
-        2x over-fetch budget may legitimately exceed MAX_LIMIT. All
-        route selection (planner cost rule / explicit index), posting-
-        algebra filter gating, and partition pruning live here.
+    def _gate(self, filter: dict[str, Any] | None) -> _Gate | None:
+        """The filter's :class:`_Gate` (None when unfiltered). Build it
+        once per call and hand the same record to every leg."""
+        return None if filter is None else _Gate(self, filter)
 
-        ``gate_ids``/``gate_selectivity``: a caller that already planned
-        the filter gate (hybrid_search derives ONE id set + selectivity
-        for all three legs) passes it here so this arm does not re-run
-        tree planning, the posting probes, or — for fuzzy trees — the
-        per-token vocabulary-expansion collects a second time."""
-        emb_all = self.embeddings()
-        emb = emb_all
-        keep_ids = None
-        selectivity = 1.0
-        # publish-time stats, not an eager count — route choice must
-        # not cost a corpus scan per query (VERDICT r7 #1)
-        n_corpus = self._row_count("embeddings")
-        gate_join = False
-        if filter is not None and gate_ids is not None:
-            keep_ids = gate_ids
-            gate_join = True
-            selectivity = (
-                gate_selectivity
-                if gate_selectivity is not None
-                else self._estimate_selectivity(
-                    filters.filter_to_column(filter)
-                )
-            )
-        elif filter is not None:
-            # filter_to_column builds a full Column tree (dozens of py4j
-            # round trips for a nested filter) — defer it to the two
-            # consumers (predicate fallback, sample-estimate miss) so a
-            # posting-served tree never pays for it
-            _fcol_memo: list = []
-
-            def fcol():
-                if not _fcol_memo:
-                    _fcol_memo.append(filters.filter_to_column(filter))
-                return _fcol_memo[0]
-
-            eq = filters.simple_equality(filter)
-            pcol = None
-            if eq is not None and self._has("index_partition"):
-                pst = self._table_stats("index_partition") or {}
-                pcol = pst.get("partition_column")
-            sel_tree = None
-            if pcol is not None and eq is not None and eq[0] == pcol:
-                # single-equality filter on the partitioned layout's
-                # column: serve it as a DIRECTORY SKIP on the
-                # co-partitioned embeddings — no docs scan, no
-                # corpus-wide semi-join; every route below sees only
-                # the matching partition's files (the tenant-search
-                # shape at 100 TB). Detection is sidecar + structural
-                # inspection: zero Spark jobs.
-                pruned = self._read("index_partition").where(
-                    F.col(pcol) == F.lit(eq[1])
-                )
-                emb = pruned.select("vec_id", self.vec_col)
-                keep_ids = emb.select("vec_id")
-            else:
-                tree = self._payload_tree_plan(filter)
-                sel_tree = tree
-                if tree is not None:
-                    # must/should/must_not tree of equality /
-                    # array-contains probes fully covered by the
-                    # posting index: posting-list algebra (each
-                    # operand a pruned read of one field's directory)
-                    # instead of scanning the wide documents table —
-                    # and fund selectivity EXACTLY from the sidecar
-                    # histogram
-                    keep_ids = self._payload_tree_ids(tree)
-                    gate_join = True
-                else:
-                    keep = self.documents().where(fcol())
-                    keep_ids = keep.select(
-                        F.col(self.id_col).alias("vec_id")
-                    )
-                    gate_join = True
-            if sel_tree is None and pcol is not None:
-                # partition path: the tree wasn't needed for the gate,
-                # but it can still fund zero-job selectivity
-                sel_tree = self._payload_tree_plan(filter)
-            # straight to _tree_fraction with the tree in hand —
-            # _payload_filter_selectivity would re-run the whole tree
-            # planning (incl. the documents-schema read for match
-            # leaves) a second time on this hot path (the hybrid rule)
-            selectivity = (
-                self._tree_fraction(self._frac_env(), sel_tree, False)
-                if sel_tree is not None
-                else None
-            )
-            if selectivity is None:
-                # sampled, zero-job estimate (exact semi-join count was
-                # a second corpus-scale job per filtered search)
-                selectivity = self._estimate_selectivity(fcol())
-        if gate_join:
-            # Deliberate join strategy for the id gate (guide §3.1): when
-            # the sidecar/sample-funded estimate says the kept id set is
-            # small, BROADCAST it — the corpus side is then never
-            # shuffled or sorted (the semi-join runs inside the scan
-            # stage). Past the bound, fall back to the planner's
-            # shuffle semi-join (a broadcast of an unbounded id set is
-            # the driver-OOM shape). The bound is an id COUNT, so it is
-            # scale-adaptive by construction: selectivity x corpus rows,
-            # both zero-job driver-side stats.
-            est_ids = selectivity * max(n_corpus, 1)
-            ids = (
-                F.broadcast(keep_ids)
-                if est_ids <= self.GATE_BROADCAST_MAX_IDS
-                else keep_ids
-            )
-            emb = emb_all.join(ids, "vec_id", "left_semi")
+    def _route(self, index: str, gate: _Gate | None) -> PlanChoice:
+        """The one route decision: the planner's cost rule for
+        ``index="auto"`` (corpus size from publish-time stats — route
+        choice must not cost a corpus scan per query, VERDICT r7 #1 —
+        and the gate's selectivity), else the explicit route, which
+        raises if its index table is missing. :meth:`_vector_search`
+        executes it; :meth:`search_plan` returns it. A filtered route's
+        reason ends with how the gate serves the filter."""
         _EXPLICIT = {
             "brute_force": ("brute_force", None),
             "graph": ("graph_walk", "index_graph"),
@@ -2338,12 +2293,12 @@ class GrapeVectorDB:
         }
         if index == "auto":
             choice = choose_search_strategy(
-                n_corpus,
+                self._row_count("embeddings"),
                 has_ivf=self._has("index_ivf"),
                 has_packed=self._has("index_packed"),
                 has_sq=self._has("index_sq"),
                 has_graph=self._has("index_graph"),
-                filter_selectivity=selectivity,
+                filter_selectivity=1.0 if gate is None else gate.selectivity,
             )
         elif index in _EXPLICIT:
             strategy, table = _EXPLICIT[index]
@@ -2358,6 +2313,60 @@ class GrapeVectorDB:
                 f"unknown index {index!r}; one of auto/"
                 + "/".join(_EXPLICIT)
             )
+        if gate is None:
+            return choice
+        return PlanChoice(choice.strategy, choice.reason + gate.reason())
+
+    def _vector_search(
+        self,
+        vector: Sequence[float],
+        limit: int,
+        threshold: float | None,
+        gate: _Gate | None,
+        index: str,
+    ) -> DataFrame:
+        """:meth:`search`'s vector arm WITHOUT the facade parameter
+        clamp — shared with :meth:`hybrid_search`'s dense leg, whose
+        2x over-fetch budget may legitimately exceed MAX_LIMIT. Executes
+        :meth:`_route` over the filter ``gate`` (:meth:`_gate`; None =
+        unfiltered), which the caller built once for all its legs."""
+        emb_all = self.embeddings()
+        emb = emb_all
+        keep_ids = None
+        selectivity = 1.0 if gate is None else gate.selectivity
+        n_corpus = self._row_count("embeddings")
+        choice = self._route(index, gate)
+        if gate is not None and gate.kind == "partition":
+            # single-equality filter on the partitioned layout's column:
+            # serve it as a DIRECTORY SKIP on the co-partitioned
+            # embeddings — no docs scan, no corpus-wide semi-join; every
+            # route below sees only the matching partition's files (the
+            # tenant-search shape at 100 TB)
+            pcol, pval = gate.partition
+            emb = (
+                self._read("index_partition")
+                .where(F.col(pcol) == F.lit(pval))
+                .select("vec_id", self.vec_col)
+            )
+            keep_ids = emb.select("vec_id")
+        elif gate is not None:
+            # Deliberate join strategy for the id gate (guide §3.1): when
+            # the sidecar/sample-funded estimate says the kept id set is
+            # small, BROADCAST it — the corpus side is then never
+            # shuffled or sorted (the semi-join runs inside the scan
+            # stage). Past the bound, fall back to the planner's
+            # shuffle semi-join (a broadcast of an unbounded id set is
+            # the driver-OOM shape). The bound is an id COUNT, so it is
+            # scale-adaptive by construction: selectivity x corpus rows,
+            # both zero-job driver-side stats.
+            keep_ids = gate.ids
+            est_ids = selectivity * max(n_corpus, 1)
+            ids = (
+                F.broadcast(keep_ids)
+                if est_ids <= self.GATE_BROADCAST_MAX_IDS
+                else keep_ids
+            )
+            emb = emb_all.join(ids, "vec_id", "left_semi")
         def _thresholded(out: DataFrame) -> DataFrame:
             """The SearchRequest similarity threshold on EVERY physical
             route — it was silently dropped on the indexed ones, so the
@@ -2423,7 +2432,7 @@ class GrapeVectorDB:
                 nlist,
                 max(4, _math.ceil(0.0625 * nlist)) * self._ivf_replicas(),
             )
-            if filter is None and "v" in ivf.assignments_schema.names:
+            if gate is None and "v" in ivf.assignments_schema.names:
                 # unfiltered + inverted-list layout: the zero-join
                 # partition-pruned scan (a directory skip touching
                 # ~nprobe/nlist of the index)
@@ -2448,7 +2457,7 @@ class GrapeVectorDB:
                 vec_col=self.vec_col,
                 # a metadata filter shrank emb below the index: spend
                 # the candidate budget on returnable ids only
-                index_covers_df=filter is None,
+                index_covers_df=gate is None,
             ).drop("approx_dot"))
         if choice.strategy == "binary_two_stage":
             packed = self._read("index_packed")
@@ -2458,12 +2467,12 @@ class GrapeVectorDB:
                 k=limit,
                 packed_df=packed,
                 vec_col=self.vec_col,
-                index_covers_df=filter is None,
+                index_covers_df=gate is None,
                 # the publish-time row stat sizes the unfiltered stage-1
                 # keep (no per-query count job); a filtered slice is
                 # counted, since the budget scales on what it keeps
                 known_total=(
-                    self._row_count("index_packed") if filter is None else None
+                    self._row_count("index_packed") if gate is None else None
                 ),
             ))
         return search.knn(
@@ -2505,13 +2514,12 @@ class GrapeVectorDB:
         post-trimming the fused list, so each leg's over-fetch budget is
         spent entirely on returnable documents and the fusion can never
         under-fill because one leg's candidates were all filtered away.
-        The filter rides the posting gate when the tree is servable
-        (judge r10 #2): the dense leg through :meth:`_vector_search`'s
-        shared gate, the BM25/text legs through a narrow posting-id
-        semi-join — the wide documents predicate scan only remains for
-        unservable trees. The BM25/text legs keep the FILTERED
-        subcorpus statistics (df/avgdl over the slice) — a correct,
-        oracled choice carried from earlier rounds."""
+        The filter's :meth:`_gate` is built ONCE for all three legs: the
+        dense leg executes it in :meth:`_vector_search`, the BM25/text
+        legs read ``gate.docs`` and gate the warm terms on ``gate.ids``.
+        The BM25/text legs keep the FILTERED subcorpus statistics
+        (df/avgdl over the slice) — a correct, oracled choice carried
+        from earlier rounds."""
         if with_documents:
             hits = self.hybrid_search(
                 query_text, query_vector, limit=limit, strategy=strategy,
@@ -2525,66 +2533,21 @@ class GrapeVectorDB:
         overfetch = limit * 2
         docs = self.documents()
         terms, lengths = self._warm_terms()
-        gate_ids = None
-        gate_sel = None
-        if filter is not None:
-            # plan the filter gate ONCE for all three legs. Previously
-            # the dense leg re-planned the tree, re-ran the posting
-            # probes and — for fuzzy trees — repeated the per-token
-            # vocabulary-expansion collects inside _vector_search, and
-            # the text leg re-derived _filtered_docs inside the public
-            # search facade: 3x the planning work per hybrid query.
-            part_skip = False
-            eq = filters.simple_equality(filter)
-            if eq is not None and self._has("index_partition"):
-                pst = self._table_stats("index_partition") or {}
-                # the dense leg's DIRECTORY SKIP on the co-partitioned
-                # embeddings beats an id semi-join: leave gate_ids unset
-                # so _vector_search keeps that route (structural check —
-                # zero jobs; the docs/terms legs still gate on ids)
-                part_skip = eq[0] == pst.get("partition_column")
-            tree = self._payload_tree_plan(filter)
-            if tree is not None:
-                ids = self._payload_tree_ids(tree)
-                docs = docs.join(
-                    ids.select(F.col("vec_id").alias(self.id_col)),
-                    self.id_col,
-                    "left_semi",
-                )
-                doc_gate = ids.select(F.col("vec_id").alias("doc_id"))
-                gate_ids = ids
-            else:
-                docs = docs.where(filters.filter_to_column(filter))
-                doc_gate = docs.select(F.col(self.id_col).alias("doc_id"))
-                gate_ids = docs.select(F.col(self.id_col).alias("vec_id"))
+        gate = self._gate(filter)
+        if gate is not None:
+            docs = gate.docs
             # the warm inverted index and its per-doc lengths are per-doc
             # — restrict both by the same ids, never rebuild (and, on the
             # posting route, never touch the wide documents table for
             # this leg). Gating a per-doc aggregate equals aggregating
             # the gated terms: each doc keeps all of its rows or none.
+            doc_gate = gate.ids.select(F.col("vec_id").alias("doc_id"))
             terms = terms.join(doc_gate, "doc_id", "left_semi")
             if lengths is not None:
                 lengths = lengths.join(doc_gate, "doc_id", "left_semi")
-            if part_skip:
-                gate_ids = None
-            else:
-                # straight to _tree_fraction with the tree in hand —
-                # _payload_filter_selectivity would re-run tree planning
-                gate_sel = (
-                    self._tree_fraction(self._frac_env(), tree, False)
-                    if tree is not None
-                    else None
-                )
-                if gate_sel is None:
-                    # sampled, zero-sidecar-estimate miss: ONE estimate
-                    # here instead of one per leg
-                    gate_sel = self._estimate_selectivity(
-                        filters.filter_to_column(filter)
-                    )
         lists = {
             "dense": self._vector_search(
-                query_vector, overfetch, None, filter, index,
-                gate_ids=gate_ids, gate_selectivity=gate_sel,
+                query_vector, overfetch, None, gate, index
             ).withColumnRenamed("vec_id", "doc_id"),
             "sparse": sparse.bm25_search(
                 docs,
@@ -2793,44 +2756,14 @@ class GrapeVectorDB:
             .select("group", "vec_id", "score", "rank_in_group")
         )
 
-    def _filtered_docs(
-        self, docs: DataFrame, filter: dict[str, Any] | None
-    ) -> DataFrame:
-        """documents-side twin of :meth:`_filtered_candidates`: the
-        filtered docs slice via posting-algebra ids when the tree is
-        servable — a narrow id semi-join against pruned posting reads —
-        else the wide predicate scan. Shared by the text search arm and
-        hybrid_search's BM25/text legs (judge r10 #2: hybrid was the
-        last endpoint off the posting gate)."""
-        if filter is None:
-            return docs
-        tree = self._payload_tree_plan(filter)
-        if tree is not None:
-            ids = self._payload_tree_ids(tree).select(
-                F.col("vec_id").alias(self.id_col)
-            )
-            return docs.join(ids, self.id_col, "left_semi")
-        return docs.where(filters.filter_to_column(filter))
-
     def _filtered_candidates(
         self, emb: DataFrame, filter: dict[str, Any] | None
     ) -> DataFrame:
         """The filtered candidate set every example-based endpoint
-        shares: posting-algebra ids when the tree is index-servable
-        (pruned posting reads, the wide documents table never scanned),
-        else the docs-predicate semi-join."""
+        shares: ``emb`` semi-joined to the filter gate's ids."""
         if filter is None:
             return emb
-        tree = self._payload_tree_plan(filter)
-        if tree is not None:
-            keep_ids = self._payload_tree_ids(tree)
-        else:
-            keep_ids = (
-                self.documents()
-                .where(filters.filter_to_column(filter))
-                .select(F.col(self.id_col).alias("vec_id"))
-            )
-        return emb.join(keep_ids, "vec_id", "left_semi")
+        return emb.join(self._gate(filter).ids, "vec_id", "left_semi")
 
     @_snapshot_scope
     def discover(
@@ -3107,14 +3040,7 @@ class GrapeVectorDB:
                     past | ((vcol == cv) & (F.col("vec_id") > cid))
                 )
             if filter is not None:
-                tree = self._payload_tree_plan(filter)
-                if tree is not None:
-                    ids = self._payload_tree_ids(tree)
-                else:
-                    ids = self.documents().where(
-                        filters.filter_to_column(filter)
-                    ).select(F.col(self.id_col).alias("vec_id"))
-                page = page.join(ids, "vec_id", "left_semi")
+                page = page.join(self._gate(filter).ids, "vec_id", "left_semi")
             vorder = vcol.desc() if descending else vcol.asc()
             page = (
                 page.orderBy(vorder, F.col("vec_id").asc())
@@ -3200,14 +3126,7 @@ class GrapeVectorDB:
                 F.col("field") == F.lit(field)
             )
             if filter is not None:
-                tree = self._payload_tree_plan(filter)
-                if tree is not None:
-                    ids = self._payload_tree_ids(tree)
-                else:
-                    ids = self.documents().where(
-                        filters.filter_to_column(filter)
-                    ).select(F.col(self.id_col).alias("vec_id"))
-                sl = sl.join(ids, "vec_id", "left_semi")
+                sl = sl.join(self._gate(filter).ids, "vec_id", "left_semi")
             grouped = sl.groupBy("value")
         else:
             from pyspark.sql.types import ArrayType
@@ -3251,12 +3170,7 @@ class GrapeVectorDB:
         counts the filtered documents scan."""
         if filter is None:
             return self._row_count("documents")
-        tree = self._payload_tree_plan(filter)
-        if tree is not None:
-            return self._payload_tree_ids(tree).count()
-        return self.documents().where(
-            filters.filter_to_column(filter)
-        ).count()
+        return self._gate(filter).ids.count()
 
     @_snapshot_scope
     def search_plan(
@@ -3267,60 +3181,11 @@ class GrapeVectorDB:
         `search(index="auto")` would pick right now, given the current
         corpus size, the filter's measured selectivity, and which index
         tables exist — the reference QueryOptimizer's decision surfaced
-        as an inspectable value instead of buried in the route. Reads the
-        same publish-time stats + sampled selectivity as the route itself,
-        so EXPLAIN is as job-free as the plan it explains."""
-        n_corpus = self._row_count("embeddings")
-        selectivity = 1.0
-        payload_tree = None
-        if filter is not None and n_corpus:
-            sel = self._payload_filter_selectivity(filter)
-            if sel is not None:
-                selectivity = sel
-                payload_tree = self._payload_tree_plan(filter)
-            else:
-                selectivity = self._estimate_selectivity(
-                    filters.filter_to_column(filter)
-                )
-        choice = choose_search_strategy(
-            n_corpus,
-            has_ivf=self._has("index_ivf"),
-            has_packed=self._has("index_packed"),
-            has_sq=self._has("index_sq"),
-            has_graph=self._has("index_graph"),
-            filter_selectivity=selectivity,
-        )
-        if filter is not None:
-            # EXPLAIN parity with search(): say when the filter itself is
-            # served by the partitioned layout's directory skip
-            eq = filters.simple_equality(filter)
-            if eq is not None and self._has("index_partition"):
-                pst = self._table_stats("index_partition") or {}
-                if pst.get("partition_column") == eq[0]:
-                    choice = PlanChoice(
-                        choice.strategy,
-                        choice.reason
-                        + f"; filter served by the partition-pruned layout"
-                        f" (directory skip on {eq[0]!r})",
-                    )
-                    return choice
-            if payload_tree is not None:
-                def _tree_flds(t):
-                    out = set()
-                    for g in t.values():
-                        for f, v, k in g:
-                            out |= _tree_flds(v) if k == "tree" else {f}
-                    return out
-
-                flds = sorted(_tree_flds(payload_tree))
-                choice = PlanChoice(
-                    choice.strategy,
-                    choice.reason
-                    + "; filter served by the payload posting index "
-                    f"(posting algebra on {flds}, histogram-exact "
-                    "selectivity)",
-                )
-        return choice
+        as an inspectable value instead of buried in the route. It IS
+        the route (:meth:`_route` over the same :meth:`_gate`); the
+        reason names how the filter is served and where its selectivity
+        came from. Builds no id set, so EXPLAIN is job-free."""
+        return self._route("auto", self._gate(filter))
 
     def optimize(self, target_partitions: int = 8) -> None:
         """Compact the data tables (streaming upserts accumulate small

@@ -36,6 +36,11 @@ the real decision as a documented cost rule:
 These are *physical strategy picks over index tables*, not Catalyst rules:
 every choice is still a declarative DataFrame plan that AQE re-optimizes at
 runtime.
+
+The facade calls the rule from one place, ``GrapeVectorDB._route``, over
+the selectivity of the filter gate it built once for the call
+(``GrapeVectorDB._gate``); ``search`` executes that decision and
+``search_plan`` returns it, so EXPLAIN cannot drift from what runs.
 """
 
 from __future__ import annotations

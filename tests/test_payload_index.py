@@ -41,6 +41,18 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _eq(field, value, kind="equals") -> dict:
+    return {"must": [{"type": kind, "field": field, "value": value}]}
+
+
+def _sidecar_selectivity(db, flt) -> float:
+    """The filter gate's selectivity, which the index sidecars must have
+    funded (not the sampled fallback)."""
+    gate = db._gate(flt)
+    assert gate.source == "sidecar", flt
+    return gate.selectivity
+
+
 class TestConjunctiveEqualities:
     def test_extracts_single_and_multi(self):
         assert conjunctive_equalities(FLT_EN) == [("lang", "en")]
@@ -160,23 +172,23 @@ class TestPayloadRoute:
 class TestHistogramSelectivity:
     def test_single_equality_is_exact(self, db, docs):
         db.build_index("payload", columns=["lang", "source"])
-        got = db._payload_selectivity([("lang", "en")])
+        got = _sidecar_selectivity(db, FLT_EN)
         want = docs.where("lang = 'en'").count() / docs.count()
-        assert got is not None and abs(got - want) < 1e-9
+        assert abs(got - want) < 1e-9
 
     def test_conjunction_multiplies_independent_fractions(self, db, docs):
         db.build_index("payload", columns=["lang", "source"])
         n = docs.count()
-        got = db._payload_selectivity([("lang", "en"), ("source", "src13")])
+        got = _sidecar_selectivity(db, FLT_EN_SRC)
         want = (docs.where("lang = 'en'").count() / n) * (
             docs.where("source = 'src13'").count() / n
         )
-        assert got is not None and abs(got - want) < 1e-9
+        assert abs(got - want) < 1e-9
 
     def test_missing_value_floors_not_zero(self, db, docs):
         db.build_index("payload", columns=["lang"])
-        got = db._payload_selectivity([("lang", "xx")])
-        assert got is not None and 0 < got <= 0.5 / docs.count() + 1e-12
+        got = _sidecar_selectivity(db, _eq("lang", "xx"))
+        assert 0 < got <= 0.5 / docs.count() + 1e-12
 
     def test_wide_field_stores_distinct_count_only(self, db, docs):
         """n_chars blows the histogram bound: the sidecar must record
@@ -187,12 +199,13 @@ class TestHistogramSelectivity:
         assert set(h) == {"n_distinct"}
         nd = docs.select("n_chars").where("n_chars is not null").distinct().count()
         assert h["n_distinct"] == nd
-        got = db._payload_selectivity([("n_chars", 128)])
+        got = _sidecar_selectivity(db, _eq("n_chars", 128))
         assert abs(got - 1.0 / nd) < 1e-12
 
     def test_unindexed_field_returns_none(self, db):
         db.build_index("payload", columns=["lang"])
-        assert db._payload_selectivity([("source", "src13")]) is None
+        gate = db._gate(_eq("source", "src13"))
+        assert gate.tree is None and gate.source == "sample"
 
     def test_payload_search_launches_zero_pre_search_jobs(self, db, emb):
         """The stats-funded-planner pin extended to the payload route:
@@ -242,7 +255,7 @@ class TestLifecycle:
             for r in db.search(vector=qv, limit=5, filter=flt_zz).collect()
         }
         # the histogram moved with it (planner stays truthful)
-        assert db._payload_selectivity([("lang", "zz")]) >= 1.0 / (
+        assert _sidecar_selectivity(db, flt_zz) >= 1.0 / (
             db._row_count("documents") + 1
         )
 
@@ -266,7 +279,7 @@ class TestLifecycle:
 
     def test_delete_cascades_and_refreshes_histogram(self, db, emb):
         db.build_index("payload", columns=["lang"])
-        sel0 = db._payload_selectivity([("lang", "en")])
+        sel0 = _sidecar_selectivity(db, FLT_EN)
         vid = db.documents().where("lang = 'en'").head()["doc_id"]
         qv = [
             float(x)
@@ -277,7 +290,7 @@ class TestLifecycle:
             r["vec_id"]
             for r in db.search(vector=qv, limit=10, filter=FLT_EN).collect()
         }
-        sel1 = db._payload_selectivity([("lang", "en")])
+        sel1 = _sidecar_selectivity(db, FLT_EN)
         assert sel1 < sel0  # one fewer matching row, smaller corpus too
 
     def test_backup_restore_rebuilds_payload_index(self, db, spark, emb, tmp_path):
@@ -512,29 +525,22 @@ class TestArrayPayload:
 
     def test_equals_on_array_field_keeps_general_route(self, adb, emb):
         adb.build_index("payload", columns=["tags"])
-        assert adb._payload_probe_plan(
-            {"must": [{"type": "equals", "field": "tags", "value": "en"}]}
-        ) is None
+        assert adb._gate(_eq("tags", "en")).tree is None
 
     def test_contains_on_scalar_field_keeps_general_route(self, adb, emb):
         adb.build_index("payload", columns=["tags", "source"])
-        assert adb._payload_probe_plan(
-            {"must": [
-                {"type": "array_contains", "field": "source", "value": "src1"}]}
-        ) is None
+        assert adb._gate(_eq("source", "src1", "array_contains")).tree is None
 
     def test_histogram_counts_docs_not_elements(self, adb, docs):
         """The duplicated lang element must NOT double-count: the 'en'
         fraction equals the fraction of DOCS whose tags contain it."""
         adb.build_index("payload", columns=["tags"])
-        got = adb._payload_selectivity(
-            [("tags", "en", "array_contains")]
-        )
+        got = _sidecar_selectivity(adb, _eq("tags", "en", "array_contains"))
         n = docs.count()
         want = docs.where(
             "lang = 'en' or source = 'en'"
         ).count() / n
-        assert got is not None and abs(got - want) < 1e-9
+        assert abs(got - want) < 1e-9
 
     def test_sidecar_records_array_fields(self, adb):
         adb.build_index("payload", columns=["tags", "source"])
@@ -625,7 +631,7 @@ class TestPayloadTreeAlgebra:
         db.build_index("payload", columns=["lang", "source"])
         n = docs.count()
         # should: union bound = sum of fractions (capped at 1)
-        got = db._payload_filter_selectivity({"should": [
+        got = _sidecar_selectivity(db, {"should": [
             {"type": "equals", "field": "lang", "value": "de"},
             {"type": "equals", "field": "lang", "value": "zh"},
         ]})
@@ -633,12 +639,12 @@ class TestPayloadTreeAlgebra:
             docs.where("lang = 'de'").count()
             + docs.where("lang = 'zh'").count()
         ) / n
-        assert got is not None and abs(got - want) < 1e-9
+        assert abs(got - want) < 1e-9
         # must_not: (present - matching) / n; lang is never null here
-        got = db._payload_filter_selectivity({"must_not": [
+        got = _sidecar_selectivity(db, {"must_not": [
             {"type": "equals", "field": "lang", "value": "en"}]})
         want = docs.where("lang is not null and lang <> 'en'").count() / n
-        assert got is not None and abs(got - want) < 1e-9
+        assert abs(got - want) < 1e-9
 
     def test_tree_search_zero_pre_search_jobs(self, db, emb):
         db.build_index("payload", columns=["lang", "source"])
@@ -732,20 +738,20 @@ class TestInExistsPostings:
 
     def test_in_selectivity_sums_disjoint_fractions(self, db, docs):
         db.build_index("payload", columns=["lang"])
-        got = db._payload_filter_selectivity({"must": [
+        got = _sidecar_selectivity(db, {"must": [
             {"type": "in", "field": "lang", "values": ["de", "zh"]}]})
         n = docs.count()
         want = docs.where("lang in ('de', 'zh')").count() / n
-        assert got is not None and abs(got - want) < 1e-9
+        assert abs(got - want) < 1e-9
 
     def test_exists_selectivity_is_presence(self, ndb, docs):
         ndb.build_index("payload", columns=["lang2"])
-        got = ndb._payload_filter_selectivity(
-            {"must": [{"type": "exists", "field": "lang2"}]}
+        got = _sidecar_selectivity(
+            ndb, {"must": [{"type": "exists", "field": "lang2"}]}
         )
         n = docs.count()
         want = ndb.documents().where("lang2 is not null").count() / n
-        assert got is not None and abs(got - want) < 1e-9
+        assert abs(got - want) < 1e-9
 
 
 class TestRangePostings:
@@ -818,12 +824,13 @@ class TestRangePostings:
             adb.add_documents(tagged, emb)
             adb.build_index("payload", columns=["bucket"])
             n = docs.count()
-            got = adb._payload_filter_selectivity(
+            got = _sidecar_selectivity(
+                adb,
                 {"must": [
-                    {"type": "range", "field": "bucket", "gte": 3, "lte": 6}]}
+                    {"type": "range", "field": "bucket", "gte": 3, "lte": 6}]},
             )
             want = tagged.where("bucket between 3 and 6").count() / n
-            assert got is not None and abs(got - want) < 1e-9
+            assert abs(got - want) < 1e-9
         finally:
             shutil.rmtree(d, ignore_errors=True)
 
@@ -834,14 +841,16 @@ class TestRangePostings:
         db.build_index("payload", columns=["n_chars"])
         st = db._table_stats("index_payload")
         lo, hi = st["numeric_minmax"]["n_chars"]
-        full = db._payload_filter_selectivity(
+        full = _sidecar_selectivity(
+            db,
             {"must": [
-                {"type": "range", "field": "n_chars", "gte": lo, "lte": hi}]}
+                {"type": "range", "field": "n_chars", "gte": lo, "lte": hi}]},
         )
         assert abs(full - 1.0) < 1e-9
-        half = db._payload_filter_selectivity(
+        half = _sidecar_selectivity(
+            db,
             {"must": [{"type": "range", "field": "n_chars",
-                       "gte": lo, "lte": (lo + hi) / 2}]}
+                       "gte": lo, "lte": (lo + hi) / 2}]},
         )
         assert 0 < half < full
 
@@ -954,10 +963,10 @@ class TestTypedLiterals:
         """Selectivity for value 1 (int) on the double column must find
         the "1.0" histogram key — numeric matching, not str(val)."""
         ddb.build_index("payload", columns=["price"])
-        got = ddb._payload_selectivity([("price", 1)])
+        got = _sidecar_selectivity(ddb, _eq("price", 1))
         n = docs.count()
         want = ddb.documents().where("price = 1.0").count() / n
-        assert got is not None and abs(got - want) < 1e-9
+        assert abs(got - want) < 1e-9
 
     def test_fractional_literal_on_int_column_unservable(self, db, emb):
         """1.5 against a BIGINT column: the predicate path's

@@ -212,7 +212,9 @@ class TestMatchLeaves:
         assert st["text_col"] == "text" and st["df_top"]
         n = int(st["doc_rows"])
         flt = {"must": [{"type": "match", "field": "text", "text": "vector"}]}
-        sel = db._payload_filter_selectivity(flt)
+        gate = db._gate(flt)
+        assert gate.source == "sidecar"
+        sel = gate.selectivity
         if "vector" in st["df_top"]:
             assert abs(sel - st["df_top"]["vector"] / n) < 1e-12
         else:

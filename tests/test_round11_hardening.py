@@ -6,7 +6,7 @@
 2. hybrid plans the filter gate ONCE for all three legs (the dense leg
    re-ran tree planning + posting probes + the fuzzy expansion's
    collects inside _vector_search; the text leg re-derived
-   _filtered_docs inside the facade).
+   the documents gate inside the facade).
 3. scroll(with_vectors=True) bounds its driver collect: pages past
    SCROLL_VECTOR_PROBE_CAP gate the embeddings by a distributed
    semi-join instead of a driver id list + giant In literal.

@@ -205,7 +205,9 @@ class TestNestedTrees:
 
     def test_nested_selectivity_is_funded(self, db):
         self._indexed(db)
-        sel = db._payload_filter_selectivity(NESTED)
+        gate = db._gate(NESTED)
+        assert gate.source == "sidecar"
+        sel = gate.selectivity
         assert sel is not None and 0.0 < sel <= 1.0
 
     def test_search_plan_reports_nested_leaf_fields(self, db):
@@ -268,7 +270,7 @@ class TestHybridRouting:
     def test_dense_leg_rides_posting_gate(self, db, emb):
         db.build_index("payload", columns=["lang"])
         qv = _qv(emb)
-        dense = db._vector_search(qv, 20, None, FLT_EN, "auto")
+        dense = db._vector_search(qv, 20, None, db._gate(FLT_EN), "auto")
         plan = _plan(dense)
         assert "index_payload" in plan
         assert "documents" not in plan
