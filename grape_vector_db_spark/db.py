@@ -41,6 +41,7 @@ from .operators import ann, filters, fusion, quantization, search, sparse
 from .plans.planner import PlanChoice, choose_search_strategy, clamp_request
 from .sources.tables import (
     current_table_path,
+    materialized,
     merge_upsert,
     publish_table,
     read_table_stats,
@@ -341,25 +342,6 @@ class GrapeVectorDB:
         )
         self._mutated()
 
-    @contextmanager
-    def _materialized(self, df: DataFrame):
-        """Evaluate ``df`` ONCE into executor storage and hand out that
-        copy; its blocks are released when the block exits, on success
-        or error. An eager localCheckpoint, not a lazy persist: the
-        first consumer may read only part of a lazy cache (a limit(1)
-        probe), and the cut lineage keeps every consumer's plan a plain
-        scan of the stored rows. This is the write path's one
-        materialization mechanism: add_documents evaluates the caller's
-        batches through it, delete_documents its doomed id set, and the
-        payload/text index publishes their posting tables."""
-        cp = df.localCheckpoint(eager=True)
-        try:
-            yield cp
-        finally:
-            # the checkpoint's blocks live under the RDD its LogicalRDD
-            # wraps; the DataFrame API has no release for them
-            cp._jdf.queryExecution().logical().rdd().unpersist(False)
-
     # -- publish-time statistics (the planner's zero-job inputs) ------------
     #
     # Every versioned publish records _STATS.json (row count + per-table
@@ -531,11 +513,10 @@ class GrapeVectorDB:
         )
         if tst is not None and tst.get("text_col") == self.text_col:
             # EXACT sidecar match only: a tombstoned index (text_col
-            # None after its column was dropped — see
-            # _refresh_text_index) or a sidecar recording a different
-            # column must NOT promote, or the sparse leg would read an
-            # empty/foreign posting table while documents still carry
-            # servable text
+            # None after its column was dropped — see _reindex) or a
+            # sidecar recording a different column must NOT promote, or
+            # the sparse leg would read an empty/foreign posting table
+            # while documents still carry servable text
             return self._read("index_terms").withColumnRenamed(
                 "vec_id", "doc_id"
             ), None
@@ -567,78 +548,28 @@ class GrapeVectorDB:
         src/index.rs:165-175) — without this check a single bad batch
         silently corrupts every later search.
 
-        Evaluate-once contract: each caller batch's lineage runs exactly
-        once. Both batches are materialized at entry (_materialized) and
-        every consumer reads that one copy: the dimension check (over
-        EVERY raw embeddings row), the documents merge, the payload /
-        text / partition refresh, the embeddings merge and each index
-        refresh. Duplicate ids collapse once, with the merge's winner
-        rule, so the tables and every index absorb the same row per id.
-        A lineage that is expensive (an embedding-model UDF) costs one
-        pass, and a nondeterministic one (rand) cannot leave documents
-        and indexes disagreeing. The copies are released when the call
-        returns or raises."""
+        Each caller batch's lineage runs exactly once: both batches are
+        materialized at entry, duplicate ids collapse once with the
+        merge's winner rule, and the dimension check, both merges and
+        the one _reindex call all read those copies (released when the
+        call returns or raises). An expensive lineage (an
+        embedding-model UDF) costs one pass, and a nondeterministic one
+        (rand) cannot leave documents and indexes disagreeing."""
         from .sources.tables import _dedup_updates
 
         with ExitStack() as held:
             if embeddings is not None:
                 # the raw copy is needed only until the collapsed one
                 # exists (a checkpoint does not read its input again)
-                with self._materialized(embeddings) as raw:
+                with materialized(embeddings) as raw:
                     self._validate_dimension(raw)
                     embeddings = held.enter_context(
-                        self._materialized(_dedup_updates(raw, "vec_id"))
+                        materialized(_dedup_updates(raw, "vec_id"))
                     )
             docs = held.enter_context(
-                self._materialized(_dedup_updates(docs, self.id_col))
+                materialized(_dedup_updates(docs, self.id_col))
             )
-            ids = docs.select(F.col(self.id_col).alias("vec_id"))  # unique
             self._merge("documents", docs)
-            if self._has("index_payload"):
-                # postings derive from DOCUMENTS metadata: any docs merge
-                # (with or without embeddings) can change indexed values, so
-                # swap the batch ids' posting rows against the post-merge
-                # table — null fields in the update preserved existing
-                # values, and the re-derivation sees exactly what the merge
-                # kept
-                self._refresh_payload_rows(ids)
-            if self._has("index_terms"):
-                # the inverted index derives from documents TEXT: any docs
-                # merge can change it — swap the batch ids' term rows
-                self._refresh_text_index(ids)
-            if self._has("index_partition"):
-                # a changed partition-column value MOVES the row's directory
-                # in the co-partitioned layout — without this, a pruned
-                # search would keep serving the id under its old value while
-                # the semi-join path sees the new one. Runs for EVERY docs
-                # batch (not just metadata-only ones): the embeddings-batch
-                # refresh in _refresh_indexes swaps only the ids carried by
-                # the EMBEDDINGS batch, so a docs-only tenant move riding
-                # alongside an unrelated embeddings batch used to be
-                # skipped (overlapping ids are swapped twice to the same
-                # values — idempotent)
-                st = self._table_stats("index_partition") or {}
-                col = st.get("partition_column")
-                if col and col in docs.columns and self._has("embeddings"):
-                    fresh = (
-                        self.embeddings()
-                        .join(F.broadcast(ids), "vec_id", "left_semi")
-                        .select("vec_id", self.vec_col)
-                        .join(
-                            self.documents().select(
-                                F.col(self.id_col).alias("vec_id"), F.col(col)
-                            ),
-                            "vec_id",
-                        )
-                    )
-                    kept = self._read("index_partition").join(
-                        F.broadcast(ids), "vec_id", "left_anti"
-                    )
-                    self._publish(
-                        "index_partition", kept.unionByName(fresh),
-                        partition_by=[col],
-                        extra_stats={"partition_column": col},
-                    )
             if embeddings is not None:
                 self._merge(
                     "embeddings", embeddings, id_col="vec_id",
@@ -646,126 +577,253 @@ class GrapeVectorDB:
                     # batch's validation needs no table probe
                     stats_exprs={"dim": f"max(size({self.vec_col}))"},
                 )
-                self._refresh_indexes(embeddings)
+            self._reindex(
+                docs.withColumnRenamed(self.id_col, "vec_id"), embeddings
+            )
 
-    def _refresh_indexes(self, batch: DataFrame) -> None:
-        """Incremental index maintenance on insert. The reference rebuilds
-        its whole index per insert (src/lib.rs:317-356,
-        src/index.rs:164-209 — O(corpus) per row); here every EXISTING
-        index absorbs the batch in O(batch):
+    def _reindex(
+        self,
+        rows: DataFrame,
+        vectors: DataFrame | None = None,
+        deleted: bool = False,
+    ) -> None:
+        """Bring every existing index in step with a write that already
+        landed in documents and embeddings, one block per index kind,
+        each index published once. ``rows`` holds the written documents
+        keyed by ``vec_id``: an upsert's collapsed batch (its columns
+        say which fields it carried) or, with ``deleted``, the doomed
+        ids. ``vectors`` is an upsert's collapsed embeddings batch.
 
-        - ivf: drop the batch ids' posting rows (update semantics — a
-          changed vector MOVES cells), ann.ivf_add against the FROZEN
-          centroids; identical rows to a bulk re-assignment (the
-          grown == built invariant pinned in tests/oracles).
-        - packed / sq: both encodings are per-vector (sign bits;
-          per-vector min/rng calibration), so re-encoding just the batch
-          and swapping its rows reproduces a full rebuild exactly.
-
-        build_index remains the offline full retrain (rebuild_index,
-        ref:src/query.rs:257-269); every publish is the versioned swap,
-        so a search running mid-refresh reads old-or-new, never partial.
-
-        Evaluate-once contract: ``batch`` is add_documents' materialized
-        copy, already collapsed to one row per vec_id with the winner
-        rule the embeddings merge applies, so every index (ivf, packed,
-        sq, graph, partition) encodes exactly the rows the merge kept
-        and none re-runs the caller's lineage. Encoding a raw batch
-        would leave duplicate posting rows per id (one pointing at a
-        vector that no longer exists) whenever a client batch repeats an
-        id, an explicitly supported shape."""
-        ids = batch.select("vec_id")
+        Per kind: payload and text re-derive the ``rows`` ids' postings
+        from the post-merge documents (none on delete) and swap them in;
+        partition re-derives the ids of ``vectors`` and, when the batch
+        carried the partition column, of ``rows`` (a changed value moves
+        the row's directory); ivf, binary and sq drop the written ids
+        and add ``vectors`` re-encoded (ivf against the frozen
+        centroids); the graph grows exactly by ``vectors``
+        (ann.knn_graph_add), rebuilds when an update moved an existing
+        node, and on delete repairs the srcs that pointed at a doomed id
+        or rebuilds past GRAPH_REBUILD_FRACTION. A docs-only upsert
+        leaves the vector indexes alone. The result equals build_index
+        over the final corpus (grown == rebuilt), in O(batch) work per
+        index except the whole-table rewrites noted at build_index;
+        every publish is the versioned swap, so a concurrent search
+        reads old or new, never partial. The reference rebuilds its
+        whole index per insert instead (src/lib.rs:317-356)."""
+        ids = rows.select("vec_id")
+        if deleted:
+            vec_ids = ids
+        else:
+            vec_ids = None if vectors is None else vectors.select("vec_id")
+        # an upsert batch is small by contract and rides a broadcast into
+        # the anti-joins; a delete's doomed set can be corpus-sized
+        hint = (lambda d: d) if deleted else F.broadcast
+        docs = self.documents()
+        # the post-merge documents rows of an upsert's ids
+        touched = None if deleted else docs.join(
+            F.broadcast(ids.select(F.col("vec_id").alias(self.id_col))),
+            self.id_col,
+            "left_semi",
+        )
+        if self._has("index_payload"):
+            # columns a docs re-publish dropped cannot be re-derived
+            # (their postings drop in _publish_payload_index)
+            cols = [c for c in self._payload_columns() if c in docs.columns]
+            if deleted or cols:
+                kept = self._read("index_payload").join(
+                    hint(ids), "vec_id", "left_anti"
+                )
+                if "value_num" not in kept.columns:
+                    # legacy (pre-value_num) rows: derive the numeric
+                    # column from the stored string (try_cast, ANSI-safe;
+                    # numeric fields' strings are Spark casts, so they
+                    # round-trip). A sidecar carrying field_types always
+                    # fronts a value_num-backed table (range routing
+                    # relies on it)
+                    kept = kept.withColumn(
+                        "value_num", F.expr("try_cast(value as double)")
+                    )
+                if not deleted:
+                    kept = kept.unionByName(
+                        self._payload_postings(touched, cols)
+                    )
+                self._publish_payload_index(kept, cols)
+        if self._has("index_terms"):
+            st = self._table_stats("index_terms") or {}
+            col = st.get("text_col") or self.text_col
+            if st.get("text_col") is None and st.get("dropped_column"):
+                # tombstoned (the indexed column was dropped by an earlier
+                # docs re-publish): even if a later re-publish RESTORED
+                # it, the standing index covers none of the pre-restore
+                # corpus, so neither O(batch) maintenance nor a
+                # re-publish with a real text_col may make it servable
+                # again. Only build_index("text") clears the tombstone.
+                pass
+            elif not deleted and col not in docs.columns:
+                # the indexed column was dropped by a docs re-publish:
+                # publish the index EMPTY and tombstoned instead of
+                # leaving stale postings for a column the predicate path
+                # can no longer resolve (the payload-index rule)
+                self._publish_text_index(
+                    self._read("index_terms").limit(0), col, tombstone=True
+                )
+            else:
+                kept = self._read("index_terms").join(
+                    hint(ids), "vec_id", "left_anti"
+                )
+                if not deleted:
+                    kept = kept.unionByName(
+                        sparse.doc_terms(
+                            touched, id_col=self.id_col, text_col=col
+                        ).withColumnRenamed("doc_id", "vec_id")
+                    )
+                self._publish_text_index(kept, col)
+        if self._has("index_partition"):
+            col = (self._table_stats("index_partition") or {}).get(
+                "partition_column"
+            )
+            if deleted:
+                self._swap("index_partition", ids)
+            elif col:
+                # a new vector or a changed partition value moves the
+                # row's directory; a batch without the column moves none
+                moved = vec_ids
+                if col in rows.columns:
+                    moved = ids if moved is None else ids.unionByName(moved)
+                if moved is not None:
+                    fresh = (
+                        self.embeddings()
+                        .join(F.broadcast(moved), "vec_id", "left_semi")
+                        .select("vec_id", self.vec_col)
+                        .join(
+                            docs.select(
+                                F.col(self.id_col).alias("vec_id"), F.col(col)
+                            ),
+                            "vec_id",
+                        )
+                    )
+                    self._swap("index_partition", F.broadcast(moved), fresh)
+        if vec_ids is None:
+            return
         if self._has("index_ivf"):
             cents, assigned = ann.load_index(
                 self.spark, self._path("index_ivf")
             )
-            grown = ann.ivf_remove(assigned, ids).unionByName(
-                ann.ivf_add(
-                    batch, cents, vec_col=self.vec_col,
-                    # match the stored layout: inverted lists keep
-                    # carrying vectors through the refresh, and a
-                    # replicated (SPANN) layout keeps its replica count
-                    include_vectors="v" in assigned.columns,
-                    replicas=self._ivf_replicas(),
+            grown = ann.ivf_remove(assigned, vec_ids)
+            if vectors is not None:
+                grown = grown.unionByName(
+                    ann.ivf_add(
+                        vectors, cents, vec_col=self.vec_col,
+                        # match the stored layout: inverted lists keep
+                        # carrying vectors, and a replicated (SPANN)
+                        # layout keeps its replica count
+                        include_vectors="v" in assigned.columns,
+                        replicas=self._ivf_replicas(),
+                    )
                 )
-            )
             ann.save_index(
                 self._path("index_ivf"), cents, grown,
-                extra_stats={"replicas": self._ivf_replicas()},
+                extra_stats=self._layout_stats("index_ivf/assignments"),
             )
-        if self._has("index_packed"):
-            fresh = quantization.pack_bits(batch, "vec_id", self.vec_col)
-            self._swap_index_rows("index_packed", ids, fresh)
-        if self._has("index_sq"):
-            fresh = quantization.sq_quantize(batch, "vec_id", self.vec_col)
-            self._swap_index_rows("index_sq", ids, fresh)
-        if self._has("index_graph"):
-            # one corpus scan vs the broadcast batch; exact for inserts
-            # (a node's post-insert kNN ⊆ old kNN ∪ batch — see
-            # ann.knn_graph_add); out-degree recovered from the stored
-            # edges (a one-scalar driver artifact)
-            edges = self._read("index_graph")
-            gst = self._table_stats("index_graph")
-            if gst is not None and gst.get("max_rank") is not None:
-                k = int(gst["max_rank"])
-            else:
-                k = edges.agg(F.max("rank")).first()[0] or 8
-            # UPDATE batches break knn_graph_add's exactness contract: a
-            # moved vector invalidates reverse edges whose true
-            # replacement may lie OUTSIDE old ∪ batch. Every pre-existing
-            # corpus id appears as a graph src, so "any batch id is a
-            # src" detects updates with one bounded probe; updates
-            # trigger the full retrain — the ivf_drift rebuild-trigger
-            # contract applied to the graph, keeping the published index
-            # ALWAYS exact (grown == rebuilt).
-            is_update = bool(
-                edges.select("src")
-                .join(
-                    F.broadcast(ids.withColumnRenamed("vec_id", "src")),
-                    "src",
-                    "left_semi",
+        for table, encode in (
+            ("index_packed", quantization.pack_bits),
+            ("index_sq", quantization.sq_quantize),
+        ):
+            # both encodings are per-vector (sign bits; per-vector
+            # min/rng calibration), so re-encoding just the batch
+            # reproduces a full rebuild exactly
+            if self._has(table):
+                fresh = (
+                    None if vectors is None
+                    else encode(vectors, "vec_id", self.vec_col)
                 )
-                .limit(1)
-                .count()
-            )
-            if is_update:
+                self._swap(table, hint(vec_ids), fresh)
+        if self._has("index_graph"):
+            edges = self._read("index_graph")
+            k = self._graph_degree(edges)
+            decision = None
+            if deleted:
+                # drop every edge TOUCHING a doomed id (a dangling dst
+                # would make the walk score a deleted vector), then
+                # REPAIR: a survivor that pointed at a doomed id has
+                # < k degree and its true kth neighbor can be ANY corpus
+                # vector, so those srcs get a fresh exact top-k from one
+                # corpus scan (ann.knn_exact_for; the affected set is
+                # bounded by the doomed set's in-degree). Unaffected
+                # srcs' lists held no doomed id, so their edges ARE the
+                # rebuild's answer (VERDICT r7 #3).
+                src = ids.withColumnRenamed("vec_id", "src")
+                dst = ids.withColumnRenamed("vec_id", "dst")
+                affected = (
+                    edges.join(dst, "dst", "left_semi")
+                    .select("src")
+                    .distinct()
+                    .join(src, "src", "left_anti")
+                )
+                # repair costs ~ |affected| x n; past the documented
+                # fraction the blocked-GEMM rebuild is cheaper and resets
+                # edge-table fragmentation (VERDICT r8 #5). The count is
+                # one delta-bounded job
+                n_affected = affected.count()
+                n_remaining = self._row_count("embeddings")
+                rebuild = bool(
+                    n_remaining
+                    and n_affected > self.GRAPH_REBUILD_FRACTION * n_remaining
+                )
+                decision = {
+                    "delete_maintenance": "rebuild" if rebuild else "repair",
+                    "affected_srcs": int(n_affected),
+                    "rebuild_fraction": self.GRAPH_REBUILD_FRACTION,
+                }
+            else:
+                # an UPDATE breaks knn_graph_add's exactness contract (a
+                # moved vector invalidates reverse edges whose true
+                # replacement may lie outside old ∪ batch). Every corpus
+                # id is a src, so one bounded probe detects updates,
+                # which retrain in full (the ivf_drift rebuild trigger)
+                rebuild = bool(
+                    edges.select("src")
+                    .join(
+                        F.broadcast(
+                            vec_ids.withColumnRenamed("vec_id", "src")
+                        ),
+                        "src",
+                        "left_semi",
+                    )
+                    .limit(1)
+                    .count()
+                )
+            if rebuild:
                 grown = ann.knn_graph(
-                    self.embeddings(), k=int(k),
+                    self.embeddings(), k=k,
                     id_col="vec_id", vec_col=self.vec_col,
                 )
+            elif deleted:
+                kept = (
+                    edges.join(src, "src", "left_anti")
+                    .join(dst, "dst", "left_anti")
+                    # affected srcs are replaced wholesale by the repair
+                    .join(affected, "src", "left_anti")
+                )
+                grown = kept.unionByName(
+                    ann.knn_exact_for(
+                        self.embeddings(),
+                        affected.select(F.col("src").alias("vec_id")),
+                        k, id_col="vec_id", vec_col=self.vec_col,
+                    )
+                )
             else:
+                # one corpus scan vs the broadcast batch; exact for
+                # inserts (a node's post-insert kNN ⊆ old kNN ∪ batch)
                 grown = ann.knn_graph_add(
-                    edges, self.embeddings(), ids, int(k),
+                    edges, self.embeddings(), vec_ids, k,
                     id_col="vec_id", vec_col=self.vec_col,
                 )
             self._publish(
                 "index_graph", grown,
                 stats_exprs={"max_rank": "max(rank)"},
+                extra_stats=decision,
             )
-        if self._has("index_partition"):
-            st = self._table_stats("index_partition") or {}
-            col = st.get("partition_column")
-            if col:
-                # re-derive the batch rows' partition values from the
-                # already-merged documents table (covers inserts AND
-                # updates that move a row across partitions), swap the
-                # batch ids' rows, re-publish under the SAME layout —
-                # flattening it here would silently turn every future
-                # pruned search back into a full scan
-                fresh = batch.select("vec_id", self.vec_col).join(
-                    self.documents().select(
-                        F.col(self.id_col).alias("vec_id"), F.col(col)
-                    ),
-                    "vec_id",
-                )
-                kept = self._read("index_partition").join(
-                    F.broadcast(ids), "vec_id", "left_anti"
-                )
-                self._publish(
-                    "index_partition", kept.unionByName(fresh),
-                    partition_by=[col],
-                    extra_stats={"partition_column": col},
-                )
 
     def _validate_dimension(self, embeddings: DataFrame) -> None:
         """Raise if any incoming vector's length differs from the expected
@@ -868,190 +926,29 @@ class GrapeVectorDB:
         DELETE semantics via sources.tables.delete_where: rows where the
         predicate is NULL are KEPT, not deleted.
 
-        A delete cascades to the embeddings table and every existing
-        index (the reference's remove_document drops the store row AND
-        the index entry together, ref:src/query.rs:65-73 /
-        ref:src/index.rs:46-47) — otherwise searches keep returning
-        dead ids that hydrate to nothing. All removals are anti-joins
-        against the doomed id set; every publish is the versioned swap."""
+        A delete cascades to the embeddings table and, through the same
+        _reindex that upserts use, every existing index (the reference's
+        remove_document drops the store row AND the index entry
+        together, ref:src/query.rs:65-73 / ref:src/index.rs:46-47) —
+        otherwise searches keep returning dead ids that hydrate to
+        nothing. The doomed id set is materialized before the first
+        publish: its lazy plan reads the documents table the cascade is
+        about to replace."""
+        from .sources.tables import delete_where
+
         docs = self.documents()
-        # Materialize the doomed id set EAGERLY, before the first publish:
-        # the lazy plan reads the documents table, and the cascade below
-        # publishes a new documents version before the embeddings/index
-        # anti-joins would otherwise evaluate it. That was only safe via an
-        # implicit retention invariant (publish keeps >= 1 prior version);
-        # materializing removes the dependency on retention entirely.
-        with self._materialized(
+        with materialized(
             docs.where(F.expr(predicate) == True).select(  # noqa: E712
                 F.col(self.id_col).alias("vec_id")
             )
         ) as doomed:
-            self._delete_cascade(docs, predicate, doomed)
-
-    def _delete_cascade(
-        self, docs: DataFrame, predicate: str, doomed: DataFrame
-    ) -> None:
-        from .sources.tables import delete_where
-
-        self._overwrite("documents", delete_where(docs, predicate))
-        if self._has("embeddings"):
-            self._overwrite(
-                "embeddings",
-                self.embeddings().join(doomed, "vec_id", "left_anti"),
-            )
-        if self._has("index_ivf"):
-            cents, assigned = ann.load_index(
-                self.spark, self._path("index_ivf")
-            )
-            from .sources.tables import read_table_stats as _rts
-
-            # carry the assignments sidecar through the cascade (minus
-            # the publish-owned row count): dropping it erased the
-            # 'replicas' key, so _ivf_replicas() read 1 thereafter —
-            # the next refresh encoded batches replicas=1 against a
-            # replicas=2 layout and every search lost the x2 nprobe
-            # scaling (the measured R@10 0.77 -> 0.46 regression class)
-            prior = _rts(
-                self.spark, f"{self._path('index_ivf')}/assignments"
-            ) or {}
-            keep_stats = {k: v for k, v in prior.items() if k != "rows"}
-            ann.save_index(
-                self._path("index_ivf"), cents,
-                ann.ivf_remove(assigned, doomed),
-                extra_stats=keep_stats or None,
-            )
-        from .sources.tables import _bucketed_versions, delete_ids_bucketed_retry
-
-        for table in ("index_packed", "index_sq"):
-            if self._has(table):
-                if _bucketed_versions(self.spark, self._path(table)):
-                    # delta-bounded: only the buckets the doomed ids hash
-                    # to are read and rewritten (emptied buckets leave
-                    # the manifest)
-                    delete_ids_bucketed_retry(
-                        self.spark, self._path(table), doomed, id_col="vec_id"
-                    )
-                else:
-                    self._overwrite(
-                        table,
-                        self._read(table).join(doomed, "vec_id", "left_anti"),
-                    )
-        if self._has("index_partition"):
-            st = self._table_stats("index_partition") or {}
-            col = st.get("partition_column")
-            self._publish(
-                "index_partition",
-                self._read("index_partition").join(doomed, "vec_id", "left_anti"),
-                # preserve the partitioned layout + its sidecar through
-                # the cascade (a plain overwrite would flatten it)
-                partition_by=[col] if col else None,
-                extra_stats={"partition_column": col} if col else None,
-            )
-        if self._has("index_payload"):
-            # anti-join the doomed ids out and re-publish through the
-            # histogram-refreshing path (a stale histogram would keep
-            # funding the planner with deleted rows' selectivity)
-            self._publish_payload_index(
-                self._read("index_payload").join(doomed, "vec_id", "left_anti"),
-                self._payload_columns(),
-            )
-        if self._has("index_terms"):
-            st = self._table_stats("index_terms") or {}
-            if st.get("text_col") is None and st.get("dropped_column"):
-                # tombstoned (its column was dropped): the table is
-                # already empty — re-publishing with a real text_col
-                # would RESURRECT the empty index as servable (match
-                # routing + _warm_terms would silently serve zero hits)
-                pass
-            else:
-                self._publish_text_index(
-                    self._read("index_terms").join(
-                        doomed, "vec_id", "left_anti"
-                    ),
-                    st.get("text_col") or self.text_col,
+            self._overwrite("documents", delete_where(docs, predicate))
+            if self._has("embeddings"):
+                self._overwrite(
+                    "embeddings",
+                    self.embeddings().join(doomed, "vec_id", "left_anti"),
                 )
-        if self._has("index_graph"):
-            # drop every edge TOUCHING a doomed id (a dangling dst would
-            # make the walk score a deleted vector), then REPAIR: a
-            # survivor that pointed at a doomed id now has < k degree and
-            # its true post-delete kth neighbor can be ANY corpus vector
-            # (outside its old list), so those srcs get a fresh exact
-            # top-k from one corpus scan (ann.knn_exact_for — the
-            # affected set is delta-bounded by the doomed set's
-            # in-degree). Unaffected srcs' lists contained no doomed id,
-            # so deletion cannot change their top-k — keeping their old
-            # edges IS the rebuild's answer. Net: grown == rebuilt holds
-            # through deletes, not just inserts (VERDICT r7 #3).
-            edges = self._read("index_graph")
-            gst = self._table_stats("index_graph")
-            if gst is not None and gst.get("max_rank") is not None:
-                k = int(gst["max_rank"])
-            else:
-                k = edges.agg(F.max("rank")).first()[0] or 8
-            affected = (
-                edges.join(
-                    doomed.select(F.col("vec_id").alias("dst")), "dst", "left_semi"
-                )
-                .select("src")
-                .distinct()
-                .join(
-                    doomed.select(F.col("vec_id").alias("src")), "src", "left_anti"
-                )
-            )
-            # Repair cost ~ |affected| x n (one exact scan per affected
-            # src) degrades toward the full rebuild's n x n as
-            # |affected| -> n, while the rebuild's blocked-GEMM kernel
-            # has better constants than the id-pruned repair scan (it
-            # tiles BOTH sides). Past the documented fraction, rebuilding
-            # is strictly cheaper AND resets edge-table fragmentation —
-            # the ivf_drift flip applied to the graph family (VERDICT
-            # r8 #5). Counting the affected id set is one delta-bounded
-            # job inside an already job-running maintenance path.
-            n_affected = affected.count()
-            n_remaining = self._row_count("embeddings")
-            rebuild = bool(
-                n_remaining
-                and n_affected > self.GRAPH_REBUILD_FRACTION * n_remaining
-            )
-            decision = {
-                "delete_maintenance": "rebuild" if rebuild else "repair",
-                "affected_srcs": int(n_affected),
-                "rebuild_fraction": self.GRAPH_REBUILD_FRACTION,
-            }
-            if rebuild:
-                grown = ann.knn_graph(
-                    self.embeddings(), k=k,
-                    id_col="vec_id", vec_col=self.vec_col,
-                )
-                self._publish(
-                    "index_graph", grown,
-                    stats_exprs={"max_rank": "max(rank)"},
-                    extra_stats=decision,
-                )
-                return
-            kept = (
-                edges.join(
-                    doomed.select(F.col("vec_id").alias("src")), "src", "left_anti"
-                )
-                .join(
-                    doomed.select(F.col("vec_id").alias("dst")), "dst", "left_anti"
-                )
-                # affected srcs are replaced wholesale by the repair scan
-                .join(affected, "src", "left_anti")
-            )
-            repaired = ann.knn_exact_for(
-                self.embeddings(),
-                affected.select(F.col("src").alias("vec_id")),
-                k,
-                id_col="vec_id",
-                vec_col=self.vec_col,
-            )
-            self._publish(
-                "index_graph",
-                kept.unionByName(repaired),
-                stats_exprs={"max_rank": "max(rank)"},
-                extra_stats=decision,
-            )
+            self._reindex(doomed, deleted=True)
 
     def _overwrite(self, table: str, df: DataFrame) -> None:
         from .sources.tables import _bucketed_versions, write_table_bucketed
@@ -1257,16 +1154,6 @@ class GrapeVectorDB:
             payload_sidecar_stats,
         )
 
-        if "value_num" not in postings.columns:
-            # legacy (pre-value_num) rows flowing through a refresh or
-            # delete cascade: derive the numeric column from the stored
-            # string (try_cast — ANSI-safe; numeric fields' strings are
-            # Spark casts, so they round-trip). Keeps the invariant that
-            # a sidecar carrying field_types always fronts a
-            # value_num-backed table (range routing relies on it).
-            postings = postings.withColumn(
-                "value_num", F.expr("try_cast(value as double)")
-            )
         docs = self.documents()
         # schema evolution survival (ADVICE r9): a previously indexed
         # column dropped from a re-published documents table must not
@@ -1280,7 +1167,7 @@ class GrapeVectorDB:
         postings = postings.where(
             F.col("field").isin(cols) if cols else F.lit(False)
         )
-        with self._materialized(payload_layout(postings)) as postings:
+        with materialized(payload_layout(postings)) as postings:
             self._publish(
                 "index_payload",
                 postings,
@@ -1312,7 +1199,7 @@ class GrapeVectorDB:
         once and both the sidecar aggregate and the write read it."""
         from .operators.payload import HIST_MAX
 
-        with self._materialized(sparse.text_index_layout(terms)) as terms:
+        with materialized(sparse.text_index_layout(terms)) as terms:
             stats = sparse.text_index_sidecar_stats(
                 terms, col, self._row_count("documents"), HIST_MAX
             )
@@ -1329,51 +1216,6 @@ class GrapeVectorDB:
                 # corpus and clears this marker.
                 stats = {**stats, "text_col": None, "dropped_column": col}
             self._publish("index_terms", terms, extra_stats=stats)
-
-    def _refresh_text_index(self, ids: DataFrame) -> None:
-        """Swap the batch ids' term rows (the O(batch) maintenance shape
-        every other index uses): re-tokenize ONLY the batch slice of the
-        post-merge documents, keep everyone else's rows, re-publish with
-        a fresh df histogram."""
-        st = self._table_stats("index_terms") or {}
-        if st.get("text_col") is None and st.get("dropped_column"):
-            # tombstoned (the indexed column was dropped by an earlier
-            # docs re-publish): even if a later re-publish RESTORED the
-            # column, the standing index covers none of the pre-restore
-            # corpus — resuming O(batch) maintenance here would leave a
-            # partial index that match routing would silently serve.
-            # Stay tombstoned until an explicit build_index("text")
-            # re-tokenizes the whole corpus.
-            return
-        col = st.get("text_col") or self.text_col
-        if col not in self.documents().columns:
-            # the indexed text column was dropped by a docs re-publish:
-            # its postings drop WITH it (the payload-index rule, ADVICE
-            # r10) — publish the index EMPTY **and tombstoned** instead
-            # of leaving stale postings published for a column the
-            # predicate path can no longer even resolve. The tombstone
-            # (text_col None in the sidecar) makes match routing,
-            # _warm_terms promotion, and later refreshes all treat the
-            # index as unservable — including after the column is
-            # RESTORED by yet another re-publish, when the empty index
-            # would otherwise silently grow batch-only coverage.
-            self._publish_text_index(
-                self._read("index_terms").limit(0), col, tombstone=True
-            )
-            return
-        fresh = sparse.doc_terms(
-            self.documents().join(
-                F.broadcast(ids.select(F.col("vec_id").alias(self.id_col))),
-                self.id_col,
-                "left_semi",
-            ),
-            id_col=self.id_col,
-            text_col=col,
-        ).withColumnRenamed("doc_id", "vec_id")
-        kept = self._read("index_terms").join(
-            F.broadcast(ids), "vec_id", "left_anti"
-        )
-        self._publish_text_index(kept.unionByName(fresh), col)
 
     def _payload_columns(self) -> list[str]:
         st = self._table_stats("index_payload") or {}
@@ -2081,62 +1923,56 @@ class GrapeVectorDB:
             s += x
         return min(1.0, s)
 
-    def _refresh_payload_rows(self, ids: DataFrame) -> None:
-        """Swap the batch ids' posting rows: re-derive them from the
-        post-merge documents table (covers inserts, value updates, AND
-        values merged away to a different one), keep everyone else's,
-        re-publish with a fresh sidecar histogram. Delta-bounded read of
-        the batch slice; whole-posting-table write (see
-        _publish_payload_index's maintenance note)."""
-        cols = self._payload_columns()
-        # columns dropped by a docs re-publish can't be re-derived (and
-        # their stale postings drop in _publish_payload_index)
-        cols = [c for c in cols if c in self.documents().columns]
-        if not cols:
-            return
-        fresh = self._payload_postings(
-            self.documents().join(
-                F.broadcast(ids.select(F.col("vec_id").alias(self.id_col))),
-                self.id_col,
-                "left_semi",
-            ),
-            cols,
-        )
-        kept = self._read("index_payload").join(
-            F.broadcast(ids), "vec_id", "left_anti"
-        )
-        if "value_num" not in kept.columns:
-            # legacy rows join a value_num-carrying fresh batch: derive
-            # theirs from the stored string (publish re-checks the whole
-            # table, but the union needs matching columns NOW)
-            kept = kept.withColumn(
-                "value_num", F.expr("try_cast(value as double)")
-            )
-        self._publish_payload_index(kept.unionByName(fresh), cols)
+    def _graph_degree(self, edges: DataFrame) -> int:
+        """The graph index's out-degree: the publish-time max_rank stat,
+        or one edge-table aggregate for a legacy index without it."""
+        gst = self._table_stats("index_graph") or {}
+        if gst.get("max_rank") is not None:
+            return int(gst["max_rank"])
+        return int(edges.agg(F.max("rank")).first()[0] or 8)
 
-    def _swap_index_rows(
-        self, table: str, ids: DataFrame, fresh: DataFrame
+    def _layout_stats(self, table: str) -> dict:
+        """The sidecar keys that describe a table's layout rather than
+        its rows (the partition layout's column, an IVF layout's replica
+        count); every maintenance re-publish carries them, or later
+        refreshes and searches would read the wrong layout."""
+        st = self._table_stats(table) or {}
+        return {k: st[k] for k in ("partition_column", "replicas") if k in st}
+
+    def _swap(
+        self, table: str, ids: DataFrame, fresh: DataFrame | None = None
     ) -> None:
-        """Replace the batch ids' rows in a per-vector index. Flat layout:
-        anti-join + whole-table publish (an O(corpus) write per batch —
-        fine for small stores, the reason n_buckets exists). Bucketed
-        layout: a delta-bounded MERGE rewriting only the buckets the
-        batch ids hash to (fresh rows carry every column, so update-wins
-        merge semantics equal drop-then-insert)."""
+        """Replace the rows of ``ids`` in a per-vector index table with
+        ``fresh`` (None just drops them) under the table's stored
+        layout. A bucket-manifest table rewrites only the buckets the
+        ids hash to (fresh rows carry every column, so the update-wins
+        merge equals drop-then-insert). A flat table is anti-joined and
+        re-published whole, keeping its partition column and
+        _layout_stats (a plain publish would flatten the layout)."""
         from .sources.tables import (
-            _bucketed_versions,
+            delete_ids_bucketed_retry,
             merge_upsert_bucketed_retry,
         )
 
-        if _bucketed_versions(self.spark, self._path(table)):
-            merge_upsert_bucketed_retry(
-                self.spark, self._path(table), fresh, id_col="vec_id"
-            )
-        else:
-            kept = self._read(table).join(
-                F.broadcast(ids), "vec_id", "left_anti"
-            )
-            self._publish(table, kept.unionByName(fresh))
+        if self._bucket_versions(table):
+            if fresh is None:
+                delete_ids_bucketed_retry(
+                    self.spark, self._path(table), ids, id_col="vec_id"
+                )
+            else:
+                merge_upsert_bucketed_retry(
+                    self.spark, self._path(table), fresh, id_col="vec_id"
+                )
+            return
+        kept = self._read(table).join(ids, "vec_id", "left_anti")
+        extras = self._layout_stats(table)
+        col = extras.get("partition_column")
+        self._publish(
+            table,
+            kept if fresh is None else kept.unionByName(fresh),
+            partition_by=[col] if col else None,
+            extra_stats=extras,
+        )
 
     def _write_vector_index(
         self, table: str, rows: DataFrame, kwargs: dict
@@ -2382,15 +2218,10 @@ class GrapeVectorDB:
             edges = self._read("index_graph")
             # size the walk to the corpus (hops must reach the
             # query's neighborhood: ~log_degree(n) + 1 — fixed hops
-            # decay recall as n grows, measured in RECALL.md §sf1);
-            # out-degree from publish-time stats (max_rank), falling
-            # back to the edge-table agg only for legacy indexes
-            gst = self._table_stats("index_graph")
-            if gst is not None and gst.get("max_rank") is not None:
-                degree = int(gst["max_rank"])
-            else:
-                degree = edges.agg(F.max("rank")).first()[0] or 8
-            beam, hops = ann.graph_autosize(n_corpus, int(degree), k=limit)
+            # decay recall as n grows, measured in RECALL.md §sf1)
+            beam, hops = ann.graph_autosize(
+                n_corpus, self._graph_degree(edges), k=limit
+            )
             # ef-expansion rule: widen the beam under a filter so
             # enough passing candidates stay in the visited set.
             # WIDEN-only: the cap must never shrink a beam the autosizer

@@ -1672,76 +1672,6 @@ def incremental_embedding_neardup(
     )
 
 
-def embedding_neardup_pairs_fast(
-    emb: DataFrame,
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_broadcast_rows: int = 50_000,
-    known_count: int | None = None,
-) -> DataFrame:
-    """BLAS-backed exact all-pairs cosine for corpora whose embedding matrix
-    fits comfortably in driver+executor memory (rows*dim*8 bytes;
-    50k x 768 ~ 300 MB — the cap bounds the driver's transient copy, which
-    is why it defaults conservative; VERDICT r1 item 6).
-
-    One side is broadcast as a dense numpy matrix; each Arrow batch of the
-    other side computes a (batch x N) cosine block via matmul and emits the
-    above-threshold (a < b) pairs. ~10x faster than the expression fold.
-    The matrix is pulled with Arrow (`toPandas`) — columnar transfer, no
-    per-row Row objects — then broadcast torrent-style to executors.
-    Falls back to :func:`embedding_neardup_pairs` (blocked equi-join, no
-    broadcast, unbounded scale) when the corpus is too large — that is also
-    the bit-exact-ordered variant; this one sums in BLAS order (differences
-    ~1e-15, absorbed by the 6-dp rounding).
-    """
-    import numpy as np
-
-    # a separate count() job per call is pure overhead when the caller
-    # already knows the corpus size (judge r2 "What's wrong" #5)
-    n = known_count if known_count is not None else emb.count()
-    if n > max_broadcast_rows:
-        return embedding_neardup_pairs(emb, threshold, id_col, vec_col)
-
-    pdf0 = emb.select(
-        F.col(id_col).alias("id"), to_double_array(vec_col).alias("v")
-    ).toPandas()
-    ids = pdf0["id"].to_numpy()
-    if len(pdf0) == 0:  # np.asarray([]) is 1-D; axis=1 would crash
-        return emb.sparkSession.createDataFrame(
-            [], "a long, b long, cosine double"
-        )
-    M = np.asarray(list(pdf0["v"]), dtype=np.float64)
-    nrm = np.sqrt((M * M).sum(axis=1))
-    sc = emb.sparkSession.sparkContext
-    bc = sc.broadcast((ids, M, nrm))
-
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        b_ids, b_M, b_nrm = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.asarray(list(pdf["v"]), dtype=np.float64)
-            xids = pdf["id"].to_numpy()
-            xn = np.sqrt((X * X).sum(axis=1))
-            denom = xn[:, None] * b_nrm[None, :]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                S = np.where(denom > 0, (X @ b_M.T) / denom, 0.0)
-            S = np.round(S, 6)
-            mask = (S >= threshold) & (xids[:, None] < b_ids[None, :])
-            xi, yi = np.nonzero(mask)
-            yield pd.DataFrame(
-                {"a": xids[xi], "b": b_ids[yi], "cosine": S[xi, yi]}
-            )
-
-    src = emb.select(F.col(id_col).alias("id"), to_double_array(vec_col).alias("v"))
-    return src.mapInPandas(run, "a long, b long, cosine double")
-
-
 def simhash(
     df: DataFrame, bits: int = 64, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:

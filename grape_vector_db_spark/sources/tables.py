@@ -24,6 +24,8 @@ Spark analogue of the reference's consistent-hash shard ring
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -638,6 +640,25 @@ def publish_table(
                 or name.endswith(".crc")
             ):
                 fs.delete(st.getPath(), False)
+
+
+@contextmanager
+def materialized(df: DataFrame):
+    """Evaluate ``df`` ONCE into executor storage and hand out that copy;
+    its blocks are released when the block exits, on success or error.
+    An eager localCheckpoint, not a lazy persist: the first consumer may
+    read only part of a lazy cache (a limit(1) probe), and the cut
+    lineage keeps every consumer's plan a plain scan of the stored rows.
+    The write paths' one materialization mechanism: the facade's upsert
+    batches and doomed id sets, and the posting tables whose sidecar
+    stats and write both read the same rows (facade and streaming)."""
+    cp = df.localCheckpoint(eager=True)
+    try:
+        yield cp
+    finally:
+        # the checkpoint's blocks live under the RDD its LogicalRDD
+        # wraps; the DataFrame API has no release for them
+        cp._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
 def _detect_partition_cols(spark: SparkSession, path: str) -> list[str]:

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from ..sources.tables import (
     _dedup_updates,
+    materialized,
     merge_upsert,
     publish_table,
     read_table,
@@ -414,13 +415,12 @@ def stream_payload_index_to_parquet(
             updated = kept.unionByName(fresh)
         else:  # first batch — no index yet
             updated = fresh
-        # persist across the sidecar aggregates + the publish write —
-        # and derive doc_rows from the sidecar's own rollup aggregate
+        # one evaluation feeds the sidecar aggregates and the publish
+        # write; doc_rows derives from the sidecar's own rollup aggregate
         # (doc_rows=None) instead of a separate full-index
         # distinct().count() job per micro-batch (the ADVICE-r10 rule
         # the text twin already follows)
-        updated = payload_layout(updated).persist()
-        try:
+        with materialized(payload_layout(updated)) as updated:
             publish_table(
                 spark, index_path, updated, partition_by=["field"],
                 extra_stats=payload_sidecar_stats(
@@ -428,8 +428,6 @@ def stream_payload_index_to_parquet(
                     arr_fields=sorted(arr), f_types=f_types,
                 ),
             )
-        finally:
-            updated.unpersist()
 
     writer = stream_df.writeStream.foreachBatch(_merge).outputMode("update")
     if checkpoint:
@@ -494,13 +492,14 @@ def stream_text_index_to_parquet(
             updated = kept.unionByName(fresh)
         else:  # first batch — no index yet
             updated = fresh
-        updated = text_index_layout(updated)
-        publish_table(
-            spark, index_path, updated,
-            extra_stats=text_index_sidecar_stats(
-                updated, text_col, None, HIST_MAX
-            ),
-        )
+        # one evaluation feeds the df-histogram collect and the write
+        with materialized(text_index_layout(updated)) as updated:
+            publish_table(
+                spark, index_path, updated,
+                extra_stats=text_index_sidecar_stats(
+                    updated, text_col, None, HIST_MAX
+                ),
+            )
 
     writer = stream_df.writeStream.foreachBatch(_merge).outputMode("update")
     if checkpoint:

@@ -52,7 +52,7 @@ def test_delete_does_not_resurrect_text_tombstone(db, docs, spark):
     full = db.documents()
     db._publish("documents", full.drop("text"))
     ids = spark.createDataFrame([(1,)], "vec_id long")
-    db._refresh_text_index(ids)  # tombstones
+    db._reindex(ids)  # tombstones
     db._publish("documents", full)  # column restored
     db.delete_documents("doc_id % 7 = 0")
     st = db._table_stats("index_terms") or {}
@@ -100,7 +100,7 @@ def test_backup_skips_tombstoned_text_index(db, docs, spark, tmpdir):
     db.build_index("text")
     full = db.documents()
     db._publish("documents", full.drop("text"))
-    db._refresh_text_index(spark.createDataFrame([(1,)], "vec_id long"))
+    db._reindex(spark.createDataFrame([(1,)], "vec_id long"))
     db._publish("documents", full)
     man = db.backup(f"{tmpdir}/bk")
     kinds = [e["kind"] for e in man["indexes"]]

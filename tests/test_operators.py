@@ -228,18 +228,6 @@ def test_ngram_hot_shingle_cap_bounds_pairs(spark):
     assert uncapped.count() > len(got)
 
 
-def test_embedding_neardup_fast_matches_exact(spark, emb):
-    fast = sorted(
-        (r["a"], r["b"], r["cosine"])
-        for r in dedup.embedding_neardup_pairs_fast(emb, threshold=0.3).collect()
-    )
-    exact = sorted(
-        (r["a"], r["b"], r["cosine"])
-        for r in dedup.embedding_neardup_pairs(emb, threshold=0.3).collect()
-    )
-    assert fast == exact and len(fast) > 0
-
-
 def test_embedding_neardup_gemm_matches_exact(spark, emb):
     """Block-GEMM exact all-pairs must be pair-identical to the
     expression-fold path — including pairs whose smaller id lives in the

@@ -197,7 +197,7 @@ class TestTextIndexTombstone:
         full = db.documents()
         db._publish("documents", full.drop("text"))
         ids = spark.createDataFrame([(1,)], "vec_id long")
-        db._refresh_text_index(ids)  # -> empty + tombstoned
+        db._reindex(ids)  # -> empty + tombstoned
         db._publish("documents", full)  # the column comes BACK
         return ids
 
@@ -205,7 +205,7 @@ class TestTextIndexTombstone:
         self, db, docs, spark
     ):
         ids = self._drop_then_restore(db, docs, spark)
-        db._refresh_text_index(ids)  # O(batch) maintenance after restore
+        db._reindex(ids)  # O(batch) maintenance after restore
         # still empty: batch-only coverage would be silently WRONG for
         # every pre-restore document
         assert db._read("index_terms").count() == 0

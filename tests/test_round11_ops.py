@@ -592,7 +592,7 @@ class TestTextIndexColumnDrop:
         # any maintenance refresh now empties the index instead of
         # leaving the stale postings published
         ids = spark.createDataFrame([(1,)], "vec_id long")
-        db._refresh_text_index(ids)
+        db._reindex(ids)
         assert db._read("index_terms").count() == 0
 
     def test_match_falls_back_like_predicate_path(self, db):

@@ -11,6 +11,8 @@
    streaming twin (its doc_rows=None rollup path).
 5. A missing _STATS.json is not cached: once it lands, the next read
    sees it.
+6. The streaming payload and text twins run each micro-batch's lineage
+   once for their sidecar stats and their write.
 """
 
 from __future__ import annotations
@@ -254,3 +256,38 @@ def test_missing_sidecar_is_not_cached(db, spark):
     finally:
         os.rename(held, stats)
     assert db._table_stats(table) == want
+
+
+@pytest.mark.parametrize("twin, column", [("payload", "lang"), ("text", "text")])
+def test_streaming_twins_evaluate_each_batch_row_once(spark, tmp_path, twin,
+                                                      column):
+    from grape_vector_db_spark.streaming.ingest import (
+        stream_payload_index_to_parquet,
+        stream_text_index_to_parquet,
+    )
+
+    sc = spark.sparkContext
+    n = sc.accumulator(0)
+
+    def tick(v):
+        n.add(1)
+        return v
+
+    rows = [_doc(i) for i in range(40)]
+    src = str(tmp_path / "incoming")
+    spark.createDataFrame(rows, DOC_SCHEMA).write.parquet(src)
+    stream = spark.readStream.schema(DOC_SCHEMA).parquet(src).withColumn(
+        column, F.udf(tick, "string")(column)
+    )
+    if twin == "payload":
+        start = stream_payload_index_to_parquet
+        kw = {"columns": ["lang", "score", "tags"]}
+    else:
+        start = stream_text_index_to_parquet
+        kw = {}
+    start(
+        stream, str(tmp_path / "index"), checkpoint=str(tmp_path / "ck"), **kw
+    ).awaitTermination(120)
+    # one evaluation feeds the sidecar stats and the publish write
+    assert n.value == len(rows)
+    assert read_table_stats(spark, str(tmp_path / "index"))["rows"] > 0
