@@ -257,12 +257,16 @@ class GrapeVectorDB:
 
     # -- versioned table layout ---------------------------------------------
     #
-    # Mutating writes publish a NEW directory {table}/t={N+1}, visible only
-    # once its _SUCCESS marker lands — a mid-swap reader sees the old or the
-    # new version, never a partial one (VERDICT r2 item 4: replaces the
-    # staging-dir double write; merge reads t=N while writing t=N+1, one
-    # write per upsert). Machinery shared with streaming ingest in
-    # sources.tables (table_versions / publish_table).
+    # Mutating writes publish a NEW directory {table}/t={N+1} through the
+    # one commit of sources.tables (_commit, shared with streaming ingest):
+    # staged data and _STATS.json, a CAS claim of t={N+1}, and the marker
+    # (_SUCCESS, or a bucket-manifest table's manifest) as the commit
+    # point. A mid-swap reader sees the old or the new version with its
+    # stats, never a partial one; a merge reads t=N while writing t=N+1,
+    # one write per upsert. Writers that read the same t=N race to one
+    # winner: the loser's _publish / _merge / _overwrite / _swap raises
+    # ConcurrentMergeError instead of dropping the winner's update
+    # (bucket-manifest merges retry it; plain tables surface it).
 
     # -- per-request listing snapshot ----------------------------------------
     #
@@ -318,6 +322,12 @@ class GrapeVectorDB:
             lambda: _bucketed_versions(self.spark, self._path(table)),
         )
 
+    def _version_key(self, table: str) -> int:
+        """The newest committed version in either layout (0 when none):
+        the key of every per-version cache. Both layouts share the t=N
+        namespace, and a bucket-manifest version carries no _SUCCESS."""
+        return max(self._versions(table) + self._bucket_versions(table), default=0)
+
     def _data_path(self, table: str) -> str:
         vs = self._versions(table)
         if vs:
@@ -361,10 +371,12 @@ class GrapeVectorDB:
             return cached[1]
         st = read_table_stats(self.spark, self._path(table))
         if st is not None:
-            # a missing sidecar is NOT cached: a reader landing between a
-            # version's _SUCCESS and its _STATS.json would otherwise keep
-            # None for that version (e.g. _ivf_replicas reading 1 for a
-            # replicas=2 layout) after the sidecar lands
+            # a version committed through the staged protocol always has
+            # its sidecar (staged before the marker), so None means a
+            # legacy version — or one whose writer predates the protocol
+            # and wrote _STATS.json after _SUCCESS. It is not cached: in
+            # that window caching None would keep it (e.g. _ivf_replicas
+            # reading 1 for a replicas=2 layout) after the sidecar lands
             self._stats_cache[table] = (key, st)
         return st
 
@@ -382,8 +394,8 @@ class GrapeVectorDB:
         st = self._table_stats(table)
         if st is not None and st.get("rows") is not None:
             return int(st["rows"])
-        # legacy version or flat table: count once, cache per version
-        key = (self._versions(table) or [0])[-1]
+        # legacy version, flat or bucketed table: count once per version
+        key = self._version_key(table)
         cached = self._stats_cache.get(f"{table}#rows")
         if cached is not None and cached[0] == key:
             return cached[1]
@@ -402,8 +414,7 @@ class GrapeVectorDB:
         so the estimate runs the REAL Spark predicate, not a Python
         re-implementation that could drift. Collection costs one bounded
         job per documents version (amortized across every search)."""
-        vs = self._versions("documents")
-        key = vs[-1] if vs else 0
+        key = self._version_key("documents")
         cached = getattr(self, "_sample_cache", None)
         if cached is not None and cached[0] == key:
             return cached[1], cached[2]
@@ -520,8 +531,7 @@ class GrapeVectorDB:
             return self._read("index_terms").withColumnRenamed(
                 "vec_id", "doc_id"
             ), None
-        vs = self._versions("documents")
-        key = vs[-1] if vs else 0
+        key = self._version_key("documents")
         cached = getattr(self, "_terms_cache", None)
         if cached is not None and cached[0] == key:
             return cached[1], cached[2]
@@ -626,6 +636,8 @@ class GrapeVectorDB:
             "left_semi",
         )
         if self._has("index_payload"):
+            from .operators.payload import with_value_num
+
             # columns a docs re-publish dropped cannot be re-derived
             # (their postings drop in _publish_payload_index)
             cols = [c for c in self._payload_columns() if c in docs.columns]
@@ -633,16 +645,9 @@ class GrapeVectorDB:
                 kept = self._read("index_payload").join(
                     hint(ids), "vec_id", "left_anti"
                 )
-                if "value_num" not in kept.columns:
-                    # legacy (pre-value_num) rows: derive the numeric
-                    # column from the stored string (try_cast, ANSI-safe;
-                    # numeric fields' strings are Spark casts, so they
-                    # round-trip). A sidecar carrying field_types always
-                    # fronts a value_num-backed table (range routing
-                    # relies on it)
-                    kept = kept.withColumn(
-                        "value_num", F.expr("try_cast(value as double)")
-                    )
+                # a sidecar carrying field_types always fronts a
+                # value_num-backed table (range routing relies on it)
+                kept = with_value_num(kept)
                 if not deleted:
                     kept = kept.unionByName(
                         self._payload_postings(touched, cols)
@@ -870,7 +875,7 @@ class GrapeVectorDB:
         stats_exprs: dict[str, str] | None = None,
     ) -> None:
         # batch-only fallback gated on an EXPLICIT existence probe (the
-        # streaming _merge_publish rule): a blanket try/except around the
+        # upsert_table rule): a blanket try/except around the
         # read would also swallow transient FS/merge errors and publish a
         # version containing only the batch — destroying the corpus two
         # GC'd publishes later.
@@ -3047,20 +3052,12 @@ class GrapeVectorDB:
     def _version_fingerprint(self) -> str:
         """One string naming every table's committed version (driver-side
         FS listings, zero Spark jobs). Any mutation bumps a version, so a
-        cache key embedding this fingerprint can never serve stale rows.
-        Bucket-manifest tables version through _MANIFEST.json, not
-        _SUCCESS — both lineages are read (a bucketed index refresh must
+        cache key embedding this fingerprint can never serve stale rows
+        (both layouts' versions are read: a bucketed index refresh must
         invalidate exactly like a flat publish)."""
-        from .sources.tables import _bucketed_versions
-
-        parts = []
-        for t in self._FINGERPRINT_TABLES:
-            v = (self._versions(t) or [0])[-1]
-            if not v:
-                bv = _bucketed_versions(self.spark, self._path(t))
-                v = f"b{bv[-1]}" if bv else 0
-            parts.append(f"{t}:{v}")
-        return ";".join(parts)
+        return ";".join(
+            f"{t}:{self._version_key(t)}" for t in self._FINGERPRINT_TABLES
+        )
 
     @staticmethod
     def _cache_key_val(v):
@@ -3173,9 +3170,7 @@ class GrapeVectorDB:
         rebuild them (indexes are derived state — rebuilding from
         restored data is the versioned-publish analogue of the
         reference's index re-open on restore). Returns the manifest."""
-        import json as _json
-
-        from .sources.tables import _hadoop_fs, backup as backup_table
+        from .sources.tables import _write_control, backup as backup_table
 
         path = path.rstrip("/")
         backup_table(self.documents(), f"{path}/documents", self.id_col)
@@ -3244,15 +3239,7 @@ class GrapeVectorDB:
             "vec_col": self.vec_col,
             "dimension": self.dimension,
         }
-        fs, P = _hadoop_fs(self.spark, path)
-        tmp, final = P(f"{path}/._MANIFEST.tmp"), P(f"{path}/_MANIFEST.json")
-        out = fs.create(tmp, True)
-        try:
-            out.write(bytearray(_json.dumps(manifest, indent=1).encode()))
-        finally:
-            out.close()
-        fs.delete(final, False)
-        fs.rename(tmp, final)
+        _write_control(self.spark, f"{path}/_MANIFEST.json", manifest)
         return manifest
 
     def restore(self, path: str) -> None:
@@ -3260,20 +3247,14 @@ class GrapeVectorDB:
         checksum re-verified on read (corruption raises before anything
         publishes), data tables published as new versions, and every
         index the manifest recorded rebuilt from the restored data."""
-        import json as _json
-
-        from .sources.tables import _hadoop_fs, restore as restore_table
+        from .sources.tables import _hadoop_fs, _read_control
+        from .sources.tables import restore as restore_table
 
         path = path.rstrip("/")
+        manifest = _read_control(self.spark, f"{path}/_MANIFEST.json")
+        if manifest is None:
+            raise FileNotFoundError(f"no backup manifest under {path}")
         fs, P = _hadoop_fs(self.spark, path)
-        stream = fs.open(P(f"{path}/_MANIFEST.json"))
-        try:
-            text = self.spark._jvm.org.apache.commons.io.IOUtils.toString(
-                stream, "UTF-8"
-            )
-        finally:
-            stream.close()
-        manifest = _json.loads(text)
         self._publish("documents", restore_table(self.spark, f"{path}/documents"))
         emb_path = f"{path}/embeddings"
         if table_exists(self.spark, emb_path) or fs.exists(P(emb_path)):

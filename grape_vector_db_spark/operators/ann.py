@@ -1024,41 +1024,17 @@ _INDEX_MANIFEST = "_INDEX_MANIFEST.json"
 
 
 def _write_index_manifest(spark, path: str, pair: dict) -> None:
-    """Atomic (temp-write + rename) commit of the centroids/assignments
-    version PAIR a reader must open together."""
-    import json
+    """Atomic commit of the two-table version PAIR a reader must open
+    together (centroids/assignments, codebooks/codes)."""
+    from ..sources.tables import _write_control
 
-    from ..sources.tables import _hadoop_fs
-
-    fs, P = _hadoop_fs(spark, path)
-    tmp = P(f"{path}/.{_INDEX_MANIFEST}.tmp")
-    final = P(f"{path}/{_INDEX_MANIFEST}")
-    out = fs.create(tmp, True)
-    try:
-        out.write(bytearray(json.dumps(pair, sort_keys=True).encode()))
-    finally:
-        out.close()
-    if fs.exists(final):
-        fs.delete(final, False)
-    if not fs.rename(tmp, final):
-        raise IOError(f"index manifest rename failed under {path}")
+    _write_control(spark, f"{path}/{_INDEX_MANIFEST}", pair)
 
 
 def _read_index_manifest(spark, path: str) -> dict | None:
-    import json
+    from ..sources.tables import _read_control
 
-    from ..sources.tables import _hadoop_fs
-
-    fs, P = _hadoop_fs(spark, path)
-    p = P(f"{path}/{_INDEX_MANIFEST}")
-    if not fs.exists(p):
-        return None
-    stream = fs.open(p)
-    try:
-        text = spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
-    return json.loads(text)
+    return _read_control(spark, f"{path}/{_INDEX_MANIFEST}")
 
 
 def save_index(

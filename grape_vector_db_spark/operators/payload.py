@@ -133,6 +133,16 @@ def payload_postings(
     return out
 
 
+def with_value_num(postings: DataFrame) -> DataFrame:
+    """``postings`` with the ``value_num`` column: a legacy table built
+    before the column existed derives it from the stored string
+    (try_cast, ANSI-safe; numeric fields' strings are Spark casts, so
+    they round-trip)."""
+    if "value_num" in postings.columns:
+        return postings
+    return postings.withColumn("value_num", F.expr("try_cast(value as double)"))
+
+
 def payload_layout(postings: DataFrame) -> DataFrame:
     """The serving shape: one directory per field, value-sorted within so
     parquet min/max stats skip row groups on the value predicate —

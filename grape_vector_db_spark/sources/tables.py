@@ -24,6 +24,9 @@ Spark analogue of the reference's consistent-hash shard ring
 
 from __future__ import annotations
 
+import json
+import time
+import uuid
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -104,7 +107,9 @@ def _dedup_updates(updates: DataFrame, id_col: str) -> DataFrame:
     remaining columns' struct order): a batch carrying the same id twice
     must not survive the merge as a duplicated id forever — and Delta's
     native MERGE would THROW on multiple matched source rows, so both
-    formats pre-collapse the same way."""
+    formats pre-collapse the same way. The streaming index twins collapse
+    micro-batches by this rule too, so index rows derive from exactly the
+    row the merge keeps (not doubled term tf, not two IVF cells)."""
     from pyspark.sql import Window
 
     others = [c for c in updates.columns if c != id_col]
@@ -250,7 +255,12 @@ def upsert_table(
     holds a bucket-manifest table (:func:`write_table_bucketed`), which
     routes to the bucket-scoped MERGE that rewrites only touched buckets.
     fmt="delta": native ``MERGE INTO`` — only files containing matched
-    ids rewrite, the scale shape for frequent small merges."""
+    ids rewrite, the scale shape for frequent small merges.
+
+    The parquet batch-only fallback is gated on an EXPLICIT existence
+    probe: a try/except around the read would also swallow a transient
+    filesystem error and publish the batch alone as the table (GC then
+    deletes the corpus); with the probe the error propagates."""
     if fmt == "parquet":
         _check_format(spark, path, fmt)
         if _bucketed_versions(spark, path):
@@ -329,18 +339,31 @@ def exists(df: DataFrame, id_value, id_col: str = "id") -> bool:
     return df.where(F.col(id_col) == id_value).limit(1).count() > 0
 
 
-# -- versioned table layout (atomic swap, single write) ----------------------
+# -- versioned table layout (staged, single-winner commit) -------------------
 #
-# Mutating writes publish a NEW directory {path}/t={N+1}; a version is
-# visible iff its _SUCCESS marker exists (written last by Spark's commit
-# protocol), so readers resolving "current" see the old or the new version,
-# never a half-written one — the atomic-commit answer to the reference's
-# two-tree sled transaction (src/advanced_storage.rs:145-191) without the
-# staging-dir double write. The last ``keep`` versions survive GC so
-# in-flight readers pinned to t=N stay valid across one swap. Filesystem
-# ops go through the Hadoop FileSystem API (portable to HDFS/object
-# stores); single-writer assumed — use Delta/Iceberg when multiple drivers
-# write concurrently.
+# Every mutating write, in either layout, publishes a NEW directory
+# {path}/t={N+1} through one commit (:func:`_commit`): stage, CAS-claim,
+# re-check, then the layout's marker (_SUCCESS beside a plain table's
+# staged _STATS.json, or the bucket manifest). A version is visible iff
+# its marker exists, so readers see the old or the new version, never a
+# partial one or one without its stats; writers that read the same t=N
+# race to ONE winner, each loser raising ConcurrentMergeError having
+# published nothing (the reference's two-tree sled transaction,
+# src/advanced_storage.rs:145-191). The last ``keep`` versions survive GC
+# for in-flight readers. Filesystem ops go through the Hadoop FileSystem
+# API (HDFS/object stores; on the latter the staged rename is a copy).
+
+_SUCCESS = "_SUCCESS"
+
+# a staged or claimed artifact older than this without a marker cannot
+# belong to a live writer (a claim->commit window is seconds)
+_STALE_CLAIM_MS = 24 * 3600 * 1000
+
+
+class ConcurrentMergeError(RuntimeError):
+    """Another writer claimed or committed the version this write was
+    built for; it was aborted WITHOUT publishing — re-read and retry (the
+    sled transaction conflict, ref:src/advanced_storage.rs:177-191)."""
 
 
 _FS_CACHE: dict = {}
@@ -381,6 +404,178 @@ def _hadoop_fs(spark: SparkSession, path: str):
     return fs, path_cls
 
 
+def _write_control(spark: SparkSession, file_path: str, body: dict) -> None:
+    """Write a small JSON control file (bucket / index / backup manifest)
+    by temp write + rename, so a reader never sees a torn file. A failed
+    rename raises: a manifest that did not land is no commit."""
+    fs, P = _hadoop_fs(spark, file_path)
+    parent, name = file_path.rsplit("/", 1)
+    tmp, final = P(f"{parent}/.{name}.tmp"), P(file_path)
+    _put_json(fs, tmp, body)
+    if fs.exists(final):
+        fs.delete(final, False)
+    if not fs.rename(tmp, final):
+        raise IOError(f"rename of {name} failed under {parent}")
+
+
+def _put_json(fs, p, body: dict) -> None:
+    """Write ``body`` as JSON to Hadoop path ``p``; aggregate scalars
+    JSON lacks (Decimal, numpy) become numbers."""
+    text = json.dumps(body, sort_keys=True, default=_json_number)
+    out = fs.create(p, True)
+    try:
+        out.write(bytearray(text.encode()))
+    finally:
+        out.close()
+
+
+def _json_number(v):
+    try:
+        return int(v)
+    except (TypeError, ValueError):
+        return float(v)
+
+
+def _read_control(spark: SparkSession, file_path: str) -> dict | None:
+    """The JSON body of a small control file, None when it does not
+    exist. Read JVM-side: py4j passes byte[] by VALUE, so a python-side
+    read(buf) loop would never see the bytes."""
+    from py4j.protocol import Py4JJavaError
+
+    fs, P = _hadoop_fs(spark, file_path)
+    try:
+        stream = fs.open(P(file_path))
+    except Py4JJavaError as e:
+        name = e.java_exception.getClass().getName()
+        if name == "java.io.FileNotFoundException":
+            return None
+        raise
+    try:
+        text = spark._jvm.org.apache.commons.io.IOUtils.toString(
+            stream, "UTF-8"
+        )
+    finally:
+        stream.close()
+    return json.loads(text)
+
+
+def _commit(spark: SparkSession, path: str, nxt: int, stage_write, marker: str) -> None:
+    """Publish version ``t={nxt}`` of the table at ``path`` — the one
+    commit protocol of every versioned writer:
+
+    1. ``stage_write(stage)`` writes the version's files into a
+       writer-unique dot-dir and returns ``(parts, body)``: the entries
+       that must arrive with the claim, and the ``marker``'s JSON body
+       (None: an empty marker, whose create lands it whole);
+    2. :func:`_claim` renames the stage onto ``t={nxt}``;
+    3. a committed version at or past ``nxt`` means a stale snapshot
+       (retention can GC the contended dir before our rename, so the
+       rename alone would succeed): abort;
+    4. the marker is written — the commit point.
+
+    A failure after the claim releases it, so the next writer can take
+    the version at once; a killed writer's claim is adopted once stale."""
+    fs, P = _hadoop_fs(spark, path)
+    stage = f"{path}/.stage-t{nxt}-{uuid.uuid4().hex[:8]}"
+    try:
+        parts, body = stage_write(stage)
+    except Exception:
+        fs.delete(P(stage), True)
+        raise
+    token = _claim(spark, path, stage, nxt, marker, parts)
+    target = f"{path}/t={nxt}"
+    try:
+        latest = _versions_with_marker(spark, path, marker)
+        if latest and latest[-1] >= nxt:
+            raise ConcurrentMergeError(
+                f"version t={latest[-1]} committed under {path} while this "
+                f"write (based on t={nxt - 1}) was in flight; re-read and retry"
+            )
+        if body is None:
+            fs.create(P(f"{target}/{marker}"), True).close()
+        else:
+            _write_control(spark, f"{target}/{marker}", body)
+    except Exception:
+        if not fs.exists(P(f"{target}/{marker}")):
+            fs.delete(P(target), True)  # ours by token, never committed
+        raise
+    fs.delete(P(f"{target}/{token}"), False)
+
+
+def _claim(
+    spark: SparkSession,
+    path: str,
+    stage: str,
+    nxt: int,
+    marker: str,
+    parts: list[str],
+) -> str:
+    """CAS-claim ``t={nxt}`` by renaming ``stage`` onto it (the one claim
+    rename of this module) and return the ownership token the claim
+    holds until its marker lands; raise :class:`ConcurrentMergeError`
+    when another writer holds the version.
+
+    Ownership is POSITIVE: we own ``t={nxt}`` iff the writer-unique
+    token that rode in our stage sits directly under it (HDFS refuses
+    an existing destination, posix renames INTO it). A stage deleted out
+    of band makes the token create re-make an EMPTY stage, so every
+    entry of ``parts`` must arrive with the claim too.
+
+    A marker-less ``t={nxt}`` that is EMPTY (a live claim always holds
+    its token) or older than ``_STALE_CLAIM_MS`` is a crashed writer's
+    claim that can never commit: it is adopted (deleted, then claimed),
+    or every later writer would find it and raise forever."""
+    fs, P = _hadoop_fs(spark, path)
+    stage_name = stage.rsplit("/", 1)[1]
+    token = f"._CLAIM-{stage_name[len('.stage-'):]}"
+    fs.create(P(f"{stage}/{token}"), True).close()
+    vdir = f"{path}/t={nxt}"
+    target = P(vdir)
+    taken = fs.exists(target)
+    if taken and not fs.exists(P(f"{vdir}/{marker}")):
+        cutoff_ms = int(time.time() * 1000) - _STALE_CLAIM_MS
+        if (
+            fs.getFileStatus(target).getModificationTime() < cutoff_ms
+            or not fs.listStatus(target)
+        ):
+            fs.delete(target, True)
+            taken = False
+    if not taken:
+        fs.rename(P(stage), target)
+    claimed = fs.exists(P(f"{vdir}/{token}"))
+    if claimed and not all(fs.exists(P(f"{vdir}/{p}")) for p in parts):
+        fs.delete(target, True)  # ours by token; bogus — remove it
+        claimed = False
+    if not claimed:
+        # posix rename-into: our stage may have landed NESTED inside
+        # another writer's t={nxt}; remove only our own artifacts
+        fs.delete(P(f"{vdir}/{stage_name}"), True)
+        fs.delete(P(stage), True)
+        raise ConcurrentMergeError(
+            f"version t={nxt} under {path} was claimed by a concurrent "
+            f"writer (this write read t={nxt - 1}); re-read and retry"
+        )
+    return token
+
+
+def _reap_abandoned(spark: SparkSession, path: str, newest: int, marker: str) -> None:
+    """Both layouts' GC of crashed writers' leftovers: stage dot-dirs,
+    and claims past the ``newest`` commit without a ``marker``, once
+    older than ``_STALE_CLAIM_MS`` (the age keeps a live writer's safe)."""
+    fs, P = _hadoop_fs(spark, path)
+    cutoff_ms = int(time.time() * 1000) - _STALE_CLAIM_MS
+    for st in fs.listStatus(P(path)):
+        name = st.getPath().getName()
+        stage = name.startswith(".stage-t")
+        claim = _is_version_dir_name(name) and int(name[2:]) > newest
+        if (
+            (stage or claim)
+            and st.getModificationTime() < cutoff_ms
+            and (stage or not fs.exists(P(st.getPath(), marker)))
+        ):
+            fs.delete(st.getPath(), True)
+
+
 _GLOB_SPECIALS = set("*?[]{}\\")
 
 
@@ -399,36 +594,23 @@ def _versions_with_marker(
     containing glob metacharacters fall back to the exact loop."""
     fs, P = _hadoop_fs(spark, path)
     if not any(c in _GLOB_SPECIALS for c in path):
-        stats = fs.globStatus(P(f"{path}/t=*/{marker}"))
-        if stats is None:
-            return []
-        out = []
-        for st in stats:
-            name = st.getPath().getParent().getName()
-            try:
-                out.append(int(name[2:]))
-            except ValueError:
-                continue
-        return sorted(out)
-    base = P(path)
-    if not fs.exists(base):
+        stats = fs.globStatus(P(f"{path}/t=*/{marker}")) or []
+        names = [st.getPath().getParent().getName() for st in stats]
+        return sorted(int(n[2:]) for n in names if _is_version_dir_name(n))
+    if not fs.exists(P(path)):
         return []
-    out = []
-    for st in fs.listStatus(base):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith("t="):
-            try:
-                v = int(name[2:])
-            except ValueError:
-                continue
-            if fs.exists(P(st.getPath(), marker)):
-                out.append(v)
-    return sorted(out)
+    return sorted(
+        int(st.getPath().getName()[2:])
+        for st in fs.listStatus(P(path))
+        if st.isDirectory()
+        and _is_version_dir_name(st.getPath().getName())
+        and fs.exists(P(st.getPath(), marker))
+    )
 
 
 def table_versions(spark: SparkSession, path: str) -> list[int]:
     """Committed (i.e. _SUCCESS-marked) version numbers under ``path``."""
-    return _versions_with_marker(spark, path, "_SUCCESS")
+    return _versions_with_marker(spark, path, _SUCCESS)
 
 
 def current_table_path(spark: SparkSession, path: str) -> str:
@@ -436,8 +618,8 @@ def current_table_path(spark: SparkSession, path: str) -> str:
     e.g. user-created parquet) resolve to the table root. If a crashed
     FIRST publish left an uncommitted t=N beside legacy root files, the
     root resolves to a ``*.parquet`` glob so partition discovery never
-    mixes the two depths (the retry publish overwrites the partial dir
-    and self-heals)."""
+    mixes the two depths (the next publish adopts the crashed claim, see
+    :func:`_claim`)."""
     vs = table_versions(spark, path)
     if vs:
         return f"{path}/t={vs[-1]}"
@@ -479,7 +661,7 @@ def table_exists(spark: SparkSession, path: str) -> bool:
     flat table root. An explicit probe, NOT try/except around the read:
     callers that fall back to "table absent" behavior must never take that
     branch on a transient filesystem error (which should propagate and
-    fail/retry the caller instead — see streaming.ingest._merge_publish)."""
+    fail/retry the caller instead — see upsert_table)."""
     if table_versions(spark, path):
         return True
     fs, P = _hadoop_fs(spark, path)
@@ -523,32 +705,9 @@ def _is_version_dir_name(name: str) -> bool:
 
 _STATS_FILE = "_STATS.json"
 
-
-def _write_stats(spark: SparkSession, version_dir: str, stats: dict) -> None:
-    """Driver-side JSON sidecar write into a version directory. The
-    underscore prefix keeps it invisible to Spark's file listing."""
-    import json
-
-    fs, P = _hadoop_fs(spark, version_dir)
-    clean = {}
-    for k, v in stats.items():
-        if v is None or isinstance(v, (bool, int, float, str)):
-            clean[k] = v
-        elif isinstance(v, (list, dict)):
-            # structured sidecar values (e.g. the payload index's column
-            # list + value histogram) pass through as-is — they are
-            # already JSON types; dumps below rejects anything that isn't
-            clean[k] = v
-        else:
-            try:
-                clean[k] = int(v)
-            except (TypeError, ValueError):
-                clean[k] = float(v)
-    out = fs.create(P(f"{version_dir}/{_STATS_FILE}"), True)
-    try:
-        out.write(bytearray(json.dumps(clean, sort_keys=True).encode()))
-    finally:
-        out.close()
+# staged writes leave _SUCCESS out: the stage is renamed into place
+# before the commit re-check, so Spark's own marker would publish early
+_NO_SUCCESS_FILE = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
 
 
 def read_table_stats(
@@ -566,10 +725,7 @@ def read_table_stats(
     if not vs:
         return None
     v = vs[-1] if version is None else version
-    fs, P = _hadoop_fs(spark, path)
-    if not fs.exists(P(f"{path}/t={v}/{_STATS_FILE}")):
-        return None
-    return _read_json_file(spark, f"{path}/t={v}/{_STATS_FILE}")
+    return _read_control(spark, f"{path}/t={v}/{_STATS_FILE}")
 
 
 def publish_table(
@@ -581,7 +737,8 @@ def publish_table(
     stats_exprs: dict[str, str] | None = None,
     extra_stats: dict | None = None,
 ) -> None:
-    """Atomically publish ``df`` as the table's next version (one write).
+    """Atomically publish ``df`` as the table's next version (one write,
+    committed by :func:`_commit`: single winner among racing writers).
     ``partition_by`` preserves a partitioned layout (e.g. IVF inverted
     lists partitioned by cluster) inside the version directory, so
     partition pruning keeps working across swaps.
@@ -605,21 +762,27 @@ def publish_table(
     aggs = [F.count(F.lit(1)).alias("rows")] + [
         F.expr(e).alias(name) for name, e in (stats_exprs or {}).items()
     ]
-    # overwrite clears any partial t=nxt left by a crashed writer
-    w = df.observe(obs, *aggs).write.mode("overwrite")
+    w = df.observe(obs, *aggs).write.option(_NO_SUCCESS_FILE, "false")
     if partition_by:
         w = w.partitionBy(*partition_by)
-    w.parquet(f"{path}/t={nxt}")
-    # schema rides along so readers can skip the footer-inference job
-    # entirely (spark.read.schema(...) — zero jobs before the first action)
-    _write_stats(
-        spark,
-        f"{path}/t={nxt}",
-        {**obs.get, **(extra_stats or {}), "schema": df.schema.json()},
-    )
     fs, P = _hadoop_fs(spark, path)
-    stale = vs[: -(keep - 1)] if keep > 1 else vs
-    for old in stale:
+
+    def stage(dest: str):
+        w.parquet(dest)
+        # schema rides along so readers can skip the footer-inference job
+        # entirely (spark.read.schema(...) — zero jobs before the first
+        # action); the underscore keeps the sidecar out of Spark's
+        # listing, and the private stage makes a direct write enough
+        _put_json(
+            fs,
+            P(f"{dest}/{_STATS_FILE}"),
+            {**obs.get, **(extra_stats or {}), "schema": df.schema.json()},
+        )
+        return [_STATS_FILE], None
+
+    _commit(spark, path, nxt, stage, _SUCCESS)
+    _reap_abandoned(spark, path, nxt, _SUCCESS)
+    for old in vs[: -(keep - 1)] if keep > 1 else vs:
         fs.delete(P(f"{path}/t={old}"), True)
     if not vs:
         # Migrated a legacy flat table: its root-level DATA files are now
@@ -781,85 +944,31 @@ def drop_bucketed(spark: SparkSession, table_name: str) -> None:
 # ids into t={N+1} and re-points just those manifest entries — untouched
 # bucket files are not read, copied, or rewritten (byte-identical across
 # the merge), so merge cost is O(touched buckets), not O(table). The
-# manifest (≤ n_buckets small entries) is written to a temp name and
-# renamed — the atomic commit point; readers resolve the newest manifest
-# and see the old or the new table, never a half-merge. Maps the
-# reference's two-tree transactional storage intent
-# (ref:src/advanced_storage.rs:145-191) onto plain parquet. Merges are
-# SINGLE-WINNER (optimistic CAS on the version directory + a committed-
-# version re-check before the manifest commit; losers raise
-# ConcurrentMergeError without publishing — see merge_upsert_bucketed).
+# manifest (≤ n_buckets small entries) is this layout's marker in the
+# shared commit protocol (:func:`_commit`): creates, merges and deletes
+# stage their bucket dirs, claim t={N+1}, and commit by writing the
+# manifest, so readers resolving the newest manifest see the old or the
+# new table, never a half-merge, and concurrent writers race to one
+# winner. Maps the reference's two-tree transactional storage intent
+# (ref:src/advanced_storage.rs:145-191) onto plain parquet.
 
 _MANIFEST = "_MANIFEST.json"
 
 
-# a claimed-or-staged artifact older than this with no manifest cannot
-# belong to a live merge (a merge's claim->commit window is seconds)
-_STALE_CLAIM_MS = 24 * 3600 * 1000
-
-
-class ConcurrentMergeError(RuntimeError):
-    """Another writer committed a newer version while this merge was in
-    flight. The merge was built against a stale snapshot and has been
-    aborted WITHOUT publishing — re-read and retry. (Single-winner
-    semantics: the analogue of the reference's sled transaction conflict,
-    ref:src/advanced_storage.rs:177-191.)"""
-
-
 def _bucketed_versions(spark: SparkSession, path: str) -> list[int]:
     """Committed version numbers: a version exists iff its manifest does
-    (the manifest rename is the commit point — _SUCCESS only proves the
-    DATA write finished)."""
+    (the manifest write is this layout's commit point)."""
     return _versions_with_marker(spark, path, _MANIFEST)
 
 
-def _read_json_file(spark: SparkSession, path_str: str) -> dict:
-    """JVM-side JSON read of a small control file: py4j passes byte[] by
-    VALUE, so a python-side read(buf) loop would never see the bytes —
-    the one pitfall both the stats sidecar and the bucket manifest read
-    through this helper."""
-    import json
-
-    fs, P = _hadoop_fs(spark, path_str)
-    stream = fs.open(P(path_str))
-    try:
-        text = spark._jvm.org.apache.commons.io.IOUtils.toString(
-            stream, "UTF-8"
-        )
-    finally:
-        stream.close()
-    return json.loads(text)
-
-
 def _read_manifest(spark: SparkSession, path: str, version: int) -> dict:
-    return _read_json_file(spark, f"{path}/t={version}/{_MANIFEST}")
+    return _read_control(spark, f"{path}/t={version}/{_MANIFEST}")
 
 
-def _write_manifest(
-    spark: SparkSession, path: str, version: int, manifest: dict
-) -> None:
-    """Temp-write + rename: the rename IS the commit (atomic on HDFS and
-    posix; object stores need their conditional-put equivalent)."""
-    import json
-
-    fs, P = _hadoop_fs(spark, path)
-    tmp = P(f"{path}/t={version}/._MANIFEST.tmp")
-    final = P(f"{path}/t={version}/{_MANIFEST}")
-    out = fs.create(tmp, True)
-    try:
-        out.write(bytearray(json.dumps(manifest, sort_keys=True).encode()))
-    finally:
-        out.close()
-    if fs.exists(final):
-        fs.delete(final, False)
-    if not fs.rename(tmp, final):
-        raise IOError(f"manifest rename failed under {path}/t={version}")
-
-
-def _bucket_dirs_in(spark: SparkSession, path: str, version: int) -> list[int]:
-    fs, P = _hadoop_fs(spark, path)
+def _bucket_dirs_in(spark: SparkSession, version_dir: str) -> list[int]:
+    fs, P = _hadoop_fs(spark, version_dir)
     out = []
-    for st in fs.listStatus(P(f"{path}/t={version}")):
+    for st in fs.listStatus(P(version_dir)):
         name = st.getPath().getName()
         if st.isDirectory() and name.startswith("b="):
             out.append(int(name[2:]))
@@ -875,13 +984,12 @@ def _bucket_expr(id_col: str, n_buckets: int):
 def _write_bucket_dirs(df: DataFrame, id_col: str, n_buckets: int, dest: str) -> None:
     """One job: rows gain their bucket as BOTH a data column (``bucket``,
     so reads of leaf dirs keep it without partition inference) and a
-    partition directory (``b=K``). overwrite clears partial output left
-    by a crashed writer at the same version."""
+    partition directory (``b=K``). ``dest`` is a commit stage."""
     (
         df.withColumn("bucket", _bucket_expr(id_col, n_buckets))
         .withColumn("b", F.col("bucket"))
         .repartition(n_buckets, F.col("bucket"))
-        .write.mode("overwrite")
+        .write.option(_NO_SUCCESS_FILE, "false")
         .partitionBy("b")
         .parquet(dest)
     )
@@ -908,14 +1016,18 @@ def write_table_bucketed(
     vs = _bucketed_versions(spark, path)
     plain = table_versions(spark, path)
     nxt = max(vs[-1] if vs else 0, plain[-1] if plain else 0) + 1
-    _write_bucket_dirs(df, id_col, n_buckets, f"{path}/t={nxt}")
-    manifest = {
-        "n_buckets": n_buckets,
-        "id_col": id_col,
-        "buckets": {str(k): nxt for k in _bucket_dirs_in(spark, path, nxt)},
-        "schema": _bucketed_read_schema(df),
-    }
-    _write_manifest(spark, path, nxt, manifest)
+
+    def stage(dest: str):
+        _write_bucket_dirs(df, id_col, n_buckets, dest)
+        ks = _bucket_dirs_in(spark, dest)
+        return [f"b={k}" for k in ks], {
+            "n_buckets": n_buckets,
+            "id_col": id_col,
+            "buckets": {str(k): nxt for k in ks},
+            "schema": _bucketed_read_schema(df),
+        }
+
+    _commit(spark, path, nxt, stage, _MANIFEST)
     _bucketed_gc(spark, path, keep)
 
 
@@ -966,6 +1078,24 @@ def read_table_bucketed(
     return spark.read.parquet(*dirs)
 
 
+def _bucketed_head(spark: SparkSession, path: str, id_col: str):
+    """``(versions, newest manifest, n_buckets)`` of the bucket-manifest
+    table a merge or delete builds on; raises when there is none or it
+    is bucketed by another column."""
+    vs = _bucketed_versions(spark, path)
+    if not vs:
+        raise ValueError(
+            f"no bucket-manifest table under {path}; create with "
+            "write_table_bucketed first"
+        )
+    man = _read_manifest(spark, path, vs[-1])
+    if man["id_col"] != id_col:
+        raise ValueError(
+            f"table under {path} is bucketed by {man['id_col']!r}, not {id_col!r}"
+        )
+    return vs, man, int(man["n_buckets"])
+
+
 def merge_upsert_bucketed(
     spark: SparkSession,
     path: str,
@@ -979,33 +1109,10 @@ def merge_upsert_bucketed(
     ``updates`` are read and rewritten. Cost is O(touched buckets +
     updates), not O(table) — the 100 TB merge shape on plain parquet.
 
-    Concurrency: SINGLE-WINNER, not single-writer. Two concurrent merges
-    that both read manifest t=N race on two commit points and exactly one
-    survives, the other raising :class:`ConcurrentMergeError` without
-    publishing anything:
-
-    1. data is staged under a writer-unique dot-dir and CAS-renamed to
-       ``t={N+1}`` — the rename fails if another writer's ``t={N+1}``
-       already exists (so a loser can never clobber the winner's data
-       files, unlike a direct overwrite-write into the shared dir), and
-    2. committed versions are re-listed immediately before the manifest
-       commit — if any version >= N+1 appeared, this merge was built on a
-       stale snapshot and aborts (covers retention settings under which
-       the winner's data dir could already be GC'd, where the rename
-       alone would succeed and the stale result would silently publish).
-    """
-    vs = _bucketed_versions(spark, path)
-    if not vs:
-        raise ValueError(
-            f"no bucket-manifest table under {path}; create with "
-            "write_table_bucketed first"
-        )
-    man = _read_manifest(spark, path, vs[-1])
-    if man["id_col"] != id_col:
-        raise ValueError(
-            f"table under {path} is bucketed by {man['id_col']!r}, not {id_col!r}"
-        )
-    nb = int(man["n_buckets"])
+    Concurrency: SINGLE-WINNER (:func:`_commit`). Of two writers that
+    both read manifest t=N exactly one survives; the other raises
+    :class:`ConcurrentMergeError` without publishing anything."""
+    vs, man, nb = _bucketed_head(spark, path, id_col)
     if "bucket" in updates.columns:
         updates = updates.drop("bucket")
     upd = _dedup_updates(updates, id_col).withColumn(
@@ -1057,95 +1164,18 @@ def _cas_commit_touched(
     keep: int,
     drop_buckets: frozenset[int] = frozenset(),
 ) -> None:
-    """The single-winner CAS commit shared by bucketed MERGE and DELETE:
-    stage ``rows_df`` (the full new contents of the touched buckets),
-    claim ``t={N+1}`` with a writer-unique token, re-check the committed
-    snapshot, publish the manifest. ``drop_buckets`` (delete only) are
-    touched buckets a delete EMPTIED — they leave the manifest map
-    entirely (their old dirs age out via GC) and are exempt from the
-    every-touched-dir-arrived claim validation, since an empty bucket
-    materializes no directory. Every other touched bucket must hold
-    >= 1 row in ``rows_df`` — for MERGE by construction (each touched
-    bucket holds an update row), for DELETE because a non-emptied bucket
-    keeps its survivors."""
-    import uuid as _uuid
-
+    """The bucket-manifest commit shared by bucketed MERGE and DELETE:
+    stage ``rows_df`` (the full new contents of the touched buckets) and
+    commit the re-pointed manifest through :func:`_commit`.
+    ``drop_buckets`` (delete only) are touched buckets a delete EMPTIED —
+    they leave the manifest map entirely (their old dirs age out via GC)
+    and need not arrive with the claim, since an empty bucket
+    materializes no directory. Every other touched bucket must hold >= 1
+    row in ``rows_df`` — for MERGE by construction (each touched bucket
+    holds an update row), for DELETE because a non-emptied bucket keeps
+    its survivors."""
     nxt = vs[-1] + 1
     materialized = [k for k in touched if k not in drop_buckets]
-    fs, P = _hadoop_fs(spark, path)
-    stage_name = f".stage-t{nxt}-{_uuid.uuid4().hex[:8]}"
-    stage = f"{path}/{stage_name}"
-    _write_bucket_dirs(rows_df, id_col, nb, stage)
-    # POSITIVE ownership token: a writer-unique dot-file inside the stage.
-    # After the rename, we own t={nxt} iff OUR token sits directly under
-    # it — inferring ownership from the stage's absence (the previous
-    # rule) mis-claims when the stage was deleted out-of-band (e.g.
-    # another writer's GC reaping a >24h stage of a merge that
-    # legitimately ran long): rename fails, stage gone, and the manifest
-    # would commit referencing bucket dirs that do not exist.
-    token_name = f"._CLAIM-{stage_name[len('.stage-'):]}"
-    fs.create(P(f"{stage}/{token_name}"), True).close()
-    # CAS commit point 1: claim the version directory by renaming the
-    # stage onto it. Rename semantics differ by FS — HDFS returns false
-    # when the destination exists, but posix-backed FSs rename the source
-    # INTO an existing destination directory. A pre-existing t={nxt}
-    # WITHOUT a manifest that is older than the stage-GC cutoff is a
-    # crashed writer's claim (it can never commit — its writer died
-    # between claim and manifest): adopt-by-delete, then claim. Without
-    # this, every later merge computes the same nxt, finds the corpse,
-    # and raises — permanent merge unavailability, since GC only runs
-    # after a SUCCESSFUL merge (ADVICE r7 medium).
-    import time as _time
-
-    cutoff_ms = int(_time.time() * 1000) - _STALE_CLAIM_MS
-    target = P(f"{path}/t={nxt}")
-    if (
-        fs.exists(target)
-        and not fs.exists(P(f"{path}/t={nxt}/{_MANIFEST}"))
-        and fs.getFileStatus(target).getModificationTime() < cutoff_ms
-    ):
-        fs.delete(target, True)
-    if not fs.exists(target):
-        fs.rename(P(stage), target)
-    # posix rename-into: our stage may have landed NESTED inside another
-    # writer's t={nxt}; remove only our own artifact
-    nested = P(f"{path}/t={nxt}/{stage_name}")
-    if fs.exists(nested):
-        fs.delete(nested, True)
-    token = P(f"{path}/t={nxt}/{token_name}")
-    claimed = fs.exists(token)
-    if claimed:
-        fs.delete(token, False)
-        # the token alone is not enough: if the stage was deleted
-        # out-of-band between the data write and the token create, the
-        # create re-materialized an EMPTY stage dir (fs.create makes
-        # parents) and the rename moved a token with no data. Require
-        # every touched bucket dir to have arrived with the claim —
-        # otherwise the manifest would reference dirs that do not exist.
-        if not all(
-            fs.exists(P(f"{path}/t={nxt}/b={k}")) for k in materialized
-        ):
-            fs.delete(target, True)  # ours by token; bogus — remove it
-            claimed = False
-    if not claimed:
-        fs.delete(P(stage), True)
-        raise ConcurrentMergeError(
-            f"version t={nxt} under {path} was claimed by a concurrent "
-            f"merge (this merge read t={vs[-1]}); re-read and retry"
-        )
-    # CAS commit point 2: the claimed dir is ours (no manifest yet, so it
-    # is invisible to readers) — but if a COMMITTED version >= nxt exists
-    # (possible when retention GC'd the contended dir before our rename),
-    # this merge was derived from a stale snapshot; abort before the
-    # manifest would publish lost updates.
-    latest = _bucketed_versions(spark, path)
-    if latest and latest[-1] >= nxt:
-        if not fs.exists(P(f"{path}/t={nxt}/{_MANIFEST}")):
-            fs.delete(target, True)  # ours: claimed above, never committed
-        raise ConcurrentMergeError(
-            f"version t={latest[-1]} committed under {path} while this "
-            f"merge (based on t={vs[-1]}) was in flight; re-read and retry"
-        )
     buckets = {**man["buckets"], **{str(k): nxt for k in materialized}}
     for k in drop_buckets:
         buckets.pop(str(k), None)
@@ -1157,7 +1187,12 @@ def _cas_commit_touched(
         # merge's rows for tables created before it was recorded)
         "schema": man.get("schema") or _bucketed_read_schema(rows_df),
     }
-    _write_manifest(spark, path, nxt, new_man)
+
+    def stage(dest: str):
+        _write_bucket_dirs(rows_df, id_col, nb, dest)
+        return [f"b={k}" for k in materialized], new_man
+
+    _commit(spark, path, nxt, stage, _MANIFEST)
     _bucketed_gc(spark, path, keep)
 
 
@@ -1217,18 +1252,7 @@ def delete_ids_bucketed(
     map entirely (an empty bucket materializes no directory; its old dir
     ages out via GC). Ids absent from the table are no-ops — buckets
     holding none of the doomed ids are never read."""
-    vs = _bucketed_versions(spark, path)
-    if not vs:
-        raise ValueError(
-            f"no bucket-manifest table under {path}; create with "
-            "write_table_bucketed first"
-        )
-    man = _read_manifest(spark, path, vs[-1])
-    if man["id_col"] != id_col:
-        raise ValueError(
-            f"table under {path} is bucketed by {man['id_col']!r}, not {id_col!r}"
-        )
-    nb = int(man["n_buckets"])
+    vs, man, nb = _bucketed_head(spark, path, id_col)
     doomed = (
         ids.select(F.col(id_col)).distinct()
         .withColumn("bucket", _bucket_expr(id_col, nb))
@@ -1308,22 +1332,10 @@ def _bucketed_gc(spark: SparkSession, path: str, keep: int) -> None:
     Older manifests are dropped; their now-unreferenced bucket dirs are
     deleted; a version directory disappears when nothing in it is needed."""
     fs, P = _hadoop_fs(spark, path)
-    # reap abandoned merge stages (a crashed writer's dot-dir): invisible
-    # to readers, but they accumulate; anything stage-shaped older than a
-    # day cannot belong to an in-flight merge
-    import time as _time
-
-    cutoff_ms = int(_time.time() * 1000) - _STALE_CLAIM_MS
-    for st in fs.listStatus(P(path)):
-        name = st.getPath().getName()
-        if (
-            st.isDirectory()
-            and name.startswith(".stage-t")
-            and st.getModificationTime() < cutoff_ms
-        ):
-            fs.delete(st.getPath(), True)
     vs = _bucketed_versions(spark, path)
     live = vs[-keep:] if keep > 0 else vs[-1:]
+    newest = max(live, default=0)
+    _reap_abandoned(spark, path, newest, _MANIFEST)
     referenced = set()
     for v in live:
         man = _read_manifest(spark, path, v)
@@ -1331,15 +1343,13 @@ def _bucketed_gc(spark: SparkSession, path: str, keep: int) -> None:
             referenced.add((int(owner), int(k)))
     for st in fs.listStatus(P(path)):
         name = st.getPath().getName()
-        if not (st.isDirectory() and name.startswith("t=")):
+        if not (st.isDirectory() and _is_version_dir_name(name)):
             continue
-        try:
-            v = int(name[2:])
-        except ValueError:
+        v = int(name[2:])
+        # newer than the newest commit: an in-flight writer's claim
+        if v in live or v > newest:
             continue
-        if v in live:
-            continue
-        if fs.exists(P(st.getPath(), "_SUCCESS")) and not fs.exists(
+        if fs.exists(P(st.getPath(), _SUCCESS)) and not fs.exists(
             P(st.getPath(), _MANIFEST)
         ):
             # a PLAIN layout's committed version (in-place migration via
@@ -1347,19 +1357,6 @@ def _bucketed_gc(spark: SparkSession, path: str, keep: int) -> None:
             # another layout's artifact, not ours to reap — deleting it
             # here destroyed the pre-migration snapshots retention
             # promises readable (they looked "empty" to the b= scan)
-            continue
-        if v > max(live, default=0):
-            # newer than the newest commit: an in-flight writer's claimed
-            # dir — UNLESS it is older than the stale-claim cutoff with
-            # no manifest, in which case its writer died between claim
-            # and commit and it can never become a version; reap it (the
-            # same age rule as stage dot-dirs — defense in depth next to
-            # merge-time adoption, for tables whose merges stopped)
-            if (
-                not fs.exists(P(st.getPath(), _MANIFEST))
-                and st.getModificationTime() < cutoff_ms
-            ):
-                fs.delete(st.getPath(), True)
             continue
         empty = True
         for sub in fs.listStatus(st.getPath()):
@@ -1377,7 +1374,6 @@ def _bucketed_gc(spark: SparkSession, path: str, keep: int) -> None:
             m = P(st.getPath(), _MANIFEST)
             if fs.exists(m):
                 fs.delete(m, False)
-    return None
 
 
 # ---------------------------------------------------------------------------

@@ -13,9 +13,14 @@ O(corpus) per insert!). The Spark-native replacement:
 
 At scale the MERGE target should be a transactional table format
 (Delta/Iceberg); on plain parquet each micro-batch publishes a new table
-version through sources.tables.publish_table (atomic _SUCCESS-gated swap,
-single write — a crash mid-batch leaves the previous version intact), and
-foreachBatch executes serially per micro-batch so versions never race.
+version through sources.tables.publish_table. Its commit point is the
+version's _SUCCESS marker, written after the staged data and _STATS.json
+have been claimed into place: a crash mid-batch leaves readers on the
+previous version (with its stats), and the replayed batch publishes
+normally. foreachBatch runs one micro-batch at a time, so a stream never
+races itself; a second writer on the same table races to a single
+winner, and the loser's batch fails with ConcurrentMergeError (nothing
+published) for the restarted query to replay from its checkpoint.
 """
 
 from __future__ import annotations
@@ -34,36 +39,16 @@ from ..sources.tables import (
 )
 
 
-def _one_per_id(batch: DataFrame, id_col: str) -> DataFrame:
-    """Collapse duplicate ids within a micro-batch using the SAME
-    deterministic rule the docs-table merge applies
-    (sources.tables._dedup_updates — greatest by the remaining columns'
-    struct order). An at-least-once source redelivery or two updates to
-    one id landing in the same micro-batch must contribute exactly the
-    row the table merge keeps: deriving index artifacts from the RAW
-    batch published duplicate/conflicting rows per id (doubled term tf,
-    an IVF posting in two cells — one from the stale vector, two layout
-    directories, doubled posting-histogram counts)."""
-    return _dedup_updates(batch, id_col)
-
-
-def _merge_publish(
-    spark, table_path: str, batch: DataFrame, id_col: str, fmt: str = "parquet"
-) -> None:
-    """MERGE ``batch`` into the table at ``table_path``.
-
-    parquet mode publishes a versioned swap; fmt="delta" issues a native
-    MERGE (only touched files rewrite — the scale shape; requires
-    delta-spark). In parquet mode the batch-only fallback inside
-    upsert_table is gated on an EXPLICIT existence probe, not a
-    try/except around the read: a blanket except would also swallow
-    transient filesystem/listing errors (table_versions does live FS
-    calls) and publish a version containing only the batch rows — two
-    publishes later GC would delete the last good version of the corpus.
-    With the probe, any error during read/merge propagates and fails the
-    micro-batch, which the stream retries from the checkpoint.
-    """
-    upsert_table(spark, table_path, batch, id_col=id_col, fmt=fmt)
+def _start(stream_df: DataFrame, body, checkpoint: str | None, trigger_once: bool):
+    """Start ``body`` as the foreachBatch sink of ``stream_df`` (update
+    mode), resuming from ``checkpoint`` when given; ``trigger_once``
+    drains what is available and stops. Returns the StreamingQuery."""
+    writer = stream_df.writeStream.foreachBatch(body).outputMode("update")
+    if checkpoint:
+        writer = writer.option("checkpointLocation", checkpoint)
+    if trigger_once:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def stream_upsert_to_parquet(
@@ -80,14 +65,9 @@ def stream_upsert_to_parquet(
     spark = stream_df.sparkSession
 
     def _merge(batch: DataFrame, batch_id: int) -> None:
-        _merge_publish(spark, table_path, batch, id_col, fmt=fmt)
+        upsert_table(spark, table_path, batch, id_col=id_col, fmt=fmt)
 
-    writer = stream_df.writeStream.foreachBatch(_merge).outputMode("update")
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream_df, _merge, checkpoint, trigger_once)
 
 
 def stream_upsert_with_index(
@@ -118,14 +98,14 @@ def stream_upsert_with_index(
         batch = batch.persist()
         try:
             # 1) documents table
-            _merge_publish(spark, table_path, batch, id_col)
+            upsert_table(spark, table_path, batch, id_col=id_col)
             # 2) incremental doc_terms: drop the batch ids' rows, append
             # fresh rows built from the MERGED table, not the raw batch —
             # the raw batch may carry duplicate ids (whose extra texts
             # merge_upsert collapses) or null-text metadata updates
             # (whose stored text merge_upsert preserves); indexing the
             # batch text would desynchronize the index from the corpus.
-            # Same existence-probe rule as _merge_publish: only a
+            # Same existence-probe rule as upsert_table: only a
             # genuinely absent index table may fall back; FS errors
             # propagate and the micro-batch retries.
             ids = batch.select(F.col(id_col).alias("doc_id")).distinct()
@@ -144,12 +124,7 @@ def stream_upsert_with_index(
         finally:
             batch.unpersist()
 
-    writer = stream_df.writeStream.foreachBatch(_merge).outputMode("update")
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream_df, _merge, checkpoint, trigger_once)
 
 
 def stream_ann_index_to_parquet(
@@ -186,7 +161,7 @@ def stream_ann_index_to_parquet(
     spark = stream_df.sparkSession
 
     def _merge(batch: DataFrame, batch_id: int) -> None:
-        batch = _one_per_id(batch, id_col)
+        batch = _dedup_updates(batch, id_col)
         cents = read_table(spark, cents_path)
         fresh = ivf_add(
             batch, cents, id_col=id_col, vec_col=vec_col, replicas=replicas
@@ -201,12 +176,7 @@ def stream_ann_index_to_parquet(
             updated = fresh
         publish_table(spark, assigned_path, updated)
 
-    writer = stream_df.writeStream.foreachBatch(_merge).outputMode("update")
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream_df, _merge, checkpoint, trigger_once)
 
 
 def stream_graph_index_to_parquet(
@@ -241,7 +211,7 @@ def stream_graph_index_to_parquet(
     spark = stream_df.sparkSession
 
     def _merge(batch: DataFrame, batch_id: int) -> None:
-        _merge_publish(spark, emb_path, batch, id_col)
+        upsert_table(spark, emb_path, batch, id_col=id_col)
         merged = read_table(spark, emb_path)
         if table_exists(spark, edges_path):
             edges = read_table(spark, edges_path)
@@ -260,12 +230,7 @@ def stream_graph_index_to_parquet(
             stats_exprs={"max_rank": "max(rank)"},
         )
 
-    writer = stream_df.writeStream.foreachBatch(_merge).outputMode("update")
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream_df, _merge, checkpoint, trigger_once)
 
 
 def stream_partition_layout_to_parquet(
@@ -309,7 +274,7 @@ def stream_partition_layout_to_parquet(
     spark = stream_df.sparkSession
 
     def _merge(batch: DataFrame, batch_id: int) -> None:
-        batch = _one_per_id(batch, id_col)
+        batch = _dedup_updates(batch, id_col)
         docs = read_table(spark, docs_path)
         to_resolve = batch.select(id_col, vec_col)
         kept = None
@@ -339,12 +304,7 @@ def stream_partition_layout_to_parquet(
             extra_stats={"partition_column": column},
         )
 
-    writer = stream_df.writeStream.foreachBatch(_merge).outputMode("update")
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream_df, _merge, checkpoint, trigger_once)
 
 
 def stream_payload_index_to_parquet(
@@ -390,13 +350,14 @@ def stream_payload_index_to_parquet(
         payload_layout,
         payload_postings,
         payload_sidecar_stats,
+        with_value_num,
     )
     from ..sources.tables import read_table_stats
 
     spark = stream_df.sparkSession
 
     def _merge(batch: DataFrame, batch_id: int) -> None:
-        batch = _one_per_id(batch, id_col)
+        batch = _dedup_updates(batch, id_col)
         fresh = payload_postings(batch, list(columns), id_col=id_col)
         arr = set(array_fields(batch, list(columns)))
         f_types = field_types(batch, list(columns))
@@ -408,11 +369,7 @@ def stream_payload_index_to_parquet(
             kept = read_table(spark, index_path).join(
                 F.broadcast(ids), "vec_id", "left_anti"
             )
-            if "value_num" not in kept.columns:  # legacy pre-value_num rows
-                kept = kept.withColumn(
-                    "value_num", F.expr("try_cast(value as double)")
-                )
-            updated = kept.unionByName(fresh)
+            updated = with_value_num(kept).unionByName(fresh)
         else:  # first batch — no index yet
             updated = fresh
         # one evaluation feeds the sidecar aggregates and the publish
@@ -429,12 +386,7 @@ def stream_payload_index_to_parquet(
                 ),
             )
 
-    writer = stream_df.writeStream.foreachBatch(_merge).outputMode("update")
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream_df, _merge, checkpoint, trigger_once)
 
 
 def stream_text_index_to_parquet(
@@ -480,7 +432,7 @@ def stream_text_index_to_parquet(
     spark = stream_df.sparkSession
 
     def _merge(batch: DataFrame, batch_id: int) -> None:
-        batch = _one_per_id(batch, id_col)
+        batch = _dedup_updates(batch, id_col)
         fresh = doc_terms(
             batch, id_col=id_col, text_col=text_col
         ).withColumnRenamed("doc_id", "vec_id")
@@ -501,12 +453,7 @@ def stream_text_index_to_parquet(
                 ),
             )
 
-    writer = stream_df.writeStream.foreachBatch(_merge).outputMode("update")
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream_df, _merge, checkpoint, trigger_once)
 
 
 def stream_curate_to_parquet(
@@ -533,7 +480,7 @@ def stream_curate_to_parquet(
         # one row per id BEFORE the rejoin-by-id joins below: duplicate
         # batch ids would otherwise cross-product through them (2 copies
         # -> up to 16 rows for one id on the first-batch publish)
-        batch = _one_per_id(batch, id_col)
+        batch = _dedup_updates(batch, id_col)
         scrubbed = pii_redact(batch, id_col=id_col, text_col=text_col).select(
             F.col("doc_id").alias(id_col), F.col("clean_text")
         )
@@ -554,14 +501,9 @@ def stream_curate_to_parquet(
         )
 
     def _merge(batch: DataFrame, batch_id: int) -> None:
-        _merge_publish(spark, table_path, _curate(batch), id_col)
+        upsert_table(spark, table_path, _curate(batch), id_col=id_col)
 
-    writer = stream_df.writeStream.foreachBatch(_merge).outputMode("update")
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream_df, _merge, checkpoint, trigger_once)
 
 
 def stream_dedup_to_parquet(
@@ -598,7 +540,7 @@ def stream_dedup_to_parquet(
         # the first-batch publish goes straight to the table, so a
         # duplicated id would be stored twice PERMANENTLY: merge_upsert
         # assumes a unique existing side and never repairs it) ...
-        batch = _one_per_id(batch, id_col)
+        batch = _dedup_updates(batch, id_col)
         # ... then exact-text dedup ACROSS ids. NULL-text rows (metadata
         # updates) must not collapse together — md5(NULL) is NULL, which
         # would put every such row in ONE partition and drop all but the
@@ -647,12 +589,7 @@ def stream_dedup_to_parquet(
         finally:
             uniq.unpersist()
 
-    writer = stream_df.writeStream.foreachBatch(_merge).outputMode("update")
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream_df, _merge, checkpoint, trigger_once)
 
 
 def admit_merge_batch(
@@ -945,12 +882,7 @@ def stream_admit_to_parquet(
             num_hashes=num_hashes, bands=bands, threshold=threshold,
         )
 
-    writer = stream_df.writeStream.foreachBatch(_admit).outputMode("update")
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream_df, _admit, checkpoint, trigger_once)
 
 
 def windowed_event_counts(
@@ -1068,12 +1000,7 @@ def stream_hll_to_parquet(
             )
         publish_table(spark, table_path, sk)
 
-    writer = stream_df.writeStream.foreachBatch(_merge).outputMode("update")
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream_df, _merge, checkpoint, trigger_once)
 
 
 def stream_bloom_to_parquet(
@@ -1113,12 +1040,7 @@ def stream_bloom_to_parquet(
             bits = read_table(spark, table_path).union(bits).distinct()
         publish_table(spark, table_path, bits)
 
-    writer = stream_df.writeStream.foreachBatch(_merge).outputMode("update")
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream_df, _merge, checkpoint, trigger_once)
 
 
 def cms_merge_batch(
@@ -1225,9 +1147,4 @@ def stream_cms_to_parquet(
             depth=depth, width=width, ckpt_tag=ckpt_tag,
         )
 
-    writer = stream_df.writeStream.foreachBatch(_merge).outputMode("update")
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream_df, _merge, checkpoint, trigger_once)

@@ -46,6 +46,33 @@ def _base(spark):
     )
 
 
+@pytest.fixture(params=["bucketed", "plain"])
+def layout(request):
+    """Both table layouts commit through the same staged CAS claim, so
+    the crash and race tests run against each: the bucket-manifest table
+    (create / merge / read through the manifest) and the plain versioned
+    table (publish / upsert_table / read_table)."""
+    from types import SimpleNamespace
+
+    if request.param == "bucketed":
+        return SimpleNamespace(
+            create=lambda spark, p, df: T.write_table_bucketed(
+                spark, p, df, n_buckets=4
+            ),
+            merge=lambda spark, p, upd: T.merge_upsert_bucketed(
+                spark, p, upd, id_col="id"
+            ),
+            read=T.read_table_bucketed,
+            versions=T._bucketed_versions,
+        )
+    return SimpleNamespace(
+        create=T.publish_table,
+        merge=lambda spark, p, upd: T.upsert_table(spark, p, upd, id_col="id"),
+        read=T.read_table,
+        versions=T.table_versions,
+    )
+
+
 def test_roundtrip_and_schema(spark, tdir):
     df = _base(spark)
     T.write_table_bucketed(spark, tdir, df, n_buckets=8)
@@ -169,15 +196,15 @@ def test_merge_requires_existing_table_and_matching_id(spark, tdir):
         T.merge_upsert_bucketed(spark, tdir, upd, id_col="text")
 
 
-def test_concurrent_merge_loser_aborts_cleanly(spark, tdir, monkeypatch):
-    """Two merges that both read manifest t=1: the winner commits t=2;
+def test_concurrent_merge_loser_aborts_cleanly(spark, tdir, monkeypatch, layout):
+    """Two merges that both read version t=1: the winner commits t=2;
     the loser must raise ConcurrentMergeError WITHOUT publishing — no
-    silent pointer clobber (the pre-guard behavior: both would write the
-    same t=2 and the second's manifest rename overwrote the first's).
+    silent clobber (both would write the same t=2, the second
+    overwriting the first's manifest or data files).
 
-    Interleaving is forced deterministically: the loser's data-staging
-    call first runs the winner's ENTIRE merge, then proceeds."""
-    T.write_table_bucketed(spark, tdir, _base(spark), n_buckets=4)
+    Interleaving is forced deterministically: the loser's claim first
+    runs the winner's ENTIRE merge, then proceeds."""
+    layout.create(spark, tdir, _base(spark))
 
     winner_upd = spark.createDataFrame(
         [(7, "winner-7", 700.0)], "id long, text string, score double"
@@ -187,24 +214,24 @@ def test_concurrent_merge_loser_aborts_cleanly(spark, tdir, monkeypatch):
         "id long, text string, score double",
     )
 
-    real_write = T._write_bucket_dirs
+    real_claim = T._claim
     state = {"fired": False}
 
-    def interleaved(df, id_col, n_buckets, dest):
+    def interleaved(*a, **kw):
         if not state["fired"]:
             state["fired"] = True
-            T.merge_upsert_bucketed(spark, tdir, winner_upd, id_col="id")
-        return real_write(df, id_col, n_buckets, dest)
+            layout.merge(spark, tdir, winner_upd)
+        return real_claim(*a, **kw)
 
-    monkeypatch.setattr(T, "_write_bucket_dirs", interleaved)
+    monkeypatch.setattr(T, "_claim", interleaved)
     with pytest.raises(T.ConcurrentMergeError):
-        T.merge_upsert_bucketed(spark, tdir, loser_upd, id_col="id")
-    monkeypatch.setattr(T, "_write_bucket_dirs", real_write)
+        layout.merge(spark, tdir, loser_upd)
+    monkeypatch.setattr(T, "_claim", real_claim)
 
     # winner's merge survives intact; loser published NOTHING
     got = {
         r["id"]: (r["text"], r["score"])
-        for r in T.read_table_bucketed(spark, tdir).collect()
+        for r in layout.read(spark, tdir).collect()
     }
     assert got[7] == ("winner-7", 700.0)
     assert got[9] == ("text-9", 9.0)
@@ -213,7 +240,7 @@ def test_concurrent_merge_loser_aborts_cleanly(spark, tdir, monkeypatch):
     assert not [
         d for d in os.listdir(tdir) if d.startswith(".stage-t")
     ]
-    assert T._bucketed_versions(spark, tdir) == [1, 2]
+    assert layout.versions(spark, tdir) == [1, 2]
 
 
 def test_concurrent_merge_stale_snapshot_detected_after_gc(spark, tdir, monkeypatch):
@@ -275,11 +302,11 @@ def test_concurrent_merge_stale_snapshot_detected_after_gc(spark, tdir, monkeypa
     assert not os.path.isdir(os.path.join(tdir, "t=2"))
 
 
-def test_gc_reaps_only_stale_merge_stages(spark, tdir):
+def test_gc_reaps_only_stale_merge_stages(spark, tdir, layout):
     """Abandoned stage dot-dirs (crashed writers) are reaped by GC once
     older than a day; fresh stages (a possibly in-flight merge) survive,
     and neither is ever visible to readers."""
-    T.write_table_bucketed(spark, tdir, _base(spark), n_buckets=4)
+    layout.create(spark, tdir, _base(spark))
     stale = os.path.join(tdir, ".stage-t2-deadbeef")
     fresh = os.path.join(tdir, ".stage-t2-cafecafe")
     os.makedirs(stale)
@@ -290,21 +317,21 @@ def test_gc_reaps_only_stale_merge_stages(spark, tdir):
     upd = spark.createDataFrame(
         [(7, "w", 7.0)], "id long, text string, score double"
     )
-    T.merge_upsert_bucketed(spark, tdir, upd, id_col="id")
+    layout.merge(spark, tdir, upd)
     assert not os.path.isdir(stale), "stale stage must be reaped"
     assert os.path.isdir(fresh), "fresh stage may belong to a live merge"
     # stages never count as versions
-    assert T._bucketed_versions(spark, tdir) == [1, 2]
+    assert layout.versions(spark, tdir) == [1, 2]
 
 
-def test_crashed_claim_is_adopted_by_next_merge(spark, tdir):
-    """A writer that died between the CAS claim rename and the manifest
+def test_crashed_claim_is_adopted_by_next_merge(spark, tdir, layout):
+    """A writer that died between the CAS claim rename and the marker
     write leaves an uncommitted t=N+1 dir. Merges must ADOPT (delete and
     re-claim) it once it is older than the stale-claim cutoff — GC alone
     cannot help, because GC only runs after a successful merge, so the
     corpse would otherwise mean permanent ConcurrentMergeError for the
     table (ADVICE r7 medium)."""
-    T.write_table_bucketed(spark, tdir, _base(spark), n_buckets=4)
+    layout.create(spark, tdir, _base(spark))
     corpse = os.path.join(tdir, "t=2")
     os.makedirs(os.path.join(corpse, "b=0"))
     with open(os.path.join(corpse, "b=0", "part-junk.parquet"), "wb") as f:
@@ -316,31 +343,31 @@ def test_crashed_claim_is_adopted_by_next_merge(spark, tdir):
     upd = spark.createDataFrame(
         [(7, "revived", 700.0)], "id long, text string, score double"
     )
-    T.merge_upsert_bucketed(spark, tdir, upd, id_col="id")
-    got = {r["id"]: r["text"] for r in T.read_table_bucketed(spark, tdir).collect()}
+    layout.merge(spark, tdir, upd)
+    got = {r["id"]: r["text"] for r in layout.read(spark, tdir).collect()}
     assert got[7] == "revived" and len(got) == 200
-    assert T._bucketed_versions(spark, tdir) == [1, 2]
+    assert layout.versions(spark, tdir) == [1, 2]
     # the corpse's junk did not leak into the adopted version
     assert not os.path.exists(os.path.join(corpse, "b=0", "part-junk.parquet"))
 
 
-def test_fresh_uncommitted_claim_still_loses(spark, tdir):
-    """A RECENT manifest-less t=N+1 may belong to a live writer between
-    its claim and its manifest commit — a merge must NOT adopt it."""
-    T.write_table_bucketed(spark, tdir, _base(spark), n_buckets=4)
+def test_fresh_uncommitted_claim_still_loses(spark, tdir, layout):
+    """A RECENT marker-less t=N+1 may belong to a live writer between
+    its claim and its marker commit — a merge must NOT adopt it."""
+    layout.create(spark, tdir, _base(spark))
     os.makedirs(os.path.join(tdir, "t=2", "b=0"))
     upd = spark.createDataFrame(
         [(7, "late", 700.0)], "id long, text string, score double"
     )
     with pytest.raises(T.ConcurrentMergeError):
-        T.merge_upsert_bucketed(spark, tdir, upd, id_col="id")
+        layout.merge(spark, tdir, upd)
 
 
-def test_gc_reaps_stale_crashed_claims(spark, tdir):
+def test_gc_reaps_stale_crashed_claims(spark, tdir, layout):
     """Defense in depth: GC (which runs after every successful merge)
-    also reaps manifest-less t=* dirs older than the cutoff, even ones
+    also reaps marker-less t=* dirs older than the cutoff, even ones
     beyond the next contended version."""
-    T.write_table_bucketed(spark, tdir, _base(spark), n_buckets=4)
+    layout.create(spark, tdir, _base(spark))
     corpse = os.path.join(tdir, "t=9")
     os.makedirs(corpse)
     old = time.time() - 2 * 24 * 3600
@@ -348,9 +375,9 @@ def test_gc_reaps_stale_crashed_claims(spark, tdir):
     upd = spark.createDataFrame(
         [(7, "w", 7.0)], "id long, text string, score double"
     )
-    T.merge_upsert_bucketed(spark, tdir, upd, id_col="id")
+    layout.merge(spark, tdir, upd)
     assert not os.path.isdir(corpse)
-    assert T._bucketed_versions(spark, tdir) == [1, 2]
+    assert layout.versions(spark, tdir) == [1, 2]
 
 
 def test_out_of_band_stage_deletion_cannot_misclaim(spark, tdir, monkeypatch):

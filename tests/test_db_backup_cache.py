@@ -22,6 +22,36 @@ def db(spark, docs, emb):
 
 
 class TestBackupRestore:
+    def test_failed_manifest_rename_raises(self, db, monkeypatch):
+        """A backup whose _MANIFEST.json rename did not land has no
+        manifest and cannot be restored, so backup() must raise instead
+        of returning normally."""
+        import grape_vector_db_spark.sources.tables as T
+
+        real = T._hadoop_fs
+
+        class NoRename:
+            def __init__(self, fs):
+                self._fs = fs
+
+            def __getattr__(self, name):
+                return getattr(self._fs, name)
+
+            def rename(self, src, dst):
+                return False
+
+        def fs_without_rename(spark, path):
+            fs, P = real(spark, path)
+            return NoRename(fs), P
+
+        bdir = tempfile.mkdtemp(prefix="gvdb_bak_")
+        try:
+            monkeypatch.setattr(T, "_hadoop_fs", fs_without_rename)
+            with pytest.raises(IOError):
+                db.backup(bdir)
+        finally:
+            shutil.rmtree(bdir, ignore_errors=True)
+
     def test_roundtrip_restores_data_and_rebuilds_indexes(self, db, spark, emb):
         db.build_index("partition", column="lang")
         db.build_index("sq")
