@@ -26,7 +26,6 @@ QueryOptimizer clamps.
 from __future__ import annotations
 
 import functools
-import os
 import time
 from collections.abc import Sequence
 from contextlib import ExitStack, contextmanager
@@ -37,7 +36,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .functions.text import text_match_score
-from .operators import ann, filters, fusion, quantization, search, sparse
+from .operators import (
+    ann,
+    filters,
+    fusion,
+    payload,
+    quantization,
+    search,
+    sparse,
+)
 from .plans.planner import PlanChoice, choose_search_strategy, clamp_request
 from .sources.tables import (
     current_table_path,
@@ -82,15 +89,23 @@ class _Gate:
     - ``partition``: the ``(column, value)`` of a single equality on the
       partitioned layout's column (a directory skip on the
       co-partitioned embeddings), else None;
-    - ``tree``: the posting-servable probe tree, else None;
+    - ``tree``: the filter in negation normal form
+      (:func:`filters.payload_probe_tree`: ``and`` / ``or`` nodes over
+      ``(field, value, kind, negated)`` leaves, every negation already
+      at the leaves) when the posting and text indexes can serve every
+      leaf (:func:`payload.servable`), else None;
     - ``kind``: ``partition`` | ``posting`` | ``predicate``;
-    - ``ids`` (``vec_id``): the posting-algebra id set when the tree is
-      servable, else the documents-predicate ids;
+    - ``ids`` (``vec_id``): the posting-algebra id set of the tree
+      (:func:`payload.tree_ids`) when it is servable, else the
+      documents-predicate ids;
     - ``docs``: documents semi-joined to ``ids`` when the tree is
       servable, else the documents predicate scan;
-    - ``selectivity`` and its ``source``: ``sidecar`` (zero-job
-      histogram / text-df estimate of the tree), else ``sample`` (the
+    - ``selectivity`` and its ``source``: ``sidecar`` (the zero-job
+      :func:`payload.tree_fraction` of the tree), else ``sample`` (the
       predicate on the cached documents sample).
+
+    The three folds read one ``sidecars`` snapshot of the posting and
+    text index stats, taken once per gate.
 
     ``ids`` and ``docs`` do not depend on ``partition``: the vector arm
     skips directories, but hybrid's BM25/text legs still gate on ids.
@@ -111,8 +126,25 @@ class _Gate:
         return eq if eq[0] == pst.get("partition_column") else None
 
     @functools.cached_property
-    def tree(self) -> dict | None:
-        return self._db._payload_tree_plan(self.filter)
+    def sidecars(self) -> payload.Sidecars:
+        db = self._db
+
+        def stats(table: str) -> dict | None:
+            return db._table_stats(table) if db._has(table) else None
+
+        st = stats("index_payload") or {}
+        return payload.Sidecars(
+            st, stats("index_terms"), db._payload_field_types(st)
+        )
+
+    @functools.cached_property
+    def tree(self) -> filters.Node | None:
+        tree = filters.payload_probe_tree(self.filter)
+        if tree is None or not payload.servable(
+            tree, self.sidecars, lambda: self._db.documents().columns
+        ):
+            return None
+        return tree
 
     @property
     def kind(self) -> str:
@@ -129,7 +161,15 @@ class _Gate:
     @functools.cached_property
     def ids(self) -> DataFrame:
         if self.tree is not None:
-            return self._db._payload_tree_ids(self.tree)
+            db = self._db
+            return payload.tree_ids(
+                self.tree,
+                self.sidecars,
+                postings=lambda: db._read("index_payload"),
+                terms=lambda: db._read("index_terms"),
+                docs=db.documents,
+                id_col=db.id_col,
+            )
         return self.docs.select(F.col(self._db.id_col).alias("vec_id"))
 
     @functools.cached_property
@@ -144,9 +184,7 @@ class _Gate:
     @functools.cached_property
     def _estimate(self) -> tuple[float, str]:
         if self.tree is not None:
-            sel = self._db._tree_fraction(
-                self._db._frac_env(), self.tree, False
-            )
+            sel = payload.tree_fraction(self.tree, self.sidecars)
             if sel is not None:
                 return sel, "sidecar"
         # sampled, zero-job estimate (an exact semi-join count would be a
@@ -171,19 +209,12 @@ class _Gate:
                 f" skip on {self.partition[0]!r}; {how})"
             )
         if self.kind == "posting":
+            fields = {leaf.field for leaf in filters.tree_leaves(self.tree)}
             return (
                 "; filter served by the payload posting index (posting "
-                f"algebra on {sorted(_tree_fields(self.tree))}; {how})"
+                f"algebra on {sorted(fields)}; {how})"
             )
         return f"; filter served by a documents predicate scan ({how})"
-
-
-def _tree_fields(tree: dict) -> set[str]:
-    out: set[str] = set()
-    for leaves in tree.values():
-        for f, v, k in leaves:
-            out |= _tree_fields(v) if k == "tree" else {f}
-    return out
 
 
 class GrapeVectorDB:
@@ -213,11 +244,8 @@ class GrapeVectorDB:
     # most this many ids (~8 bytes/id raw; 1M ids is a ~20 MB hash
     # relation — comfortably under Spark's 8 GB broadcast cap while
     # sparing the corpus a full shuffle+sort). Estimates past the bound
-    # keep the shuffle semi-join. Overridable per deployment via
-    # $SPARK_GRAFT_GATE_BROADCAST_MAX.
-    GATE_BROADCAST_MAX_IDS = int(
-        os.environ.get("SPARK_GRAFT_GATE_BROADCAST_MAX", 1_000_000)
-    )
+    # keep the shuffle semi-join.
+    GATE_BROADCAST_MAX_IDS = 1_000_000
 
     def __init__(
         self,
@@ -636,8 +664,6 @@ class GrapeVectorDB:
             "left_semi",
         )
         if self._has("index_payload"):
-            from .operators.payload import with_value_num
-
             # columns a docs re-publish dropped cannot be re-derived
             # (their postings drop in _publish_payload_index)
             cols = [c for c in self._payload_columns() if c in docs.columns]
@@ -647,7 +673,7 @@ class GrapeVectorDB:
                 )
                 # a sidecar carrying field_types always fronts a
                 # value_num-backed table (range routing relies on it)
-                kept = with_value_num(kept)
+                kept = payload.with_value_num(kept)
                 if not deleted:
                     kept = kept.unionByName(
                         self._payload_postings(touched, cols)
@@ -1130,9 +1156,7 @@ class GrapeVectorDB:
     # -- payload posting index ----------------------------------------------
 
     def _payload_postings(self, docs: DataFrame, cols: list[str]) -> DataFrame:
-        from .operators.payload import payload_postings
-
-        return payload_postings(docs, cols, id_col=self.id_col)
+        return payload.payload_postings(docs, cols, id_col=self.id_col)
 
     def _publish_payload_index(
         self, postings: DataFrame, cols: list[str]
@@ -1152,13 +1176,6 @@ class GrapeVectorDB:
         the write amplification that pushed the binary/SQ indexes to
         bucket manifests does not bite here until extreme scale; the
         same bucketed evolution applies if it ever does."""
-        from .operators.payload import (
-            array_fields,
-            field_types,
-            payload_layout,
-            payload_sidecar_stats,
-        )
-
         docs = self.documents()
         # schema evolution survival (ADVICE r9): a previously indexed
         # column dropped from a re-published documents table must not
@@ -1172,17 +1189,17 @@ class GrapeVectorDB:
         postings = postings.where(
             F.col("field").isin(cols) if cols else F.lit(False)
         )
-        with materialized(payload_layout(postings)) as postings:
+        with materialized(payload.payload_layout(postings)) as postings:
             self._publish(
                 "index_payload",
                 postings,
                 partition_by=["field"],
-                extra_stats=payload_sidecar_stats(
+                extra_stats=payload.payload_sidecar_stats(
                     postings,
                     cols,
                     self._row_count("documents"),
-                    arr_fields=array_fields(docs, cols),
-                    f_types=field_types(docs, cols),
+                    arr_fields=payload.array_fields(docs, cols),
+                    f_types=payload.field_types(docs, cols),
                 ),
             )
 
@@ -1202,11 +1219,9 @@ class GrapeVectorDB:
         are operators.sparse helpers — shared with the streaming twin.
         Like the payload publish, the laid-out term table is materialized
         once and both the sidecar aggregate and the write read it."""
-        from .operators.payload import HIST_MAX
-
         with materialized(sparse.text_index_layout(terms)) as terms:
             stats = sparse.text_index_sidecar_stats(
-                terms, col, self._row_count("documents"), HIST_MAX
+                terms, col, self._row_count("documents"), payload.HIST_MAX
             )
             if tombstone:
                 # the indexed column was dropped from a re-published
@@ -1226,11 +1241,11 @@ class GrapeVectorDB:
         st = self._table_stats("index_payload") or {}
         return list(st.get("payload_columns") or [])
 
-    def _payload_field_types(self) -> dict[str, str]:
-        """Per-field SOURCE types of the posting index — sidecar-recorded
-        at build time; legacy sidecars (pre field_types) derive them from
-        the documents schema driver-side (a footer read, zero jobs)."""
-        st = self._table_stats("index_payload") or {}
+    def _payload_field_types(self, st: dict) -> dict[str, str]:
+        """Per-field SOURCE types of the posting index whose sidecar is
+        ``st`` — recorded at build time; legacy sidecars (pre
+        field_types) derive them from the documents schema driver-side
+        (a footer read, zero jobs)."""
         ft = st.get("field_types")
         if ft:
             return dict(ft)
@@ -1246,687 +1261,6 @@ class GrapeVectorDB:
             for f in schema.fields
             if f.name in cols
         }
-
-    def _payload_tree_plan(
-        self, filter: dict[str, Any]
-    ) -> dict[str, list[tuple[str, Any, str]]] | None:
-        """The normalized probe tree when the posting index can FULLY
-        serve the filter — must/should/must_not of
-        equals / array_contains / range leaves over indexed columns,
-        RECURSIVELY over nested sub-trees (judge r10 #3: the reference
-        Filter type is recursive, ref:src/types.rs:176-204; the posting
-        algebra is closed under composition, so a sub-tree is servable
-        exactly when all ITS leaves are, judged at the leaf's EFFECTIVE
-        polarity — a must_not level flips it, two flips restore it) —
-        else None. Validation is kind-vs-column-type against the
-        sidecar: ``equals`` must hit a scalar field (per-element
-        postings cannot answer whole-array equality), ``array_contains``
-        an array field, must_not leaves must be scalar (an empty array
-        passes NOT-contains but posts nothing — filters.
-        payload_probe_tree's docstring), ``range`` a scalar NUMERIC
-        field of a value_num-backed index (sidecar carries field_types
-        exactly when the posting table carries value_num — string order
-        cannot serve ranges). Equality literals must be type-compatible
-        with the SOURCE column (an int literal probes a double column as
-        "1.0" via a cast through the recorded type; a fractional literal
-        against an int column can never match — unservable, the
-        predicate path owns it). ``match`` leaves (the reference's third
-        Condition variant, ref:src/types.rs:203) are servable when the
-        text index exists (build_index('text')), the leaf's field IS the
-        indexed text column, and the text keeps at least one token (a
-        stopwords-only match is vacuously TRUE — no posting list
-        expresses "all docs", and its negation vacuously FALSE; both
-        fall back). A must_not match serves as the COMPLEMENT: the
-        documents id column (pruned to ONE narrow column, text non-null
-        — the predicate path's null semantics) anti-joined against the
-        token-probe intersection — the corpus text itself is still
-        never re-tokenized. Driver-side structural inspection only —
-        zero jobs (tokenizing the match text is pure Python)."""
-        tree = filters.payload_probe_tree(filter)
-        if tree is None:
-            return None
-        has_pay = self._has("index_payload")
-        st = (self._table_stats("index_payload") or {}) if has_pay else {}
-        tst = (
-            self._table_stats("index_terms")
-            if self._has("index_terms")
-            else None
-        )
-        text_col = (tst or {}).get("text_col")
-        pay = set(st.get("payload_columns") or [])
-        arr = set(st.get("array_fields") or [])
-        types = self._payload_field_types()
-        typed_index = bool(st.get("field_types"))
-        from .operators.payload import (
-            INT_TYPES,
-            _element_type,
-            is_numeric_field,
-        )
-
-        def _num(x) -> bool:
-            return isinstance(x, (int, float)) and not isinstance(x, bool)
-
-        doc_cols: set[str] | None = None  # lazy: schema read only when
-        # a match leaf needs it, then ONE footer read per plan call (a
-        # nested tree of match leaves re-derived the documents schema
-        # per leaf, and the plan itself runs on the hot planning path)
-
-        def _doc_cols() -> set[str]:
-            nonlocal doc_cols
-            if doc_cols is None:
-                doc_cols = set(self.documents().columns)
-            return doc_cols
-
-        def _lit_ok(fld: str, v) -> bool:
-            """Is probing this literal against the field's postings
-            provably equal to the predicate path's compare?"""
-            ft = types.get(fld)
-            if ft is None:
-                # unknown source type: only the string/string case is
-                # provably faithful (the original posting contract)
-                return isinstance(v, str)
-            et = _element_type(ft)
-            if is_numeric_field(ft):
-                if not _num(v):
-                    return False
-                if (
-                    et.split("(")[0] in INT_TYPES
-                    and isinstance(v, float)
-                    and not float(v).is_integer()
-                ):
-                    # predicate path: double-widened compare matches
-                    # nothing; posting path cannot express that — a
-                    # truncating cast would WRONGLY match
-                    return False
-                return True
-            if et == "boolean":
-                return isinstance(v, bool)
-            # string and other scalar types (date, timestamp, ...) keep
-            # the string-cast contract: literal must already be a string
-            return isinstance(v, str)
-
-        def _leaf_ok(fld: str, v, kind: str, negated: bool) -> bool:
-            """Is this leaf servable under ``negated`` (the EFFECTIVE
-            polarity — must_not groups flip it, so a leaf two must_not
-            levels deep is positive again)?"""
-            if kind in ("match", "match_fuzzy"):
-                if tst is None or fld != text_col:
-                    return False
-                # a docs re-publish may have DROPPED the indexed
-                # column (ADVICE r10): the tree must fall back so
-                # the filter errors exactly like the predicate path
-                # instead of serving stale postings (schema read —
-                # zero jobs)
-                if fld not in _doc_cols():
-                    return False
-                text = v[0] if kind == "match_fuzzy" else v
-                if not sparse.tokenize_query_py(text):
-                    return False
-                return True
-            if not has_pay or fld not in pay:
-                return False
-            if kind == "range":
-                ft = types.get(fld)
-                if (
-                    not typed_index
-                    or ft is None
-                    or fld in arr
-                    or not is_numeric_field(ft)
-                ):
-                    return False
-                return not any(
-                    b is not None and not _num(b)
-                    for b in (v.get("gte"), v.get("lte"))
-                )
-            if kind == "exists":
-                # scalar only: an empty array is not-null on the
-                # predicate path but posts nothing; negation needs
-                # the corpus complement
-                return fld not in arr and not negated
-            if kind == "in":
-                return fld not in arr and all(_lit_ok(fld, x) for x in v)
-            if (kind == "array_contains") != (fld in arr):
-                return False
-            if negated and kind == "array_contains":
-                return False
-            return _lit_ok(fld, v)
-
-        def _tree_ok(t, negated: bool) -> bool:
-            for g, leaves in t.items():
-                child_neg = (not negated) if g == "must_not" else negated
-                for fld, v, kind in leaves:
-                    if kind == "tree":
-                        if not _tree_ok(v, child_neg):
-                            return False
-                    elif not _leaf_ok(fld, v, kind, child_neg):
-                        return False
-            return True
-
-        if not _tree_ok(tree, False):
-            return None
-        return tree
-
-    def _payload_tree_ids(
-        self, tree: dict[str, list[tuple[str, Any, str]]]
-    ) -> DataFrame:
-        """Posting-list algebra over the probe tree: must INTERSECTS id
-        lists (inner id-joins), should UNIONS them (distinct), and each
-        must_not scalar leaf is itself the id list ``field present AND
-        NOT(pred)`` — null-rejecting, exactly the predicate path's
-        NOT(pred) — intersected like a must. Every operand is a pruned
-        read of one field's posting directory, unique per doc by
-        construction (scalars post once; array postings are per-doc
-        distinct), so the joins never multiply rows.
-
-        NESTED sub-trees evaluate bottom-up (judge r10 #3): the algebra
-        is closed under intersection/union/complement, and a NEGATED
-        sub-tree pushes the NOT to its leaves by De Morgan — exact in
-        Kleene three-valued logic because a negated leaf is the
-        null-rejecting complement (TRUE-set of NOT(leaf)), the same rule
-        one-level must_not always used. NOT(must) unions the children's
-        complements, NOT(should) intersects them, NOT(must_not child)
-        evaluates the child positively.
-
-        Every AND chain orders its operands MOST-SELECTIVE-FIRST from
-        the zero-job sidecar estimates (judge r10 #4): the manual
-        left-deep join chain is not reordered by AQE, so the innermost
-        probe should be the one that shrinks the id stream hardest;
-        operands without an estimate keep their written order at the
-        end (stable sort).
-
-        Literal fidelity: an equality literal casts THROUGH the recorded
-        source type before the string compare (F.lit(1).cast("double").
-        cast("string") == the "1.0" the build wrote — both sides are the
-        same Spark cast, so formats agree by construction; ADVICE r8).
-        Range leaves compare on value_num — the numerically-ordered
-        column the value-sorted layout skips row groups on."""
-        # match-only trees never touch the payload table (it may not
-        # even exist — the plan validated each leaf against ITS index)
-        post = (
-            self._read("index_payload")
-            if self._has("index_payload")
-            else None
-        )
-        types = self._payload_field_types()
-
-        from .operators.payload import _element_type
-
-        def _lit_str(fld, val):
-            ft = types.get(fld)
-            vcol = F.lit(val)
-            if ft is not None:
-                vcol = vcol.cast(_element_type(ft))
-            return vcol.cast("string")
-
-        def _eq(fld, val, negate):
-            """Equality predicate for one posting probe. The exact compare
-            is on the string ``value`` (both sides the same Spark cast).
-            Numeric fields ADD a ``value_num`` equality conjunct (ADVICE
-            r9): the layout sorts numeric directories by value_num, so
-            the string-only predicate lost parquet row-group skipping —
-            the conjunct re-aligns the probe with the sort/stats column.
-            String equality implies source-value equality implies
-            double-cast equality, so the conjunct never drops a true
-            match — EXCEPT a NaN literal (value_num == NaN is always
-            false in the conjunct while Spark's equality treats NaN =
-            NaN as true, so the string compare alone matches; ADVICE
-            r10 — NaN skips the conjunct). Negations stay string-only
-            (NOT(a AND b) is not NOT(a) AND NOT(b))."""
-            import math as _math
-
-            from .operators.payload import is_numeric_field as _isnum
-
-            s = F.col("value") == _lit_str(fld, val)
-            if negate:
-                return F.col("value") != _lit_str(fld, val)
-            ft = types.get(fld)
-            if (
-                ft is not None
-                and _isnum(ft)
-                and isinstance(val, (int, float))
-                and not isinstance(val, bool)
-                and not (isinstance(val, float) and _math.isnan(val))
-            ):
-                s = (F.col("value_num") == F.lit(float(val))) & s
-            return s
-
-        def _match_complement(keep: DataFrame) -> DataFrame:
-            """NOT(all tokens present) = the corpus COMPLEMENT: the
-            documents id column (pruned to ONE narrow column; text
-            non-null reproduces the predicate path's null-rejecting NOT)
-            anti-joined against the probe intersection — the corpus text
-            is never re-tokenized. ONE shared helper: the exact and
-            fuzzy match branches must negate identically, and a
-            null-semantics change applied to one but not the other would
-            silently diverge them."""
-            st = self._table_stats("index_terms") or {}
-            tcol = st.get("text_col") or self.text_col
-            base = (
-                self.documents()
-                .where(F.col(tcol).isNotNull())
-                .select(F.col(self.id_col).alias("vec_id"))
-            )
-            return base.join(keep, "vec_id", "left_anti")
-
-        def leaf(fld, val, kind, negate=False):
-            if kind == "match_fuzzy":
-                # fuzzy full-text leaf (the reference's declared-but-
-                # stubbed TextSearchOptions.fuzzy, ref:src/filtering.rs:
-                # 65-69): each query token expands to the DISTINCT index
-                # terms within Levenshtein distance (operators.sparse.
-                # fuzzy_terms — one vocabulary-bounded, length-banded
-                # aggregate per token, never a corpus scan), then the
-                # expansion probes the index as one pushed In-filter.
-                # A doc matches the token if ANY expanded term posts for
-                # it (distinct — several near terms may post for one
-                # doc); multi-token = AND of per-token id lists, same as
-                # exact match.
-                text, dist = val
-                terms_tbl = self._read("index_terms")
-                keep = None
-                for t in sorted(sparse.tokenize_query_py(text)):
-                    exp_df = sparse.fuzzy_terms(
-                        terms_tbl.withColumnRenamed("vec_id", "doc_id"),
-                        t,
-                        max_dist=int(dist),
-                    )
-                    # bounded driver collect: a real vocabulary keeps a
-                    # token's edit-distance ball tiny, but the bound must
-                    # not depend on that — past 4096 terms the expansion
-                    # probes as a broadcast term-join instead (identical
-                    # semantics, no driver list, no giant In literal)
-                    exp = [
-                        r["term"] for r in exp_df.limit(4097).collect()
-                    ]
-                    if len(exp) > 4096:
-                        pl = (
-                            terms_tbl.join(
-                                F.broadcast(exp_df.select("term")), "term"
-                            )
-                            .select("vec_id")
-                            .distinct()
-                        )
-                    else:
-                        pl = (
-                            terms_tbl.where(F.col("term").isin(exp))
-                            .select("vec_id")
-                            .distinct()
-                        )
-                    keep = pl if keep is None else keep.join(pl, "vec_id")
-                if negate:
-                    return _match_complement(keep)
-                return keep
-            if kind == "match":
-                # full-text leaf: token postings from the doc_terms
-                # inverted index (one pruned term probe per kept token,
-                # df(term)-bounded), multi-token = AND of probes
-                # (intersection joins) — the corpus text is never
-                # re-tokenized at query time. doc_terms rows are unique
-                # per (doc, term), so the intersections never multiply
-                # rows.
-                terms_tbl = self._read("index_terms")
-                keep = None
-                for t in sorted(sparse.tokenize_query_py(val)):
-                    pl = terms_tbl.where(
-                        F.col("term") == F.lit(t)
-                    ).select("vec_id")
-                    keep = pl if keep is None else keep.join(pl, "vec_id")
-                if negate:
-                    return _match_complement(keep)
-                return keep
-            if kind == "range":
-                vn = F.col("value_num")
-                conds = []
-                if val.get("gte") is not None:
-                    conds.append(vn >= F.lit(float(val["gte"])))
-                if val.get("lte") is not None:
-                    conds.append(vn <= F.lit(float(val["lte"])))
-                op = conds[0]
-                for c in conds[1:]:
-                    op = op & c
-                if negate:
-                    op = ~op
-            elif kind == "exists":
-                # field-present IS the posting row (scalar fields post
-                # exactly once per non-null doc); negation rejected at
-                # plan time
-                op = F.lit(True)
-            elif kind == "in":
-                op = None
-                for x in val:
-                    eq = _eq(fld, x, negate=False)
-                    op = eq if op is None else (op | eq)
-                if negate:
-                    # NOT(v = a OR v = b): value is never null in
-                    # postings, so De Morgan holds row-wise (the
-                    # value_num conjunct inside each disjunct never drops
-                    # a true match, so its negation never adds one)
-                    op = ~op
-            else:
-                op = _eq(fld, val, negate)
-            return post.where(
-                (F.col("field") == F.lit(fld)) & op
-            ).select("vec_id")
-
-        env = self._frac_env()
-
-        def _operand(fld, val, kind, neg):
-            if kind == "tree":
-                return _tree(val, neg)
-            return leaf(fld, val, kind, negate=neg)
-
-        def _est(fld, val, kind, neg) -> float:
-            """Zero-job ordering key: the leaf/sub-tree's estimated kept
-            fraction from the sidecars; 2.0 (past any real fraction)
-            when no estimate exists, so unknowns keep written order at
-            the chain's end under the stable sort."""
-            if kind == "tree":
-                f = self._tree_fraction(env, val, neg)
-            else:
-                f = self._leaf_fraction(env, fld, val, kind, neg)
-            return 2.0 if f is None else f
-
-        def _and_chain(ops):
-            """Left-deep intersection, most-selective operand FIRST
-            (innermost). The ORDER is the piece AQE cannot re-derive —
-            it re-plans each join's strategy and build side from runtime
-            sizes but never reorders a manual join tree — so the sidecar
-            estimates decide it here: starting from the rarest operand
-            bounds every later intermediate by that operand's size, which
-            at corpus scale is the difference between shuffling the
-            common leaf's full id list once versus at every step. Build
-            side / broadcast stays AQE's call on the runtime sizes (a
-            measured forced-broadcast variant LOST locally: hinting the
-            running intermediate serializes one broadcast round trip per
-            step, while leaf-side broadcasts prepare in parallel)."""
-            keep = None
-            for _e, thunk in sorted(ops, key=lambda p: p[0]):
-                pl = thunk()
-                keep = pl if keep is None else keep.join(pl, "vec_id")
-            return keep
-
-        def _tree(t, neg) -> DataFrame:
-            if not neg:
-                ops = [
-                    (_est(f, v, k, False),
-                     lambda f=f, v=v, k=k: _operand(f, v, k, False))
-                    for f, v, k in t["must"]
-                ]
-                if t["should"]:
-                    ests = [_est(f, v, k, False) for f, v, k in t["should"]]
-                    # union bound: fraction(OR) <= sum of child fractions
-                    # (capped at 1) — but ONLY when every child has an
-                    # estimate. One unknown child (2.0 sentinel) makes
-                    # the union unknown too; min(1.0, sum) would launder
-                    # the sentinel into a confident 1.0 and sort the
-                    # expensive unknown union (e.g. a fuzzy expansion
-                    # with its driver collects) ahead of genuinely
-                    # estimated operands, violating the "unknowns keep
-                    # written order at the chain's end" contract.
-                    se = (
-                        2.0 if any(e >= 2.0 for e in ests)
-                        else min(1.0, sum(ests))
-                    )
-
-                    def _should_union(items=tuple(t["should"])):
-                        un = None
-                        for f, v, k in items:
-                            pl = _operand(f, v, k, False)
-                            un = pl if un is None else un.unionByName(pl)
-                        return un.distinct()
-
-                    ops.append((se, _should_union))
-                ops += [
-                    (_est(f, v, k, True),
-                     lambda f=f, v=v, k=k: _operand(f, v, k, True))
-                    for f, v, k in t["must_not"]
-                ]
-                return _and_chain(ops)
-            # negated sub-tree: NOT(AND of operands) = OR of each
-            # operand's complement (De Morgan, exact in Kleene logic);
-            # NOT(should-OR) is itself an AND chain of the children's
-            # complements — ordered like any other chain
-            parts = [_operand(f, v, k, True) for f, v, k in t["must"]]
-            if t["should"]:
-                parts.append(
-                    _and_chain(
-                        [
-                            (_est(f, v, k, True),
-                             lambda f=f, v=v, k=k: _operand(f, v, k, True))
-                            for f, v, k in t["should"]
-                        ]
-                    )
-                )
-            parts += [_operand(f, v, k, False) for f, v, k in t["must_not"]]
-            if len(parts) == 1:
-                return parts[0]
-            un = parts[0]
-            for p in parts[1:]:
-                un = un.unionByName(p)
-            return un.distinct()
-
-        return _tree(tree, False)
-
-    def _frac_env(self) -> dict:
-        """Driver-side sidecar snapshot funding zero-job selectivity:
-        payload histograms + numeric minmax + field types + the payload
-        corpus count, and the text index's df histogram + ITS corpus
-        count. Each leaf divides by its OWN sidecar's doc_rows — a tree
-        mixing payload and match leaves previously divided text dfs by
-        the payload corpus (ADVICE r10)."""
-        st = self._table_stats("index_payload") or {}
-        tst = (
-            self._table_stats("index_terms")
-            if self._has("index_terms")
-            else None
-        ) or {}
-        return {
-            "hist": st.get("histograms") or {},
-            "minmax": st.get("numeric_minmax") or {},
-            "types": self._payload_field_types(),
-            "n_pay": int(st.get("doc_rows") or 0),
-            "n_text": int(tst.get("doc_rows") or 0),
-            "df_top": tst.get("df_top"),
-            "df_cap": tst.get("df_cap"),
-            # explicit wide-histogram field list (None for legacy
-            # sidecars -> consumers fall back to the key heuristic)
-            "wide": (
-                set(st["wide_hist_fields"])
-                if "wide_hist_fields" in st
-                else None
-            ),
-        }
-
-    def _leaf_fraction(
-        self, env: dict, fld: str, val, kind: str, negated: bool = False
-    ) -> float | None:
-        """Estimated fraction of the leaf's OWN corpus it keeps, with
-        the requested polarity applied, floored at half a row of that
-        corpus and capped at 1; None when the sidecars can't fund it
-        (the caller falls back to the sampled estimate). Match leaves
-        divide per-token df by the TEXT sidecar's doc_rows; payload
-        leaves divide histogram counts by the payload sidecar's — never
-        mixed (ADVICE r10). A negated leaf is (present - matching): the
-        null-rejecting complement the posting algebra serves."""
-        from .operators.payload import is_numeric_field
-
-        if kind in ("match", "match_fuzzy"):
-            n = env["n_text"]
-            dft = env["df_top"]
-            if not n or dft is None:
-                return None
-            if kind == "match_fuzzy":
-                # the expansion terms are only known after the
-                # query-time vocabulary probe — no zero-job estimate
-                return None
-            floor = 0.5 / n
-            p = 1.0
-            for t in sorted(sparse.tokenize_query_py(val)):
-                # exact for head terms recorded in df_top, the sound
-                # upper bound df_cap for the tail
-                df = dft.get(t)
-                if df is None:
-                    if env["df_cap"] is None:
-                        return None
-                    df = env["df_cap"]
-                p *= min(max(int(df) / n, floor), 1.0)
-            if negated:
-                # the text column's "presence" is ~1.0 (no per-field
-                # null stats for it; head-term df makes 1-p dominant)
-                return min(1.0, max(1.0 - p, floor))
-            return min(max(p, floor), 1.0)
-        n = env["n_pay"]
-        if not n:
-            return None
-        floor = 0.5 / n
-        hist, minmax, types = env["hist"], env["minmax"], env["types"]
-
-        wide_set = env.get("wide")
-
-        def _wide(f, h) -> bool:
-            # the recorded field list when present; the key heuristic
-            # only for legacy sidecars (it misreads an exact histogram
-            # whose sole VALUE is the string "n_distinct")
-            if wide_set is not None:
-                return f in wide_set
-            return "n_distinct" in h and len(h) == 1
-
-        def present(f):
-            h = hist.get(f)
-            if h is None:
-                return None
-            if _wide(f, h):
-                return 1.0
-            return min(1.0, sum(int(v) for v in h.values()) / n)
-
-        def frac(fld, val, kind):
-            h = hist.get(fld)
-            if h is None:
-                return None
-            if kind == "exists":
-                return present(fld)
-            if kind == "in":
-                # union of disjoint equalities (a value matches exactly
-                # one histogram entry), capped by the field's presence;
-                # the value tuple dedupes first — values=["a","a"] must
-                # not double-count (ADVICE r9; estimation-only)
-                fs = [frac(fld, x, "equals") for x in dict.fromkeys(val)]
-                if any(f is None for f in fs):
-                    return None
-                p = present(fld)
-                return min(sum(fs), p if p is not None else 1.0)
-            if kind == "range":
-                gte, lte = val.get("gte"), val.get("lte")
-                if not _wide(fld, h):
-                    cnt = 0
-                    for k, c in h.items():
-                        try:
-                            x = float(k)
-                        except (TypeError, ValueError):
-                            return None
-                        if (gte is None or x >= gte) and (
-                            lte is None or x <= lte
-                        ):
-                            cnt += int(c)
-                    return cnt / n
-                mm = minmax.get(fld)
-                if not mm:
-                    return None
-                lo, hi = float(mm[0]), float(mm[1])
-                g = lo if gte is None else float(gte)
-                le = hi if lte is None else float(lte)
-                span = hi - lo
-                if span <= 0:
-                    return 1.0 if g <= lo <= le else 0.0
-                return max(0.0, (min(le, hi) - max(g, lo)) / span)
-            if _wide(fld, h):
-                return 1.0 / max(int(h["n_distinct"]), 1)
-            ft = types.get(fld)
-            if ft is not None and is_numeric_field(ft) and not isinstance(
-                val, bool
-            ):
-                # numeric histogram keys are Spark string casts — match by
-                # VALUE, not format (<= HIST_MAX keys, driver-side)
-                target = float(val)
-                cnt = 0
-                for k, c in h.items():
-                    try:
-                        if float(k) == target:
-                            cnt += int(c)
-                    except (TypeError, ValueError):
-                        continue
-                return cnt / n
-            key = str(val).lower() if isinstance(val, bool) else str(val)
-            return int(h.get(key, 0)) / n
-
-        f = frac(fld, val, kind)
-        if f is None:
-            return None
-        if negated:
-            p = present(fld)
-            if p is None:
-                return None
-            return min(1.0, max(p - f, floor))
-        return min(max(f, floor), 1.0)
-
-    def _tree_fraction(
-        self, env: dict, tree: dict, negated: bool = False
-    ) -> float | None:
-        """Recursive tree combination over :meth:`_leaf_fraction`: must
-        multiplies child fractions (attribute independence), should
-        takes the UNION BOUND min(1, sum), must_not children evaluate
-        negated and multiply in. A NEGATED tree De-Morgans: union bound
-        over the operands' complements, where NOT(should-OR) multiplies
-        the children's complements and NOT(must_not child) is the child
-        evaluated positively. None when any child lacks sidecar
-        coverage."""
-
-        def child(f, v, k, neg):
-            if k == "tree":
-                return self._tree_fraction(env, v, neg)
-            return self._leaf_fraction(env, f, v, k, neg)
-
-        if not negated:
-            sel = 1.0
-            for f, v, k in tree["must"]:
-                x = child(f, v, k, False)
-                if x is None:
-                    return None
-                sel *= x
-            if tree["should"]:
-                s = 0.0
-                for f, v, k in tree["should"]:
-                    x = child(f, v, k, False)
-                    if x is None:
-                        return None
-                    s += x
-                sel *= min(1.0, s)
-            for f, v, k in tree["must_not"]:
-                x = child(f, v, k, True)
-                if x is None:
-                    return None
-                sel *= x
-            return min(sel, 1.0)
-        s = 0.0
-        for f, v, k in tree["must"]:
-            x = child(f, v, k, True)
-            if x is None:
-                return None
-            s += x
-        if tree["should"]:
-            p = 1.0
-            for f, v, k in tree["should"]:
-                x = child(f, v, k, True)
-                if x is None:
-                    return None
-                p *= x
-            s += p
-        for f, v, k in tree["must_not"]:
-            x = child(f, v, k, False)
-            if x is None:
-                return None
-            s += x
-        return min(1.0, s)
 
     def _graph_degree(self, edges: DataFrame) -> int:
         """The graph index's out-degree: the publish-time max_rank stat,
@@ -2846,7 +2180,7 @@ class GrapeVectorDB:
                 "cursor"
             )
         st = self._table_stats("index_payload") or {}
-        types = self._payload_field_types()
+        types = self._payload_field_types(st)
         indexed_scalar = (
             order_by in (st.get("payload_columns") or [])
             and order_by not in (st.get("array_fields") or [])
@@ -2857,9 +2191,7 @@ class GrapeVectorDB:
             # numeric fields, value for strings), so the read skips
             # straight to the cursor's row groups
             ft = types.get(order_by)
-            from .operators.payload import is_numeric_field
-
-            numeric = ft is not None and is_numeric_field(ft)
+            numeric = ft is not None and payload.is_numeric_field(ft)
             vcol = F.col("value_num") if numeric else F.col("value")
             page = self._read("index_payload").where(
                 F.col("field") == F.lit(order_by)

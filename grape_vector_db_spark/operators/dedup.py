@@ -28,8 +28,6 @@ oracle reproduces results exactly.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -1358,10 +1356,8 @@ def embedding_neardup_pairs_lsh(
 # corpora keep the simple shape. Above it the hydration joins must
 # shuffle ~1 KB of vector per candidate (twice), while block shipping
 # moves 16 bytes per pair + each 4096-row block matrix once — the
-# guide §8 proxy-shuffle rule. Env-overridable for cluster tuning.
-_BLOCK_VERIFY_MIN_ROWS = int(
-    os.environ.get("SPARK_GRAFT_BLOCK_VERIFY_MIN_ROWS", "200000")
-)
+# guide §8 proxy-shuffle rule.
+_BLOCK_VERIFY_MIN_ROWS = 200_000
 
 
 def _cosine_verify_auto(

@@ -20,6 +20,16 @@ the same semantics compile to AND/OR/NOT predicates that Catalyst pushes
 into the parquet scan — at 100 TB the filter runs inside the scan with
 row-group min/max skipping, no index tables needed.
 
+When the payload posting and text indexes exist, the facade serves a
+tree of posting-probe leaves as that id-set algebra instead.
+:func:`payload_probe_tree` normalizes such a tree once into negation
+normal form: ``and`` / ``or`` :class:`Node` s in written order over
+:class:`Leaf` ``(field, value, kind, negated)`` tuples, with every
+must_not resolved and every negation pushed to the leaves by De Morgan.
+It is the only place on the posting route that flips polarity;
+servability, posting ids and selectivity are three plain folds over the
+NNF tree in :mod:`.payload`.
+
 Notably the reference *stubs* most comparison executors (only Equal and Gt
 actually return rows, src/filtering.rs:403-436) — we implement the declared
 semantics, not the stubs, and note the divergence here.
@@ -27,7 +37,7 @@ semantics, not the stubs, and note the divergence here.
 
 from __future__ import annotations
 
-from typing import Any
+from typing import Any, NamedTuple
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -198,127 +208,141 @@ def simple_equality(flt: dict[str, Any]) -> tuple[str, Any] | None:
     return str(field), value
 
 
-def conjunctive_equalities(
-    flt: dict[str, Any],
-) -> list[tuple[str, Any]] | None:
-    """The (field, value) pairs when the filter tree is a PURE AND of
-    top-level must-equalities — else None. The must-only, equals-only
-    special case of :func:`payload_probe_tree` (and a superset of
-    :func:`simple_equality`, the len-1 case a partitioned STORAGE layout
-    can additionally serve as a directory skip)."""
-    tree = payload_probe_tree(flt)
-    if tree is None or tree["should"] or tree["must_not"]:
-        return None
-    if any(kind != "equals" for _f, _v, kind in tree["must"]):
-        return None
-    return [(f, v) for f, v, _k in tree["must"]]
+class Leaf(NamedTuple):
+    """One posting-probe leaf of a negation-normal-form tree: the
+    condition ``kind`` on ``field`` with its normalized ``value``, and
+    whether the tree above it negates it (``negated``)."""
+
+    field: str
+    value: Any
+    kind: str
+    negated: bool
 
 
-def payload_probe_tree(
-    flt: dict[str, Any],
-) -> dict[str, list[tuple[str, Any, str]]] | None:
-    """Filter tree normalized to posting-probe groups —
-    ``{"must": [(field, value, kind)...], "should": [...],
-    "must_not": [...]}`` — when EVERY leaf is an ``equals``,
-    ``array_contains``, ``range``, ``in``, ``exists``, or ``match``
-    condition, else None. A range leaf carries ``value =
-    {"gte":..., "lte":...}`` (at least one bound set); an in leaf the
-    value tuple; an exists leaf True. Reference semantics
-    (src/embedded.rs:539-582): must = AND, should = OR, must_not = AND
-    of negations, groups AND together. The posting algebra: must
-    intersects id lists, should unions them, and a must_not leaf is
-    itself an id list (field present AND NOT(pred)) that intersects —
-    which reproduces the predicate path's null handling exactly for
-    SCALAR fields (NOT(col = v) is null-rejecting). must_not over ARRAY
-    fields is NOT servable (an empty array passes NOT contains but posts
-    nothing) — the caller must reject those against the index sidecar,
-    same as whole-array equality. Range servability (numeric source
-    type, value_num-backed index) is likewise the caller's sidecar
-    check — this normalizer is purely structural.
+class Node(NamedTuple):
+    """An ``and`` / ``or`` node of a negation-normal-form tree; its
+    ``children`` (nodes or :class:`Leaf`) keep their written order."""
 
-    NESTED sub-trees recurse (the reference Filter type is recursive,
-    ref:src/types.rs:176-204): a node that is itself a
-    must/should/must_not dict normalizes to the probe triple
-    ``("", <subtree groups>, "tree")`` in its parent group. The id-set
-    algebra is CLOSED under composition — intersection/union/
-    complement evaluate bottom-up — and negation of a sub-tree pushes
-    to its leaves by De Morgan, which is exact in Kleene three-valued
-    logic (NOT of a leaf is the leaf's null-rejecting complement, the
-    same rule one-level must_not always used), so the recursive route
-    returns exactly the predicate path's TRUE-set."""
+    op: str
+    children: tuple
+
+
+def tree_leaves(tree: Node):
+    """The leaves of an NNF tree, depth first in written order."""
+    for c in tree.children:
+        if isinstance(c, Leaf):
+            yield c
+        else:
+            yield from tree_leaves(c)
+
+
+_GROUPS = ("must", "should", "must_not")
+
+
+def payload_probe_tree(flt: dict[str, Any]) -> Node | None:
+    """The filter tree in negation normal form when EVERY leaf is an
+    ``equals``, ``array_contains``, ``range``, ``in``, ``exists`` or
+    ``match`` condition, else None (as for an empty tree or group, or a
+    leaf without a field or value).
+
+    The result is an ``and`` :class:`Node` over the must children, one
+    ``or`` node over the should children (when any), and the must_not
+    children with their polarity flipped — the reference semantics
+    (src/embedded.rs:539-582). NESTED sub-trees recurse (the reference
+    Filter type is recursive, ref:src/types.rs:176-204), and a negated
+    sub-tree pushes the NOT to its leaves by De Morgan: it becomes an
+    ``or`` over its flipped must children, one ``and`` over its flipped
+    should children, and its must_not children at the outer polarity.
+    Two negations cancel. De Morgan is exact in Kleene three-valued
+    logic here because a negated leaf means the null-rejecting
+    complement (field present AND NOT pred), which is what NOT(pred)
+    keeps on the predicate path. This is the one place on the posting
+    route that flips polarity: the folds in :mod:`.payload` read
+    ``Leaf.negated`` and never test a group name.
+
+    Leaf values: a range leaf carries ``{"gte":..., "lte":...}`` (at
+    least one bound set), an in leaf the value tuple, an exists leaf
+    True, a match leaf the query text, and a fuzzy match leaf (kind
+    ``match_fuzzy``) ``(text, distance)`` with True read as 1. Whether
+    the indexes can serve a leaf (field indexed, literal type, array
+    field, negation of exists or array leaves, text index column) is
+    :func:`.payload.servable`'s sidecar check — this normalizer is
+    purely structural."""
+    return _nnf(flt, False)
+
+
+def _nnf(flt: Any, negated: bool) -> Node | None:
     if not isinstance(flt, dict):
         return None
-    groups: dict[str, list[tuple[str, Any, str]]] = {}
-    for g in ("must", "should", "must_not"):
-        out: list[tuple[str, Any, str]] = []
+    groups: dict[str, list] = {}
+    for g in _GROUPS:
+        neg = negated != (g == "must_not")
+        out: list = []
         for node in flt.get(g) or []:
             if not isinstance(node, dict):
                 return None
-            if any(k in node for k in ("must", "should", "must_not")):
-                sub = payload_probe_tree(node)
-                if sub is None:
-                    return None
-                out.append(("", sub, "tree"))
-                continue
-            kind = node.get("type")
-            if kind not in (
-                "equals", "array_contains", "range", "in", "exists",
-                "match",
-            ):
+            if any(k in node for k in _GROUPS):
+                child = _nnf(node, neg)
+            else:
+                child = _probe_leaf(node, neg)
+            if child is None:
                 return None
-            field = node.get("field")
-            if field is None:
-                return None
-            if kind == "match":
-                # full-text leaf: value = the raw query text; the caller
-                # validates servability (text index present, field is the
-                # indexed text column, tokens non-empty; negation serves
-                # as the id-column complement) and owns tokenization.
-                # ``fuzzy`` (truthy) normalizes to the distinct
-                # ``match_fuzzy`` kind carrying (text, distance) —
-                # True -> 1
-                text = node.get("text")
-                if not isinstance(text, str) or not text:
-                    return None
-                if node.get("case_sensitive"):
-                    # unservable AND unsupported: fall back so the
-                    # predicate path raises its explicit error
-                    return None
-                fuzzy = node.get("fuzzy")
-                if fuzzy:
-                    dist = 1 if fuzzy is True else int(fuzzy)
-                    out.append((str(field), (text, dist), "match_fuzzy"))
-                    continue
-                out.append((str(field), text, kind))
-                continue
-            if kind == "range":
-                gte, lte = node.get("gte"), node.get("lte")
-                if gte is None and lte is None:
-                    return None
-                out.append((str(field), {"gte": gte, "lte": lte}, kind))
-                continue
-            if kind == "in":
-                values = node.get("values")
-                if not values or any(v is None for v in values):
-                    return None
-                out.append((str(field), tuple(values), kind))
-                continue
-            if kind == "exists":
-                # field-present: exactly "has a posting row" for scalar
-                # fields; negation (absent) needs the corpus complement,
-                # which postings cannot provide — caller rejects must_not
-                out.append((str(field), True, kind))
-                continue
-            value = node.get("value")
-            if value is None:
-                return None
-            out.append((str(field), value, kind))
+            out.append(child)
         groups[g] = out
-    if any(k not in ("must", "should", "must_not") for k in flt if flt.get(k)):
+    if any(k not in _GROUPS for k in flt if flt.get(k)):
         return None
     if not (groups["must"] or groups["should"] or groups["must_not"]):
         return None
-    return groups
+    should = groups["should"]
+    if should:
+        should = [Node("and" if negated else "or", tuple(should))]
+    return Node(
+        "or" if negated else "and",
+        tuple(groups["must"] + should + groups["must_not"]),
+    )
+
+
+def _probe_leaf(node: dict[str, Any], negated: bool) -> Leaf | None:
+    kind = node.get("type")
+    if kind not in (
+        "equals", "array_contains", "range", "in", "exists", "match",
+    ):
+        return None
+    field = node.get("field")
+    if field is None:
+        return None
+    field = str(field)
+    if kind == "match":
+        # the caller validates servability and owns tokenization
+        text = node.get("text")
+        if not isinstance(text, str) or not text:
+            return None
+        if node.get("case_sensitive"):
+            # unservable AND unsupported: fall back so the predicate
+            # path raises its explicit error
+            return None
+        fuzzy = node.get("fuzzy")
+        if fuzzy:
+            dist = 1 if fuzzy is True else int(fuzzy)
+            return Leaf(field, (text, dist), "match_fuzzy", negated)
+        return Leaf(field, text, kind, negated)
+    if kind == "range":
+        gte, lte = node.get("gte"), node.get("lte")
+        if gte is None and lte is None:
+            return None
+        return Leaf(field, {"gte": gte, "lte": lte}, kind, negated)
+    if kind == "in":
+        values = node.get("values")
+        if not values or any(v is None for v in values):
+            return None
+        return Leaf(field, tuple(values), kind, negated)
+    if kind == "exists":
+        # field present: exactly "has a posting row" for scalar fields
+        return Leaf(field, True, kind, negated)
+    value = node.get("value")
+    if value is None:
+        return None
+    return Leaf(field, value, kind, negated)
 
 
 def _node(node: dict[str, Any]) -> Column:

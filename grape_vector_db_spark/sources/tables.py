@@ -1060,10 +1060,7 @@ def read_table_bucketed(
     if v not in vs:
         raise ValueError(f"version {v} not committed under {path}; available: {vs}")
     man = _read_manifest(spark, path, v)
-    dirs = [
-        f"{path}/t={owner}/b={k}" for k, owner in sorted(man["buckets"].items())
-    ]
-    if not dirs:
+    if not man["buckets"]:
         if man.get("schema"):
             # fully-emptied table: an empty frame with the REAL schema
             # (recorded at write time), so downstream column selects
@@ -1075,7 +1072,22 @@ def read_table_bucketed(
             )
         # legacy manifest without a recorded schema
         return spark.range(0).select(F.lit(None).alias(man["id_col"]))
-    return spark.read.parquet(*dirs)
+    return _read_buckets(spark, path, man, sorted(man["buckets"]))
+
+
+def _read_buckets(
+    spark: SparkSession, path: str, man: dict, keys: list
+) -> DataFrame:
+    """Read the bucket dirs ``keys`` as manifest ``man`` maps them. The
+    manifest's recorded read schema is handed to the reader, so no
+    footer inference runs; a legacy manifest without one infers it."""
+    dirs = [f"{path}/t={man['buckets'][str(k)]}/b={k}" for k in keys]
+    reader = spark.read
+    if man.get("schema"):
+        from pyspark.sql.types import StructType
+
+        reader = reader.schema(StructType.fromJson(man["schema"]))
+    return reader.parquet(*dirs)
 
 
 def _bucketed_head(spark: SparkSession, path: str, id_col: str):
@@ -1126,13 +1138,9 @@ def merge_upsert_bucketed(
         )
         if not touched:
             return
-        old_dirs = [
-            f"{path}/t={man['buckets'][str(k)]}/b={k}"
-            for k in touched
-            if str(k) in man["buckets"]
-        ]
-        if old_dirs:
-            existing = spark.read.parquet(*old_dirs)
+        held = [k for k in touched if str(k) in man["buckets"]]
+        if held:
+            existing = _read_buckets(spark, path, man, held)
             # _pre_deduped: upd already collapsed above — merge_upsert's
             # own dedup window (a second full shuffle+sort of the batch)
             # can never remove a row here
@@ -1270,10 +1278,7 @@ def delete_ids_bucketed(
         )
         if not touched:
             return
-        old_dirs = [
-            f"{path}/t={man['buckets'][str(k)]}/b={k}" for k in touched
-        ]
-        existing = spark.read.parquet(*old_dirs)
+        existing = _read_buckets(spark, path, man, touched)
         # no broadcast hint: the doomed-id set is caller-sized, not
         # bounded — an explicit hint bypasses the autoBroadcast
         # threshold and a corpus-scale delete would die on the

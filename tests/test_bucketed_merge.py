@@ -88,6 +88,67 @@ def test_roundtrip_and_schema(spark, tdir):
     assert bad == 0
 
 
+def test_bucket_reads_take_the_manifest_schema(spark, tdir, monkeypatch):
+    """Reads and the touched-bucket reads of merges and deletes hand the
+    manifest's recorded schema to the reader (no footer inference) and
+    return the same rows and schema as an inferring read; a legacy
+    manifest without a schema still infers."""
+    from pyspark.sql import DataFrameReader
+    from pyspark.sql.types import StructType
+
+    T.write_table_bucketed(spark, tdir, _base(spark), n_buckets=4)
+    recorded = StructType.fromJson(
+        T._read_manifest(spark, tdir, T._bucketed_versions(spark, tdir)[-1])[
+            "schema"
+        ]
+    )
+    handed = []
+    orig = DataFrameReader.schema
+
+    def spy(self, schema):
+        handed.append(schema)
+        return orig(self, schema)
+
+    def inferred():
+        man = T._read_manifest(
+            spark, tdir, T._bucketed_versions(spark, tdir)[-1]
+        )
+        return spark.read.parquet(
+            *[f"{tdir}/t={v}/b={k}" for k, v in sorted(man["buckets"].items())]
+        )
+
+    def same_as_inferred(df):
+        want = inferred()
+        assert df.schema == want.schema
+        assert sorted(df.collect()) == sorted(want.collect())
+        return {r["id"]: r["text"] for r in df.collect()}
+
+    monkeypatch.setattr(DataFrameReader, "schema", spy)
+    rows = same_as_inferred(T.read_table_bucketed(spark, tdir))
+    assert rows == {i: f"text-{i}" for i in range(200)}
+    upd = spark.createDataFrame(
+        [(i, f"new-{i}", None) for i in (3, 7, 250)],
+        "id long, text string, score double",
+    )
+    T.merge_upsert_bucketed(spark, tdir, upd)
+    T.delete_ids_bucketed(
+        spark, tdir, spark.createDataFrame([(5,), (7,)], "id long")
+    )
+    rows = same_as_inferred(T.read_table_bucketed(spark, tdir))
+    want = {i: f"text-{i}" for i in range(200) if i not in (5, 7)}
+    assert rows == {**want, 3: "new-3", 250: "new-250"}
+    # read, merge's bucket read, delete's bucket read, read
+    assert handed == [recorded] * 4
+
+    v = T._bucketed_versions(spark, tdir)[-1]
+    man = T._read_manifest(spark, tdir, v)
+    del man["schema"]
+    T._write_control(spark, f"{tdir}/t={v}/{T._MANIFEST}", man)
+    handed.clear()
+    assert same_as_inferred(T.read_table_bucketed(spark, tdir)) == rows
+    assert handed == []
+
+
 def test_merge_semantics_match_merge_upsert(spark, tdir):
     df = _base(spark)
     T.write_table_bucketed(spark, tdir, df, n_buckets=8)

@@ -59,9 +59,9 @@ def test_delete_does_not_resurrect_text_tombstone(db, docs, spark):
     # still tombstoned: the cascade used to republish with a real
     # text_col, making the EMPTY index servable again
     assert st.get("text_col") is None
-    assert db._payload_tree_plan(
+    assert db._gate(
         {"must": [{"type": "match", "field": "text", "text": "vector"}]}
-    ) is None
+    ).tree is None
     terms, lengths = db._warm_terms()
     # session tokenize, not the tomb
     assert terms.count() > 0 and lengths is not None

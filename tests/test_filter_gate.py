@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from grape_vector_db_spark import db as db_module
 from grape_vector_db_spark.db import GrapeVectorDB
+from grape_vector_db_spark.operators import filters
 from grape_vector_db_spark.plans import planner
 
 EQ_EN = {"type": "equals", "field": "lang", "value": "en"}
@@ -169,13 +170,13 @@ def test_partition_hybrid_plans_the_tree_once(fresh_db, emb, monkeypatch):
     db.build_index("payload", columns=["lang"])
     db.build_index("partition", column="lang")
     calls = []
-    tree_plan = db._payload_tree_plan
+    tree_plan = filters.payload_probe_tree
 
     def spy(f):
         calls.append(f)
         return tree_plan(f)
 
-    monkeypatch.setattr(db, "_payload_tree_plan", spy)
+    monkeypatch.setattr(filters, "payload_probe_tree", spy)
     got = db.hybrid_search("vector merge", qv, limit=10, filter=flt)
     assert len(calls) == 1
     assert "index_partition" in _plan(got)

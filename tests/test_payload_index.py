@@ -17,7 +17,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from grape_vector_db_spark.db import GrapeVectorDB
-from grape_vector_db_spark.operators.filters import conjunctive_equalities
+from grape_vector_db_spark.operators.filters import (
+    Leaf,
+    Node,
+    payload_probe_tree,
+)
 
 FLT_EN = {"must": [{"type": "equals", "field": "lang", "value": "en"}]}
 FLT_EN_SRC = {
@@ -53,48 +57,55 @@ def _sidecar_selectivity(db, flt) -> float:
     return gate.selectivity
 
 
-class TestConjunctiveEqualities:
-    def test_extracts_single_and_multi(self):
-        assert conjunctive_equalities(FLT_EN) == [("lang", "en")]
-        assert conjunctive_equalities(FLT_EN_SRC) == [
-            ("lang", "en"),
-            ("source", "src13"),
-        ]
-
-    def test_rejects_everything_else(self):
-        assert conjunctive_equalities({}) is None
-        assert conjunctive_equalities({"must": []}) is None
-        assert (
-            conjunctive_equalities(
-                {"must": [{"type": "range", "field": "n_chars", "gte": 1}]}
-            )
-            is None
-        )
-        mixed = {
-            "must": [
-                {"type": "equals", "field": "lang", "value": "en"},
-                {"type": "range", "field": "n_chars", "gte": 1},
-            ]
-        }
-        assert conjunctive_equalities(mixed) is None
-        assert (
-            conjunctive_equalities(
-                {**FLT_EN, "should": [{"type": "equals", "field": "a", "value": 1}]}
-            )
-            is None
-        )
-        assert (
-            conjunctive_equalities(
-                {**FLT_EN, "must_not": [{"type": "equals", "field": "a", "value": 1}]}
-            )
-            is None
-        )
+class TestPayloadProbeTree:
+    def test_rejects_empty_trees_and_null_values(self):
+        assert payload_probe_tree({}) is None
+        assert payload_probe_tree({"must": []}) is None
         # null value: the general predicate path owns null semantics
         assert (
-            conjunctive_equalities(
+            payload_probe_tree(
                 {"must": [{"type": "equals", "field": "lang", "value": None}]}
             )
             is None
+        )
+
+    def test_negation_normal_form(self):
+        en, src = FLT_EN_SRC["must"]
+        lte = {"type": "range", "field": "n_chars", "lte": 150}
+        assert payload_probe_tree(FLT_EN_SRC) == Node(
+            "and",
+            (
+                Leaf("lang", "en", "equals", False),
+                Leaf("source", "src13", "equals", False),
+            ),
+        )
+        # a must_not leaf comes out negated
+        assert payload_probe_tree({"must_not": [en]}) == Node(
+            "and", (Leaf("lang", "en", "equals", True),)
+        )
+        # a negated nested tree is De-Morganed down to its leaves:
+        # NOT(en AND (lte OR src13) AND NOT en)
+        #   = NOT en OR (NOT lte AND NOT src13) OR en
+        sub = {"must": [en], "should": [lte, src], "must_not": [en]}
+        rng = {"gte": None, "lte": 150}
+        assert payload_probe_tree({"must_not": [sub]}) == Node(
+            "and",
+            (
+                Node(
+                    "or",
+                    (
+                        Leaf("lang", "en", "equals", True),
+                        Node(
+                            "and",
+                            (
+                                Leaf("n_chars", rng, "range", True),
+                                Leaf("source", "src13", "equals", True),
+                            ),
+                        ),
+                        Leaf("lang", "en", "equals", False),
+                    ),
+                ),
+            ),
         )
 
 
@@ -623,7 +634,7 @@ class TestPayloadTreeAlgebra:
             adb.build_index("payload", columns=["tags"])
             flt = {"must_not": [
                 {"type": "array_contains", "field": "tags", "value": "en"}]}
-            assert adb._payload_tree_plan(flt) is None
+            assert adb._gate(flt).tree is None
         finally:
             shutil.rmtree(d, ignore_errors=True)
 
@@ -728,13 +739,13 @@ class TestInExistsPostings:
     def test_must_not_exists_keeps_general_route(self, ndb, emb):
         ndb.build_index("payload", columns=["lang2"])
         flt = {"must_not": [{"type": "exists", "field": "lang2"}]}
-        assert ndb._payload_tree_plan(flt) is None
+        assert ndb._gate(flt).tree is None
 
     def test_in_type_mismatch_unservable(self, db):
         db.build_index("payload", columns=["lang"])
         flt = {"must": [
             {"type": "in", "field": "lang", "values": ["en", 7]}]}
-        assert db._payload_tree_plan(flt) is None
+        assert db._gate(flt).tree is None
 
     def test_in_selectivity_sums_disjoint_fractions(self, db, docs):
         db.build_index("payload", columns=["lang"])
@@ -918,7 +929,7 @@ class TestRangePostings:
 
         monkeypatch.setattr(db, "_table_stats", patched)
         flt = {"must": [{"type": "range", "field": "n_chars", "gte": 100}]}
-        assert db._payload_tree_plan(flt) is None
+        assert db._gate(flt).tree is None
 
 
 class TestTypedLiterals:
@@ -975,7 +986,7 @@ class TestTypedLiterals:
         db.build_index("payload", columns=["n_chars"])
         flt = {"must": [
             {"type": "equals", "field": "n_chars", "value": 128.5}]}
-        assert db._payload_tree_plan(flt) is None
+        assert db._gate(flt).tree is None
 
     def test_integral_float_literal_on_int_column_routes(self, db, emb):
         """128.0 against BIGINT behaves as 128 on both routes."""
@@ -984,11 +995,9 @@ class TestTypedLiterals:
             {"type": "equals", "field": "n_chars", "value": 128.0}]}
         flt_i = {"must": [
             {"type": "equals", "field": "n_chars", "value": 128}]}
-        assert db._payload_tree_plan(flt_f) is not None
-        a = {r["vec_id"] for r in db._payload_tree_ids(
-            db._payload_tree_plan(flt_f)).collect()}
-        b = {r["vec_id"] for r in db._payload_tree_ids(
-            db._payload_tree_plan(flt_i)).collect()}
+        assert db._gate(flt_f).tree is not None
+        a = {r["vec_id"] for r in db._gate(flt_f).ids.collect()}
+        b = {r["vec_id"] for r in db._gate(flt_i).ids.collect()}
         want = {r["doc_id"] for r in db.documents()
                 .where("n_chars = 128").collect()}
         assert a == b == want
@@ -996,7 +1005,7 @@ class TestTypedLiterals:
     def test_numeric_literal_on_string_column_unservable(self, db):
         db.build_index("payload", columns=["lang"])
         flt = {"must": [{"type": "equals", "field": "lang", "value": 7}]}
-        assert db._payload_tree_plan(flt) is None
+        assert db._gate(flt).tree is None
 
     def test_sidecar_records_types_and_minmax(self, ddb):
         ddb.build_index("payload", columns=["price", "lang"])
@@ -1176,4 +1185,4 @@ def test_legacy_sidecar_without_array_fields_still_routes(db, emb):
     qv = list(emb.where(F.col("vec_id") == 3).head()["embedding"])
     plan = _plan(db.search(vector=qv, limit=10, filter=FLT_EN))
     assert "documents" not in plan  # scalar equality still posting-served
-    assert db._payload_tree_plan(FLT_EN) is not None
+    assert db._gate(FLT_EN).tree is not None

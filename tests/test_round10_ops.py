@@ -124,7 +124,7 @@ class TestMatchLeaves:
             {"must": [{"type": "match", "field": "lang", "text": "en"}]},
             {"must": [{"type": "match", "field": "text", "text": "the of and"}]},
         ):
-            assert db._payload_tree_plan(flt) is None, flt
+            assert db._gate(flt).tree is None, flt
             plan = _plan(db.search(vector=qv, limit=5, filter=flt))
             assert "documents" in plan, flt
 
@@ -146,7 +146,7 @@ class TestMatchLeaves:
         ]
         db.build_index("payload", columns=["lang"])
         db.build_index("text")
-        assert db._payload_tree_plan(flt) is not None
+        assert db._gate(flt).tree is not None
         after = [
             (r["vec_id"], r["score"])
             for r in db.search(vector=qv, limit=10, filter=flt).collect()
@@ -160,7 +160,7 @@ class TestMatchLeaves:
 
     def test_no_text_index_means_no_match_route(self, db):
         flt = {"must": [{"type": "match", "field": "text", "text": "vector"}]}
-        assert db._payload_tree_plan(flt) is None
+        assert db._gate(flt).tree is None
 
     def test_match_zero_pre_search_jobs(self, db, emb):
         db.build_index("payload", columns=["lang"])
@@ -233,7 +233,7 @@ class TestMatchLeaves:
             flt = {
                 "must": [{"type": "match", "field": "text", "text": "vector"}]
             }
-            assert fresh._payload_tree_plan(flt) is not None
+            assert fresh._gate(flt).tree is not None
         finally:
             shutil.rmtree(bdir, ignore_errors=True)
             shutil.rmtree(ddir, ignore_errors=True)
@@ -418,11 +418,11 @@ class TestCachedEndpoints:
 
 def test_facet_and_count_compose_with_match_filters(db, docs):
     """facet/count over a match-filtered tree ride the same posting
-    algebra — free composition from the shared _payload_tree_plan."""
+    algebra — free composition from the shared filter gate."""
     db.build_index("payload", columns=["source"])
     db.build_index("text")
     flt = {"must": [{"type": "match", "field": "text", "text": "vector"}]}
-    assert db._payload_tree_plan(flt) is not None
+    assert db._gate(flt).tree is not None
     got = {
         (r["value"], r["count"])
         for r in db.facet("source", filter=flt, limit=100).collect()

@@ -19,7 +19,7 @@
    itself unknown: min(1, sum) must not launder the 2.0 sentinel into a
    confident 1.0 that sorts the expensive unknown union ahead of other
    unknowns.
-6. _payload_tree_plan reads the documents schema at most ONCE per call
+6. Planning a filter gate's tree reads the documents schema at most ONCE
    (was: one schema read per match leaf on the hot planning path).
 """
 
@@ -32,7 +32,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from grape_vector_db_spark.db import GrapeVectorDB
-from grape_vector_db_spark.operators import filters, sparse
+from grape_vector_db_spark.operators import filters, payload, sparse
 
 FLT_EN = {"must": [{"type": "equals", "field": "lang", "value": "en"}]}
 
@@ -121,18 +121,18 @@ class TestHybridGatePlannedOnce:
     ):
         db.build_index("payload", columns=["lang"])
         counts = {"ids": 0, "est": 0}
-        orig_ids = db._payload_tree_ids
+        orig_ids = payload.tree_ids
         orig_est = db._estimate_selectivity
 
-        def spy_ids(tree):
+        def spy_ids(*args, **kwargs):
             counts["ids"] += 1
-            return orig_ids(tree)
+            return orig_ids(*args, **kwargs)
 
         def spy_est(col):
             counts["est"] += 1
             return orig_est(col)
 
-        monkeypatch.setattr(db, "_payload_tree_ids", spy_ids)
+        monkeypatch.setattr(payload, "tree_ids", spy_ids)
         monkeypatch.setattr(db, "_estimate_selectivity", spy_est)
         out = db.hybrid_search(
             "vector merge", _qv(emb), limit=5, filter=FLT_EN
@@ -216,7 +216,7 @@ class TestTextIndexTombstone:
     def test_match_falls_back_to_predicate_path(self, db, docs, spark, emb):
         self._drop_then_restore(db, docs, spark)
         # unservable -> predicate path (correct, full-corpus answer)
-        assert db._payload_tree_plan(self.MATCH) is None
+        assert db._gate(self.MATCH).tree is None
         got = {
             r["vec_id"]
             for r in db.search(
@@ -237,7 +237,7 @@ class TestTextIndexTombstone:
         self._drop_then_restore(db, docs, spark)
         db.build_index("text")
         assert db._read("index_terms").count() > 0
-        assert db._payload_tree_plan(self.MATCH) is not None
+        assert db._gate(self.MATCH).tree is not None
         st = db._table_stats("index_terms")
         assert st.get("text_col") == "text"
 
@@ -273,9 +273,9 @@ class TestShouldGroupUnknownEstimate:
                  "fuzzy": True},
             ],
         }
-        tree = db._payload_tree_plan(flt)
-        assert tree is not None
-        db._payload_tree_ids(tree)
+        gate = db._gate(flt)
+        assert gate.tree is not None
+        gate.ids
         assert order == ["vektor", "mergee"]
 
 
@@ -304,5 +304,5 @@ class TestTreePlanSchemaReads:
                 },
             ]
         }
-        assert db._payload_tree_plan(flt) is not None
+        assert db._gate(flt).tree is not None
         assert n["docs"] == 1

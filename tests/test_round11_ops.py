@@ -120,7 +120,7 @@ class TestNestedTrees:
             for r in db.search(vector=qv, limit=10, filter=NESTED).collect()
         ]
         self._indexed(db)
-        assert db._payload_tree_plan(NESTED) is not None
+        assert db._gate(NESTED).tree is not None
         after = [
             (r["vec_id"], r["score"])
             for r in db.search(vector=qv, limit=10, filter=NESTED).collect()
@@ -143,9 +143,9 @@ class TestNestedTrees:
         }
         want = _pred_ids(db, flt)
         self._indexed(db)
-        tree = db._payload_tree_plan(flt)
-        assert tree is not None
-        got = {r["vec_id"] for r in db._payload_tree_ids(tree).collect()}
+        gate = db._gate(flt)
+        assert gate.tree is not None
+        got = {r["vec_id"] for r in gate.ids.collect()}
         assert got == want and got
 
     def test_deep_nesting_and_double_negation(self, db):
@@ -164,15 +164,15 @@ class TestNestedTrees:
         }
         want = _pred_ids(db, flt)
         self._indexed(db)
-        tree = db._payload_tree_plan(flt)
-        assert tree is not None
-        got = {r["vec_id"] for r in db._payload_tree_ids(tree).collect()}
+        gate = db._gate(flt)
+        assert gate.tree is not None
+        got = {r["vec_id"] for r in gate.ids.collect()}
         assert got == want and got
 
     def test_single_level_negated_exists_still_falls_back(self, db):
         self._indexed(db)
         flt = {"must_not": [{"type": "exists", "field": "n_chars"}]}
-        assert db._payload_tree_plan(flt) is None
+        assert db._gate(flt).tree is None
 
     def test_unservable_nested_leaf_rejects_whole_tree(self, db):
         self._indexed(db)
@@ -187,7 +187,7 @@ class TestNestedTrees:
                 }
             ]
         }
-        assert db._payload_tree_plan(flt) is None
+        assert db._gate(flt).tree is None
 
     def test_nested_zero_pre_search_jobs(self, db, emb):
         self._indexed(db)
@@ -225,8 +225,8 @@ class TestProbeOrdering:
 
     def test_rare_probe_is_innermost_regardless_of_written_order(self, db):
         db.build_index("payload", columns=["lang", "source"])
-        env = db._frac_env()
-        lh, sh = env["hist"]["lang"], env["hist"]["source"]
+        hist = db._table_stats("index_payload")["histograms"]
+        lh, sh = hist["lang"], hist["source"]
         common = max(lh, key=lambda k: int(lh[k]))
         rare = min(sh, key=lambda k: int(sh[k]))
         assert int(sh[rare]) < int(lh[common])
@@ -239,12 +239,12 @@ class TestProbeOrdering:
                 {"type": "equals", "field": "source", "value": rare},
             ]
         }
-        tree = db._payload_tree_plan(flt)
-        plan = _plan(db._payload_tree_ids(tree))
+        gate = db._gate(flt)
+        plan = _plan(gate.ids)
         assert plan.find(f"value,{rare}") < plan.find(f"value,{common}")
         # and the result is the same id set as the predicate path
         assert {
-            r["vec_id"] for r in db._payload_tree_ids(tree).collect()
+            r["vec_id"] for r in gate.ids.collect()
         } == _pred_ids(db, flt)
 
 
@@ -365,7 +365,7 @@ class TestMatchCaseSensitive:
         db.build_index("text")
         flt = {"must": [{"type": "match", "field": "text",
                          "text": "Vector", "case_sensitive": True}]}
-        assert db._payload_tree_plan(flt) is None
+        assert db._gate(flt).tree is None
         with pytest.raises(ValueError, match="case-insensitive"):
             db.search(vector=_qv(emb), limit=5, filter=flt)
 
@@ -390,9 +390,9 @@ class TestFuzzyMatch:
         }
         want = _pred_ids(db, flt)
         db.build_index("text")
-        tree = db._payload_tree_plan(flt)
-        assert tree is not None
-        got = {r["vec_id"] for r in db._payload_tree_ids(tree).collect()}
+        gate = db._gate(flt)
+        assert gate.tree is not None
+        got = {r["vec_id"] for r in gate.ids.collect()}
         assert got == want and got
         # the typo'd token matched MORE than the exact term alone
         exact = _pred_ids(
@@ -415,9 +415,8 @@ class TestFuzzyMatch:
                  "fuzzy": 2}
             ]
         }
-        t1, t2 = db._payload_tree_plan(one), db._payload_tree_plan(two)
-        ids1 = {r["vec_id"] for r in db._payload_tree_ids(t1).collect()}
-        ids2 = {r["vec_id"] for r in db._payload_tree_ids(t2).collect()}
+        ids1 = {r["vec_id"] for r in db._gate(one).ids.collect()}
+        ids2 = {r["vec_id"] for r in db._gate(two).ids.collect()}
         assert ids1 <= ids2
         assert ids2 == _pred_ids(db, two)
 
@@ -433,9 +432,9 @@ class TestFuzzyMatch:
         }
         assert _pred_ids(db, flt) == set()
         db.build_index("text")
-        tree = db._payload_tree_plan(flt)
-        assert tree is not None
-        assert db._payload_tree_ids(tree).collect() == []
+        gate = db._gate(flt)
+        assert gate.tree is not None
+        assert gate.ids.collect() == []
 
     def test_negated_fuzzy_is_complement(self, db):
         flt = {
@@ -448,9 +447,9 @@ class TestFuzzyMatch:
         want = _pred_ids(db, flt)
         db.build_index("payload", columns=["lang"])
         db.build_index("text")
-        tree = db._payload_tree_plan(flt)
-        assert tree is not None
-        got = {r["vec_id"] for r in db._payload_tree_ids(tree).collect()}
+        gate = db._gate(flt)
+        assert gate.tree is not None
+        got = {r["vec_id"] for r in gate.ids.collect()}
         assert got == want and got
 
 
@@ -521,7 +520,7 @@ class TestAutoPlannerGraphPreference:
 
 class TestNestedTreeComposition:
     """Nested trees and fuzzy leaves compose for free with every
-    endpoint riding the shared _payload_tree_plan/_payload_tree_ids —
+    endpoint riding the shared filter gate's tree and ids —
     facet, count, scroll, and hybrid's three-leg gate."""
 
     def _indexed(self, db):
@@ -530,7 +529,7 @@ class TestNestedTreeComposition:
 
     def test_facet_and_count_with_nested_tree(self, db, docs):
         self._indexed(db)
-        assert db._payload_tree_plan(NESTED) is not None
+        assert db._gate(NESTED).tree is not None
         want_ids = _pred_ids(db, NESTED)
         assert db.count(filter=NESTED) == len(want_ids)
         got = {
@@ -601,4 +600,4 @@ class TestTextIndexColumnDrop:
         flt = {"must": [{"type": "match", "field": "text", "text": "vector"}]}
         # the tree is no longer servable -> the filter errors on the
         # unresolvable column exactly like the predicate path
-        assert db._payload_tree_plan(flt) is None
+        assert db._gate(flt).tree is None
