@@ -285,14 +285,14 @@ class GrapeVectorDB:
 
     # -- versioned table layout ---------------------------------------------
     #
-    # Mutating writes publish a NEW directory {table}/t={N+1} through the
-    # one commit of sources.tables (_commit, shared with streaming ingest):
-    # staged data and _STATS.json, a CAS claim of t={N+1}, and the marker
-    # (_SUCCESS, or a bucket-manifest table's manifest) as the commit
-    # point. A mid-swap reader sees the old or the new version with its
-    # stats, never a partial one; a merge reads t=N while writing t=N+1,
-    # one write per upsert. Writers that read the same t=N race to one
-    # winner: the loser's _publish / _merge / _overwrite / _swap raises
+    # Mutating writes, db.stream's micro-batches included, publish a NEW
+    # directory {table}/t={N+1} through the one commit of sources.tables
+    # (_commit): staged data and _STATS.json, a CAS claim of t={N+1}, and
+    # the marker (_SUCCESS, or a bucket-manifest table's manifest) as the
+    # commit point. A mid-swap reader sees the old or the new version with
+    # its stats, never a partial one; a merge reads t=N while writing
+    # t=N+1, one write per upsert. Writers that read the same t=N race to
+    # one winner: the loser's _publish / _merge / _overwrite / _swap raises
     # ConcurrentMergeError instead of dropping the winner's update
     # (bucket-manifest merges retry it; plain tables surface it).
 
@@ -618,6 +618,49 @@ class GrapeVectorDB:
             self._reindex(
                 docs.withColumnRenamed(self.id_col, "vec_id"), embeddings
             )
+
+    def stream(
+        self,
+        stream_df: DataFrame,
+        checkpoint: str | None = None,
+        trigger_once: bool = True,
+    ):
+        """Structured Streaming ingest: every micro-batch of ``stream_df``
+        is one :meth:`add_documents` call, so the documents, embeddings
+        and every existing index move together per batch (the reference
+        maintains its indexes per insert, src/lib.rs:317-356). A row is a
+        document plus, in ``vec_col``, its vector: the batch without
+        ``vec_col`` is the documents, its rows with a non-null vector the
+        embeddings (keyed ``vec_id``); a null vector updates the document
+        only. The batch is materialized once, so both halves read one
+        evaluation of the source.
+
+        Batches apply on a separate instance built with this one's
+        arguments: the stream thread never shares this instance's
+        request-scoped memo or caches, and its commits reach this
+        instance as another process's do (every cache is keyed by the
+        committed version). A replayed batch is an upsert of the same
+        rows. ``checkpoint`` and ``trigger_once`` are those of
+        ``streaming.ingest._start``. Returns the StreamingQuery."""
+        from .streaming.ingest import _start
+
+        sink = GrapeVectorDB(
+            self.spark, self.base, self.id_col, self.text_col, self.vec_col,
+            self.dimension,
+        )
+        vec = self.vec_col
+
+        def _apply(batch: DataFrame, batch_id: int) -> None:
+            with materialized(batch) as batch:
+                vectors = None
+                if vec in batch.columns:
+                    vectors = batch.where(F.col(vec).isNotNull()).select(
+                        F.col(self.id_col).alias("vec_id"), vec
+                    )
+                    batch = batch.drop(vec)
+                sink.add_documents(batch, vectors)
+
+        return _start(stream_df, _apply, checkpoint, trigger_once)
 
     def _reindex(
         self,
@@ -1162,8 +1205,7 @@ class GrapeVectorDB:
         self, postings: DataFrame, cols: list[str]
     ) -> None:
         """Versioned publish of the posting table + its sidecar stats
-        (operators.payload owns the layout and the BOUNDED histogram —
-        shared with the streaming twin).
+        (operators.payload owns the layout and the BOUNDED histogram).
 
         Evaluate-once contract: the laid-out ``postings`` (on refresh and
         delete, ``kept ∪ fresh`` over the stored index) is materialized
@@ -1216,7 +1258,7 @@ class GrapeVectorDB:
         can have (the min recorded df, or 0 when the vocabulary fits) —
         so match selectivity is exact for head terms and a sound upper
         bound for the tail, with zero query-time jobs. Layout + sidecar
-        are operators.sparse helpers — shared with the streaming twin.
+        are operators.sparse helpers.
         Like the payload publish, the laid-out term table is materialized
         once and both the sidecar aggregate and the write read it."""
         with materialized(sparse.text_index_layout(terms)) as terms:

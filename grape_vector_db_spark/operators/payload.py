@@ -1,6 +1,6 @@
-"""Payload posting index building blocks — shared by the facade
-(``GrapeVectorDB.build_index('payload')``) and the streaming twin
-(``streaming.ingest.stream_payload_index_to_parquet``).
+"""Payload posting index building blocks for the facade's posting index
+(``GrapeVectorDB.build_index('payload')`` and its maintenance on every
+write, streamed ones included).
 
 The reference evaluates payload conditions by scanning the store row by
 row (ref:src/filtering.rs:439-488); a per-field keyword index — the
@@ -166,7 +166,7 @@ def payload_layout(postings: DataFrame) -> DataFrame:
 def payload_sidecar_stats(
     postings: DataFrame,
     cols: list[str],
-    doc_rows: int | None,
+    doc_rows: int,
     hist_max: int = HIST_MAX,
     arr_fields: list[str] | None = None,
     f_types: dict[str, str] | None = None,
@@ -177,13 +177,8 @@ def payload_sidecar_stats(
     jobs over the narrow posting table at build/refresh time — never at
     query time (the planner reads the sidecar driver-side).
 
-    ``doc_rows=None`` derives the count from the SAME per-field
-    aggregate pass via a rollup grand-total (distinct posting-bearing
-    ids — no extra full-index job; the streaming twin's rule, mirroring
-    the text index's ADVICE-r10 fix). The facade build passes the
-    documents row count instead, which additionally counts docs whose
-    indexed fields are all null — both sound for the selectivity
-    fractions that divide by it."""
+    ``doc_rows`` is the documents row count, so it also counts docs
+    whose indexed fields are all null."""
     has_num = "value_num" in postings.columns
     aggs = [F.countDistinct("value").alias("nd")]
     if has_num:
@@ -191,21 +186,7 @@ def payload_sidecar_stats(
             F.min("value_num").alias("vmin"),
             F.max("value_num").alias("vmax"),
         ]
-    if doc_rows is None:
-        # rollup: per-field rows + ONE grand-total row whose distinct-id
-        # count is doc_rows ("field" holds column names, never null, so
-        # the null-field row is unambiguously the total)
-        rows = (
-            postings.rollup("field")
-            .agg(*aggs, F.countDistinct("vec_id").alias("nid"))
-            .collect()
-        )
-        doc_rows = next(
-            (int(r["nid"]) for r in rows if r["field"] is None), 0
-        )
-        per_field_rows = [r for r in rows if r["field"] is not None]
-    else:
-        per_field_rows = postings.groupBy("field").agg(*aggs).collect()
+    per_field_rows = postings.groupBy("field").agg(*aggs).collect()
     per_field = {r["field"]: int(r["nd"]) for r in per_field_rows}
     minmax = {}
     if has_num:

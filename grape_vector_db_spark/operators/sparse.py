@@ -50,52 +50,34 @@ def text_index_layout(terms: DataFrame) -> DataFrame:
     + term-sorted within, so a term equality probe touches one
     partition's few row groups (the term lands in parquet row-group
     min/max stats). Shared by ``db.build_index('text')`` and the
-    streaming twin."""
+    index's maintenance on every facade write."""
     return terms.repartitionByRange("term").sortWithinPartitions("term")
 
 
 def text_index_sidecar_stats(
     terms: DataFrame,
     col: str,
-    doc_rows: int | None = None,
+    doc_rows: int,
     hist_max: int = 64,
     id_col: str = "vec_id",
 ) -> dict:
     """The text index's _STATS sidecar: the indexed column (match-leaf
     routing validates the leaf's field against it), the corpus row
-    count, and a BOUNDED document-frequency histogram — the top
-    ``hist_max`` terms' exact df plus ``df_cap``, the highest df any
+    count ``doc_rows``, and a BOUNDED document-frequency histogram — the
+    top ``hist_max`` terms' exact df plus ``df_cap``, the highest df any
     UNRECORDED term can have (the min recorded df, or 0 when the
     vocabulary fits) — funding exact head-term match selectivity and a
     sound upper bound for the tail, with zero query-time jobs. One
-    vocabulary-sized aggregate at build/refresh time.
-
-    ``doc_rows=None`` derives the count from the SAME rollup aggregate
-    that builds the histogram (the grand-total grouping set counts
-    distinct ids — no extra full-index job; ADVICE r10): it counts the
-    docs IN the index, i.e. docs with >= 1 kept token. The facade build
-    passes the documents row count instead, which additionally counts
-    zero-token docs — a streamed-grown sidecar's doc_rows can therefore
-    sit slightly BELOW a batch-built one over the same corpus (the
-    selectivity estimates divide by n, so the streamed estimate is the
-    slightly larger, still-sound fraction)."""
+    vocabulary-sized aggregate at build/refresh time."""
     rows = (
-        terms.rollup("term")
+        terms.groupBy("term")
         .agg(F.countDistinct(id_col).alias("df"))
-        .orderBy(
-            F.col("term").isNotNull().asc(),
-            F.col("df").desc(),
-            F.col("term").asc(),
-        )
-        .limit(hist_max + 2)
+        .orderBy(F.col("df").desc(), F.col("term").asc())
+        .limit(hist_max + 1)
         .collect()
     )
-    total = next((r for r in rows if r["term"] is None), None)
-    df_rows = [r for r in rows if r["term"] is not None]
-    top = df_rows[:hist_max]
-    df_cap = int(top[-1]["df"]) if len(df_rows) > hist_max else 0
-    if doc_rows is None:
-        doc_rows = int(total["df"]) if total is not None else 0
+    top = rows[:hist_max]
+    df_cap = int(top[-1]["df"]) if len(rows) > hist_max else 0
     return {
         "text_col": col,
         "doc_rows": int(doc_rows),

@@ -107,8 +107,8 @@ def _dedup_updates(updates: DataFrame, id_col: str) -> DataFrame:
     remaining columns' struct order): a batch carrying the same id twice
     must not survive the merge as a duplicated id forever — and Delta's
     native MERGE would THROW on multiple matched source rows, so both
-    formats pre-collapse the same way. The streaming index twins collapse
-    micro-batches by this rule too, so index rows derive from exactly the
+    formats pre-collapse the same way. The facade collapses each write
+    batch by this rule once, so its index rows derive from exactly the
     row the merge keeps (not doubled term tf, not two IVF cells)."""
     from pyspark.sql import Window
 
@@ -813,8 +813,8 @@ def materialized(df: DataFrame):
     read only part of a lazy cache (a limit(1) probe), and the cut
     lineage keeps every consumer's plan a plain scan of the stored rows.
     The write paths' one materialization mechanism: the facade's upsert
-    batches and doomed id sets, and the posting tables whose sidecar
-    stats and write both read the same rows (facade and streaming)."""
+    batches, stream micro-batches and doomed id sets, and the posting
+    tables whose sidecar stats and write both read the same rows."""
     cp = df.localCheckpoint(eager=True)
     try:
         yield cp

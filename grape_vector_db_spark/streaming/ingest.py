@@ -2,25 +2,30 @@
 
 The reference has no streaming layer; its ingestion is request-at-a-time
 upsert with an immediate full index rebuild (src/lib.rs:317-356 —
-O(corpus) per insert!). The Spark-native replacement:
+O(corpus) per insert!). The Spark-native replacement streams into the
+facade: ``GrapeVectorDB.stream`` starts a foreachBatch sink (``_start``
+below) whose every micro-batch is one ``add_documents`` call, so the
+documents, the embeddings and every index move together per batch,
+through the same merge, index maintenance and commit as a batch upsert.
 
-- ``stream_upsert``: readStream (file/rate/kafka source) -> foreachBatch
-  MERGE into the documents table + incremental derived-table refresh. Each
-  micro-batch is one bounded DataFrame job; index tables (terms/stats/
-  packed/IVF assignments) refresh per batch instead of per row.
-- ``windowed_event_counts``: event-time tumbling windows with a watermark
-  for late data — the streaming analogue of the batch events rollup.
+This module holds the stream operators that are their own capability:
 
-At scale the MERGE target should be a transactional table format
-(Delta/Iceberg); on plain parquet each micro-batch publishes a new table
-version through sources.tables.publish_table. Its commit point is the
-version's _SUCCESS marker, written after the staged data and _STATS.json
-have been claimed into place: a crash mid-batch leaves readers on the
-previous version (with its stats), and the replayed batch publishes
-normally. foreachBatch runs one micro-batch at a time, so a stream never
-races itself; a second writer on the same table races to a single
-winner, and the loser's batch fails with ConcurrentMergeError (nothing
-published) for the restarted query to replay from its checkpoint.
+- ``stream_upsert_to_parquet``: foreachBatch MERGE of a micro-batch
+  into one table (parquet versioned swap, or ``fmt="delta"``);
+- curation, dedup and admission-gated ingest, which clean or gate a
+  micro-batch before it merges;
+- standing HyperLogLog, Bloom and Count-Min sketch tables;
+- ``windowed_event_counts`` / ``anomaly_alert_stream``: event-time
+  windows with a watermark for late data, and a z-score gate.
+
+On plain parquet each micro-batch publishes new table versions through
+sources.tables.publish_table, whose commit point is written after the
+staged data and _STATS.json: a crash mid-batch leaves readers on the
+previous version, and the replayed batch publishes normally. foreachBatch
+runs one micro-batch at a time, so a stream never races itself; a second
+writer on the same table races to a single winner, and the loser's batch
+fails with ConcurrentMergeError (nothing published) for the restarted
+query to replay from its checkpoint.
 """
 
 from __future__ import annotations
@@ -30,7 +35,6 @@ from pyspark.sql import functions as F
 
 from ..sources.tables import (
     _dedup_updates,
-    materialized,
     merge_upsert,
     publish_table,
     read_table,
@@ -66,392 +70,6 @@ def stream_upsert_to_parquet(
 
     def _merge(batch: DataFrame, batch_id: int) -> None:
         upsert_table(spark, table_path, batch, id_col=id_col, fmt=fmt)
-
-    return _start(stream_df, _merge, checkpoint, trigger_once)
-
-
-def stream_upsert_with_index(
-    stream_df: DataFrame,
-    table_path: str,
-    terms_path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    checkpoint: str | None = None,
-    trigger_once: bool = True,
-):
-    """foreachBatch MERGE + **incremental inverted-index refresh** — the
-    streaming analogue of the reference's insert-time index maintenance
-    (src/sparse.rs:71-90), but per micro-batch instead of per row (the
-    reference rebuilds its HNSW for EVERY insert, src/index.rs:164-209 —
-    batch refresh is strictly better).
-
-    Per batch: (1) merge rows into the documents table; (2) retokenize
-    ONLY the batch's documents; (3) replace their rows in doc_terms. Both
-    writes are snapshot swaps on plain parquet; on Delta/Iceberg they
-    become MERGE/DELETE+APPEND with real transactions.
-    """
-    from ..functions.text import doc_terms as build_doc_terms
-
-    spark = stream_df.sparkSession
-
-    def _merge(batch: DataFrame, batch_id: int) -> None:
-        batch = batch.persist()
-        try:
-            # 1) documents table
-            upsert_table(spark, table_path, batch, id_col=id_col)
-            # 2) incremental doc_terms: drop the batch ids' rows, append
-            # fresh rows built from the MERGED table, not the raw batch —
-            # the raw batch may carry duplicate ids (whose extra texts
-            # merge_upsert collapses) or null-text metadata updates
-            # (whose stored text merge_upsert preserves); indexing the
-            # batch text would desynchronize the index from the corpus.
-            # Same existence-probe rule as upsert_table: only a
-            # genuinely absent index table may fall back; FS errors
-            # propagate and the micro-batch retries.
-            ids = batch.select(F.col(id_col).alias("doc_id")).distinct()
-            tbl = read_table(spark, table_path)
-            merged_rows = tbl.join(
-                F.broadcast(ids), tbl[id_col] == ids["doc_id"], "left_semi"
-            )
-            fresh = build_doc_terms(merged_rows, id_col=id_col, text_col=text_col)
-            if table_exists(spark, terms_path):
-                terms = read_table(spark, terms_path)
-                kept = terms.join(F.broadcast(ids), "doc_id", "left_anti")
-                updated = kept.unionByName(fresh)
-            else:  # first batch — no index table yet
-                updated = fresh
-            publish_table(spark, terms_path, updated)
-        finally:
-            batch.unpersist()
-
-    return _start(stream_df, _merge, checkpoint, trigger_once)
-
-
-def stream_ann_index_to_parquet(
-    stream_df: DataFrame,
-    cents_path: str,
-    assigned_path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    checkpoint: str | None = None,
-    trigger_once: bool = True,
-    replicas: int = 1,
-):
-    """foreachBatch incremental ANN index maintenance — the streaming
-    analogue of the reference's insert-time vector-index update (its
-    HNSW re-adds per insert, ref:src/index.rs:164-209, O(corpus) work
-    per row; per-micro-batch ivf_add is strictly better). Per batch:
-
-    1. load the FROZEN trained centroids (KBs; retraining stays an
-       offline ``rebuild_index``, ref:src/query.rs:257-269);
-    2. assign the batch's vectors with :func:`ann.ivf_add` — one narrow
-       Arrow pass, no retrain, no shuffle;
-    3. upsert-publish the assignment table: re-inserted ids' old
-       posting rows drop first (ivf_remove), so a vector UPDATE moves
-       its posting between cells instead of duplicating it.
-
-    Assignment over frozen centroids is deterministic, so an index grown
-    by ANY partitioning of the corpus into micro-batches is
-    row-identical to a bulk assignment with the same centroids (the
-    pytest pins stream-grown == bulk-assigned). At 100 TB, store the
-    assignment table partitioned by cluster behind a bucket manifest so
-    each batch's publish rewrites only the touched cells."""
-    from ..operators.ann import ivf_add, ivf_remove
-
-    spark = stream_df.sparkSession
-
-    def _merge(batch: DataFrame, batch_id: int) -> None:
-        batch = _dedup_updates(batch, id_col)
-        cents = read_table(spark, cents_path)
-        fresh = ivf_add(
-            batch, cents, id_col=id_col, vec_col=vec_col, replicas=replicas
-        )
-        if table_exists(spark, assigned_path):
-            old = read_table(spark, assigned_path)
-            kept = ivf_remove(
-                old, batch.select(F.col(id_col).alias("id")).distinct()
-            )
-            updated = kept.unionByName(fresh)
-        else:  # first batch — no assignment table yet
-            updated = fresh
-        publish_table(spark, assigned_path, updated)
-
-    return _start(stream_df, _merge, checkpoint, trigger_once)
-
-
-def stream_graph_index_to_parquet(
-    stream_df: DataFrame,
-    emb_path: str,
-    edges_path: str,
-    k: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    checkpoint: str | None = None,
-    trigger_once: bool = True,
-):
-    """foreachBatch incremental kNN-GRAPH maintenance — the graph twin of
-    :func:`stream_ann_index_to_parquet` (the reference's HNSW rebuilds
-    per insert, ref:src/index.rs:164-209). Per micro-batch:
-
-    1. merge the batch's vectors into the embeddings table (versioned
-       upsert — the corpus the graph must describe);
-    2. grow the edge table with :func:`ann.knn_graph_add` — ONE corpus
-       scan vs the broadcast batch; EXACT for insert-only streams
-       (a node's post-insert kNN ⊆ old kNN ∪ batch), so a graph grown
-       by ANY micro-batch cut equals the bulk build over the final
-       corpus (pinned in pytest);
-    3. publish the grown edges (atomic versioned swap — a beam search
-       running mid-refresh walks the old or new graph, never partial).
-
-    First batch bootstraps with a full :func:`ann.knn_graph` build.
-    Update/delete streams must route through a rebuild instead — the
-    same retrain-trigger contract as ``ivf_drift``."""
-    from ..operators.ann import knn_graph, knn_graph_add
-
-    spark = stream_df.sparkSession
-
-    def _merge(batch: DataFrame, batch_id: int) -> None:
-        upsert_table(spark, emb_path, batch, id_col=id_col)
-        merged = read_table(spark, emb_path)
-        if table_exists(spark, edges_path):
-            edges = read_table(spark, edges_path)
-            grown = knn_graph_add(
-                # distinct: an at-least-once duplicate id in the batch
-                # must grow the node's edges once, not once per copy
-                edges, merged, batch.select(id_col).distinct(), k,
-                id_col=id_col, vec_col=vec_col,
-            )
-        else:  # first batch — bootstrap the graph
-            grown = knn_graph(merged, k=k, id_col=id_col, vec_col=vec_col)
-        # max_rank stat = the graph's out-degree: the facade's planner
-        # reads it at query time instead of scanning the edge table
-        publish_table(
-            spark, edges_path, grown,
-            stats_exprs={"max_rank": "max(rank)"},
-        )
-
-    return _start(stream_df, _merge, checkpoint, trigger_once)
-
-
-def stream_partition_layout_to_parquet(
-    stream_df: DataFrame,
-    docs_path: str,
-    layout_path: str,
-    column: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    doc_id_col: str = "doc_id",
-    checkpoint: str | None = None,
-    trigger_once: bool = True,
-):
-    """foreachBatch maintenance of the tenant/partition-pruned layout —
-    the streaming twin of ``db.build_index('partition')``'s refresh. Per
-    micro-batch of embedding rows:
-
-    1. resolve each row's partition value from the documents table (the
-       metadata column lives there, and the docs micro-batch has already
-       merged by the time embeddings stream in — the facade's
-       add_documents ordering);
-    2. swap the batch ids' rows in the layout (anti-join + fresh rows,
-       so a re-streamed id MOVES directory when its value changed);
-    3. publish partitioned by the column with the column name in the
-       _STATS sidecar — the same artifact ``db.search`` prunes on.
-
-    A layout grown by ANY micro-batch cut is row-identical to the bulk
-    build over the final corpus (assignment is a deterministic join;
-    pinned in pytest). At 100 TB each publish rewrites only the layout
-    table, never the corpus; batches are O(batch) joins against the
-    docs table's id index.
-
-    Out-of-order arrivals (an embedding whose document row has NOT
-    merged yet) are never dropped (ADVICE r8): the resolve join is a
-    LEFT join, so unresolved rows park under the column's NULL partition
-    (Hive default-partition directory — equality-pruned reads skip it
-    exactly as the predicate path would skip an unknown label), every
-    later batch RETRIES them against the then-current documents table,
-    and the publish records ``unresolved_rows`` observed on the write
-    job itself so the gap is visible in stats, not silent."""
-    spark = stream_df.sparkSession
-
-    def _merge(batch: DataFrame, batch_id: int) -> None:
-        batch = _dedup_updates(batch, id_col)
-        docs = read_table(spark, docs_path)
-        to_resolve = batch.select(id_col, vec_col)
-        kept = None
-        if table_exists(spark, layout_path):
-            ids = batch.select(id_col).distinct()
-            layout = read_table(spark, layout_path)
-            # previously-unresolved rows re-enter the resolve attempt
-            # (unless this batch supersedes the id with a fresh vector)
-            pending = (
-                layout.where(F.col(column).isNull())
-                .select(id_col, vec_col)
-                .join(F.broadcast(ids), id_col, "left_anti")
-            )
-            to_resolve = to_resolve.unionByName(pending)
-            kept = layout.where(F.col(column).isNotNull()).join(
-                F.broadcast(ids), id_col, "left_anti"
-            )
-        fresh = to_resolve.join(
-            docs.select(F.col(doc_id_col).alias(id_col), F.col(column)),
-            id_col,
-            "left",
-        ).select(id_col, vec_col, column)
-        updated = fresh if kept is None else kept.unionByName(fresh)
-        publish_table(
-            spark, layout_path, updated, partition_by=[column],
-            stats_exprs={"unresolved_rows": f"count_if({column} is null)"},
-            extra_stats={"partition_column": column},
-        )
-
-    return _start(stream_df, _merge, checkpoint, trigger_once)
-
-
-def stream_payload_index_to_parquet(
-    stream_df: DataFrame,
-    index_path: str,
-    columns: list[str],
-    id_col: str = "doc_id",
-    checkpoint: str | None = None,
-    trigger_once: bool = True,
-):
-    """foreachBatch maintenance of the payload posting index — the
-    streaming twin of ``db.build_index('payload')``'s refresh. The
-    stream carries DOCUMENT rows (postings derive from metadata, not
-    vectors). Per micro-batch:
-
-    1. derive the batch rows' (field, value, vec_id) postings
-       (operators.payload — same derivation as the facade build);
-    2. swap the batch ids' posting rows (anti-join + fresh, so a
-       re-streamed id whose value changed MOVES to the new value's
-       postings);
-    3. publish field-partitioned with the histogram sidecar refreshed —
-       the same artifact ``db.search`` intersects and the planner reads.
-
-    An index grown by ANY micro-batch cut is row-identical to the bulk
-    build over the final corpus (derivation is a deterministic
-    projection; pinned in pytest). Batches are O(batch) scans; the
-    publish rewrites only the narrow posting table, never the corpus.
-
-    ``doc_rows`` in the sidecar counts the POSTING-BEARING ids grown so
-    far (distinct ids in the index) — the streaming context has no
-    documents table to count; for single-valued indexed fields this
-    equals the corpus rows the facade records.
-
-    The sidecar's ``array_fields`` / ``field_types`` derive from the
-    BATCH schema (identical to the stream schema, so identical every
-    batch) unioned with the prior sidecar's record — without them a
-    streamed index over array columns recorded array_fields=[], so the
-    facade mis-routed 'equals' on those columns to per-element postings
-    and rejected legitimate array_contains probes (ADVICE r8)."""
-    from ..operators.payload import (
-        array_fields,
-        field_types,
-        payload_layout,
-        payload_postings,
-        payload_sidecar_stats,
-        with_value_num,
-    )
-    from ..sources.tables import read_table_stats
-
-    spark = stream_df.sparkSession
-
-    def _merge(batch: DataFrame, batch_id: int) -> None:
-        batch = _dedup_updates(batch, id_col)
-        fresh = payload_postings(batch, list(columns), id_col=id_col)
-        arr = set(array_fields(batch, list(columns)))
-        f_types = field_types(batch, list(columns))
-        if table_exists(spark, index_path):
-            prior = read_table_stats(spark, index_path) or {}
-            arr |= set(prior.get("array_fields") or [])
-            f_types = {**(prior.get("field_types") or {}), **f_types}
-            ids = batch.select(F.col(id_col).alias("vec_id")).distinct()
-            kept = read_table(spark, index_path).join(
-                F.broadcast(ids), "vec_id", "left_anti"
-            )
-            updated = with_value_num(kept).unionByName(fresh)
-        else:  # first batch — no index yet
-            updated = fresh
-        # one evaluation feeds the sidecar aggregates and the publish
-        # write; doc_rows derives from the sidecar's own rollup aggregate
-        # (doc_rows=None) instead of a separate full-index
-        # distinct().count() job per micro-batch (the ADVICE-r10 rule
-        # the text twin already follows)
-        with materialized(payload_layout(updated)) as updated:
-            publish_table(
-                spark, index_path, updated, partition_by=["field"],
-                extra_stats=payload_sidecar_stats(
-                    updated, list(columns), None,
-                    arr_fields=sorted(arr), f_types=f_types,
-                ),
-            )
-
-    return _start(stream_df, _merge, checkpoint, trigger_once)
-
-
-def stream_text_index_to_parquet(
-    stream_df: DataFrame,
-    index_path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    checkpoint: str | None = None,
-    trigger_once: bool = True,
-):
-    """foreachBatch maintenance of the text inverted index — the
-    streaming twin of ``db.build_index('text')``'s refresh (the
-    reference builds its inverted index per insert,
-    ref:src/sparse.rs:71-90). The stream carries DOCUMENT rows. Per
-    micro-batch:
-
-    1. tokenize ONLY the batch into (vec_id, term, tf) rows
-       (functions.text.doc_terms — the same derivation as the facade
-       build, so grown == built row-identically);
-    2. swap the batch ids' term rows (anti-join + fresh — a re-streamed
-       doc whose text changed MOVES to its new tokens);
-    3. publish term-range-partitioned + term-sorted with the bounded
-       df histogram sidecar refreshed — the same artifact the facade's
-       match-leaf routing probes and the selectivity estimate reads.
-
-    ``doc_rows`` counts the distinct ids IN the index — docs with >= 1
-    kept token (the streaming context has no documents table to count —
-    the payload twin's rule; a facade-built sidecar over the same corpus
-    additionally counts zero-token docs, so match selectivity divides by
-    a slightly larger n there — both sound, divergence documented in
-    text_index_sidecar_stats). The count derives from the SAME rollup
-    aggregate that builds the df histogram (ADVICE r10 — the earlier
-    separate distinct().count() was an extra full-index job per
-    micro-batch). Batch work is O(batch) tokenization; the publish
-    rewrites only the narrow index table, never the corpus."""
-    from ..functions.text import doc_terms
-    from ..operators.payload import HIST_MAX
-    from ..operators.sparse import (
-        text_index_layout,
-        text_index_sidecar_stats,
-    )
-
-    spark = stream_df.sparkSession
-
-    def _merge(batch: DataFrame, batch_id: int) -> None:
-        batch = _dedup_updates(batch, id_col)
-        fresh = doc_terms(
-            batch, id_col=id_col, text_col=text_col
-        ).withColumnRenamed("doc_id", "vec_id")
-        if table_exists(spark, index_path):
-            ids = batch.select(F.col(id_col).alias("vec_id")).distinct()
-            kept = read_table(spark, index_path).join(
-                F.broadcast(ids), "vec_id", "left_anti"
-            )
-            updated = kept.unionByName(fresh)
-        else:  # first batch — no index yet
-            updated = fresh
-        # one evaluation feeds the df-histogram collect and the write
-        with materialized(text_index_layout(updated)) as updated:
-            publish_table(
-                spark, index_path, updated,
-                extra_stats=text_index_sidecar_stats(
-                    updated, text_col, None, HIST_MAX
-                ),
-            )
 
     return _start(stream_df, _merge, checkpoint, trigger_once)
 

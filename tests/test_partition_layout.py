@@ -192,118 +192,3 @@ def test_search_plan_and_stats_surface_the_layout(db):
     st = db.stats()
     assert "index_partition" in st["indexes"]
     assert st["partition_column"] == "lang"
-
-
-def test_stream_partition_layout_equals_bulk(spark, docs, emb, tmp_path):
-    """A layout grown by micro-batch cuts must be row-identical to the
-    bulk build over the final corpus, keep the partitioned directory
-    shape, and record the sidecar column."""
-    from grape_vector_db_spark.sources.tables import (
-        publish_table,
-        read_table,
-        read_table_stats,
-    )
-    from grape_vector_db_spark.streaming.ingest import (
-        stream_partition_layout_to_parquet,
-    )
-
-    tmpdir = str(tmp_path)
-    base = emb.where(F.col("vec_id") < 240)
-    docs_path = f"{tmpdir}/docs"
-    publish_table(spark, docs_path, docs)
-    src = f"{tmpdir}/incoming"
-    layout = f"{tmpdir}/layout"
-    for lo, hi in ((0, 80), (80, 170), (170, 240)):
-        base.where(
-            (F.col("vec_id") >= lo) & (F.col("vec_id") < hi)
-        ).write.mode("append").parquet(src)
-        q = stream_partition_layout_to_parquet(
-            spark.readStream.schema(base.schema).parquet(src),
-            docs_path, layout, column="lang", checkpoint=f"{tmpdir}/ck",
-        )
-        q.awaitTermination(120)
-
-    grown = read_table(spark, layout)
-    bulk = base.select("vec_id", "embedding").join(
-        docs.select(F.col("doc_id").alias("vec_id"), "lang"), "vec_id"
-    )
-    assert grown.count() == bulk.count()
-    assert (
-        grown.select("vec_id", "lang")
-        .exceptAll(bulk.select("vec_id", "lang"))
-        .count()
-        == 0
-    )
-    st = read_table_stats(spark, layout)
-    assert st and st["partition_column"] == "lang"
-    assert st["unresolved_rows"] == 0
-    # pruning works on the streamed artifact
-    plan = _plan(grown.where(F.col("lang") == "en"))
-    assert "PartitionFilters" in plan
-
-
-def test_stream_partition_layout_out_of_order_never_drops(
-    spark, docs, emb, tmp_path
-):
-    """ADVICE r8: an embedding arriving BEFORE its document row must not
-    silently vanish from the layout — it parks under the NULL partition
-    (counted in the sidecar's unresolved_rows, observed on the write
-    job), and the next batch re-resolves it once the document lands."""
-    from grape_vector_db_spark.sources.tables import (
-        publish_table,
-        read_table,
-        read_table_stats,
-    )
-    from grape_vector_db_spark.streaming.ingest import (
-        stream_partition_layout_to_parquet,
-    )
-
-    tmpdir = str(tmp_path)
-    base = emb.where(F.col("vec_id") < 60)
-    docs_path = f"{tmpdir}/docs"
-    # docs table initially MISSING ids 40..59 — those embeddings arrive
-    # out of order
-    publish_table(spark, docs_path, docs.where(F.col("doc_id") < 40))
-    src = f"{tmpdir}/incoming"
-    layout = f"{tmpdir}/layout"
-    base.write.mode("append").parquet(src)
-    q = stream_partition_layout_to_parquet(
-        spark.readStream.schema(base.schema).parquet(src),
-        docs_path, layout, column="lang", checkpoint=f"{tmpdir}/ck",
-    )
-    q.awaitTermination(120)
-    st = read_table_stats(spark, layout)
-    assert st["unresolved_rows"] == 20  # parked, not dropped
-    grown = read_table(spark, layout)
-    assert grown.count() == 60
-    assert grown.where(F.col("lang").isNull()).count() == 20
-    # equality-pruned reads skip the parked rows exactly like the
-    # predicate path would (their label is unknown either way)
-    assert (
-        grown.where(F.col("lang") == "en").where(
-            F.col("vec_id") >= 40
-        ).count()
-        == 0
-    )
-    # the documents catch up; ANY later batch re-resolves the parked rows
-    publish_table(spark, docs_path, docs)
-    late = emb.where((F.col("vec_id") >= 60) & (F.col("vec_id") < 70))
-    late.write.mode("append").parquet(src)
-    q = stream_partition_layout_to_parquet(
-        spark.readStream.schema(base.schema).parquet(src),
-        docs_path, layout, column="lang", checkpoint=f"{tmpdir}/ck",
-    )
-    q.awaitTermination(120)
-    st = read_table_stats(spark, layout)
-    assert st["unresolved_rows"] == 0
-    grown = read_table(spark, layout)
-    bulk = emb.where(F.col("vec_id") < 70).select(
-        "vec_id", "embedding"
-    ).join(docs.select(F.col("doc_id").alias("vec_id"), "lang"), "vec_id")
-    assert grown.count() == bulk.count() == 70
-    assert (
-        grown.select("vec_id", "lang")
-        .exceptAll(bulk.select("vec_id", "lang"))
-        .count()
-        == 0
-    )

@@ -347,120 +347,6 @@ class TestLifecycle:
             db.build_index("payload", columns=["doc_id"])
 
 
-def test_stream_payload_index_equals_bulk(spark, docs, tmp_path):
-    """A posting index grown by micro-batch cuts must be row-identical
-    to the bulk derivation over the final corpus, keep the
-    field-partitioned shape, and carry a truthful histogram sidecar."""
-    from grape_vector_db_spark.operators.payload import payload_postings
-    from grape_vector_db_spark.sources.tables import (
-        read_table,
-        read_table_stats,
-    )
-    from grape_vector_db_spark.streaming.ingest import (
-        stream_payload_index_to_parquet,
-    )
-
-    tmpdir = str(tmp_path)
-    base = docs.where(F.col("doc_id") < 240)
-    src = f"{tmpdir}/incoming"
-    idx = f"{tmpdir}/payload"
-    for lo, hi in ((0, 80), (80, 170), (170, 240)):
-        base.where(
-            (F.col("doc_id") >= lo) & (F.col("doc_id") < hi)
-        ).write.mode("append").parquet(src)
-        q = stream_payload_index_to_parquet(
-            spark.readStream.schema(base.schema).parquet(src),
-            idx, columns=["lang", "source"], checkpoint=f"{tmpdir}/ck",
-        )
-        q.awaitTermination(120)
-
-    cols = ["field", "value", "vec_id"]
-    grown = read_table(spark, idx).select(*cols)
-    bulk = payload_postings(base, ["lang", "source"]).select(*cols)
-    assert grown.count() == bulk.count()
-    assert grown.exceptAll(bulk).count() == 0
-    st = read_table_stats(spark, idx)
-    assert st["payload_columns"] == ["lang", "source"]
-    want_en = base.where("lang = 'en'").count()
-    assert st["histograms"]["lang"]["en"] == want_en
-    assert st["doc_rows"] == base.count()
-    # pruning works on the streamed artifact
-    plan = grown.where(F.col("field") == "lang")._jdf.queryExecution() \
-        .executedPlan().toString()
-    assert "PartitionFilters" in plan
-
-
-def test_stream_payload_value_move_swaps_posting(spark, docs, tmp_path):
-    """Re-streaming an id with a changed value must MOVE its posting
-    (the anti-join swap), not duplicate it."""
-    from grape_vector_db_spark.sources.tables import read_table
-    from grape_vector_db_spark.streaming.ingest import (
-        stream_payload_index_to_parquet,
-    )
-
-    tmpdir = str(tmp_path)
-    src = f"{tmpdir}/incoming"
-    idx = f"{tmpdir}/payload"
-    first = docs.where(F.col("doc_id") < 20)
-    first.write.mode("append").parquet(src)
-    q = stream_payload_index_to_parquet(
-        spark.readStream.schema(first.schema).parquet(src),
-        idx, columns=["lang"], checkpoint=f"{tmpdir}/ck",
-    )
-    q.awaitTermination(120)
-    moved = first.limit(1).withColumn("lang", F.lit("zz"))
-    vid = moved.head()["doc_id"]
-    moved.write.mode("append").parquet(src)
-    q = stream_payload_index_to_parquet(
-        spark.readStream.schema(first.schema).parquet(src),
-        idx, columns=["lang"], checkpoint=f"{tmpdir}/ck",
-    )
-    q.awaitTermination(120)
-    rows = read_table(spark, idx).where(F.col("vec_id") == vid).collect()
-    assert len(rows) == 1 and rows[0]["value"] == "zz"
-
-
-def test_stream_payload_sidecar_records_types_and_array_fields(
-    spark, docs, tmp_path
-):
-    """ADVICE r8: a STREAMED index over array columns must record
-    array_fields/field_types like the bulk build — without them the
-    facade mis-routes 'equals' on array columns to per-element postings
-    and rejects legitimate array_contains probes."""
-    from grape_vector_db_spark.sources.tables import read_table_stats
-    from grape_vector_db_spark.streaming.ingest import (
-        stream_payload_index_to_parquet,
-    )
-
-    tmpdir = str(tmp_path)
-    src = f"{tmpdir}/incoming"
-    idx = f"{tmpdir}/payload"
-    tagged = docs.where(F.col("doc_id") < 40).withColumn(
-        "tags", F.array(F.col("lang"), F.col("source"))
-    )
-    for lo, hi in ((0, 20), (20, 40)):
-        tagged.where(
-            (F.col("doc_id") >= lo) & (F.col("doc_id") < hi)
-        ).write.mode("append").parquet(src)
-        q = stream_payload_index_to_parquet(
-            spark.readStream.schema(tagged.schema).parquet(src),
-            idx, columns=["tags", "lang", "n_chars"],
-            checkpoint=f"{tmpdir}/ck",
-        )
-        q.awaitTermination(120)
-    st = read_table_stats(spark, idx)
-    assert st["array_fields"] == ["tags"]
-    assert st["field_types"]["tags"] == "array<string>"
-    assert st["field_types"]["lang"] == "string"
-    assert st["field_types"]["n_chars"] == "bigint"
-    # numeric min/max recorded for the numeric field (range servability)
-    lo_, hi_ = st["numeric_minmax"]["n_chars"]
-    want = tagged.agg(
-        F.min("n_chars").alias("lo"), F.max("n_chars").alias("hi")
-    ).head()
-    assert lo_ == float(want["lo"]) and hi_ == float(want["hi"])
-
-
 def test_registry_payload_query_plan(spark):
     """payload_posting_knn must read posting directories (partition
     pruning on field), never the documents parquet, and keep the

@@ -462,58 +462,6 @@ def test_warm_terms_promotes_to_persisted_index(db):
     assert db.hybrid_search("vector index", qv, limit=5).count() > 0
 
 
-def test_stream_text_index_equals_bulk(spark, docs, tmp_path):
-    """A text inverted index grown by micro-batch cuts must be
-    row-identical to the bulk derivation over the final corpus and carry
-    a truthful df-histogram sidecar — and a re-streamed doc whose text
-    changed MOVES to its new tokens (the anti-join swap)."""
-    from grape_vector_db_spark.functions.text import doc_terms
-    from grape_vector_db_spark.sources.tables import (
-        read_table,
-        read_table_stats,
-    )
-    from grape_vector_db_spark.streaming.ingest import (
-        stream_text_index_to_parquet,
-    )
-
-    tmpdir = str(tmp_path)
-    base = docs.where(F.col("doc_id") < 120)
-    src = f"{tmpdir}/incoming"
-    idx = f"{tmpdir}/terms"
-    for lo, hi in ((0, 50), (50, 120)):
-        base.where(
-            (F.col("doc_id") >= lo) & (F.col("doc_id") < hi)
-        ).write.mode("append").parquet(src)
-        q = stream_text_index_to_parquet(
-            spark.readStream.schema(base.schema).parquet(src),
-            idx, checkpoint=f"{tmpdir}/ck",
-        )
-        q.awaitTermination(120)
-    grown = read_table(spark, idx)
-    bulk = doc_terms(base).withColumnRenamed("doc_id", "vec_id")
-    assert grown.count() == bulk.count()
-    assert grown.exceptAll(bulk).count() == 0
-    st = read_table_stats(spark, idx)
-    assert st["text_col"] == "text" and st["doc_rows"] == base.count()
-    if st["df_top"]:
-        term, df = next(iter(st["df_top"].items()))
-        want = bulk.where(F.col("term") == term).count()
-        assert df == want
-    # re-stream one doc with new text: its rows MOVE
-    vid = int(base.head()["doc_id"])
-    moved = base.where(F.col("doc_id") == vid).withColumn(
-        "text", F.lit("xylophone zebra corpus")
-    )
-    moved.write.mode("append").parquet(src)
-    q = stream_text_index_to_parquet(
-        spark.readStream.schema(base.schema).parquet(src),
-        idx, checkpoint=f"{tmpdir}/ck",
-    )
-    q.awaitTermination(120)
-    rows = read_table(spark, idx).where(F.col("vec_id") == vid).collect()
-    assert sorted(r["term"] for r in rows) == ["corpus", "xylophone", "zebra"]
-
-
 def test_search_groups_with_documents_hydrates(db, emb):
     qv = _qv(emb)
     bare = db.search_groups(qv, "lang", limit=3, group_size=2).collect()

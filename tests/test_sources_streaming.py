@@ -171,95 +171,6 @@ def test_stream_upsert(spark, tmpdir):
     assert out == {1: "v1", 2: "v2", 3: "v1"}
 
 
-def test_stream_upsert_with_index(spark, tmpdir):
-    from grape_vector_db_spark.streaming.ingest import stream_upsert_with_index
-
-    src = f"{tmpdir}/incoming"
-    table = f"{tmpdir}/docs_table"
-    terms = f"{tmpdir}/terms_table"
-    spark.createDataFrame(
-        [(1, "alpha beta gamma"), (2, "delta epsilon zeta")],
-        "doc_id int, text string",
-    ).write.parquet(src)
-    q = stream_upsert_with_index(
-        spark.readStream.schema("doc_id int, text string").parquet(src),
-        table, terms, checkpoint=f"{tmpdir}/ck",
-    )
-    q.awaitTermination(60)
-    t1 = {(r["doc_id"], r["term"]) for r in read_table(spark, terms).collect()}
-    assert (1, "alpha") in t1 and (2, "delta") in t1
-
-    # update doc 2's text -> its old terms vanish, new appear; doc 1 intact
-    spark.createDataFrame([(2, "omega only")], "doc_id int, text string").write.mode(
-        "append"
-    ).parquet(src)
-    q = stream_upsert_with_index(
-        spark.readStream.schema("doc_id int, text string").parquet(src),
-        table, terms, checkpoint=f"{tmpdir}/ck",
-    )
-    q.awaitTermination(60)
-    t2 = {(r["doc_id"], r["term"]) for r in read_table(spark, terms).collect()}
-    assert (2, "omega") in t2 and (2, "delta") not in t2
-    assert (1, "alpha") in t2
-    docs = {r["doc_id"]: r["text"] for r in read_table(spark, table).collect()}
-    assert docs[2] == "omega only" and docs[1] == "alpha beta gamma"
-
-
-def test_stream_ann_index_maintenance(spark, emb, tmpdir):
-    """Streaming IVF maintenance: an index grown by micro-batches over
-    frozen centroids must be row-identical to the bulk assignment, and a
-    re-inserted (updated) vector must MOVE its posting row, not
-    duplicate it."""
-    from pyspark.sql import functions as F
-
-    from grape_vector_db_spark.operators import ann
-    from grape_vector_db_spark.streaming.ingest import (
-        stream_ann_index_to_parquet,
-    )
-
-    base = emb.where(F.col("vec_id") < 300)
-    cents, bulk = ann.ivf_build(base, nlist=4, max_iter=3)
-    cents_path = f"{tmpdir}/cents"
-    cents.write.parquet(cents_path)
-
-    src = f"{tmpdir}/incoming"
-    assigned = f"{tmpdir}/assigned"
-    # two micro-batches covering the same 300 vectors
-    base.where(F.col("vec_id") < 150).write.parquet(src)
-    q = stream_ann_index_to_parquet(
-        spark.readStream.schema(base.schema).parquet(src),
-        cents_path, assigned, checkpoint=f"{tmpdir}/ck",
-    )
-    q.awaitTermination(120)
-    base.where(F.col("vec_id") >= 150).write.mode("append").parquet(src)
-    q = stream_ann_index_to_parquet(
-        spark.readStream.schema(base.schema).parquet(src),
-        cents_path, assigned, checkpoint=f"{tmpdir}/ck",
-    )
-    q.awaitTermination(120)
-
-    grown = read_table(spark, assigned)
-    assert grown.count() == bulk.count()
-    assert grown.exceptAll(bulk).count() == 0
-
-    # update: re-insert vec_id 7 with a DIFFERENT vector -> exactly one
-    # posting row for id 7 afterwards, placed by the new vector
-    moved = emb.where(F.col("vec_id") == 123).select(
-        F.lit(7).cast("long").alias("vec_id"), "embedding"
-    )
-    moved.write.mode("append").parquet(src)
-    q = stream_ann_index_to_parquet(
-        spark.readStream.schema(base.schema).parquet(src),
-        cents_path, assigned, checkpoint=f"{tmpdir}/ck",
-    )
-    q.awaitTermination(120)
-    after = read_table(spark, assigned)
-    assert after.count() == bulk.count()
-    assert after.where(F.col("id") == 7).count() == 1
-    want = ann.ivf_add(moved, cents).first()["cluster"]
-    assert after.where(F.col("id") == 7).first()["cluster"] == want
-
-
 def test_stateful_dedup_stream(spark, tmpdir):
     """Duplicates are dropped across micro-batches via keyed state."""
     from grape_vector_db_spark.streaming.stateful import dedup_stream
@@ -618,40 +529,3 @@ def test_stream_hll_equals_batch_sketch(spark, tmpdir):
     assert standing == direct
     est = sketches.hll_estimate(read_table(spark, tbl), p=8).collect()[0]
     assert abs(est.estimate / 500 - 1) < 0.2
-
-
-def test_stream_graph_index_maintenance(spark, emb, tmpdir):
-    """Streaming kNN-graph maintenance: a graph grown by INSERT
-    micro-batches must equal the bulk build over the final corpus on
-    (src, dst, rank) and 6-dp cosine — the knn_graph_add exactness
-    contract composed across batch cuts."""
-    from pyspark.sql import functions as F
-
-    from grape_vector_db_spark.operators import ann
-    from grape_vector_db_spark.streaming.ingest import (
-        stream_graph_index_to_parquet,
-    )
-
-    base = emb.where(F.col("vec_id") < 240)
-    src = f"{tmpdir}/incoming"
-    emb_path = f"{tmpdir}/emb"
-    edges_path = f"{tmpdir}/edges"
-    # three micro-batch cuts of the same 240 vectors
-    for lo, hi in ((0, 80), (80, 170), (170, 240)):
-        base.where(
-            (F.col("vec_id") >= lo) & (F.col("vec_id") < hi)
-        ).write.mode("append").parquet(src)
-        q = stream_graph_index_to_parquet(
-            spark.readStream.schema(base.schema).parquet(src),
-            emb_path, edges_path, k=4, checkpoint=f"{tmpdir}/ck",
-        )
-        q.awaitTermination(120)
-
-    grown = read_table(spark, edges_path).select(
-        "src", "dst", "rank", F.round("cosine", 6).alias("c")
-    )
-    bulk = ann.knn_graph(base, k=4).select(
-        "src", "dst", "rank", F.round("cosine", 6).alias("c")
-    )
-    assert grown.count() == bulk.count()
-    assert grown.exceptAll(bulk).count() == 0

@@ -7,20 +7,17 @@
 2. admit_merge_batch's batch-internal near-dup gate covers changed-text
    updates, not just newcomers — a changed/newcomer near-pair cut into
    one batch must not both enter.
-3. Index-maintenance twins collapse duplicate ids within a micro-batch
-   with the docs-merge's own rule before deriving index rows (text
-   index tf, IVF assignment, curate rejoin, dedup first batch).
+3. Stream operators collapse duplicate ids within a micro-batch with
+   the docs-merge's own rule before deriving rows (curate rejoin, dedup
+   first batch).
 4. anomaly_alert_stream: a sigma==0 type's IN-BAND event (value == mu)
    must NOT alert (the NULL z disjunct used to poison the OR into an
    alert for every constant-history event).
-5. payload_sidecar_stats(doc_rows=None) derives the id count from the
-   same rollup pass — no separate full-index job.
 """
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from grape_vector_db_spark.sources.tables import read_table
 from grape_vector_db_spark.streaming.ingest import admit_merge_batch
@@ -95,67 +92,6 @@ class TestAdmitChangedTextInternalGate:
 
 
 class TestDuplicateIdBatches:
-    def test_text_index_stream_tf_not_doubled(self, spark, tmpdir):
-        from grape_vector_db_spark.functions.text import doc_terms
-        from grape_vector_db_spark.streaming.ingest import (
-            stream_text_index_to_parquet,
-        )
-
-        src, idx = f"{tmpdir}/tin", f"{tmpdir}/tidx"
-        # the SAME id twice in one micro-batch (at-least-once delivery)
-        spark.createDataFrame(
-            [(3, "vector merge vector query planning"),
-             (3, "vector merge vector query planning"),
-             (4, "another unrelated document body")],
-            "doc_id long, text string",
-        ).write.parquet(src)
-        q = stream_text_index_to_parquet(
-            spark.readStream.schema("doc_id long, text string").parquet(src),
-            idx, checkpoint=f"{tmpdir}/tck",
-        )
-        q.awaitTermination(60)
-        got = {
-            (r["vec_id"], r["term"]): r["tf"]
-            for r in read_table(spark, idx).collect()
-        }
-        want = {
-            (r["doc_id"], r["term"]): r["tf"]
-            for r in doc_terms(
-                spark.createDataFrame(
-                    [(3, "vector merge vector query planning"),
-                     (4, "another unrelated document body")],
-                    "doc_id long, text string",
-                )
-            ).collect()
-        }
-        assert got == want  # cnt used to double while n_tok did not
-
-    def test_ann_stream_duplicate_id_single_posting(self, spark, emb, tmpdir):
-        from grape_vector_db_spark.operators import ann
-        from grape_vector_db_spark.streaming.ingest import (
-            stream_ann_index_to_parquet,
-        )
-
-        base = emb.where(F.col("vec_id") < 50).select("vec_id", "embedding")
-        cents, _ = ann.ivf_build(base, nlist=2, max_iter=2)
-        cents_path = f"{tmpdir}/ac"
-        cents.write.parquet(cents_path)
-        src, assigned = f"{tmpdir}/ain", f"{tmpdir}/aout"
-        # id 7 twice with DIFFERENT vectors in one batch
-        dup = base.where(F.col("vec_id") == 7).unionByName(
-            emb.where(F.col("vec_id") == 123).select(
-                F.lit(7).cast("long").alias("vec_id"), "embedding"
-            )
-        )
-        dup.write.parquet(src)
-        q = stream_ann_index_to_parquet(
-            spark.readStream.schema(dup.schema).parquet(src),
-            cents_path, assigned, checkpoint=f"{tmpdir}/ack",
-        )
-        q.awaitTermination(60)
-        rows = read_table(spark, assigned).where(F.col("id") == 7).collect()
-        assert len(rows) == 1  # one posting, not one per batch copy
-
     def test_curate_stream_duplicate_id_single_row(self, spark, tmpdir):
         from grape_vector_db_spark.streaming.ingest import (
             stream_curate_to_parquet,
@@ -220,20 +156,3 @@ class TestAnomalySigmaZero:
         # the NULL z disjunct used to poison the OR: every sigma==0
         # event alerted, value == mu included (alert storm)
         assert got == {2}
-
-
-class TestPayloadSidecarRollup:
-    def test_doc_rows_none_equals_explicit_count(self, spark, docs):
-        from grape_vector_db_spark.operators.payload import (
-            payload_postings,
-            payload_sidecar_stats,
-        )
-
-        cols = ["lang", "source"]
-        p = payload_postings(docs.limit(200), cols)
-        derived = payload_sidecar_stats(p, cols, None)
-        n = p.select("vec_id").distinct().count()
-        explicit = payload_sidecar_stats(p, cols, n)
-        assert derived["doc_rows"] == n
-        assert derived["histograms"] == explicit["histograms"]
-        assert derived["numeric_minmax"] == explicit["numeric_minmax"]

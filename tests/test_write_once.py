@@ -7,12 +7,12 @@
 3. Everything materialized for a write is released on success and on
    error.
 4. The payload and text sidecars after an upsert and after a delete equal
-   those of a fresh build over the same documents, and those of the
-   streaming twin (its doc_rows=None rollup path).
+   those of a fresh build over the same documents, and those of a store
+   grown to the same documents by db.stream.
 5. A missing _STATS.json is not cached: once it lands, the next read
    sees it.
-6. The streaming payload and text twins run each micro-batch's lineage
-   once for their sidecar stats and their write.
+6. db.stream runs each micro-batch's lineage once, for the documents,
+   the embeddings and every index.
 """
 
 from __future__ import annotations
@@ -183,27 +183,27 @@ def _fresh_sidecars(db, spark, path: str) -> tuple[dict, dict]:
 
 
 def _streamed_sidecars(db, spark, tmp: str) -> tuple[dict, dict]:
-    from grape_vector_db_spark.streaming.ingest import (
-        stream_payload_index_to_parquet,
-        stream_text_index_to_parquet,
+    """The sidecars of a store grown to ``db``'s documents by a stream:
+    40 rows are loaded and indexed, then the stream carries every row
+    (the 40 again, as upserts of the same rows)."""
+    rows = db.documents().join(
+        db.embeddings().withColumnRenamed("vec_id", "doc_id"), "doc_id", "left"
     )
-
-    docs = db.documents()
     src = f"{tmp}/incoming"
-    docs.write.mode("overwrite").parquet(src)
-    for stream, idx, kw in (
-        (stream_payload_index_to_parquet, "payload",
-         {"columns": ["lang", "score", "tags"]}),
-        (stream_text_index_to_parquet, "terms", {}),
-    ):
-        stream(
-            spark.readStream.schema(docs.schema).parquet(src),
-            f"{tmp}/{idx}", checkpoint=f"{tmp}/ck_{idx}", **kw,
-        ).awaitTermination(120)
-    out = (
-        read_table_stats(spark, f"{tmp}/payload"),
-        read_table_stats(spark, f"{tmp}/terms"),
+    rows.write.parquet(src)
+    grown = GrapeVectorDB(spark, f"{tmp}/db")
+    first = rows.where("doc_id < 40")
+    grown.add_documents(
+        first.drop("embedding"),
+        first.select(F.col("doc_id").alias("vec_id"), "embedding"),
     )
+    grown.build_index("payload", columns=["lang", "score", "tags"])
+    grown.build_index("text")
+    grown.stream(
+        spark.readStream.schema(rows.schema).parquet(src),
+        checkpoint=f"{tmp}/ck",
+    ).awaitTermination(120)
+    out = _sidecar(grown, "index_payload"), _sidecar(grown, "index_terms")
     shutil.rmtree(tmp, ignore_errors=True)
     return out
 
@@ -233,15 +233,9 @@ def test_sidecars_match_a_fresh_build(db, spark, tmp_path, write):
     assert _stats_only(pay) == _stats_only(want_pay)
     assert _stats_only(txt) == _stats_only(want_txt)
 
-    # the streaming twin derives doc_rows from its own rollup
-    # (doc_rows=None); every doc here carries postings and tokens, so its
-    # sidecar must agree with the facade's on every statistic
     st_pay, st_txt = _streamed_sidecars(db, spark, str(tmp_path / "stream"))
-    keys = ("payload_columns", "histograms", "wide_hist_fields", "doc_rows",
-            "array_fields", "field_types", "numeric_minmax", "rows")
-    assert {k: st_pay[k] for k in keys} == {k: pay[k] for k in keys}
-    keys = ("text_col", "doc_rows", "df_top", "df_cap", "rows")
-    assert {k: st_txt[k] for k in keys} == {k: txt[k] for k in keys}
+    assert _stats_only(st_pay) == _stats_only(want_pay)
+    assert _stats_only(st_txt) == _stats_only(want_txt)
 
 
 def test_missing_sidecar_is_not_cached(db, spark):
@@ -258,14 +252,8 @@ def test_missing_sidecar_is_not_cached(db, spark):
     assert db._table_stats(table) == want
 
 
-@pytest.mark.parametrize("twin, column", [("payload", "lang"), ("text", "text")])
-def test_streaming_twins_evaluate_each_batch_row_once(spark, tmp_path, twin,
-                                                      column):
-    from grape_vector_db_spark.streaming.ingest import (
-        stream_payload_index_to_parquet,
-        stream_text_index_to_parquet,
-    )
-
+@pytest.mark.parametrize("column", ["lang", "text", "embedding"])
+def test_stream_evaluates_each_batch_row_once(db, spark, tmp_path, column):
     sc = spark.sparkContext
     n = sc.accumulator(0)
 
@@ -273,21 +261,17 @@ def test_streaming_twins_evaluate_each_batch_row_once(spark, tmp_path, twin,
         n.add(1)
         return v
 
-    rows = [_doc(i) for i in range(40)]
+    # 20 updates and 20 new ids, each carrying its vector
+    rows = [(*_doc(i, salt=3), _vec(i, salt=3)[1]) for i in range(140, 180)]
+    schema = f"{DOC_SCHEMA}, embedding array<float>"
     src = str(tmp_path / "incoming")
-    spark.createDataFrame(rows, DOC_SCHEMA).write.parquet(src)
-    stream = spark.readStream.schema(DOC_SCHEMA).parquet(src).withColumn(
-        column, F.udf(tick, "string")(column)
+    spark.createDataFrame(rows, schema).write.parquet(src)
+    dtype = "array<float>" if column == "embedding" else "string"
+    stream = spark.readStream.schema(schema).parquet(src).withColumn(
+        column, F.udf(tick, dtype)(column)
     )
-    if twin == "payload":
-        start = stream_payload_index_to_parquet
-        kw = {"columns": ["lang", "score", "tags"]}
-    else:
-        start = stream_text_index_to_parquet
-        kw = {}
-    start(
-        stream, str(tmp_path / "index"), checkpoint=str(tmp_path / "ck"), **kw
-    ).awaitTermination(120)
-    # one evaluation feeds the sidecar stats and the publish write
+    db.stream(stream, checkpoint=str(tmp_path / "ck")).awaitTermination(120)
+    # one evaluation feeds both merges, every index and its sidecar
     assert n.value == len(rows)
-    assert read_table_stats(spark, str(tmp_path / "index"))["rows"] > 0
+    assert db.documents().where("doc_id >= 140").count() == 40
+    assert db.embeddings().where("vec_id >= 140").count() == 40
