@@ -720,23 +720,25 @@ def read_table_stats(
     fall back to counting. This is the planner's zero-job input: row
     counts, nlist, and graph degree are knowable at write time, so
     ``db.search()`` never pays a corpus-scale count just to pick a
-    route (VERDICT r7 #1)."""
-    vs = table_versions(spark, path)
-    if not vs:
-        return None
-    v = vs[-1] if version is None else version
-    return _read_control(spark, f"{path}/t={v}/{_STATS_FILE}")
+    route (VERDICT r7 #1). An explicit ``version`` is read directly,
+    without listing the table."""
+    if version is None:
+        vs = table_versions(spark, path)
+        if not vs:
+            return None
+        version = vs[-1]
+    return _read_control(spark, f"{path}/t={version}/{_STATS_FILE}")
 
 
 def publish_table(
     spark: SparkSession,
     path: str,
     df: DataFrame,
-    keep: int = 2,
+    keep: int | None = 2,
     partition_by: list[str] | None = None,
     stats_exprs: dict[str, str] | None = None,
     extra_stats: dict | None = None,
-) -> None:
+) -> int:
     """Atomically publish ``df`` as the table's next version (one write,
     committed by :func:`_commit`: single winner among racing writers).
     ``partition_by`` preserves a partitioned layout (e.g. IVF inverted
@@ -748,7 +750,9 @@ def publish_table(
     stats cost zero extra scans even at 100 TB. ``stats_exprs`` adds
     named aggregate SQL expressions (e.g. ``{"max_rank": "max(rank)"}``)
     to the same observation; ``extra_stats`` adds caller-known plain
-    values (e.g. an IVF layout's ``replicas``)."""
+    values (e.g. an IVF layout's ``replicas``). Returns the committed
+    version; ``keep=None`` leaves retention to the caller (the facade's
+    catalog, which knows which versions are still referenced)."""
     if _bucketed_versions(spark, path):
         raise ValueError(
             f"{path} holds a bucket-manifest table; use "
@@ -782,8 +786,9 @@ def publish_table(
 
     _commit(spark, path, nxt, stage, _SUCCESS)
     _reap_abandoned(spark, path, nxt, _SUCCESS)
-    for old in vs[: -(keep - 1)] if keep > 1 else vs:
-        fs.delete(P(f"{path}/t={old}"), True)
+    if keep is not None:
+        for old in vs[: -(keep - 1)] if keep > 1 else vs:
+            fs.delete(P(f"{path}/t={old}"), True)
     if not vs:
         # Migrated a legacy flat table: its root-level DATA files are now
         # shadowed by t=1 — remove them so a raw reader of the table root
@@ -803,6 +808,7 @@ def publish_table(
                 or name.endswith(".crc")
             ):
                 fs.delete(st.getPath(), False)
+    return nxt
 
 
 @contextmanager
@@ -1001,9 +1007,10 @@ def write_table_bucketed(
     df: DataFrame,
     n_buckets: int,
     id_col: str = "id",
-    keep: int = 2,
-) -> None:
-    """Create (or fully replace) a bucket-manifest table from ``df``.
+    keep: int | None = 2,
+) -> int:
+    """Create (or fully replace) a bucket-manifest table from ``df``;
+    returns the committed version.
 
     A path holding a PLAIN versioned table migrates in place: the new
     bucketed version numbers past BOTH layouts' committed versions
@@ -1029,6 +1036,7 @@ def write_table_bucketed(
 
     _commit(spark, path, nxt, stage, _MANIFEST)
     _bucketed_gc(spark, path, keep)
+    return nxt
 
 
 def _bucketed_read_schema(df: DataFrame) -> dict:
@@ -1049,17 +1057,19 @@ def _bucketed_read_schema(df: DataFrame) -> dict:
 def read_table_bucketed(
     spark: SparkSession, path: str, version: int | None = None
 ) -> DataFrame:
-    """Resolve the manifest (newest committed version by default) and read
-    exactly the bucket directories it references — leaf dirs are passed
-    explicitly, so no partition inference runs and the data column
-    ``bucket`` carries placement."""
-    vs = _bucketed_versions(spark, path)
-    if not vs:
-        raise ValueError(f"no committed bucket-manifest table under {path}")
-    v = vs[-1] if version is None else version
-    if v not in vs:
-        raise ValueError(f"version {v} not committed under {path}; available: {vs}")
-    man = _read_manifest(spark, path, v)
+    """Resolve the manifest (newest committed version by default; an
+    explicit ``version`` is read without listing) and read exactly the
+    bucket directories it references — leaf dirs are passed explicitly,
+    so no partition inference runs and the data column ``bucket``
+    carries placement."""
+    if version is None:
+        vs = _bucketed_versions(spark, path)
+        if not vs:
+            raise ValueError(f"no committed bucket-manifest table under {path}")
+        version = vs[-1]
+    man = _read_manifest(spark, path, version)
+    if man is None:
+        raise ValueError(f"version {version} not committed under {path}")
     if not man["buckets"]:
         if man.get("schema"):
             # fully-emptied table: an empty frame with the REAL schema
@@ -1090,22 +1100,27 @@ def _read_buckets(
     return reader.parquet(*dirs)
 
 
-def _bucketed_head(spark: SparkSession, path: str, id_col: str):
-    """``(versions, newest manifest, n_buckets)`` of the bucket-manifest
-    table a merge or delete builds on; raises when there is none or it
-    is bucketed by another column."""
+def _bucketed_head(
+    spark: SparkSession, path: str, id_col: str, version: int | None
+):
+    """``(base manifest, n_buckets, next version)`` of the bucket-manifest
+    table a merge or delete builds on: committed ``version`` (the newest
+    by default); raises when there is none or it is bucketed by another
+    column. The next version is the newest committed one + 1."""
     vs = _bucketed_versions(spark, path)
     if not vs:
         raise ValueError(
             f"no bucket-manifest table under {path}; create with "
             "write_table_bucketed first"
         )
-    man = _read_manifest(spark, path, vs[-1])
+    man = _read_manifest(spark, path, vs[-1] if version is None else version)
+    if man is None:
+        raise ValueError(f"version {version} not committed under {path}")
     if man["id_col"] != id_col:
         raise ValueError(
             f"table under {path} is bucketed by {man['id_col']!r}, not {id_col!r}"
         )
-    return vs, man, int(man["n_buckets"])
+    return man, int(man["n_buckets"]), vs[-1] + 1
 
 
 def merge_upsert_bucketed(
@@ -1113,18 +1128,22 @@ def merge_upsert_bucketed(
     path: str,
     updates: DataFrame,
     id_col: str = "id",
-    keep: int = 2,
-) -> None:
+    keep: int | None = 2,
+    version: int | None = None,
+) -> int:
     """Bucket-scoped MERGE: same row semantics as :func:`merge_upsert`
     (update wins per id, null update fields preserve existing, duplicate
     update ids pre-collapse), but only the buckets whose ids appear in
     ``updates`` are read and rewritten. Cost is O(touched buckets +
     updates), not O(table) — the 100 TB merge shape on plain parquet.
+    The merge builds on manifest ``version`` (the newest by default)
+    and returns the version it committed (``version`` for an empty
+    batch).
 
     Concurrency: SINGLE-WINNER (:func:`_commit`). Of two writers that
     both read manifest t=N exactly one survives; the other raises
     :class:`ConcurrentMergeError` without publishing anything."""
-    vs, man, nb = _bucketed_head(spark, path, id_col)
+    man, nb, nxt = _bucketed_head(spark, path, id_col, version)
     if "bucket" in updates.columns:
         updates = updates.drop("bucket")
     upd = _dedup_updates(updates, id_col).withColumn(
@@ -1137,7 +1156,7 @@ def merge_upsert_bucketed(
             r["bucket"] for r in upd.select("bucket").distinct().collect()
         )
         if not touched:
-            return
+            return version
         held = [k for k in touched if str(k) in man["buckets"]]
         if held:
             existing = _read_buckets(spark, path, man, held)
@@ -1149,13 +1168,13 @@ def merge_upsert_bucketed(
             )
         else:
             merged = upd
-        _cas_commit_touched(
-            spark, path, man, vs, touched, merged.drop("bucket"), id_col,
+        return _cas_commit_touched(
+            spark, path, man, nxt, touched, merged.drop("bucket"), id_col,
             nb, keep,
         )
     finally:
         # without the finally, every ConcurrentMergeError (a DESIGNED
-        # path — the retry wrapper loops on it) leaked one persisted
+        # path — the facade's write loop retries it) leaked one persisted
         # copy of the update batch per attempt
         upd.unpersist()
 
@@ -1164,17 +1183,17 @@ def _cas_commit_touched(
     spark: SparkSession,
     path: str,
     man: dict,
-    vs: list[int],
+    nxt: int,
     touched: list[int],
     rows_df: DataFrame,
     id_col: str,
     nb: int,
-    keep: int,
+    keep: int | None,
     drop_buckets: frozenset[int] = frozenset(),
-) -> None:
+) -> int:
     """The bucket-manifest commit shared by bucketed MERGE and DELETE:
     stage ``rows_df`` (the full new contents of the touched buckets) and
-    commit the re-pointed manifest through :func:`_commit`.
+    commit the re-pointed manifest through :func:`_commit` as ``t={nxt}``.
     ``drop_buckets`` (delete only) are touched buckets a delete EMPTIED —
     they leave the manifest map entirely (their old dirs age out via GC)
     and need not arrive with the claim, since an empty bucket
@@ -1182,7 +1201,6 @@ def _cas_commit_touched(
     row in ``rows_df`` — for MERGE by construction (each touched bucket
     holds an update row), for DELETE because a non-emptied bucket keeps
     its survivors."""
-    nxt = vs[-1] + 1
     materialized = [k for k in touched if k not in drop_buckets]
     buckets = {**man["buckets"], **{str(k): nxt for k in materialized}}
     for k in drop_buckets:
@@ -1202,45 +1220,7 @@ def _cas_commit_touched(
 
     _commit(spark, path, nxt, stage, _MANIFEST)
     _bucketed_gc(spark, path, keep)
-
-
-def merge_upsert_bucketed_retry(
-    spark: SparkSession,
-    path: str,
-    updates: DataFrame,
-    id_col: str = "id",
-    keep: int = 2,
-    attempts: int = 5,
-) -> None:
-    """Retry-absorbing MERGE: re-derive and re-run the merge against the
-    winner's committed snapshot whenever a concurrent writer wins the CAS
-    — the lock-free transaction retry loop the reference gets from sled
-    (ref:src/advanced_storage.rs:177-191), made explicit. Each attempt of
-    :func:`merge_upsert_bucketed` re-reads the NEWEST manifest, so a
-    retried loser merges on top of the winner's rows and both updates
-    land. After ``attempts`` consecutive losses the last
-    :class:`ConcurrentMergeError` surfaces (pathological contention is a
-    caller decision, not an infinite loop)."""
-    return _retry_concurrent(
-        lambda: merge_upsert_bucketed(
-            spark, path, updates, id_col=id_col, keep=keep
-        ),
-        attempts,
-    )
-
-
-def _retry_concurrent(fn, attempts: int):
-    """The shared CAS-loser retry loop behind both retry wrappers: each
-    attempt re-derives against the newest committed snapshot; after
-    ``attempts`` consecutive losses the last
-    :class:`ConcurrentMergeError` surfaces."""
-    last: ConcurrentMergeError | None = None
-    for _ in range(max(1, attempts)):
-        try:
-            return fn()
-        except ConcurrentMergeError as e:
-            last = e
-    raise last
+    return nxt
 
 
 def delete_ids_bucketed(
@@ -1248,8 +1228,9 @@ def delete_ids_bucketed(
     path: str,
     ids: DataFrame,
     id_col: str = "id",
-    keep: int = 2,
-) -> None:
+    keep: int | None = 2,
+    version: int | None = None,
+) -> int:
     """Bucket-scoped DELETE: drop every row whose id appears in ``ids``,
     reading and rewriting ONLY the buckets those ids hash to — the MERGE
     cost model applied to deletion (O(touched buckets + ids), not
@@ -1259,8 +1240,10 @@ def delete_ids_bucketed(
     published nothing. A bucket whose rows ALL die leaves the manifest
     map entirely (an empty bucket materializes no directory; its old dir
     ages out via GC). Ids absent from the table are no-ops — buckets
-    holding none of the doomed ids are never read."""
-    vs, man, nb = _bucketed_head(spark, path, id_col)
+    holding none of the doomed ids are never read. Like the merge, it
+    builds on manifest ``version`` (the newest by default) and returns
+    the version it committed."""
+    man, nb, nxt = _bucketed_head(spark, path, id_col, version)
     doomed = (
         ids.select(F.col(id_col)).distinct()
         .withColumn("bucket", _bucket_expr(id_col, nb))
@@ -1277,7 +1260,7 @@ def delete_ids_bucketed(
             if str(r["bucket"]) in man["buckets"]
         )
         if not touched:
-            return
+            return version
         existing = _read_buckets(spark, path, man, touched)
         # no broadcast hint: the doomed-id set is caller-sized, not
         # bounded — an explicit hint bypasses the autoBroadcast
@@ -1300,8 +1283,8 @@ def delete_ids_bucketed(
             r["bucket"] for r in kept.select("bucket").distinct().collect()
         }
         drop = frozenset(k for k in touched if k not in remaining)
-        _cas_commit_touched(
-            spark, path, man, vs, touched, kept.drop("bucket"), id_col, nb,
+        return _cas_commit_touched(
+            spark, path, man, nxt, touched, kept.drop("bucket"), id_col, nb,
             keep, drop_buckets=drop,
         )
     finally:
@@ -1310,58 +1293,49 @@ def delete_ids_bucketed(
         doomed.unpersist()
 
 
-def delete_ids_bucketed_retry(
-    spark: SparkSession,
-    path: str,
-    ids: DataFrame,
-    id_col: str = "id",
-    keep: int = 2,
-    attempts: int = 5,
-) -> None:
-    """Retry-absorbing DELETE — :func:`merge_upsert_bucketed_retry`'s
-    loop around :func:`delete_ids_bucketed`: each attempt re-reads the
-    newest manifest, so a loser re-derives its survivors on top of the
-    winner's commit and both effects land."""
-    return _retry_concurrent(
-        lambda: delete_ids_bucketed(
-            spark, path, ids, id_col=id_col, keep=keep
-        ),
-        attempts,
-    )
-
-
-def _bucketed_gc(spark: SparkSession, path: str, keep: int) -> None:
-    """Reference-counted retention: the last ``keep`` manifests stay
-    readable (time travel / in-flight readers), and a bucket directory in
-    ANY version survives while one of those manifests references it.
-    Older manifests are dropped; their now-unreferenced bucket dirs are
-    deleted; a version directory disappears when nothing in it is needed."""
-    fs, P = _hadoop_fs(spark, path)
+def _bucketed_gc(spark: SparkSession, path: str, keep: int | None) -> None:
+    """Retention: the last ``keep`` manifests stay readable (time travel
+    / in-flight readers), with every bucket dir they reference
+    (:func:`_retain_versions`); ``keep=None`` leaves it to the caller."""
+    if keep is None:
+        return
     vs = _bucketed_versions(spark, path)
     live = vs[-keep:] if keep > 0 else vs[-1:]
-    newest = max(live, default=0)
-    _reap_abandoned(spark, path, newest, _MANIFEST)
+    _reap_abandoned(spark, path, max(live, default=0), _MANIFEST)
+    _retain_versions(spark, path, live, plain_too=False)
+
+
+def _retain_versions(
+    spark: SparkSession, path: str, live: list[int], plain_too: bool = True
+) -> None:
+    """Reference-counted retention in either layout: every version dir
+    below the oldest ``live`` one is deleted, except the bucket dirs a
+    live manifest maps (that version only loses its manifest). Versions
+    at or above it are live or a writer in flight builds on them.
+    ``plain_too=False`` spares _SUCCESS-committed plain versions (an
+    in-place migration leaves them beside the manifests)."""
+    if not live:
+        return
+    fs, P = _hadoop_fs(spark, path)
+    floor = min(live)
     referenced = set()
     for v in live:
-        man = _read_manifest(spark, path, v)
-        for k, owner in man["buckets"].items():
+        man = _read_control(spark, f"{path}/t={v}/{_MANIFEST}") or {}
+        for k, owner in man.get("buckets", {}).items():
             referenced.add((int(owner), int(k)))
     for st in fs.listStatus(P(path)):
         name = st.getPath().getName()
         if not (st.isDirectory() and _is_version_dir_name(name)):
             continue
         v = int(name[2:])
-        # newer than the newest commit: an in-flight writer's claim
-        if v in live or v > newest:
+        if v >= floor:
             continue
-        if fs.exists(P(st.getPath(), _SUCCESS)) and not fs.exists(
-            P(st.getPath(), _MANIFEST)
+        manifest = P(st.getPath(), _MANIFEST)
+        if (
+            not plain_too
+            and fs.exists(P(st.getPath(), _SUCCESS))
+            and not fs.exists(manifest)
         ):
-            # a PLAIN layout's committed version (in-place migration via
-            # write_table_bucketed leaves them beside the manifests):
-            # another layout's artifact, not ours to reap — deleting it
-            # here destroyed the pre-migration snapshots retention
-            # promises readable (they looked "empty" to the b= scan)
             continue
         empty = True
         for sub in fs.listStatus(st.getPath()):
@@ -1373,12 +1347,10 @@ def _bucketed_gc(spark: SparkSession, path: str, keep: int) -> None:
                     fs.delete(sub.getPath(), True)
         if empty:
             fs.delete(st.getPath(), True)
-        else:
+        elif fs.exists(manifest):
             # expired manifest: the version is no longer directly
             # readable, its surviving bucket dirs serve newer manifests
-            m = P(st.getPath(), _MANIFEST)
-            if fs.exists(m):
-                fs.delete(m, False)
+            fs.delete(manifest, False)
 
 
 # ---------------------------------------------------------------------------

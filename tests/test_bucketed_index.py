@@ -14,7 +14,6 @@ from grape_vector_db_spark.sources.tables import (
     _bucketed_versions,
     _read_manifest,
     delete_ids_bucketed,
-    delete_ids_bucketed_retry,
     merge_upsert_bucketed,
     read_table_bucketed,
     write_table_bucketed,
@@ -86,7 +85,7 @@ class TestDeleteIdsBucketed:
 
     def test_delete_then_merge_roundtrip(self, spark, table):
         doomed = spark.createDataFrame([(5,), (6,)], "id long")
-        delete_ids_bucketed_retry(spark, table, doomed, id_col="id")
+        delete_ids_bucketed(spark, table, doomed, id_col="id")
         back = spark.createDataFrame([(5, "v5b")], "id long, val string")
         merge_upsert_bucketed(spark, table, back, id_col="id")
         got = {
@@ -190,10 +189,11 @@ class TestBucketedFacadeIndexes:
             shutil.rmtree(bdir, ignore_errors=True)
             shutil.rmtree(ddir, ignore_errors=True)
 
-    def test_cache_fingerprint_sees_bucketed_refresh(self, db, spark, emb):
+    def test_cache_key_sees_bucketed_refresh(self, db, spark, emb):
         db.build_index("binary", n_buckets=N_BUCKETS)
-        fp1 = db._version_fingerprint()
         qv = [float(x) for x in emb.where(F.col("vec_id") == 3).head()["embedding"]]
+        db.search_cached(vector=qv, limit=5, index="binary").collect()
+        before = db._entry("index_packed")
         nid = 10**6 + 11
         db.add_documents(
             spark.createDataFrame(
@@ -204,7 +204,11 @@ class TestBucketedFacadeIndexes:
                 [(nid, qv)], "vec_id long, embedding array<float>"
             ),
         )
-        assert db._version_fingerprint() != fp1
+        # the bucketed refresh moved the catalog entry the key embeds
+        assert db._entry("index_packed") != before
+        got = db.search_cached(vector=qv, limit=5, index="binary").collect()
+        assert db.cache_stats["misses"] == 2
+        assert nid in {r["vec_id"] for r in got}
 
 
 class TestDeleteMergeRaces:
@@ -242,29 +246,6 @@ class TestDeleteMergeRaces:
         got = {r["id"]: r["val"] for r in read_table_bucketed(spark, path).collect()}
         # winner intact; the losing delete published NOTHING (9 survives)
         assert got[7] == "w7" and 9 in got and len(got) == 40
-
-    def test_retrying_delete_lands_both_effects(
-        self, spark, tmp_path, monkeypatch
-    ):
-        T, path = self._base(spark, tmp_path)
-        winner = spark.createDataFrame([(7, "w7")], "id long, val string")
-        doomed = spark.createDataFrame([(9,)], "id long")
-        real = T._write_bucket_dirs
-        state = {"fired": False}
-
-        def interleaved(df, id_col, nb, dest):
-            if not state["fired"]:
-                state["fired"] = True
-                T.merge_upsert_bucketed(spark, path, winner, id_col="id")
-            return real(df, id_col, nb, dest)
-
-        monkeypatch.setattr(T, "_write_bucket_dirs", interleaved)
-        delete_ids_bucketed_retry(spark, path, doomed, id_col="id")
-        monkeypatch.setattr(T, "_write_bucket_dirs", real)
-        got = {r["id"]: r["val"] for r in read_table_bucketed(spark, path).collect()}
-        # the retry re-derived survivors on the winner's snapshot:
-        # merge's update AND the delete both landed
-        assert got[7] == "w7" and 9 not in got and len(got) == 39
 
     def test_raw_merge_loses_to_delete_cleanly(
         self, spark, tmp_path, monkeypatch

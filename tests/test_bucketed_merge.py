@@ -470,59 +470,26 @@ def test_out_of_band_stage_deletion_cannot_misclaim(spark, tdir, monkeypatch):
     assert got[7] == "text-7"
 
 
-def test_retry_merge_absorbs_concurrent_winner(spark, tdir, monkeypatch):
-    """VERDICT r7 #2: the retry wrapper re-derives the loser's merge
-    against the winner's committed snapshot — BOTH updates land, no
-    ConcurrentMergeError escapes."""
-    T.write_table_bucketed(spark, tdir, _base(spark), n_buckets=4)
+def test_facade_write_retries_bounded_attempts(spark, docs, tdir, monkeypatch):
+    """Pathological contention surfaces after the facade write loop's
+    fixed attempt budget instead of looping forever."""
+    from grape_vector_db_spark import db as db_module
 
-    winner_upd = spark.createDataFrame(
-        [(7, "winner-7", 700.0)], "id long, text string, score double"
+    inst = db_module.GrapeVectorDB(spark, tdir)
+    T.write_table_bucketed(
+        spark, inst._path("documents"), docs, n_buckets=4, id_col="doc_id"
     )
-    loser_upd = spark.createDataFrame(
-        [(9, "loser-9", 999.0)], "id long, text string, score double"
-    )
-
-    real_write = T._write_bucket_dirs
-    state = {"fired": False}
-
-    def interleaved(df, id_col, n_buckets, dest):
-        if not state["fired"]:
-            state["fired"] = True
-            T.merge_upsert_bucketed(spark, tdir, winner_upd, id_col="id")
-        return real_write(df, id_col, n_buckets, dest)
-
-    monkeypatch.setattr(T, "_write_bucket_dirs", interleaved)
-    T.merge_upsert_bucketed_retry(spark, tdir, loser_upd, id_col="id")
-    monkeypatch.setattr(T, "_write_bucket_dirs", real_write)
-
-    got = {
-        r["id"]: (r["text"], r["score"])
-        for r in T.read_table_bucketed(spark, tdir).collect()
-    }
-    assert got[7] == ("winner-7", 700.0), "winner's update survives"
-    assert got[9] == ("loser-9", 999.0), "retried loser's update lands too"
-    assert len(got) == 200
-    assert T._bucketed_versions(spark, tdir) == [2, 3]
-
-
-def test_retry_merge_bounded_attempts(spark, tdir, monkeypatch):
-    """Pathological contention surfaces after the attempt budget instead
-    of looping forever."""
-    T.write_table_bucketed(spark, tdir, _base(spark), n_buckets=4)
     calls = {"n": 0}
 
     def always_lose(*a, **kw):
         calls["n"] += 1
         raise T.ConcurrentMergeError("contended")
 
-    monkeypatch.setattr(T, "merge_upsert_bucketed", always_lose)
-    upd = spark.createDataFrame(
-        [(7, "x", 1.0)], "id long, text string, score double"
-    )
+    monkeypatch.setattr(db_module, "merge_upsert_bucketed", always_lose)
+    upd = spark.createDataFrame([(7, "x")], "doc_id long, text string")
     with pytest.raises(T.ConcurrentMergeError):
-        T.merge_upsert_bucketed_retry(spark, tdir, upd, id_col="id", attempts=3)
-    assert calls["n"] == 3
+        inst.add_documents(upd)
+    assert calls["n"] == inst._WRITE_ATTEMPTS == 5
 
 
 def test_facade_merge_routes_bucketed_tables_with_retry(spark, docs, tdir, monkeypatch):

@@ -108,7 +108,7 @@ class TestBackupRestore:
             with pytest.raises(ValueError, match="checksum"):
                 fresh.restore(bdir)
             # nothing published into the target store
-            assert not fresh._versions("documents")
+            assert not fresh._has("documents")
         finally:
             shutil.rmtree(bdir, ignore_errors=True)
             shutil.rmtree(ddir, ignore_errors=True)

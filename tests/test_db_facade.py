@@ -308,7 +308,7 @@ def test_optimize_compacts_without_changing_data(db, docs):
 
     before = {r["doc_id"] for r in db.documents().collect()}
     db.optimize(target_partitions=2)
-    files = glob.glob(f"{db._data_path('documents')}/part-*")
+    files = glob.glob(f"{db._dir('documents')}/part-*")
     assert len(files) == 2
     assert {r["doc_id"] for r in db.documents().collect()} == before
 
@@ -350,7 +350,9 @@ def test_versioned_swap_gc_keeps_two_versions(db):
             "doc_id long, text string, lang string, source string, n_chars long",
         )
         db.add_documents(upd)
-    vs = db._versions("documents")
+    from grape_vector_db_spark.sources.tables import table_versions
+
+    vs = table_versions(db.spark, db._path("documents"))
     assert len(vs) == 2  # keep=2: current + one for in-flight readers
     assert vs[-1] - vs[-2] == 1
 

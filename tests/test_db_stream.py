@@ -57,9 +57,9 @@ def test_restart_applies_only_new_batches(db, spark, tmp_path):
     db.add_documents(
         spark.createDataFrame([(25, "zz")], "doc_id long, lang string")
     )
-    version = db._version_key("documents")
+    version = db._entry("documents")[0]
     _stream(db, [_row(i) for i in range(30, 40)], src, ck)
-    assert db._version_key("documents") == version + 1  # one batch
+    assert db._entry("documents")[0] == version + 1  # one batch
     assert db.get_document(25)["lang"] == "zz"
     assert db.count() == 40
     assert db.count({"must": [{"type": "equals", "field": "lang",

@@ -1,5 +1,5 @@
 """Round-11 optimization pins: the filtered-search gate broadcast, the
-per-request listing snapshot, and the one-glob version listing."""
+per-request catalog snapshot, and the one-glob version listing."""
 
 from __future__ import annotations
 
@@ -89,27 +89,36 @@ def test_gate_broadcast_rows_match_shuffle_rows(db):
     assert [r.asDict() for r in fast] == [r.asDict() for r in slow]
 
 
-def test_snapshot_memo_does_not_outlive_a_request(db, docs):
-    """The listing memo is request-scoped: a publish between two reads
-    is visible to the second read (cross-request freshness unchanged)."""
+def test_snapshot_does_not_outlive_a_request(db, docs):
+    """The pinned catalog is request-scoped: a write between two reads
+    is visible to the second read (cross-request freshness)."""
     before = db.stats()["document_count"]
     extra = docs.limit(3).withColumn(
         "doc_id", F.col("doc_id") + 1_000_000
     )
     db.add_documents(extra)
     assert db.stats()["document_count"] == before + 3
-    # and no memo leaks outside the call
-    assert db._listing_memo is None
+    # and no pinned catalog leaks outside the call
+    assert db._pinned is None
 
 
-def test_snapshot_memo_cleared_by_mutation_inside_request(db):
-    """_mutated() clears an ACTIVE memo so a mutator running inside a
-    snapshot never serves its own stale listing."""
-    with db._snapshot():
-        _ = db._versions("documents")
-        assert ("v", "documents") in db._listing_memo
-        db._mutated()
-        assert db._listing_memo == {}
+def test_write_reads_its_own_pending_versions(db):
+    """A write pins its working catalog: its own reads see a version it
+    published at once, another instance sees it only once the write's
+    catalog commit lands."""
+    before = db._entry("documents")
+    seen = {}
+
+    def body():
+        db._publish("documents", db.documents().limit(3))
+        seen["inside"] = db._entry("documents")
+        seen["rows"] = db.documents().count()
+        seen["others"] = GrapeVectorDB(db.spark, db.base)._entry("documents")
+
+    db._write(body)
+    assert seen["inside"][0] > before[0] and seen["rows"] == 3
+    assert seen["others"] == before
+    assert GrapeVectorDB(db.spark, db.base)._entry("documents") == seen["inside"]
 
 
 def test_glob_listing_matches_loop_listing(spark, docs, tmp_path):

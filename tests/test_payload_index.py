@@ -1056,7 +1056,7 @@ def test_legacy_sidecar_without_array_fields_still_routes(db, emb):
     import os
 
     db.build_index("payload", columns=["lang"])
-    v = db._versions("index_payload")[-1]
+    v = db._entry("index_payload")[0]
     sp = f"{db._path('index_payload')}/t={v}/_STATS.json"
     st = json.load(open(sp))
     del st["array_fields"]

@@ -58,7 +58,7 @@ def test_publish_records_row_stats_on_the_write_job(spark, tmp_path):
 def test_row_count_falls_back_for_legacy_versions(db):
     import os
 
-    v = db._versions("documents")[-1]
+    v = db._entry("documents")[0]
     os.remove(f"{db._path('documents')}/t={v}/{T._STATS_FILE}")
     db._stats_cache.clear()
     n = db._row_count("documents")

@@ -66,13 +66,14 @@ def _build_every_index(db) -> None:
 
 def _stored_and_fresh(db, kind: str):
     """One index's stored rows and the rows build_index derives from the
-    final corpus (ivf: assigned against the stored, frozen centroids)."""
+    final corpus (ivf: assigned against the stored, frozen centroids),
+    both read at the catalog's versions."""
     docs, emb = db.documents(), db.embeddings()
     vecs = emb.select("vec_id", "embedding")
     if kind == "ivf":
-        cents, assigned = ann.load_index(db.spark, db._path("index_ivf"))
-        return assigned, ann.ivf_add(
-            vecs, cents, include_vectors=True, replicas=2
+        ivf = db._ivf()
+        return ivf.assignments(), ann.ivf_add(
+            vecs, ivf.cents, include_vectors=True, replicas=2
         )
     if kind == "graph":
         return (
@@ -111,7 +112,7 @@ def _stored_and_fresh(db, kind: str):
 def _assert_layouts_kept(db) -> None:
     assert db._table_stats("index_ivf/assignments")["replicas"] == 2
     assert db._table_stats("index_partition")["partition_column"] == "lang"
-    assert db._bucket_versions("index_sq")
+    assert db._entry("index_sq")[1] == "bucketed"
 
 
 @pytest.fixture()
@@ -293,7 +294,7 @@ def test_stream_replay_leaves_every_table_unchanged(streamed):
             out[table] = _rows(df, df.columns)
         return out
 
-    before, version = snapshot(), db._version_key("documents")
+    before, version = snapshot(), db._entry("documents")[0]
     _stream(db, src, schema, str(root / "ck_replay"), maxFilesPerTrigger=1)
-    assert db._version_key("documents") == version + 2  # both replayed
+    assert db._entry("documents")[0] == version + 2  # both replayed
     assert snapshot() == before

@@ -240,7 +240,7 @@ def test_sidecars_match_a_fresh_build(db, spark, tmp_path, write):
 
 def test_missing_sidecar_is_not_cached(db, spark):
     table = "documents"
-    stats = f"{db._data_path(table)}/_STATS.json"
+    stats = f"{db._dir(table)}/_STATS.json"
     held = stats + ".held"
     want = db._table_stats(table)
     db._stats_cache.clear()
