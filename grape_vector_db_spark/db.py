@@ -48,24 +48,21 @@ from .operators import (
 )
 from .plans.planner import PlanChoice, choose_search_strategy, clamp_request
 from .sources.tables import (
-    _SUCCESS,
+    Catalog,
     ConcurrentMergeError,
-    _commit,
-    _read_control,
+    _entry_dir,
     _read_manifest,
-    _reap_abandoned,
-    _retain_versions,
-    _write_control,
-    current_table_path,
+    _sidecar_schema,
+    commit_catalog,
     delete_ids_bucketed,
     materialized,
     merge_upsert,
     merge_upsert_bucketed,
     publish_table,
+    read_catalog,
     read_table_bucketed,
     read_table_stats,
     table_exists,
-    table_versions,
     write_table_bucketed,
 )
 
@@ -75,18 +72,6 @@ _TABLES = (
     "index_packed", "index_sq", "index_graph", "index_partition",
     "index_payload", "index_terms", "fusion_weights",
 )
-_CATALOG = "_CATALOG.json"
-
-
-@dataclass
-class _Catalog:
-    """One catalog version (0: derived for a DB without one): every
-    facade table's committed ``(version, layout)``, the layout being
-    ``plain``, ``bucketed`` (bucket manifest) or ``flat`` (a legacy
-    table root, version 0)."""
-
-    version: int
-    tables: dict[str, tuple[int, str]]
 
 
 @dataclass
@@ -304,8 +289,8 @@ class GrapeVectorDB:
         # public endpoint; inside a write, the base catalog plus the
         # write's own pending versions, and _base the catalog it commits
         # on top of (see _write)
-        self._pinned: _Catalog | None = None
-        self._base: _Catalog | None = None
+        self._pinned: Catalog | None = None
+        self._base: Catalog | None = None
         # expected embedding dimension (reference config vector_dimension,
         # src/config.rs:398-401); None = infer from the stored table
         self.dimension = dimension
@@ -327,18 +312,15 @@ class GrapeVectorDB:
     #
     # Each table of _TABLES is a versioned directory {table}/t={N},
     # published through the one commit of sources.tables (_commit). WHICH
-    # version of each table the facade serves is one more versioned file,
-    # {base}/_catalog/t={M}/_CATALOG.json, mapping every table to its
-    # committed version and layout. A facade write (_write) publishes its
-    # table versions, then commits catalog M+1 through the same _commit
-    # CAS; none of its versions is visible before that. A writer stopped
-    # between two table commits leaves catalog M whole, and a reader never
-    # pairs documents@N+1 with an index@N (the reference's multi-tree sled
-    # transaction, ref:src/advanced_storage.rs:177-191). A DB with no
-    # catalog reads a version-0 one (_legacy_tables). Once a catalog
-    # exists, a version published straight to a facade table's path
-    # (publish_table, write_table_bucketed) is invisible to the facade:
-    # no catalog ever references it.
+    # version of each table the facade serves is the catalog of
+    # sources.tables (read_catalog / commit_catalog), {base}/_catalog/t={M}.
+    # A facade write (_write) publishes its table versions, then commits
+    # catalog M+1; none of its versions is visible before that, and a
+    # reader never pairs documents@N+1 with an index@N. A DB with no
+    # catalog reads a version-0 one. Once a catalog exists, a version
+    # published straight to a facade table's path (publish_table,
+    # write_table_bucketed) is invisible to the facade: no catalog ever
+    # references it.
     #
     # A public read call (search/scroll/count/...) resolves the catalog
     # ONCE (_snapshot: one listing of _catalog, one small file read) and
@@ -353,51 +335,23 @@ class GrapeVectorDB:
         if self._pinned is not None:
             yield
             return
-        self._pinned = self._load_catalog()
+        self._pinned = self._newest()
         try:
             yield
         finally:
             self._pinned = None
 
-    def _catalog(self) -> _Catalog:
+    def _catalog(self) -> Catalog:
         pinned = self._pinned
-        return pinned if pinned is not None else self._load_catalog()
+        return pinned if pinned is not None else self._newest()
+
+    def _newest(self) -> Catalog:
+        return read_catalog(self.spark, self.base, _TABLES)
 
     def _entry(self, table: str) -> tuple[int, str] | None:
         """``(version, layout)`` of ``table`` in the pinned catalog (None
         when absent): the key of every per-version cache."""
         return self._catalog().tables.get(table)
-
-    def _load_catalog(self) -> _Catalog:
-        path = self._path("_catalog")
-        while True:
-            vs = table_versions(self.spark, path)
-            if not vs:
-                return _Catalog(0, self._legacy_tables())
-            body = _read_control(self.spark, f"{path}/t={vs[-1]}/{_CATALOG}")
-            # None: two newer commits reaped it between listing and read
-            if body is not None:
-                return _Catalog(
-                    vs[-1], {t: tuple(e) for t, e in body["tables"].items()}
-                )
-
-    def _legacy_tables(self) -> dict[str, tuple[int, str]]:
-        """The version-0 catalog of a DB without one: each table at its
-        newest committed version in either layout (both share the t=N
-        namespace), else a legacy flat table root."""
-        from .sources.tables import _bucketed_versions
-
-        out = {}
-        for table in _TABLES:
-            path = self._path(table)
-            plain = table_versions(self.spark, path)
-            bucketed = _bucketed_versions(self.spark, path)
-            if plain or bucketed:
-                v = max(plain[-1:] + bucketed[-1:])
-                out[table] = (v, "bucketed" if v in bucketed else "plain")
-            elif table_exists(self.spark, path):
-                out[table] = (0, "flat")
-        return out
 
     _WRITE_ATTEMPTS = 5
 
@@ -411,11 +365,12 @@ class GrapeVectorDB:
         if self._base is not None:
             return body()
         for attempt in range(self._WRITE_ATTEMPTS):
-            base = self._base = self._load_catalog()
-            self._pinned = _Catalog(base.version, dict(base.tables))
+            base = self._base = self._newest()
+            self._pinned = Catalog(base.version, dict(base.tables))
             try:
                 out = body()
-                self._commit_catalog()
+                tables = self._pinned.tables
+                commit_catalog(self.spark, self.base, base, tables)
                 return out
             except ConcurrentMergeError:
                 if attempt == self._WRITE_ATTEMPTS - 1:
@@ -428,35 +383,9 @@ class GrapeVectorDB:
         see it at once, everyone else once the catalog commit lands."""
         self._pinned.tables[table] = (version, layout)
 
-    def _commit_catalog(self) -> None:
-        """Commit the working catalog as version M+1 (a lost race raises
-        ConcurrentMergeError), then keep, of every table it moved and of
-        the catalog itself, only the versions the two newest catalogs
-        reference (and newer ones: writers in flight)."""
-        base, tables = self._base, self._pinned.tables
-        if tables == base.tables:
-            return
-        path, nxt = self._path("_catalog"), base.version + 1
-
-        def stage(dest: str):
-            _write_control(self.spark, f"{dest}/{_CATALOG}", {"tables": tables})
-            return [_CATALOG], None
-
-        _commit(self.spark, path, nxt, stage, _SUCCESS)
-        _reap_abandoned(self.spark, path, nxt, _SUCCESS)
-        _retain_versions(self.spark, path, [base.version, nxt])
-        for table, entry in tables.items():
-            old = base.tables.get(table)
-            if old != entry:
-                live = [entry[0]] if old is None else [old[0], entry[0]]
-                _retain_versions(self.spark, self._path(table), live)
-
     def _dir(self, table: str) -> str:
         """The pinned version's directory of a plain or flat table."""
-        v, layout = self._entry(table)
-        if layout == "flat":
-            return current_table_path(self.spark, self._path(table))
-        return f"{self._path(table)}/t={v}"
+        return _entry_dir(self.spark, self._path(table), self._entry(table))
 
     def _manifest(self, table: str) -> dict | None:
         """The pinned version's bucket manifest; None unless ``table``
@@ -613,17 +542,7 @@ class GrapeVectorDB:
     def _schema(self, table: str):
         """The publish-time sidecar schema of the pinned version (None
         for a legacy version or a malformed sidecar)."""
-        st = self._table_stats(table)
-        if st is None or not st.get("schema"):
-            return None
-        import json
-
-        from pyspark.sql.types import StructType
-
-        try:
-            return StructType.fromJson(json.loads(st["schema"]))
-        except Exception:
-            return None
+        return _sidecar_schema(self._table_stats(table))
 
     def documents(self) -> DataFrame:
         return self._read("documents")
@@ -1460,9 +1379,10 @@ class GrapeVectorDB:
         assignments are located, not read: a pruned search lists only
         the cells it probes."""
         table = "index_ivf/assignments"
-        adir = self._dir(table)
-        schema = self._schema(table) or self.spark.read.parquet(adir).schema
-        return ann.IvfIndex(self._read("index_ivf/centroids"), adir, schema)
+        return ann.IvfIndex.of(
+            self._read("index_ivf/centroids"), self._dir(table),
+            self._schema(table),
+        )
 
     # -- search -------------------------------------------------------------
 
@@ -1953,51 +1873,16 @@ class GrapeVectorDB:
         limit, _ = clamp_request(limit, None)
         if group_size < 1:
             raise ValueError("group_size must be >= 1")
-        st = self._table_stats("index_payload") or {}
-        if group_by in (st.get("payload_columns") or []):
-            # payload-indexed group column: read (vec_id, value) from ONE
-            # field's posting directory — at 100 TB the narrow pruned
-            # posting read replaces the wide documents join. Array fields
-            # need no special case here: their postings are per-doc-
-            # DISTINCT (vec_id, element) rows, which is exactly the
-            # per-element grouping the public search-groups APIs define
-            # (a doc appears in each of its elements' groups, once).
-            groups = (
-                self._read("index_payload")
-                .where(F.col("field") == F.lit(group_by))
-                .select("vec_id", F.col("value").alias("group"))
-            )
-        else:
-            from pyspark.sql.types import ArrayType
-
-            docs = self.documents()
-            if group_by not in docs.columns:
-                raise ValueError(f"{group_by!r} is not a documents column")
-            if isinstance(docs.schema[group_by].dataType, ArrayType):
-                # per-element grouping (the posting semantics, judge r9
-                # #3 — stringifying the whole array made '[a,b]' a group)
-                groups = (
-                    docs.select(
-                        F.col(self.id_col).alias("vec_id"),
-                        F.explode(group_by).alias("el"),
-                    )
-                    .select(
-                        "vec_id", F.col("el").cast("string").alias("group")
-                    )
-                    .distinct()
-                )
-            else:
-                groups = docs.select(
-                    F.col(self.id_col).alias("vec_id"),
-                    F.col(group_by).cast("string").alias("group"),
-                )
+        groups = self._field_values(group_by).withColumnRenamed(
+            "value", "group"
+        )
         emb = self._filtered_candidates(self.embeddings(), filter)
         scored = emb.select(
             F.col("vec_id"),
             F.round(
                 cosine_vs_query(to_double_array(self.vec_col), vector), 6
             ).alias("score"),
-        ).join(groups, "vec_id").where(F.col("group").isNotNull())
+        ).join(groups, "vec_id")
         in_group = Window.partitionBy("group").orderBy(
             F.col("score").desc(), F.col("vec_id").asc()
         )
@@ -2203,9 +2088,9 @@ class GrapeVectorDB:
             if cursor is None:
                 cursor = offset
         if order_by is None:
-            docs = self.documents()
-            if filter is not None:
-                docs = docs.where(filters.filter_to_column(filter))
+            docs = (
+                self.documents() if filter is None else self._gate(filter).docs
+            )
             if cursor is not None:
                 docs = docs.where(F.col(self.id_col) > F.lit(int(cursor)))
             page = docs.orderBy(F.col(self.id_col).asc()).limit(limit)
@@ -2319,7 +2204,7 @@ class GrapeVectorDB:
         if order_by not in docs.columns:
             raise ValueError(f"{order_by!r} is not a documents column")
         if filter is not None:
-            docs = docs.where(filters.filter_to_column(filter))
+            docs = self._gate(filter).docs
         docs = docs.where(F.col(order_by).isNotNull())
         if cursor is not None:
             oc = F.col(order_by)
@@ -2361,8 +2246,7 @@ class GrapeVectorDB:
         if limit < 1:
             raise ValueError("limit must be >= 1")
         st = self._table_stats("index_payload") or {}
-        indexed = field in (st.get("payload_columns") or [])
-        if indexed and filter is None:
+        if filter is None and field in (st.get("payload_columns") or []):
             hist = (st.get("histograms") or {}).get(field) or {}
             wide = (
                 field in set(st["wide_hist_fields"])
@@ -2377,45 +2261,52 @@ class GrapeVectorDB:
                     [(v, int(c)) for v, c in rows] or [],
                     "value string, count long",
                 )
-        if indexed:
-            sl = self._read("index_payload").where(
-                F.col("field") == F.lit(field)
-            )
-            if filter is not None:
-                sl = sl.join(self._gate(filter).ids, "vec_id", "left_semi")
-            grouped = sl.groupBy("value")
-        else:
-            from pyspark.sql.types import ArrayType
-
-            docs = self.documents()
-            if field not in docs.columns:
-                raise ValueError(f"{field!r} is not a documents column")
-            if filter is not None:
-                docs = docs.where(filters.filter_to_column(filter))
-            if isinstance(docs.schema[field].dataType, ArrayType):
-                # count DOCS containing each element (the posting
-                # semantics): explode, then per-doc dedupe
-                vals = (
-                    docs.select(
-                        F.col(self.id_col), F.explode(field).alias("el")
-                    )
-                    .select(
-                        self.id_col, F.col("el").cast("string").alias("value")
-                    )
-                    .where(F.col("value").isNotNull())
-                    .distinct()
-                    .select("value")
-                )
-            else:
-                vals = docs.where(F.col(field).isNotNull()).select(
-                    F.col(field).cast("string").alias("value")
-                )
-            grouped = vals.groupBy("value")
         return (
-            grouped.agg(F.count(F.lit(1)).alias("count"))
+            self._field_values(field, filter)
+            .groupBy("value")
+            .agg(F.count(F.lit(1)).alias("count"))
             .orderBy(F.col("count").desc(), F.col("value").asc())
             .limit(limit)
         )
+
+    def _field_values(
+        self, field: str, filter: dict[str, Any] | None = None
+    ) -> DataFrame:
+        """``(vec_id, value)`` of a metadata field over the documents
+        ``filter`` keeps, the value as a string, nulls dropped — the
+        groups of :meth:`search_groups` and the counts of :meth:`facet`.
+        A payload-indexed field reads its posting slice (one pruned
+        read; postings are per-doc-distinct, so an array field yields
+        each element once per doc); otherwise the documents column is
+        exploded and made per-doc distinct (array field) or cast
+        (scalar field)."""
+        st = self._table_stats("index_payload") or {}
+        if field in (st.get("payload_columns") or []):
+            vals = (
+                self._read("index_payload")
+                .where(F.col("field") == F.lit(field))
+                .select("vec_id", "value")
+            )
+            if filter is not None:
+                vals = vals.join(self._gate(filter).ids, "vec_id", "left_semi")
+            return vals
+        from pyspark.sql.types import ArrayType
+
+        docs = self.documents()
+        if field not in docs.columns:
+            raise ValueError(f"{field!r} is not a documents column")
+        array = isinstance(docs.schema[field].dataType, ArrayType)
+        if filter is not None:
+            docs = self._gate(filter).docs
+        vid = F.col(self.id_col).alias("vec_id")
+        if array:
+            vals = docs.select(vid, F.explode(field).alias("el")).select(
+                "vec_id", F.col("el").cast("string").alias("value")
+            )
+        else:
+            vals = docs.select(vid, F.col(field).cast("string").alias("value"))
+        vals = vals.where(F.col("value").isNotNull())
+        return vals.distinct() if array else vals
 
     @_snapshot_scope
     def count(self, filter: dict[str, Any] | None = None) -> int:
@@ -2663,15 +2554,8 @@ class GrapeVectorDB:
                 stats_exprs={"dim": f"max(size({self.vec_col}))"},
             )
         for idx in manifest.get("indexes", []):
-            kind = idx["kind"]
-            if kind == "graph":
-                self.build_index("graph", k=idx.get("k", 8))
-            elif kind == "partition":
-                self.build_index("partition", column=idx["column"])
-            else:
-                self.build_index(
-                    kind, **{k: v for k, v in idx.items() if k != "kind"}
-                )
+            rest = {k: v for k, v in idx.items() if k != "kind"}
+            self.build_index(idx["kind"], **rest)
 
     @_snapshot_scope
     def search_response(self, **kwargs) -> SearchResponse:

@@ -1020,21 +1020,41 @@ def ivfpq_search(
     )
 
 
-_INDEX_MANIFEST = "_INDEX_MANIFEST.json"
+def _save_tables(spark, path: str, tables: dict) -> None:
+    """Publish each sub-table of the multi-table index at ``path``
+    (``{name: (df, publish_table options)}``), then commit one
+    ``{path}/_catalog`` version naming the versions those publishes
+    returned (the catalog of sources.tables). A save that loses the
+    catalog CAS to a concurrent save raises ConcurrentMergeError, and
+    the winner's whole set stands."""
+    from ..sources.tables import commit_catalog, publish_table, read_catalog
+
+    base = read_catalog(spark, path, tuple(tables))
+    pinned = dict(base.tables)
+    for name, (df, opts) in tables.items():
+        v = publish_table(spark, f"{path}/{name}", df, keep=None, **opts)
+        pinned[name] = (v, "plain")
+    commit_catalog(spark, path, base, pinned)
 
 
-def _write_index_manifest(spark, path: str, pair: dict) -> None:
-    """Atomic commit of the two-table version PAIR a reader must open
-    together (centroids/assignments, codebooks/codes)."""
-    from ..sources.tables import _write_control
+def _locate(spark, path: str, catalog, name: str):
+    """``(directory, sidecar schema or None)`` of sub-table ``name`` of
+    the index at ``path``, at ``catalog``'s entry. Locating reads no
+    data and lists none of its partition directories."""
+    from ..sources.tables import _entry_dir, _sidecar_schema, read_table_stats
 
-    _write_control(spark, f"{path}/{_INDEX_MANIFEST}", pair)
+    entry = catalog.tables.get(name)
+    if entry is None:
+        raise FileNotFoundError(f"no committed {name} table under {path}")
+    sub = f"{path}/{name}"
+    st = None if entry[1] != "plain" else read_table_stats(spark, sub, entry[0])
+    return _entry_dir(spark, sub, entry), _sidecar_schema(st)
 
 
-def _read_index_manifest(spark, path: str) -> dict | None:
-    from ..sources.tables import _read_control
-
-    return _read_control(spark, f"{path}/{_INDEX_MANIFEST}")
+def _open(spark, path: str, catalog, name: str) -> DataFrame:
+    d, schema = _locate(spark, path, catalog, name)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(d)
 
 
 def save_index(
@@ -1053,31 +1073,21 @@ def save_index(
     readers recover the layout parameters without scanning.
 
     The index is TWO tables that must agree (postings are placements in
-    the centroids' geometry), and each publish is only individually
-    atomic — so the committed version PAIR is recorded in an
-    ``_INDEX_MANIFEST.json`` whose temp+rename write is the real commit
-    point. A writer crashing between the two publishes leaves the
-    manifest pointing at the previous CONSISTENT pair; readers
-    (load_index) never see new centroids with old postings or vice
-    versa. Retention note: publish keep=2 holds the prior version of
-    each table, which covers one crashed rebuild; the next successful
-    save re-points the manifest."""
-    from ..sources.tables import publish_table, table_versions
-
-    spark = cents.sparkSession
-    # versioned swap (sources.tables): a concurrent reader mid-rebuild sees
-    # the old or the new index, never a half-written one
-    publish_table(spark, f"{path}/centroids", cents)
-    publish_table(
-        spark, f"{path}/assignments", assigned, partition_by=["cluster"],
-        extra_stats=extra_stats,
-    )
-    _write_index_manifest(
-        spark,
+    the centroids' geometry), so one catalog version pins the pair
+    (:func:`_save_tables`): a writer stopped between the two publishes
+    leaves the previous pair committed, readers (:func:`open_ivf_index`)
+    never see new centroids with old postings or vice versa, and of two
+    concurrent saves one commits while the other raises
+    ConcurrentMergeError."""
+    _save_tables(
+        cents.sparkSession,
         path,
         {
-            "centroids": table_versions(spark, f"{path}/centroids")[-1],
-            "assignments": table_versions(spark, f"{path}/assignments")[-1],
+            "centroids": (cents, {}),
+            "assignments": (
+                assigned,
+                {"partition_by": ["cluster"], "extra_stats": extra_stats},
+            ),
         },
     )
 
@@ -1141,48 +1151,39 @@ def save_pq_index(path: str, codebooks, codes: DataFrame) -> None:
     blob, src/query.rs:282-409; ours stays queryable as tables): the
     codebooks as a tiny (j, cluster, codeword) parquet, the codes table
     partitioned by coarse cell when present (IVF-PQ) so probed-cell reads
-    are partition pruning, plain parquet otherwise (flat PQ)."""
+    are partition pruning, plain parquet otherwise (flat PQ). Codes are
+    indices INTO these codebooks, so one catalog version pins the pair,
+    as :func:`save_index` pins centroids and assignments."""
     spark = codes.sparkSession
     rows = [
         (j, c, [float(x) for x in cw])
         for j, book in enumerate(codebooks)
         for c, cw in enumerate(book)
     ]
-    from ..sources.tables import publish_table, table_versions
-
-    publish_table(
-        spark,
-        f"{path}/codebooks",
-        spark.createDataFrame(rows, "j int, cluster int, codeword array<double>"),
-    )
-    publish_table(
-        spark,
-        f"{path}/codes",
-        codes,
-        partition_by=["cluster"] if "cluster" in codes.columns else None,
-    )
-    # the two tables must agree (codes are indices INTO these codebooks)
-    # and each publish is only individually atomic — commit the version
-    # PAIR exactly like save_index does for centroids/assignments: a
-    # writer crashing between the publishes must not leave readers
-    # pairing NEW codebooks with codes encoded under the OLD ones
-    # (silently wrong ADC distances, no error)
-    _write_index_manifest(
+    cluster = ["cluster"] if "cluster" in codes.columns else None
+    _save_tables(
         spark,
         path,
         {
-            "codebooks": table_versions(spark, f"{path}/codebooks")[-1],
-            "codes": table_versions(spark, f"{path}/codes")[-1],
+            "codebooks": (
+                spark.createDataFrame(
+                    rows, "j int, cluster int, codeword array<double>"
+                ),
+                {},
+            ),
+            "codes": (codes, {"partition_by": cluster}),
         },
     )
 
 
 def load_pq_index(spark, path: str):
-    """Load a persisted PQ index -> (codebooks nested list, codes df);
-    shape validation mirrors the reference's load-time checks."""
-    man = _read_index_manifest(spark, path) or {}
-    cb = _open_versioned(spark, path, "codebooks", man.get("codebooks"))
-    rows = cb.collect()
+    """Load a persisted PQ index -> (codebooks nested list, codes df) at
+    the pair its newest catalog names; shape validation mirrors the
+    reference's load-time checks."""
+    from ..sources.tables import read_catalog
+
+    cat = read_catalog(spark, path, ("codebooks", "codes"))
+    rows = _open(spark, path, cat, "codebooks").collect()
     if not rows:
         raise ValueError("empty codebook table")
     m = max(r["j"] for r in rows) + 1
@@ -1194,50 +1195,7 @@ def load_pq_index(spark, path: str):
         for c in range(k):
             if codebooks[j][c] is None:
                 raise ValueError(f"codebook missing entry (j={j}, cluster={c})")
-    return codebooks, _open_versioned(spark, path, "codes", man.get("codes"))
-
-
-def _versioned_dir(spark, path: str, sub: str, version: int | None):
-    """``(directory, sidecar schema or None)`` of ``{path}/{sub}`` at the
-    manifest-committed version (falling back to the newest committed
-    version for legacy indexes or when retention GC'd the manifest'd one
-    — the next successful save self-heals the manifest). The directory
-    is None for a legacy flat layout. Locating a table reads no data
-    and lists none of its partition directories."""
-    from ..sources.tables import read_table_stats, table_versions
-
-    p = f"{path}/{sub}"
-    vs = table_versions(spark, p)
-    v = version if version in vs else (vs[-1] if vs else None)
-    if v is None:
-        return None, None
-    st = read_table_stats(spark, p, version=v)
-    schema = None
-    if st is not None and st.get("schema"):
-        import json as _json
-
-        from pyspark.sql.types import StructType
-
-        try:
-            schema = StructType.fromJson(_json.loads(st["schema"]))
-        except Exception:
-            schema = None  # malformed sidecar: fall back to inference
-    return f"{p}/t={v}", schema
-
-
-def _open_versioned(spark, path: str, sub: str, version: int | None):
-    """Open ``{path}/{sub}`` at the committed version of
-    :func:`_versioned_dir`. Publish-time sidecar schemas skip footer
-    inference. Shared by the IVF (centroids/assignments) and PQ
-    (codebooks/codes) loaders — both are two-table indexes whose
-    version PAIR must open together."""
-    from ..sources.tables import read_table
-
-    d, schema = _versioned_dir(spark, path, sub, version)
-    if d is None:
-        return read_table(spark, f"{path}/{sub}")  # legacy flat layout (or raise)
-    reader = spark.read if schema is None else spark.read.schema(schema)
-    return reader.parquet(d)
+    return codebooks, _open(spark, path, cat, "codes")
 
 
 class IvfIndex(NamedTuple):
@@ -1251,6 +1209,21 @@ class IvfIndex(NamedTuple):
     cents: DataFrame
     assignments_dir: str
     assignments_schema: StructType
+
+    @classmethod
+    def of(
+        cls, cents: DataFrame, assignments_dir: str, schema: StructType | None
+    ) -> IvfIndex:
+        """The one way an index is opened (the facade's catalog entries
+        and :func:`open_ivf_index`): the centroid table must carry
+        ``cluster`` and ``centroid``; a legacy assignments table without
+        a sidecar schema has its schema inferred once."""
+        for col in ("cluster", "centroid"):
+            if col not in cents.columns:
+                raise ValueError(f"centroid table missing column {col!r}")
+        if schema is None:
+            schema = cents.sparkSession.read.parquet(assignments_dir).schema
+        return cls(cents, assignments_dir, schema)
 
     def assignments(self) -> DataFrame:
         """The whole assignments table (lists every cell)."""
@@ -1279,32 +1252,21 @@ class IvfIndex(NamedTuple):
 
 
 def open_ivf_index(spark, path: str) -> IvfIndex:
-    """Open a persisted IVF index at the version PAIR the
-    ``_INDEX_MANIFEST.json`` committed — never a half-rebuilt mix of new
-    centroids and old postings (see save_index); legacy indexes fall
-    back to the newest committed versions. With publish-time sidecar
-    schemas this costs zero Spark jobs."""
-    from ..sources.tables import current_table_path
+    """Open a persisted IVF index at the centroid/assignment pair its
+    newest catalog names — never a half-rebuilt mix of new centroids and
+    old postings (see save_index). An index saved without a catalog
+    opens at its newest pair. With publish-time sidecar schemas this
+    lists only ``{path}/_catalog`` and costs zero Spark jobs."""
+    from ..sources.tables import read_catalog
 
-    man = _read_index_manifest(spark, path) or {}
-    cents = _open_versioned(spark, path, "centroids", man.get("centroids"))
-    for col in ("cluster", "centroid"):
-        if col not in cents.columns:
-            raise ValueError(f"centroid table missing column {col!r}")
-    adir, schema = _versioned_dir(
-        spark, path, "assignments", man.get("assignments")
-    )
-    if adir is None:
-        adir = current_table_path(spark, f"{path}/assignments")
-    if schema is None:
-        # legacy index without a sidecar schema: infer it once
-        schema = spark.read.parquet(adir).schema
-    return IvfIndex(cents, adir, schema)
+    cat = read_catalog(spark, path, ("centroids", "assignments"))
+    adir, schema = _locate(spark, path, cat, "assignments")
+    return IvfIndex.of(_open(spark, path, cat, "centroids"), adir, schema)
 
 
 def load_index(spark, path: str) -> tuple[DataFrame, DataFrame]:
     """Load persisted IVF index tables ``(centroids, assignments)`` at
-    the committed version pair (:func:`open_ivf_index`); dimension/shape
+    the catalog's pair (:func:`open_ivf_index`); dimension/shape
     validation mirrors the reference's load-time checks
     (src/query.rs:352-371)."""
     idx = open_ivf_index(spark, path)

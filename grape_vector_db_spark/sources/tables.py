@@ -28,6 +28,7 @@ import json
 import time
 import uuid
 from contextlib import contextmanager
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -524,7 +525,8 @@ def _claim(
     A marker-less ``t={nxt}`` that is EMPTY (a live claim always holds
     its token) or older than ``_STALE_CLAIM_MS`` is a crashed writer's
     claim that can never commit: it is adopted (deleted, then claimed),
-    or every later writer would find it and raise forever."""
+    or every later writer would find it and raise forever. Until then
+    the error states the claim's age and when it becomes adoptable."""
     fs, P = _hadoop_fs(spark, path)
     stage_name = stage.rsplit("/", 1)[1]
     token = f"._CLAIM-{stage_name[len('.stage-'):]}"
@@ -532,14 +534,20 @@ def _claim(
     vdir = f"{path}/t={nxt}"
     target = P(vdir)
     taken = fs.exists(target)
+    held = ""  # why a marker-less claim still blocks this write
     if taken and not fs.exists(P(f"{vdir}/{marker}")):
-        cutoff_ms = int(time.time() * 1000) - _STALE_CLAIM_MS
-        if (
-            fs.getFileStatus(target).getModificationTime() < cutoff_ms
-            or not fs.listStatus(target)
-        ):
+        now_ms = int(time.time() * 1000)
+        age_ms = now_ms - fs.getFileStatus(target).getModificationTime()
+        if age_ms > _STALE_CLAIM_MS or not fs.listStatus(target):
             fs.delete(target, True)
             taken = False
+        else:
+            age_s, stale_s = age_ms // 1000, _STALE_CLAIM_MS // 1000
+            held = (
+                f"; its claim has no commit marker and is {age_s} s old: "
+                f"if that writer stopped, the claim becomes adoptable at "
+                f"{stale_s} s old, in {stale_s - age_s} s"
+            )
     if not taken:
         fs.rename(P(stage), target)
     claimed = fs.exists(P(f"{vdir}/{token}"))
@@ -553,7 +561,7 @@ def _claim(
         fs.delete(P(stage), True)
         raise ConcurrentMergeError(
             f"version t={nxt} under {path} was claimed by a concurrent "
-            f"writer (this write read t={nxt - 1}); re-read and retry"
+            f"writer (this write read t={nxt - 1}){held}; re-read and retry"
         )
     return token
 
@@ -1351,6 +1359,114 @@ def _retain_versions(
             # expired manifest: the version is no longer directly
             # readable, its surviving bucket dirs serve newer manifests
             fs.delete(manifest, False)
+
+
+# -- catalog: one commit pins several tables ----------------------------------
+#
+# Tables that are read together (the facade's documents, embeddings and
+# indexes; the centroid/assignment pair of an IVF index; the
+# codebook/code pair of a PQ index) are pinned by one more versioned
+# file, {root}/_catalog/t={M}/_CATALOG.json, mapping each table (a path
+# under root) to its committed version and layout. A writer publishes
+# its table versions with keep=None, then commits catalog M+1 through
+# _commit; no catalog reader sees those versions before that. A writer
+# stopped between two table commits leaves catalog M whole, and of two
+# writers that read catalog M one commits and the other raises
+# ConcurrentMergeError (the reference's multi-tree sled transaction,
+# ref:src/advanced_storage.rs:177-191). Retention follows the catalogs:
+# a table version stays while one of the two newest catalogs names it.
+
+_CATALOG = "_CATALOG.json"
+
+
+@dataclass
+class Catalog:
+    """One catalog version (0: derived for tables without one): each
+    table's committed ``(version, layout)``, the layout being ``plain``,
+    ``bucketed`` (bucket manifest) or ``flat`` (a legacy table root,
+    version 0)."""
+
+    version: int
+    tables: dict[str, tuple[int, str]]
+
+
+def read_catalog(
+    spark: SparkSession, root: str, tables: tuple[str, ...]
+) -> Catalog:
+    """The newest catalog under ``root``: one listing of
+    ``{root}/_catalog`` and one small read. Without a catalog, version
+    0: each of ``tables`` at its newest committed version in either
+    layout (both share the t=N namespace), else a legacy flat table
+    root; absent tables are left out."""
+    path = f"{root}/_catalog"
+    while vs := table_versions(spark, path):
+        body = _read_control(spark, f"{path}/t={vs[-1]}/{_CATALOG}")
+        # None: two newer commits reaped it between listing and read
+        if body is not None:
+            return Catalog(
+                vs[-1], {t: tuple(e) for t, e in body["tables"].items()}
+            )
+    out = {}
+    for table in tables:
+        p = f"{root}/{table}"
+        plain = table_versions(spark, p)
+        bucketed = _bucketed_versions(spark, p)
+        if plain or bucketed:
+            v = max(plain[-1:] + bucketed[-1:])
+            out[table] = (v, "bucketed" if v in bucketed else "plain")
+        elif table_exists(spark, p):
+            out[table] = (0, "flat")
+    return Catalog(0, out)
+
+
+def commit_catalog(
+    spark: SparkSession,
+    root: str,
+    base: Catalog,
+    tables: dict[str, tuple[int, str]],
+) -> None:
+    """Commit ``tables`` as catalog ``base.version + 1`` (nothing when
+    they equal the base's; a lost race raises ConcurrentMergeError),
+    then keep, of every table it moved and of the catalog itself, only
+    the versions the two newest catalogs reference (and newer ones:
+    writers in flight)."""
+    if tables == base.tables:
+        return
+    path, nxt = f"{root}/_catalog", base.version + 1
+
+    def stage(dest: str):
+        _write_control(spark, f"{dest}/{_CATALOG}", {"tables": tables})
+        return [_CATALOG], None
+
+    _commit(spark, path, nxt, stage, _SUCCESS)
+    _reap_abandoned(spark, path, nxt, _SUCCESS)
+    _retain_versions(spark, path, [base.version, nxt])
+    for table, entry in tables.items():
+        old = base.tables.get(table)
+        if old != entry:
+            live = [entry[0]] if old is None else [old[0], entry[0]]
+            _retain_versions(spark, f"{root}/{table}", live)
+
+
+def _entry_dir(spark: SparkSession, path: str, entry: tuple[int, str]) -> str:
+    """The directory of the table at ``path`` that a plain or flat
+    catalog ``entry`` names."""
+    v, layout = entry
+    return current_table_path(spark, path) if layout == "flat" else f"{path}/t={v}"
+
+
+def _sidecar_schema(stats: dict | None):
+    """The read schema a publish recorded in its ``_STATS.json`` (None
+    for a legacy version or a malformed sidecar): handed to
+    ``spark.read.schema``, it skips the footer-inference job."""
+    if stats is None or not stats.get("schema"):
+        return None
+    from pyspark.sql.types import StructType
+
+    try:
+        return StructType.fromJson(json.loads(stats["schema"]))
+    except Exception:
+        return None
 
 
 # ---------------------------------------------------------------------------

@@ -6,8 +6,8 @@
 2. The IVF-PQ residual lookup keys by the ACTUAL cluster id — a dense
    positional array silently subtracted the wrong/absent centroid for
    non-contiguous centroid tables (externally trained, dropped cell).
-3. save_pq_index commits the codebooks/codes version PAIR in the index
-   manifest (the save_index rule): a crash between the two publishes
+3. save_pq_index commits the codebooks/codes version PAIR in one
+   catalog version (the save_index rule): a crash between the two publishes
    must not pair new codebooks with codes encoded under the old ones.
 4. _rp_bucket_expr folds in LONG (int overflowed at n_planes >= 32
    under ANSI) and rejects widths past the 64-bit ceiling.
@@ -60,7 +60,7 @@ def test_ivfpq_residuals_with_noncontiguous_cluster_ids(spark):
 def test_save_pq_index_commits_version_pair(spark, tmpdir):
     from grape_vector_db_spark.sources.tables import (
         publish_table,
-        read_table,
+        read_catalog,
     )
 
     path = f"{tmpdir}/pqidx"
@@ -69,10 +69,10 @@ def test_save_pq_index_commits_version_pair(spark, tmpdir):
         [(1, [0]), (2, [1])], "id long, codes array<int>"
     )
     ann.save_pq_index(path, codebooks, codes)
-    man = ann._read_index_manifest(spark, path)
-    assert man is not None and set(man) == {"codebooks", "codes"}
+    cat = read_catalog(spark, path, ("codebooks", "codes"))
+    assert cat.version == 1 and set(cat.tables) == {"codebooks", "codes"}
     # simulate a crashed half-rebuild: a NEWER codes version lands but
-    # the manifest (the real commit point) was never re-written
+    # the catalog (the real commit point) was never re-written
     bogus = spark.createDataFrame([(9, [1])], "id long, codes array<int>")
     publish_table(spark, f"{path}/codes", bogus)
     _, got = ann.load_pq_index(spark, path)

@@ -172,7 +172,9 @@ def test_every_write_commits_one_catalog(spark, store):
     with pytest.MonkeyPatch.context() as mp:
         mp.setattr(T, "_commit", commit)
         _write(db, store, "add")
-    assert len(seen) == COMMITS, seen
+    # ... then exactly one catalog commit, last
+    assert len(seen) == COMMITS + 1, seen
+    assert [p.endswith("/_catalog") for p in seen].index(True) == COMMITS
     shutil.rmtree(d, ignore_errors=True)
 
 
@@ -256,7 +258,7 @@ def test_a_warm_read_lists_at_most_once(spark, store, monkeypatch):
     assert db.cache_stats["hits"] == 1
 
 
-def test_open_ivf_index_lists_each_sub_table_once(
+def test_open_ivf_index_lists_the_catalog_once(
     spark, emb, tmp_path, monkeypatch
 ):
     path = str(tmp_path / "ivf")
@@ -267,9 +269,7 @@ def test_open_ivf_index_lists_each_sub_table_once(
     ann.save_index(path, cents, assigned)
     calls = _count_listings(monkeypatch)
     ann.open_ivf_index(spark, path)
-    assert sorted(c.rsplit("/", 1)[1] for c in calls) == [
-        "assignments", "centroids"
-    ]
+    assert [c.rsplit("/", 1)[1] for c in calls] == ["_catalog"]
 
 
 def test_stats_and_learned_weights_surface_read_errors(

@@ -176,6 +176,14 @@ def test_stopped_writer_leaves_last_commit_and_next_write_succeeds(
         lay.write(spark, p, 1)
     monkeypatch.undo()
     assert glob.glob(f"{p}/t=2/._CLAIM-*")  # not adoptable while fresh
+    # ... a write meanwhile raises, naming the claim's age and when it
+    # becomes adoptable (a stopped writer is diagnosable from the error)
+    with pytest.raises(
+        T.ConcurrentMergeError,
+        match=r"no commit marker and is \d+ s old: .* adoptable at 86400 s "
+        r"old, in \d+ s",
+    ):
+        lay.write(spark, p, 1)
     readers_on([1], committed)
     # ... and is adopted once stale; the stale stage of 1) is reaped
     _age(f"{p}/t=2")

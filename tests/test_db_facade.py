@@ -11,6 +11,14 @@ from pyspark.sql import functions as F
 from grape_vector_db_spark.db import GrapeVectorDB
 
 
+def ivf_pair(db):
+    """The facade's IVF ``(centroids, assignments)`` at the pair its
+    catalog names."""
+    with db._snapshot():
+        idx = db._ivf()
+    return idx.cents, idx.assignments()
+
+
 @pytest.fixture()
 def db(spark, docs, emb):
     d = tempfile.mkdtemp(prefix="gvdb_db_")
@@ -394,7 +402,7 @@ def test_add_documents_refreshes_indexes(db, spark, docs, emb):
     db.build_index("ivf", nlist=4, max_iter=2)
     db.build_index("binary")
     db.build_index("sq")
-    cents, _ = ann.load_index(db.spark, db._path("index_ivf"))
+    cents, _ = ivf_pair(db)
 
     # batch: one UPDATED vector (id 5 gets id 77's embedding) + one new
     new_docs = spark.createDataFrame(
@@ -413,7 +421,7 @@ def test_add_documents_refreshes_indexes(db, spark, docs, emb):
     # ivf: grown index == bulk re-assignment over the merged corpus with
     # the SAME frozen centroids (compare on placement; the facade's
     # inverted-list layout also carries the vector column)
-    _, got = ann.load_index(db.spark, db._path("index_ivf"))
+    _, got = ivf_pair(db)
     want = ann.ivf_add(merged, cents)
     got = got.select("id", "cluster")
     assert got.count() == want.count()
@@ -446,9 +454,7 @@ def test_delete_cascades_to_embeddings_and_indexes(db, emb):
     assert db.embeddings().where("vec_id = 3").count() == 0
     ids = [r["vec_id"] for r in db.search(vector=qv, limit=5).collect()]
     assert 3 not in ids
-    from grape_vector_db_spark.operators import ann
-
-    _, assigned = ann.load_index(db.spark, db._path("index_ivf"))
+    _, assigned = ivf_pair(db)
     assert assigned.where("id = 3").count() == 0
     assert db._read("index_packed").where("vec_id = 3").count() == 0
 
@@ -458,12 +464,12 @@ def test_duplicate_id_batch_leaves_one_index_row_per_id(db, spark, emb):
     exactly ONE posting/encoding per id in every index, and that encoding
     must be the WINNER vector's — not a phantom row for the loser vector
     that no longer exists in the embeddings table."""
-    from grape_vector_db_spark.operators import ann, quantization
+    from grape_vector_db_spark.operators import quantization
 
     db.build_index("ivf", nlist=4, max_iter=2)
     db.build_index("binary")
     db.build_index("sq")
-    cents, _ = ann.load_index(db.spark, db._path("index_ivf"))
+    cents, _ = ivf_pair(db)
 
     dup_docs = spark.createDataFrame(
         [(5, "dup a"), (5, "dup b")], "doc_id long, text string"
@@ -476,7 +482,7 @@ def test_duplicate_id_batch_leaves_one_index_row_per_id(db, spark, emb):
 
     merged = db.embeddings()
     assert merged.where("vec_id = 5").count() == 1
-    _, assigned = ann.load_index(db.spark, db._path("index_ivf"))
+    _, assigned = ivf_pair(db)
     assert assigned.where("id = 5").count() == 1
     for table, encode in (
         ("index_packed", quantization.pack_bits),

@@ -15,6 +15,7 @@ import tempfile
 
 import pytest
 from pyspark.sql import functions as F
+from test_db_facade import ivf_pair
 
 from grape_vector_db_spark.db import GrapeVectorDB
 from grape_vector_db_spark.operators import ann
@@ -234,10 +235,10 @@ def test_facade_auto_sized_ivf_build(gdb, emb):
     """build_index('ivf') with no nlist sizes from the corpus and the
     stored index serves searches."""
     gdb.build_index("ivf")  # no nlist
-    from grape_vector_db_spark.operators.ann import ivf_autosize, load_index
+    from grape_vector_db_spark.operators.ann import ivf_autosize
 
     want_nlist, _ = ivf_autosize(emb.count())
-    cents, assigned = load_index(gdb.spark, gdb._path("index_ivf"))
+    cents, assigned = ivf_pair(gdb)
     assert cents.count() == want_nlist
     qv = list(emb.where(F.col("vec_id") == 3).head()["embedding"])
     rows = gdb.search(vector=qv, limit=5, index="ivf").collect()
@@ -330,7 +331,7 @@ def test_facade_auto_ivf_defaults_to_replicas_2(gdb, emb, spark):
     search, nprobe) respects the stored replica count."""
     gdb.build_index("ivf")  # auto-sized: replicas=2 default
     assert gdb._ivf_replicas() == 2
-    cents, assigned = ann.load_index(gdb.spark, gdb._path("index_ivf"))
+    cents, assigned = ivf_pair(gdb)
     n = gdb.embeddings().count()
     assert assigned.count() == 2 * n
     assert assigned.groupBy("id").count().where("count != 2").count() == 0
@@ -354,12 +355,12 @@ def test_facade_auto_ivf_defaults_to_replicas_2(gdb, emb, spark):
         F.lit(10**6).cast("long").alias("vec_id"), "embedding"
     )
     gdb.add_documents(new_docs, fresh)
-    _, grown = ann.load_index(gdb.spark, gdb._path("index_ivf"))
+    _, grown = ivf_pair(gdb)
     assert grown.count() == 2 * (n + 1)
     assert grown.where("id = 1000000").count() == 2
 
     # explicit-nlist builds keep replicas=1 (oracle fixtures unchanged)
     gdb.build_index("ivf", nlist=4, max_iter=2)
     assert gdb._ivf_replicas() == 1
-    _, a1 = ann.load_index(gdb.spark, gdb._path("index_ivf"))
+    _, a1 = ivf_pair(gdb)
     assert a1.groupBy("id").count().where("count != 1").count() == 0

@@ -196,8 +196,9 @@ def test_warm_ivf_search_lists_no_cells(spark, emb, sdb):
     assert len(got) == 10 and all((i, s) in want for i, s in got)
 
 
-def test_ivf_cells_skip_probed_cells_without_rows(spark, sdb):
-    idx = ann.open_ivf_index(spark, sdb._path("index_ivf"))
+def test_ivf_cells_skip_probed_cells_without_rows(sdb):
+    with sdb._snapshot():
+        idx = sdb._ivf()
     present = {r["cluster"] for r in idx.assignments().select("cluster").distinct().collect()}
     got = idx.cells([min(present), 10_000]).select("cluster").distinct().collect()
     assert [r["cluster"] for r in got] == [min(present)]
