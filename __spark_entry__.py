@@ -11242,7 +11242,7 @@ def oracle_sql() -> dict[str, str]:
             WHERE v.event_type = 'view' AND c.event_type = 'click'
               AND c.ts > v.ts AND c.ts <= v.ts + INTERVAL 10 MINUTE
         """,
-        "fim_transform": """
+        "fim_transform": r"""
             WITH t AS (
               SELECT doc_id,
                      list_filter(regexp_split_to_array(text, '[\t\n\x0B\f\r\x85\pZ]+'), w -> w != '') AS tk

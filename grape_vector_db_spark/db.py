@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .functions.text import text_match_score
+from .functions.vector import id_in
 from .operators import (
     ann,
     filters,
@@ -51,19 +52,16 @@ from .sources.tables import (
     Catalog,
     ConcurrentMergeError,
     _entry_dir,
-    _read_manifest,
+    _hadoop_fs,
     _sidecar_schema,
+    bucket_manifest_dirs,
     commit_catalog,
-    delete_ids_bucketed,
     materialized,
     merge_upsert,
-    merge_upsert_bucketed,
     publish_table,
     read_catalog,
-    read_table_bucketed,
     read_table_stats,
     table_exists,
-    write_table_bucketed,
 )
 
 # every table the catalog pins (the IVF index is two sub-tables)
@@ -318,9 +316,8 @@ class GrapeVectorDB:
     # catalog M+1; none of its versions is visible before that, and a
     # reader never pairs documents@N+1 with an index@N. A DB with no
     # catalog reads a version-0 one. Once a catalog exists, a version
-    # published straight to a facade table's path (publish_table,
-    # write_table_bucketed) is invisible to the facade: no catalog ever
-    # references it.
+    # published straight to a facade table's path (publish_table) is
+    # invisible to the facade: no catalog ever references it.
     #
     # A public read call (search/scroll/count/...) resolves the catalog
     # ONCE (_snapshot: one listing of _catalog, one small file read) and
@@ -387,14 +384,6 @@ class GrapeVectorDB:
         """The pinned version's directory of a plain or flat table."""
         return _entry_dir(self.spark, self._path(table), self._entry(table))
 
-    def _manifest(self, table: str) -> dict | None:
-        """The pinned version's bucket manifest; None unless ``table``
-        uses the bucket-manifest layout."""
-        entry = self._entry(table)
-        if entry is None or entry[1] != "bucketed":
-            return None
-        return _read_manifest(self.spark, self._path(table), entry[0])
-
     @_write_scope
     def _publish(
         self,
@@ -404,6 +393,16 @@ class GrapeVectorDB:
         partition_by: list[str] | None = None,
         extra_stats: dict | None = None,
     ) -> None:
+        entry = self._entry(table)
+        if entry is not None and entry[1] not in ("plain", "flat"):
+            # a table catalogued in the removed bucket-manifest layout:
+            # no reader can use its version dirs, and having no
+            # _SUCCESS marker they would block this publish's claim.
+            # Only they go: a concurrent rebuild's claim or commit here
+            # never holds _MANIFEST.json
+            fs, P = _hadoop_fs(self.spark, self.base)
+            for d in bucket_manifest_dirs(self.spark, self._path(table)):
+                fs.delete(P(d), True)
         version = publish_table(
             self.spark, self._path(table), df, keep=None,
             stats_exprs=stats_exprs, partition_by=partition_by,
@@ -452,7 +451,7 @@ class GrapeVectorDB:
         st = self._table_stats(table)
         if st is not None and st.get("rows") is not None:
             return int(st["rows"])
-        # legacy version, flat or bucketed table: count once per version
+        # legacy version or flat table: count once per version
         key = self._entry(table)
         cached = self._stats_cache.get(f"{table}#rows")
         if cached is not None and cached[0] == key:
@@ -526,16 +525,11 @@ class GrapeVectorDB:
         cached = self._df_cache.get(table)
         if cached is not None and cached[0] == key:
             return cached[1]
-        if key[1] == "bucketed":
-            # a bucket-manifest version dir holds only the buckets its
-            # merge touched: resolve every bucket through the manifest
-            df = read_table_bucketed(self.spark, self._path(table), key[0])
-        else:
-            schema = self._schema(table)
-            reader = self.spark.read
-            if schema is not None:
-                reader = reader.schema(schema)
-            df = reader.parquet(self._dir(table))
+        schema = self._schema(table)
+        reader = self.spark.read
+        if schema is not None:
+            reader = reader.schema(schema)
+        df = reader.parquet(self._dir(table))
         self._df_cache[table] = (key, df)
         return df
 
@@ -965,18 +959,7 @@ class GrapeVectorDB:
         # version containing only the batch — destroying the corpus two
         # GC'd publishes later.
         id_col = id_col or self.id_col
-        entry = self._entry(table)
-        if entry is not None and entry[1] == "bucketed":
-            # bucket-manifest layout: file-granular MERGE on the pinned
-            # manifest (stats_exprs: bucket-manifest merges carry no
-            # sidecar)
-            version = merge_upsert_bucketed(
-                self.spark, self._path(table), updates, id_col=id_col,
-                keep=None, version=entry[0],
-            )
-            self._stage(table, version, "bucketed")
-            return
-        if entry is not None:
+        if self._has(table):
             # add_documents already collapsed the batch to one row per id
             merged = merge_upsert(
                 self._read(table), updates, id_col=id_col, _pre_deduped=True
@@ -993,18 +976,18 @@ class GrapeVectorDB:
     @_snapshot_scope
     def get_documents(self, doc_ids: Sequence) -> list[dict]:
         """Batch point lookup (S2 over an id list): ONE pruned scan with
-        the id-set pushed to parquet (isin -> In filter + row-group
-        skipping), returned in the input order; absent ids are simply
-        missing — callers diff against their request like the reference's
-        per-id Option returns."""
+        the id-set pushed to parquet (one SQL IN expression -> In filter
+        + row-group skipping), returned in the input order; absent ids
+        are simply missing — callers diff against their request like the
+        reference's per-id Option returns."""
         if not doc_ids:
             return []
         ids = list(doc_ids)
+        docs = self.documents()
+        id_type = docs.schema[self.id_col].dataType
         got = {
             r[self.id_col]: r.asDict()
-            for r in self.documents()
-            .where(F.col(self.id_col).isin(ids))
-            .collect()
+            for r in docs.where(id_in(self.id_col, ids, id_type)).collect()
         }
         return [got[i] for i in ids if i in got]
 
@@ -1030,36 +1013,23 @@ class GrapeVectorDB:
                 F.col(self.id_col).alias("vec_id")
             )
         ) as doomed:
-            self._overwrite("documents", delete_where(docs, predicate))
+            self._publish("documents", delete_where(docs, predicate))
             if self._has("embeddings"):
-                self._overwrite(
+                self._publish(
                     "embeddings",
                     self.embeddings().join(doomed, "vec_id", "left_anti"),
                 )
             self._reindex(doomed, deleted=True)
 
-    def _overwrite(
-        self, table: str, df: DataFrame, n_buckets: int | None = None
-    ) -> None:
-        """Replace ``table`` with ``df``: a plain publish, or the
-        bucket-manifest layout when ``n_buckets`` is given or the pinned
-        version already uses it (a rewrite must not silently flatten a
-        layout that refreshes and deletes depend on)."""
-        man = self._manifest(table) or {}
-        n_buckets = n_buckets or man.get("n_buckets")
-        if not n_buckets:
-            self._publish(table, df)
-            return
-        version = write_table_bucketed(
-            self.spark, self._path(table), df, int(n_buckets),
-            id_col=man.get("id_col", "vec_id"), keep=None,
-        )
-        self._stage(table, version, "bucketed")
-
     # -- indexes ------------------------------------------------------------
 
     @_write_scope
     def build_index(self, kind: str = "ivf", **kwargs) -> None:
+        if "n_buckets" in kwargs:
+            raise ValueError(
+                "build_index(n_buckets=...) is gone: the bucket-manifest "
+                "layout was removed; every index uses the plain layout"
+            )
         emb = self.embeddings()
         if kind == "ivf":
             nlist = kwargs.get("nlist")
@@ -1096,15 +1066,11 @@ class GrapeVectorDB:
         elif kind == "binary":
             packed = quantization.pack_bits(emb, "vec_id", self.vec_col)
             # versioned swap, same as the data tables — a search running
-            # mid-rebuild reads the old or new index, never a partial one.
-            # n_buckets opts into the bucket-manifest layout: refreshes
-            # and deletes then rewrite O(touched buckets), not the whole
-            # index — the 100 TB maintenance shape (a flat per-vector
-            # index is a corpus-scale write per ingest batch)
-            self._overwrite("index_packed", packed, kwargs.get("n_buckets"))
+            # mid-rebuild reads the old or new index, never a partial one
+            self._publish("index_packed", packed)
         elif kind == "sq":
             sq = quantization.sq_quantize(emb, "vec_id", self.vec_col)
-            self._overwrite("index_sq", sq, kwargs.get("n_buckets"))
+            self._publish("index_sq", sq)
         elif kind == "graph":
             # exact kNN graph (blocked GEMM build) — the navigable
             # structure graph_beam_search walks; k is the out-degree
@@ -1128,8 +1094,8 @@ class GrapeVectorDB:
             # sidecar so route detection stays zero-job.
             #
             # Maintenance cost honesty: REFRESH rewrites the whole layout
-            # per batch (versioned swap), unlike the bucketed binary/SQ
-            # indexes' O(touched buckets). The delta-bounded evolution is
+            # per batch (versioned swap), like every facade table. The
+            # delta-bounded evolution is
             # a value-keyed manifest (rewrite only the tenants present in
             # the batch) — an UPDATE that moves a row across tenants must
             # find its OLD value, which needs an id->value map (itself
@@ -1228,9 +1194,7 @@ class GrapeVectorDB:
         Maintenance honesty (same as the partition layout): refresh
         rewrites the whole posting table per batch. The table is three
         narrow columns — orders of magnitude below the data tables — so
-        the write amplification that pushed the binary/SQ indexes to
-        bucket manifests does not bite here until extreme scale; the
-        same bucketed evolution applies if it ever does."""
+        its write amplification does not bite until extreme scale."""
         docs = self.documents()
         # schema evolution survival (ADVICE r9): a previously indexed
         # column dropped from a re-published documents table must not
@@ -1337,27 +1301,9 @@ class GrapeVectorDB:
         self, table: str, ids: DataFrame, fresh: DataFrame | None = None
     ) -> None:
         """Replace the rows of ``ids`` in a per-vector index table with
-        ``fresh`` (None just drops them) under the table's stored
-        layout. A bucket-manifest table rewrites only the buckets the
-        ids hash to (fresh rows carry every column, so the update-wins
-        merge equals drop-then-insert). A flat table is anti-joined and
+        ``fresh`` (None just drops them): the table is anti-joined and
         re-published whole, keeping its partition column and
         _layout_stats (a plain publish would flatten the layout)."""
-        v, layout = self._entry(table)
-        if layout == "bucketed":
-            path = self._path(table)
-            if fresh is None:
-                v = delete_ids_bucketed(
-                    self.spark, path, ids, id_col="vec_id", keep=None,
-                    version=v,
-                )
-            else:
-                v = merge_upsert_bucketed(
-                    self.spark, path, fresh, id_col="vec_id", keep=None,
-                    version=v,
-                )
-            self._stage(table, v, layout)
-            return
         kept = self._read(table).join(ids, "vec_id", "left_anti")
         extras = self._layout_stats(table)
         col = extras.get("partition_column")
@@ -2120,11 +2066,10 @@ class GrapeVectorDB:
             # probe reads O(page) of the corpus; the page-sized probe
             # then broadcasts into the left join
             page_ids = [r[0] for r in page.select(self.id_col).collect()]
-            emb = (
-                self.embeddings()
-                .where(F.col("vec_id").isin(page_ids))
-                .withColumnRenamed("vec_id", self.id_col)
-            )
+            emb = self.embeddings()
+            emb = emb.where(
+                id_in("vec_id", page_ids, emb.schema["vec_id"].dataType)
+            ).withColumnRenamed("vec_id", self.id_col)
             return page.join(F.broadcast(emb), keys, "left").orderBy(*order)
         # a page past the cap must NOT round-trip through the driver (a
         # multi-million-element Python list + In literal is a driver
@@ -2468,29 +2413,21 @@ class GrapeVectorDB:
         if self._has("embeddings"):
             backup_table(self.embeddings(), f"{path}/embeddings", "vec_id")
 
-        def _vector_index_entry(kind: str, table: str) -> dict:
-            # a bucketed layout restores bucketed (the rebuild must not
-            # silently flatten what refresh cost depends on)
-            man = self._manifest(table)
-            nb = {} if man is None else {"n_buckets": int(man["n_buckets"])}
-            return {"kind": kind, **nb}
-
         indexes: list[dict] = []
         if self._has("index_ivf"):
             # replay the index's ACTUAL parameters (sidecar-recorded), not
             # the auto-sized defaults — a store backed up with custom
             # nlist/replicas must restore with the same recall/cost
-            # characteristics (ADVICE r8; binary/sq preserve n_buckets and
-            # graph preserves k the same way)
+            # characteristics (ADVICE r8; graph preserves k the same way)
             entry: dict = {"kind": "ivf", "replicas": self._ivf_replicas()}
             cst = self._table_stats("index_ivf/centroids") or {}
             if cst.get("rows") is not None:
                 entry["nlist"] = int(cst["rows"])
             indexes.append(entry)
         if self._has("index_packed"):
-            indexes.append(_vector_index_entry("binary", "index_packed"))
+            indexes.append({"kind": "binary"})
         if self._has("index_sq"):
-            indexes.append(_vector_index_entry("sq", "index_sq"))
+            indexes.append({"kind": "sq"})
         if self._has("index_graph"):
             gst = self._table_stats("index_graph") or {}
             indexes.append(
@@ -2554,7 +2491,11 @@ class GrapeVectorDB:
                 stats_exprs={"dim": f"max(size({self.vec_col}))"},
             )
         for idx in manifest.get("indexes", []):
-            rest = {k: v for k, v in idx.items() if k != "kind"}
+            # n_buckets: a binary/sq entry of a backup taken before the
+            # bucket-manifest layout was removed
+            rest = {
+                k: v for k, v in idx.items() if k not in ("kind", "n_buckets")
+            }
             self.build_index(idx["kind"], **rest)
 
     @_snapshot_scope
@@ -2590,7 +2531,7 @@ class GrapeVectorDB:
             ],
             "qtype string, source string, weight double",
         )
-        self._overwrite("fusion_weights", wdf)
+        self._publish("fusion_weights", wdf)
 
     def _learned_weights(self, query_text: str) -> dict[str, float]:
         qtype = fusion.classify_query(query_text)

@@ -120,11 +120,16 @@ def doc_terms(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> 
     Scale: explode is narrow; the groupBy shuffles on (doc_id, term) with
     map-side partial aggregation. total-token counts are carried through the
     aggregation (no second pass over the text, no window over raw tokens).
+
+    ``explode_outer`` plus ``term IS NOT NULL``, not ``explode``: for an
+    inner ``explode`` Spark's InferFiltersFromGenerate adds
+    ``size(toks) > 0 AND isnotnull(toks)`` below the projection, which
+    copies the interpreted tokenizer into the plan twice more.
     """
     toked = df.select(F.col(id_col).alias("doc_id"), tokens(text_col).alias("toks"))
     exploded = toked.select(
-        "doc_id", F.size("toks").alias("n_tok"), F.explode("toks").alias("term")
-    )
+        "doc_id", F.size("toks").alias("n_tok"), F.explode_outer("toks").alias("term")
+    ).where(F.col("term").isNotNull())
     return (
         exploded.groupBy("doc_id", "term")
         .agg(F.count("*").alias("cnt"), F.first("n_tok").alias("n_tok"))

@@ -6,9 +6,13 @@ Reference semantics reproduced exactly:
 - euclidean_distance = sqrt(sum((x-y)^2)) (src/index.rs:68-79).
 
 Everything here is a Catalyst ``Column`` built from higher-order functions
-(``zip_with`` / ``aggregate`` / ``transform``), so the math runs JVM-side
-inside whole-stage codegen — no Python in the hot path, no UDF serialization,
-and Catalyst can still push filters/projections around it. All arithmetic is
+(``zip_with`` / ``aggregate`` / ``transform``), so the math runs JVM-side —
+no Python in the hot path, no UDF serialization, and Catalyst can still push
+filters/projections around it. It is not compiled, though: on Spark 4.1.2
+``ZipWith``, ``ArrayAggregate`` and ``ArrayTransform`` are
+``CodegenFallback`` expressions, so whole-stage codegen calls back into
+their interpreted ``eval`` and the lambda bodies run interpreted, per row
+and per element. All arithmetic is
 performed in DOUBLE (inputs are ``array<float>`` parquet columns; we cast
 up-front) with a strict left-to-right fold, which makes results bit-identical
 to a sequential C/DuckDB evaluation of the same formula — required for the
@@ -22,6 +26,7 @@ global TakeOrderedAndProject (see operators.search).
 from __future__ import annotations
 
 from collections.abc import Iterable
+from numbers import Integral
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -47,6 +52,51 @@ def sql_double(x: float) -> str:
     if x == float("-inf"):
         return "CAST('-Infinity' AS DOUBLE)"
     return f"{x!r}D"
+
+
+_INT_SUFFIX = {"bigint": "L", "int": "", "smallint": "S", "tinyint": "Y"}
+
+
+def id_literal(data_type):
+    """A function that spells one id of ``data_type`` as a SQL literal of
+    exactly that type — integral ids as typed digits, strings as a hex
+    binary literal cast back to STRING (no quoting or escaping of the id
+    text) — or None for a type it cannot spell. The function returns
+    None for an id whose Python type is not the column's (an int id
+    against a string column): only Spark's implicit cast compares those."""
+    from pyspark.sql.types import StringType
+
+    suffix = _INT_SUFFIX.get(data_type.simpleString())
+    if suffix is not None:
+        def spell_int(i):
+            if isinstance(i, Integral) and not isinstance(i, bool):
+                return f"{int(i)}{suffix}"
+            return None
+
+        return spell_int
+    if isinstance(data_type, StringType):
+        def spell_str(i):
+            if isinstance(i, str):
+                return f"CAST(X'{i.encode('utf-8').hex()}' AS STRING)"
+            return None
+
+        return spell_str
+    return None
+
+
+def id_in(col: str, ids: Iterable, data_type) -> Column:
+    """``col IN (ids)`` as ONE SQL expression: ``Column.isin`` makes one
+    py4j round trip per id (a literal Column each), this makes one per
+    predicate, and the pushed parquet In filter is the same. Ids that
+    :func:`id_literal` cannot spell fall back to ``isin``."""
+    ids = list(ids)
+    lit = id_literal(data_type)
+    spelled = [] if lit is None else ["NULL" if i is None else lit(i) for i in ids]
+    if lit is None or None in spelled:
+        return F.col(col).isin(ids)
+    if not ids:
+        return F.lit(False)
+    return F.expr(f"`{col}` IN ({', '.join(spelled)})")
 
 
 def array_lit_sql(values: Iterable[float]) -> str:

@@ -408,10 +408,10 @@ def ivf_add(
     KBs), so an insert batch is ONE narrow Arrow-batched numpy pass over
     the delta — no join, no shuffle, cost O(batch) and independent of
     index size. At 100 TB the posting-list append is a partition-local
-    parquet write per touched cluster (pair with bucket-manifest tables
-    for file-granular commits). Retrain (``ivf_build``) only when
-    drift accumulates — the ``optimize()`` contract
-    (ref:src/index.rs:55-56)."""
+    parquet write per touched cluster (pair with a file-granular table
+    format, such as delta segments, for commits). Retrain
+    (``ivf_build``) only when drift accumulates — the ``optimize()``
+    contract (ref:src/index.rs:55-56)."""
     cents_py = {r["cluster"]: list(r["centroid"]) for r in cents.collect()}
     src = delta.select(
         F.col(id_col).alias("id"), to_double_array(vec_col).alias("v")
@@ -426,8 +426,8 @@ def ivf_remove(assigned: DataFrame, ids: DataFrame) -> DataFrame:
     """Incremental IVF delete (``VectorIndex::remove_vector``,
     ref:src/index.rs:46-47): drop the given ids' posting-list rows. A
     broadcast anti-join — the id batch is small by construction, the
-    posting lists never shuffle; pair with bucket-manifest tables so
-    only touched posting files rewrite."""
+    posting lists never shuffle; pair with a file-granular table format
+    so only touched posting files rewrite."""
     dcol = ids.columns[0]
     return assigned.join(
         F.broadcast(ids.select(F.col(dcol).alias("id"))), "id", "left_anti"
@@ -2023,21 +2023,18 @@ def _rank_key(item):
 def _local_scores(spark, rows, id_col: str, id_type) -> DataFrame:
     """``(id_col, score)`` rows held on the driver as a VALUES relation:
     a LocalTableScan keeps the rows' order, and reading it runs no Spark
-    job (id types other than integral or string fall back to
+    job (ids that :func:`id_literal` cannot spell fall back to
     createDataFrame)."""
-    from pyspark.sql.types import IntegralType, StringType
-
-    from ..functions.vector import sql_double
+    from ..functions.vector import id_literal, sql_double
 
     t = id_type.simpleString()
-    if isinstance(id_type, IntegralType):
-        lit = str
-    elif isinstance(id_type, StringType):
-        # hex binary literal: no quoting or escaping of the id text
-        lit = lambda i: f"X'{i.encode('utf-8').hex()}'"  # noqa: E731
-    else:
+    lit = id_literal(id_type)
+    spelled = [] if lit is None else [lit(i) for i, _ in rows]
+    if lit is None or None in spelled:
         return spark.createDataFrame(rows, f"`{id_col}` {t}, score double")
-    vals = ", ".join(f"({lit(i)}, {sql_double(s)})" for i, s in rows)
+    vals = ", ".join(
+        f"({i}, {sql_double(s)})" for i, (_, s) in zip(spelled, rows)
+    )
     out = spark.sql(
         f"SELECT CAST(col1 AS {t}) AS `{id_col}`, CAST(col2 AS DOUBLE) AS score"
         f" FROM VALUES {vals or '(NULL, NULL)'}"
@@ -2092,7 +2089,7 @@ def graph_beam_search(
     it holds at most ``beam + hops * beam * out_degree`` entries, so its
     size never depends on the corpus. Each hop is ONE single-stage
     collect: the hop's new ids (<= beam * out_degree) are scored and
-    their out-edges fetched together, as two pushed ``isin`` scans
+    their out-edges fetched together, as two pushed ``IN`` scans
     joined by a union (bucketed by id/src at 100 TB, each is a
     co-located point lookup). The frontier cut runs on the driver in
     Spark's ordering (score descending, NaN greatest, then id
@@ -2106,13 +2103,17 @@ def graph_beam_search(
 
     The gates run on the driver too: ``result_filter`` is evaluated in
     the scoring scan, and ``result_ids_df`` is probed once for the
-    visited ids (one pushed ``isin`` collect). The result is the top
+    visited ids (one pushed ``IN`` collect). Each ``IN`` list is one SQL
+    expression (:func:`~..functions.vector.id_in`), not one py4j literal
+    per id. The result is the top
     ``k`` passing rows as a driver-local relation in result order, so
     reading it runs no job.
     """
     if beam < 1 or hops < 0 or k < 1:
         raise ValueError("beam, k must be >= 1; hops >= 0")
     from pyspark.sql.types import StringType
+
+    from ..functions.vector import id_in
 
     spark = emb.sparkSession
     id_type = emb.schema[id_col].dataType
@@ -2142,9 +2143,9 @@ def graph_beam_search(
     dangling: set = set()
 
     def fetch(ids: list, with_edges: bool) -> None:
-        part = scored.where(F.col("id").isin(ids))
+        part = scored.where(id_in("id", ids, id_type))
         if with_edges:
-            part = part.unionByName(out_edges.where(F.col("id").isin(ids)))
+            part = part.unionByName(out_edges.where(id_in("id", ids, id_type)))
         for r in part.collect():
             if not r["_edge"]:
                 visited[r["id"]] = r["score"]
@@ -2176,11 +2177,12 @@ def graph_beam_search(
         # the passing-id set comes from OUTSIDE the vector table (a
         # metadata filter on a documents table the walk never reads) —
         # the facade's filtered-search route
+        probe = result_ids_df.select(id_col)
         passing &= {
             r[0]
-            for r in result_ids_df.select(id_col)
-            .where(F.col(id_col).isin(list(passing)))
-            .collect()
+            for r in probe.where(
+                id_in(id_col, passing, probe.schema[id_col].dataType)
+            ).collect()
         }
     # gate BEFORE the cut: gating the top-k would under-fill
     top = heapq.nsmallest(

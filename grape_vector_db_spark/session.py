@@ -71,6 +71,16 @@ def _default_driver_mem() -> str:
     return f"{max(4, min(24, half_gb))}g"
 
 
+# Spark's codegen cache (spark.sql.codegen.cache.maxEntries, default
+# 100) holds the compiled Janino classes, keyed by generated source. The
+# facade benchmark's set-up plus two cycles compile 269 distinct classes
+# (facade_serve) and 176 (facade_ingest), measured with an unbounded
+# cache by tools/cpu_split.py; at 100 entries a warm serve cycle evicted
+# and recompiled ~135 of them. 1000 covers both working sets with room;
+# an entry is one loaded class, KBs of driver heap.
+CODEGEN_CACHE_ENTRIES = 1000
+
+
 def get_spark(
     app_name: str = "grape-vector-db-spark",
     master: str | None = None,
@@ -111,5 +121,6 @@ def get_spark(
         # the driver's events table is written with nanosecond timestamps;
         # read them as long (we convert to TIMESTAMP at the loader)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     return builder.getOrCreate()

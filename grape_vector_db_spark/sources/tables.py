@@ -232,12 +232,23 @@ def _check_format(spark: SparkSession, path: str, fmt: str) -> None:
             f"{path} holds a Delta table (_delta_log present); pass "
             "fmt='delta' — parquet mode would fork the data outside the log"
         )
-    if fmt == "delta" and not has_log and table_exists(spark, path):
+    if fmt == "delta" and not has_log and _existing_table(spark, path):
         raise ValueError(
             f"{path} holds a non-Delta table; migrate it explicitly "
             "(read + full delta write) before using fmt='delta' — a MERGE "
             "here would seed a delta log containing only the batch"
         )
+
+
+def _existing_table(spark: SparkSession, path: str) -> bool:
+    """:func:`table_exists` for a MERGE's first-write branch: a table of
+    the removed bucket-manifest layout raises instead of reading as
+    absent, where the batch alone would be published as the table."""
+    if table_exists(spark, path):
+        return True
+    if bucket_manifest_dirs(spark, path):
+        raise ValueError(_bucket_manifest_error(path))
+    return False
 
 
 def upsert_table(
@@ -252,9 +263,7 @@ def upsert_table(
     preserve the existing value — identical semantics in both formats.
 
     fmt="parquet": read + :func:`merge_upsert` + :func:`publish_table`
-    (atomic versioned swap; O(table) rewrite per call) — UNLESS the path
-    holds a bucket-manifest table (:func:`write_table_bucketed`), which
-    routes to the bucket-scoped MERGE that rewrites only touched buckets.
+    (atomic versioned swap; O(table) rewrite per call).
     fmt="delta": native ``MERGE INTO`` — only files containing matched
     ids rewrite, the scale shape for frequent small merges.
 
@@ -264,10 +273,7 @@ def upsert_table(
     deletes the corpus); with the probe the error propagates."""
     if fmt == "parquet":
         _check_format(spark, path, fmt)
-        if _bucketed_versions(spark, path):
-            merge_upsert_bucketed(spark, path, updates, id_col=id_col, keep=keep)
-            return
-        if table_exists(spark, path):
+        if _existing_table(spark, path):
             merged = merge_upsert(read_table(spark, path), updates, id_col=id_col)
         else:
             merged = updates
@@ -342,17 +348,17 @@ def exists(df: DataFrame, id_value, id_col: str = "id") -> bool:
 
 # -- versioned table layout (staged, single-winner commit) -------------------
 #
-# Every mutating write, in either layout, publishes a NEW directory
-# {path}/t={N+1} through one commit (:func:`_commit`): stage, CAS-claim,
-# re-check, then the layout's marker (_SUCCESS beside a plain table's
-# staged _STATS.json, or the bucket manifest). A version is visible iff
-# its marker exists, so readers see the old or the new version, never a
-# partial one or one without its stats; writers that read the same t=N
-# race to ONE winner, each loser raising ConcurrentMergeError having
-# published nothing (the reference's two-tree sled transaction,
-# src/advanced_storage.rs:145-191). The last ``keep`` versions survive GC
-# for in-flight readers. Filesystem ops go through the Hadoop FileSystem
-# API (HDFS/object stores; on the latter the staged rename is a copy).
+# Every mutating write publishes a NEW directory {path}/t={N+1} through
+# one commit (:func:`_commit`): stage, CAS-claim, re-check, then the
+# _SUCCESS marker beside the staged files (a table's _STATS.json, a
+# catalog's _CATALOG.json). A version is visible iff its marker exists,
+# so readers see the old or the new version, never a partial one or one
+# without its stats; writers that read the same t=N race to ONE winner,
+# each loser raising ConcurrentMergeError having published nothing (the
+# reference's two-tree sled transaction, src/advanced_storage.rs:145-191).
+# The last ``keep`` versions survive GC for in-flight readers. Filesystem
+# ops go through the Hadoop FileSystem API (HDFS/object stores; on the
+# latter the staged rename is a copy).
 
 _SUCCESS = "_SUCCESS"
 
@@ -406,7 +412,7 @@ def _hadoop_fs(spark: SparkSession, path: str):
 
 
 def _write_control(spark: SparkSession, file_path: str, body: dict) -> None:
-    """Write a small JSON control file (bucket / index / backup manifest)
+    """Write a small JSON control file (catalog / backup manifest)
     by temp write + rename, so a reader never sees a torn file. A failed
     rename raises: a manifest that did not land is no commit."""
     fs, P = _hadoop_fs(spark, file_path)
@@ -460,44 +466,40 @@ def _read_control(spark: SparkSession, file_path: str) -> dict | None:
     return json.loads(text)
 
 
-def _commit(spark: SparkSession, path: str, nxt: int, stage_write, marker: str) -> None:
+def _commit(spark: SparkSession, path: str, nxt: int, stage_write) -> None:
     """Publish version ``t={nxt}`` of the table at ``path`` — the one
     commit protocol of every versioned writer:
 
     1. ``stage_write(stage)`` writes the version's files into a
-       writer-unique dot-dir and returns ``(parts, body)``: the entries
-       that must arrive with the claim, and the ``marker``'s JSON body
-       (None: an empty marker, whose create lands it whole);
+       writer-unique dot-dir and returns the entries that must arrive
+       with the claim;
     2. :func:`_claim` renames the stage onto ``t={nxt}``;
     3. a committed version at or past ``nxt`` means a stale snapshot
        (retention can GC the contended dir before our rename, so the
        rename alone would succeed): abort;
-    4. the marker is written — the commit point.
+    4. the empty ``_SUCCESS`` marker is created — the commit point.
 
     A failure after the claim releases it, so the next writer can take
     the version at once; a killed writer's claim is adopted once stale."""
     fs, P = _hadoop_fs(spark, path)
     stage = f"{path}/.stage-t{nxt}-{uuid.uuid4().hex[:8]}"
     try:
-        parts, body = stage_write(stage)
+        parts = stage_write(stage)
     except Exception:
         fs.delete(P(stage), True)
         raise
-    token = _claim(spark, path, stage, nxt, marker, parts)
+    token = _claim(spark, path, stage, nxt, parts)
     target = f"{path}/t={nxt}"
     try:
-        latest = _versions_with_marker(spark, path, marker)
+        latest = _versions_with_marker(spark, path)
         if latest and latest[-1] >= nxt:
             raise ConcurrentMergeError(
                 f"version t={latest[-1]} committed under {path} while this "
                 f"write (based on t={nxt - 1}) was in flight; re-read and retry"
             )
-        if body is None:
-            fs.create(P(f"{target}/{marker}"), True).close()
-        else:
-            _write_control(spark, f"{target}/{marker}", body)
+        fs.create(P(f"{target}/{_SUCCESS}"), True).close()
     except Exception:
-        if not fs.exists(P(f"{target}/{marker}")):
+        if not fs.exists(P(f"{target}/{_SUCCESS}")):
             fs.delete(P(target), True)  # ours by token, never committed
         raise
     fs.delete(P(f"{target}/{token}"), False)
@@ -508,7 +510,6 @@ def _claim(
     path: str,
     stage: str,
     nxt: int,
-    marker: str,
     parts: list[str],
 ) -> str:
     """CAS-claim ``t={nxt}`` by renaming ``stage`` onto it (the one claim
@@ -535,7 +536,7 @@ def _claim(
     target = P(vdir)
     taken = fs.exists(target)
     held = ""  # why a marker-less claim still blocks this write
-    if taken and not fs.exists(P(f"{vdir}/{marker}")):
+    if taken and not fs.exists(P(f"{vdir}/{_SUCCESS}")):
         now_ms = int(time.time() * 1000)
         age_ms = now_ms - fs.getFileStatus(target).getModificationTime()
         if age_ms > _STALE_CLAIM_MS or not fs.listStatus(target):
@@ -566,9 +567,9 @@ def _claim(
     return token
 
 
-def _reap_abandoned(spark: SparkSession, path: str, newest: int, marker: str) -> None:
-    """Both layouts' GC of crashed writers' leftovers: stage dot-dirs,
-    and claims past the ``newest`` commit without a ``marker``, once
+def _reap_abandoned(spark: SparkSession, path: str, newest: int) -> None:
+    """GC of crashed writers' leftovers: stage dot-dirs, and claims past
+    the ``newest`` commit without a ``_SUCCESS`` marker, once
     older than ``_STALE_CLAIM_MS`` (the age keeps a live writer's safe)."""
     fs, P = _hadoop_fs(spark, path)
     cutoff_ms = int(time.time() * 1000) - _STALE_CLAIM_MS
@@ -579,7 +580,7 @@ def _reap_abandoned(spark: SparkSession, path: str, newest: int, marker: str) ->
         if (
             (stage or claim)
             and st.getModificationTime() < cutoff_ms
-            and (stage or not fs.exists(P(st.getPath(), marker)))
+            and (stage or not fs.exists(P(st.getPath(), _SUCCESS)))
         ):
             fs.delete(st.getPath(), True)
 
@@ -587,12 +588,9 @@ def _reap_abandoned(spark: SparkSession, path: str, newest: int, marker: str) ->
 _GLOB_SPECIALS = set("*?[]{}\\")
 
 
-def _versions_with_marker(
-    spark: SparkSession, path: str, marker: str
-) -> list[int]:
-    """t=N version dirs under ``path`` whose ``marker`` file exists —
-    the ONE t=N scan behind both layouts' listings (plain: _SUCCESS;
-    bucket-manifest: the manifest rename is the commit point).
+def _versions_with_marker(spark: SparkSession, path: str) -> list[int]:
+    """t=N version dirs under ``path`` whose ``_SUCCESS`` marker exists
+    — the ONE t=N scan behind every listing.
 
     Resolved with a single ``globStatus`` on the marker files: the old
     listStatus + one exists() per t= dir was 2+N py4j/filesystem round
@@ -602,7 +600,7 @@ def _versions_with_marker(
     containing glob metacharacters fall back to the exact loop."""
     fs, P = _hadoop_fs(spark, path)
     if not any(c in _GLOB_SPECIALS for c in path):
-        stats = fs.globStatus(P(f"{path}/t=*/{marker}")) or []
+        stats = fs.globStatus(P(f"{path}/t=*/{_SUCCESS}")) or []
         names = [st.getPath().getParent().getName() for st in stats]
         return sorted(int(n[2:]) for n in names if _is_version_dir_name(n))
     if not fs.exists(P(path)):
@@ -612,13 +610,13 @@ def _versions_with_marker(
         for st in fs.listStatus(P(path))
         if st.isDirectory()
         and _is_version_dir_name(st.getPath().getName())
-        and fs.exists(P(st.getPath(), marker))
+        and fs.exists(P(st.getPath(), _SUCCESS))
     )
 
 
 def table_versions(spark: SparkSession, path: str) -> list[int]:
     """Committed (i.e. _SUCCESS-marked) version numbers under ``path``."""
-    return _versions_with_marker(spark, path, _SUCCESS)
+    return _versions_with_marker(spark, path)
 
 
 def current_table_path(spark: SparkSession, path: str) -> str:
@@ -641,12 +639,6 @@ def current_table_path(spark: SparkSession, path: str) -> str:
 
 
 def read_table(spark: SparkSession, path: str) -> DataFrame:
-    if _bucketed_versions(spark, path):
-        # a bucket-manifest version dir holds only the buckets touched by
-        # its merge — reading it raw would silently drop every other row
-        raise ValueError(
-            f"{path} holds a bucket-manifest table; use read_table_bucketed"
-        )
     return spark.read.parquet(current_table_path(spark, path))
 
 
@@ -761,11 +753,6 @@ def publish_table(
     values (e.g. an IVF layout's ``replicas``). Returns the committed
     version; ``keep=None`` leaves retention to the caller (the facade's
     catalog, which knows which versions are still referenced)."""
-    if _bucketed_versions(spark, path):
-        raise ValueError(
-            f"{path} holds a bucket-manifest table; use "
-            "merge_upsert_bucketed / write_table_bucketed"
-        )
     from pyspark.sql import Observation
 
     vs = table_versions(spark, path)
@@ -790,10 +777,10 @@ def publish_table(
             P(f"{dest}/{_STATS_FILE}"),
             {**obs.get, **(extra_stats or {}), "schema": df.schema.json()},
         )
-        return [_STATS_FILE], None
+        return [_STATS_FILE]
 
-    _commit(spark, path, nxt, stage, _SUCCESS)
-    _reap_abandoned(spark, path, nxt, _SUCCESS)
+    _commit(spark, path, nxt, stage)
+    _reap_abandoned(spark, path, nxt)
     if keep is not None:
         for old in vs[: -(keep - 1)] if keep > 1 else vs:
             fs.delete(P(f"{path}/t={old}"), True)
@@ -945,420 +932,22 @@ def drop_bucketed(spark: SparkSession, table_name: str) -> None:
     spark.sql(f"DROP TABLE IF EXISTS {table_name}")
 
 
-# ---------------------------------------------------------------------------
-# bucket-manifest tables — file-granular MERGE on plain parquet
-#
-# The versioned-swap layout above rewrites O(table) per merge; Delta's
-# native MERGE is file-granular but delta-spark may be absent. This layout
-# makes the parquet path sub-O(table): data lives in per-bucket directories
-# {path}/t={N}/b={K} (bucket K = pmod(xxhash64(id), n_buckets), the same
-# placement hash as :func:`bucket_by_id`), and each version's
-# ``_MANIFEST.json`` maps every bucket to the VERSION DIRECTORY that owns
-# its current files. A merge rewrites ONLY the buckets containing touched
-# ids into t={N+1} and re-points just those manifest entries — untouched
-# bucket files are not read, copied, or rewritten (byte-identical across
-# the merge), so merge cost is O(touched buckets), not O(table). The
-# manifest (≤ n_buckets small entries) is this layout's marker in the
-# shared commit protocol (:func:`_commit`): creates, merges and deletes
-# stage their bucket dirs, claim t={N+1}, and commit by writing the
-# manifest, so readers resolving the newest manifest see the old or the
-# new table, never a half-merge, and concurrent writers race to one
-# winner. Maps the reference's two-tree transactional storage intent
-# (ref:src/advanced_storage.rs:145-191) onto plain parquet.
-
-_MANIFEST = "_MANIFEST.json"
-
-
-def _bucketed_versions(spark: SparkSession, path: str) -> list[int]:
-    """Committed version numbers: a version exists iff its manifest does
-    (the manifest write is this layout's commit point)."""
-    return _versions_with_marker(spark, path, _MANIFEST)
-
-
-def _read_manifest(spark: SparkSession, path: str, version: int) -> dict:
-    return _read_control(spark, f"{path}/t={version}/{_MANIFEST}")
-
-
-def _bucket_dirs_in(spark: SparkSession, version_dir: str) -> list[int]:
-    fs, P = _hadoop_fs(spark, version_dir)
-    out = []
-    for st in fs.listStatus(P(version_dir)):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith("b="):
-            out.append(int(name[2:]))
-    return sorted(out)
-
-
-def _bucket_expr(id_col: str, n_buckets: int):
-    """The placement hash — MUST stay identical to :func:`bucket_by_id`
-    so in-memory bucketing and the persistent layout agree."""
-    return F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_buckets)).cast("int")
-
-
-def _write_bucket_dirs(df: DataFrame, id_col: str, n_buckets: int, dest: str) -> None:
-    """One job: rows gain their bucket as BOTH a data column (``bucket``,
-    so reads of leaf dirs keep it without partition inference) and a
-    partition directory (``b=K``). ``dest`` is a commit stage."""
-    (
-        df.withColumn("bucket", _bucket_expr(id_col, n_buckets))
-        .withColumn("b", F.col("bucket"))
-        .repartition(n_buckets, F.col("bucket"))
-        .write.option(_NO_SUCCESS_FILE, "false")
-        .partitionBy("b")
-        .parquet(dest)
-    )
-
-
-def write_table_bucketed(
-    spark: SparkSession,
-    path: str,
-    df: DataFrame,
-    n_buckets: int,
-    id_col: str = "id",
-    keep: int | None = 2,
-) -> int:
-    """Create (or fully replace) a bucket-manifest table from ``df``;
-    returns the committed version.
-
-    A path holding a PLAIN versioned table migrates in place: the new
-    bucketed version numbers past BOTH layouts' committed versions
-    (numbering off the bucketed listing alone would compute an nxt that
-    OVERWRITES a committed plain t=N — the detectable-fork data loss
-    _check_format exists to prevent), and the bucketed GC leaves
-    _SUCCESS-committed flat dirs untouched (see _bucketed_gc)."""
-    if "bucket" in df.columns:
-        df = df.drop("bucket")
-    vs = _bucketed_versions(spark, path)
-    plain = table_versions(spark, path)
-    nxt = max(vs[-1] if vs else 0, plain[-1] if plain else 0) + 1
-
-    def stage(dest: str):
-        _write_bucket_dirs(df, id_col, n_buckets, dest)
-        ks = _bucket_dirs_in(spark, dest)
-        return [f"b={k}" for k in ks], {
-            "n_buckets": n_buckets,
-            "id_col": id_col,
-            "buckets": {str(k): nxt for k in ks},
-            "schema": _bucketed_read_schema(df),
-        }
-
-    _commit(spark, path, nxt, stage, _MANIFEST)
-    _bucketed_gc(spark, path, keep)
-    return nxt
-
-
-def _bucketed_read_schema(df: DataFrame) -> dict:
-    """JSON schema of what read_table_bucketed returns for this data:
-    the data columns plus the ``bucket`` placement column the leaf files
-    carry. Recorded in the manifest so a FULLY-EMPTIED table (every
-    bucket deleted) still reads back as an empty DataFrame with the real
-    schema instead of a single NullType id column."""
-    import json
-
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    fields = [f for f in df.schema.fields if f.name != "bucket"]
-    full = StructType(fields + [StructField("bucket", IntegerType(), True)])
-    return json.loads(full.json())
-
-
-def read_table_bucketed(
-    spark: SparkSession, path: str, version: int | None = None
-) -> DataFrame:
-    """Resolve the manifest (newest committed version by default; an
-    explicit ``version`` is read without listing) and read exactly the
-    bucket directories it references — leaf dirs are passed explicitly,
-    so no partition inference runs and the data column ``bucket``
-    carries placement."""
-    if version is None:
-        vs = _bucketed_versions(spark, path)
-        if not vs:
-            raise ValueError(f"no committed bucket-manifest table under {path}")
-        version = vs[-1]
-    man = _read_manifest(spark, path, version)
-    if man is None:
-        raise ValueError(f"version {version} not committed under {path}")
-    if not man["buckets"]:
-        if man.get("schema"):
-            # fully-emptied table: an empty frame with the REAL schema
-            # (recorded at write time), so downstream column selects
-            # and unions keep resolving
-            from pyspark.sql.types import StructType
-
-            return spark.createDataFrame(
-                [], StructType.fromJson(man["schema"])
-            )
-        # legacy manifest without a recorded schema
-        return spark.range(0).select(F.lit(None).alias(man["id_col"]))
-    return _read_buckets(spark, path, man, sorted(man["buckets"]))
-
-
-def _read_buckets(
-    spark: SparkSession, path: str, man: dict, keys: list
-) -> DataFrame:
-    """Read the bucket dirs ``keys`` as manifest ``man`` maps them. The
-    manifest's recorded read schema is handed to the reader, so no
-    footer inference runs; a legacy manifest without one infers it."""
-    dirs = [f"{path}/t={man['buckets'][str(k)]}/b={k}" for k in keys]
-    reader = spark.read
-    if man.get("schema"):
-        from pyspark.sql.types import StructType
-
-        reader = reader.schema(StructType.fromJson(man["schema"]))
-    return reader.parquet(*dirs)
-
-
-def _bucketed_head(
-    spark: SparkSession, path: str, id_col: str, version: int | None
-):
-    """``(base manifest, n_buckets, next version)`` of the bucket-manifest
-    table a merge or delete builds on: committed ``version`` (the newest
-    by default); raises when there is none or it is bucketed by another
-    column. The next version is the newest committed one + 1."""
-    vs = _bucketed_versions(spark, path)
-    if not vs:
-        raise ValueError(
-            f"no bucket-manifest table under {path}; create with "
-            "write_table_bucketed first"
-        )
-    man = _read_manifest(spark, path, vs[-1] if version is None else version)
-    if man is None:
-        raise ValueError(f"version {version} not committed under {path}")
-    if man["id_col"] != id_col:
-        raise ValueError(
-            f"table under {path} is bucketed by {man['id_col']!r}, not {id_col!r}"
-        )
-    return man, int(man["n_buckets"]), vs[-1] + 1
-
-
-def merge_upsert_bucketed(
-    spark: SparkSession,
-    path: str,
-    updates: DataFrame,
-    id_col: str = "id",
-    keep: int | None = 2,
-    version: int | None = None,
-) -> int:
-    """Bucket-scoped MERGE: same row semantics as :func:`merge_upsert`
-    (update wins per id, null update fields preserve existing, duplicate
-    update ids pre-collapse), but only the buckets whose ids appear in
-    ``updates`` are read and rewritten. Cost is O(touched buckets +
-    updates), not O(table) — the 100 TB merge shape on plain parquet.
-    The merge builds on manifest ``version`` (the newest by default)
-    and returns the version it committed (``version`` for an empty
-    batch).
-
-    Concurrency: SINGLE-WINNER (:func:`_commit`). Of two writers that
-    both read manifest t=N exactly one survives; the other raises
-    :class:`ConcurrentMergeError` without publishing anything."""
-    man, nb, nxt = _bucketed_head(spark, path, id_col, version)
-    if "bucket" in updates.columns:
-        updates = updates.drop("bucket")
-    upd = _dedup_updates(updates, id_col).withColumn(
-        "bucket", _bucket_expr(id_col, nb)
-    ).persist()
-    try:
-        # the touched-bucket list is bounded by n_buckets ints — a driver
-        # artifact the size of the shard map, not the data
-        touched = sorted(
-            r["bucket"] for r in upd.select("bucket").distinct().collect()
-        )
-        if not touched:
-            return version
-        held = [k for k in touched if str(k) in man["buckets"]]
-        if held:
-            existing = _read_buckets(spark, path, man, held)
-            # _pre_deduped: upd already collapsed above — merge_upsert's
-            # own dedup window (a second full shuffle+sort of the batch)
-            # can never remove a row here
-            merged = merge_upsert(
-                existing, upd, id_col=id_col, _pre_deduped=True
-            )
-        else:
-            merged = upd
-        return _cas_commit_touched(
-            spark, path, man, nxt, touched, merged.drop("bucket"), id_col,
-            nb, keep,
-        )
-    finally:
-        # without the finally, every ConcurrentMergeError (a DESIGNED
-        # path — the facade's write loop retries it) leaked one persisted
-        # copy of the update batch per attempt
-        upd.unpersist()
-
-
-def _cas_commit_touched(
-    spark: SparkSession,
-    path: str,
-    man: dict,
-    nxt: int,
-    touched: list[int],
-    rows_df: DataFrame,
-    id_col: str,
-    nb: int,
-    keep: int | None,
-    drop_buckets: frozenset[int] = frozenset(),
-) -> int:
-    """The bucket-manifest commit shared by bucketed MERGE and DELETE:
-    stage ``rows_df`` (the full new contents of the touched buckets) and
-    commit the re-pointed manifest through :func:`_commit` as ``t={nxt}``.
-    ``drop_buckets`` (delete only) are touched buckets a delete EMPTIED —
-    they leave the manifest map entirely (their old dirs age out via GC)
-    and need not arrive with the claim, since an empty bucket
-    materializes no directory. Every other touched bucket must hold >= 1
-    row in ``rows_df`` — for MERGE by construction (each touched bucket
-    holds an update row), for DELETE because a non-emptied bucket keeps
-    its survivors."""
-    materialized = [k for k in touched if k not in drop_buckets]
-    buckets = {**man["buckets"], **{str(k): nxt for k in materialized}}
-    for k in drop_buckets:
-        buckets.pop(str(k), None)
-    new_man = {
-        "n_buckets": nb,
-        "id_col": id_col,
-        "buckets": buckets,
-        # carry the recorded read schema forward (backfill from this
-        # merge's rows for tables created before it was recorded)
-        "schema": man.get("schema") or _bucketed_read_schema(rows_df),
-    }
-
-    def stage(dest: str):
-        _write_bucket_dirs(rows_df, id_col, nb, dest)
-        return [f"b={k}" for k in materialized], new_man
-
-    _commit(spark, path, nxt, stage, _MANIFEST)
-    _bucketed_gc(spark, path, keep)
-    return nxt
-
-
-def delete_ids_bucketed(
-    spark: SparkSession,
-    path: str,
-    ids: DataFrame,
-    id_col: str = "id",
-    keep: int | None = 2,
-    version: int | None = None,
-) -> int:
-    """Bucket-scoped DELETE: drop every row whose id appears in ``ids``,
-    reading and rewriting ONLY the buckets those ids hash to — the MERGE
-    cost model applied to deletion (O(touched buckets + ids), not
-    O(table)). Shares :func:`merge_upsert_bucketed`'s single-winner CAS
-    commit, so a concurrent merge and delete race to exactly one
-    survivor and the loser raises :class:`ConcurrentMergeError` having
-    published nothing. A bucket whose rows ALL die leaves the manifest
-    map entirely (an empty bucket materializes no directory; its old dir
-    ages out via GC). Ids absent from the table are no-ops — buckets
-    holding none of the doomed ids are never read. Like the merge, it
-    builds on manifest ``version`` (the newest by default) and returns
-    the version it committed."""
-    man, nb, nxt = _bucketed_head(spark, path, id_col, version)
-    doomed = (
-        ids.select(F.col(id_col)).distinct()
-        .withColumn("bucket", _bucket_expr(id_col, nb))
-        .persist()
-    )
-    kept = None
-    try:
-        # bounded by n_buckets ints, and only buckets the manifest
-        # actually holds — ids hashing to never-written buckets are
-        # no-ops
-        touched = sorted(
-            r["bucket"]
-            for r in doomed.select("bucket").distinct().collect()
-            if str(r["bucket"]) in man["buckets"]
-        )
-        if not touched:
-            return version
-        existing = _read_buckets(spark, path, man, touched)
-        # no broadcast hint: the doomed-id set is caller-sized, not
-        # bounded — an explicit hint bypasses the autoBroadcast
-        # threshold and a corpus-scale delete would die on the
-        # broadcast limit / driver OOM; AQE broadcasts small id sets
-        # from runtime sizes on its own and shuffles big ones
-        kept = (
-            existing.join(doomed.select(id_col), id_col, "left_anti")
-            .drop("bucket")
-            .withColumn("bucket", _bucket_expr(id_col, nb))
-            .persist()
-        )
-        # which touched buckets still hold rows (bounded driver
-        # artifact — the emptied ones leave the manifest instead of
-        # staging a dir). kept is persisted: this collect and the
-        # staged write inside _cas_commit_touched both consume it, and
-        # uncached the O(touched buckets) anti-join ran twice per
-        # delete
-        remaining = {
-            r["bucket"] for r in kept.select("bucket").distinct().collect()
-        }
-        drop = frozenset(k for k in touched if k not in remaining)
-        return _cas_commit_touched(
-            spark, path, man, nxt, touched, kept.drop("bucket"), id_col, nb,
-            keep, drop_buckets=drop,
-        )
-    finally:
-        if kept is not None:
-            kept.unpersist()
-        doomed.unpersist()
-
-
-def _bucketed_gc(spark: SparkSession, path: str, keep: int | None) -> None:
-    """Retention: the last ``keep`` manifests stay readable (time travel
-    / in-flight readers), with every bucket dir they reference
-    (:func:`_retain_versions`); ``keep=None`` leaves it to the caller."""
-    if keep is None:
-        return
-    vs = _bucketed_versions(spark, path)
-    live = vs[-keep:] if keep > 0 else vs[-1:]
-    _reap_abandoned(spark, path, max(live, default=0), _MANIFEST)
-    _retain_versions(spark, path, live, plain_too=False)
-
-
-def _retain_versions(
-    spark: SparkSession, path: str, live: list[int], plain_too: bool = True
-) -> None:
-    """Reference-counted retention in either layout: every version dir
-    below the oldest ``live`` one is deleted, except the bucket dirs a
-    live manifest maps (that version only loses its manifest). Versions
-    at or above it are live or a writer in flight builds on them.
-    ``plain_too=False`` spares _SUCCESS-committed plain versions (an
-    in-place migration leaves them beside the manifests)."""
+def _retain_versions(spark: SparkSession, path: str, live: list[int]) -> None:
+    """Retention: every version dir below the oldest ``live`` one is
+    deleted. Versions at or above it are live or a writer in flight
+    builds on them."""
     if not live:
         return
     fs, P = _hadoop_fs(spark, path)
     floor = min(live)
-    referenced = set()
-    for v in live:
-        man = _read_control(spark, f"{path}/t={v}/{_MANIFEST}") or {}
-        for k, owner in man.get("buckets", {}).items():
-            referenced.add((int(owner), int(k)))
     for st in fs.listStatus(P(path)):
         name = st.getPath().getName()
-        if not (st.isDirectory() and _is_version_dir_name(name)):
-            continue
-        v = int(name[2:])
-        if v >= floor:
-            continue
-        manifest = P(st.getPath(), _MANIFEST)
         if (
-            not plain_too
-            and fs.exists(P(st.getPath(), _SUCCESS))
-            and not fs.exists(manifest)
+            st.isDirectory()
+            and _is_version_dir_name(name)
+            and int(name[2:]) < floor
         ):
-            continue
-        empty = True
-        for sub in fs.listStatus(st.getPath()):
-            sname = sub.getPath().getName()
-            if sub.isDirectory() and sname.startswith("b="):
-                if (v, int(sname[2:])) in referenced:
-                    empty = False
-                else:
-                    fs.delete(sub.getPath(), True)
-        if empty:
             fs.delete(st.getPath(), True)
-        elif fs.exists(manifest):
-            # expired manifest: the version is no longer directly
-            # readable, its surviving bucket dirs serve newer manifests
-            fs.delete(manifest, False)
 
 
 # -- catalog: one commit pins several tables ----------------------------------
@@ -1382,9 +971,11 @@ _CATALOG = "_CATALOG.json"
 @dataclass
 class Catalog:
     """One catalog version (0: derived for tables without one): each
-    table's committed ``(version, layout)``, the layout being ``plain``,
-    ``bucketed`` (bucket manifest) or ``flat`` (a legacy table root,
-    version 0)."""
+    table's committed ``(version, layout)``, the layout being ``plain``
+    or ``flat`` (a legacy table root, version 0). A table of the removed
+    bucket-manifest layout (a catalog written before its removal, or a
+    version-0 table holding its versions) says ``bucketed``;
+    :func:`_entry_dir` refuses such an entry."""
 
     version: int
     tables: dict[str, tuple[int, str]]
@@ -1395,9 +986,8 @@ def read_catalog(
 ) -> Catalog:
     """The newest catalog under ``root``: one listing of
     ``{root}/_catalog`` and one small read. Without a catalog, version
-    0: each of ``tables`` at its newest committed version in either
-    layout (both share the t=N namespace), else a legacy flat table
-    root; absent tables are left out."""
+    0: each of ``tables`` at its newest committed version, else a legacy
+    flat table root; absent tables are left out."""
     path = f"{root}/_catalog"
     while vs := table_versions(spark, path):
         body = _read_control(spark, f"{path}/t={vs[-1]}/{_CATALOG}")
@@ -1409,13 +999,12 @@ def read_catalog(
     out = {}
     for table in tables:
         p = f"{root}/{table}"
-        plain = table_versions(spark, p)
-        bucketed = _bucketed_versions(spark, p)
-        if plain or bucketed:
-            v = max(plain[-1:] + bucketed[-1:])
-            out[table] = (v, "bucketed" if v in bucketed else "plain")
+        if vs := table_versions(spark, p):
+            out[table] = (vs[-1], "plain")
         elif table_exists(spark, p):
             out[table] = (0, "flat")
+        elif bucket_manifest_dirs(spark, p):
+            out[table] = (0, "bucketed")  # raises at its first read
     return Catalog(0, out)
 
 
@@ -1436,10 +1025,10 @@ def commit_catalog(
 
     def stage(dest: str):
         _write_control(spark, f"{dest}/{_CATALOG}", {"tables": tables})
-        return [_CATALOG], None
+        return [_CATALOG]
 
-    _commit(spark, path, nxt, stage, _SUCCESS)
-    _reap_abandoned(spark, path, nxt, _SUCCESS)
+    _commit(spark, path, nxt, stage)
+    _reap_abandoned(spark, path, nxt)
     _retain_versions(spark, path, [base.version, nxt])
     for table, entry in tables.items():
         old = base.tables.get(table)
@@ -1450,9 +1039,46 @@ def commit_catalog(
 
 def _entry_dir(spark: SparkSession, path: str, entry: tuple[int, str]) -> str:
     """The directory of the table at ``path`` that a plain or flat
-    catalog ``entry`` names."""
+    catalog ``entry`` names. Any other layout is a ``bucketed`` entry of
+    a DB indexed with ``build_index(kind, n_buckets=...)``: one version
+    dir of it holds only the buckets its write touched, so it raises
+    instead of reading a part of the table."""
     v, layout = entry
-    return current_table_path(spark, path) if layout == "flat" else f"{path}/t={v}"
+    if layout == "flat":
+        return current_table_path(spark, path)
+    if layout != "plain":
+        raise ValueError(_bucket_manifest_error(path))
+    return f"{path}/t={v}"
+
+
+# the commit marker of the removed bucket-manifest layout's version dirs
+_BUCKET_MANIFEST = "_MANIFEST.json"
+
+
+def _bucket_manifest_error(path: str) -> str:
+    return (
+        f"{path} holds the removed bucket-manifest layout; rebuild it with "
+        "build_index(kind) ('binary' for index_packed, 'sq' for index_sq), "
+        "which publishes the plain layout"
+    )
+
+
+def bucket_manifest_dirs(spark: SparkSession, path: str) -> list[str]:
+    """The ``t=N`` dirs under ``path`` committed by the removed
+    bucket-manifest layout (they hold ``_MANIFEST.json``, never
+    ``_SUCCESS``). Such a table is neither absent nor readable: callers
+    that take "absent" for a first write raise instead. Probed only
+    where no committed version was found, so plain reads never pay it."""
+    fs, P = _hadoop_fs(spark, path)
+    if not fs.exists(P(path)):
+        return []
+    return [
+        str(st.getPath())
+        for st in fs.listStatus(P(path))
+        if st.isDirectory()
+        and _is_version_dir_name(st.getPath().getName())
+        and fs.exists(P(st.getPath(), _BUCKET_MANIFEST))
+    ]
 
 
 def _sidecar_schema(stats: dict | None):

@@ -15,8 +15,10 @@ instances both land. A warm read lists the filesystem at most once.
 
 from __future__ import annotations
 
+import os
 import shutil
 import threading
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -299,3 +301,86 @@ def test_stats_and_learned_weights_surface_read_errors(
         db.stats()
     with pytest.raises(IOError):
         db._learned_weights(q)
+
+
+def test_bucketed_layout_is_gone_and_an_old_entry_raises_until_rebuilt(
+    spark, docs, emb, tmp_path
+):
+    """``build_index(n_buckets=...)`` raises. A catalog written before the
+    bucket-manifest layout was removed names ``index_sq`` as ``bucketed``
+    over a version dir without ``_SUCCESS``: every read of it raises,
+    naming build_index as the fix (never a partial or empty read), and
+    build_index('sq') then publishes the plain layout over it. A backup
+    that recorded ``n_buckets`` restores plain."""
+    db = GrapeVectorDB(spark, str(tmp_path / "db"))
+    db.add_documents(docs.limit(40), emb.limit(40))
+    with pytest.raises(ValueError, match="n_buckets"):
+        db.build_index("sq", n_buckets=4)
+    db.build_index("sq")
+    qv = list(emb.head()["embedding"])
+    want = db.search(vector=qv, limit=5, index="sq").collect()
+
+    cat = db._catalog()
+    v = cat.tables["index_sq"][0]
+    T.commit_catalog(
+        spark, db.base, cat, {**cat.tables, "index_sq": (v, "bucketed")}
+    )
+    legacy = f"{db._path('index_sq')}/t={v}"
+    os.remove(f"{legacy}/_SUCCESS")
+    open(f"{legacy}/_MANIFEST.json", "w").close()
+    live_claim = f"{db._path('index_sq')}/t={v + 1}"  # a writer in flight
+    os.makedirs(live_claim)
+    old = GrapeVectorDB(spark, db.base)
+    for read in (
+        lambda: old.search(vector=qv, limit=5, index="sq").collect(),
+        lambda: old.add_documents(docs.limit(2), emb.limit(2)),
+    ):
+        with pytest.raises(ValueError, match=r"build_index\(kind\).*'sq'"):
+            read()
+    old.build_index("sq")
+    assert old._entry("index_sq")[1] == "plain"
+    assert old.search(vector=qv, limit=5, index="sq").collect() == want
+    # the rebuild deleted the legacy version dirs, nothing a writer made
+    assert os.path.isdir(live_claim)
+    shutil.rmtree(live_claim)
+
+    backup = str(tmp_path / "backup")
+    manifest = old.backup(backup)
+    assert {"kind": "sq"} in manifest["indexes"]
+    manifest["indexes"] = [
+        {**e, "n_buckets": 4} if e["kind"] == "sq" else e
+        for e in manifest["indexes"]
+    ]
+    T._write_control(spark, f"{backup}/_MANIFEST.json", manifest)
+    restored = GrapeVectorDB(spark, str(tmp_path / "restored"))
+    restored.restore(backup)
+    assert restored._entry("index_sq")[1] == "plain"
+    assert restored.search(vector=qv, limit=5, index="sq").collect() == want
+
+
+def test_uncatalogued_bucket_manifest_table_is_never_read_as_absent(
+    spark, tmp_path
+):
+    """A table whose only versions are bucket-manifest ones (a DB from
+    before the catalog, or a bare path) is neither absent nor readable:
+    the version-0 catalog names it ``bucketed`` (raising at its first
+    read), and a MERGE raises instead of adopting the day-old version
+    as a crashed claim and publishing the batch alone as the table."""
+    root = str(tmp_path / "root")
+    p = f"{root}/tbl"
+    rows = spark.createDataFrame(
+        [(i, f"t-{i}") for i in range(10)], "id long, text string"
+    )
+    T.publish_table(spark, p, rows)
+    os.remove(f"{p}/t=1/_SUCCESS")
+    open(f"{p}/t=1/_MANIFEST.json", "w").close()
+    day_old = time.time() - 2 * 86400
+    os.utime(f"{p}/t=1", (day_old, day_old))
+
+    cat = T.read_catalog(spark, root, ("tbl", "absent"))
+    assert cat.tables == {"tbl": (0, "bucketed")}
+    with pytest.raises(ValueError, match="bucket-manifest"):
+        T._entry_dir(spark, p, cat.tables["tbl"])
+    with pytest.raises(ValueError, match=r"build_index\(kind\)"):
+        T.upsert_table(spark, p, rows.limit(1))
+    assert os.path.isfile(f"{p}/t=1/_MANIFEST.json")

@@ -136,7 +136,7 @@ def test_glob_listing_matches_loop_listing(spark, docs, tmp_path):
     vs = table_versions(spark, base)
     assert vs == [1, 2]
     # glob-special path falls back to the exact loop and agrees
-    assert _versions_with_marker(spark, base, "_SUCCESS") == [1, 2]
+    assert _versions_with_marker(spark, base) == [1, 2]
 
 
 def test_glob_listing_empty_for_missing_path(spark, tmp_path):

@@ -75,6 +75,16 @@ def test_bm25_uses_broadcast_joins(spark, docs):
     assert "SortMergeJoin" not in plan
 
 
+def test_doc_terms_tokenizes_each_document_once(spark, docs):
+    """The interpreted tokenizer (filter(transform(split(...)))) appears
+    once in doc_terms' optimized plan: an inner explode would let
+    InferFiltersFromGenerate copy it into a pushed-down
+    size(toks) > 0 AND isnotnull(toks) filter. The filter keeps the plan
+    apart from doc_terms(docs) tables other tests cache."""
+    plan = optimized_of(sparse.doc_terms(docs.where(F.col("doc_id") >= 0)))
+    assert plan.count("filter(transform(split(") == 1, plan
+
+
 def test_point_lookup_pushdown(spark):
     # uncached table: see test_filter_pushdown_reaches_parquet
     orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")

@@ -1,9 +1,9 @@
 """Facade writes keep every index equal to a fresh build.
 
-One store carries every index kind: ivf (replicas=2), binary (flat),
-sq (bucket manifest), graph, partition (lang), payload and text. An
-upsert of new and updated ids, one of them a docs-only lang move riding
-with an unrelated embeddings row, and then a delete go through
+One store carries every index kind: ivf (replicas=2), binary, sq,
+graph, partition (lang), payload and text. An upsert of new and updated
+ids, one of them a docs-only lang move riding with an unrelated
+embeddings row, and then a delete go through
 add_documents / delete_documents. Afterwards each index table holds
 exactly the rows a fresh build over the final corpus holds, the layout
 sidecar keys survive, and each write published the partition layout
@@ -41,7 +41,6 @@ def _rows(df, cols) -> list[str]:
 
 
 def _same_rows(got, want) -> None:
-    # want's columns: a bucket-manifest read adds `bucket`
     assert _rows(got, want.columns) == _rows(want, want.columns)
 
 
@@ -57,7 +56,7 @@ KINDS = ("ivf", "binary", "sq", "graph", "partition", "payload", "text")
 def _build_every_index(db) -> None:
     db.build_index("ivf", nlist=4, replicas=2, max_iter=1)
     db.build_index("binary")
-    db.build_index("sq", n_buckets=4)
+    db.build_index("sq")
     db.build_index("graph", k=4)
     db.build_index("partition", column="lang")
     db.build_index("payload", columns=PAYLOAD_COLS)
@@ -112,7 +111,6 @@ def _stored_and_fresh(db, kind: str):
 def _assert_layouts_kept(db) -> None:
     assert db._table_stats("index_ivf/assignments")["replicas"] == 2
     assert db._table_stats("index_partition")["partition_column"] == "lang"
-    assert db._entry("index_sq")[1] == "bucketed"
 
 
 @pytest.fixture()

@@ -205,12 +205,10 @@ def test_ivf_cells_skip_probed_cells_without_rows(sdb):
     assert idx.cells([10_000]).count() == 0
 
 
-@pytest.mark.parametrize("layout", [{}, {"n_buckets": 4}], ids=["flat", "bucketed"])
-def test_binary_route_sizes_from_sidecar(spark, emb, tmp_path, layout):
+def test_binary_route_sizes_from_sidecar(spark, emb, tmp_path):
     """The unfiltered binary route sizes its stage-1 keep from the
-    index's row count (the publish-time sidecar, or a count cached per
-    version for the bucketed layout), so it must track upserts and
-    deletes; a warm search then constructs with zero jobs."""
+    index's row count (the publish-time sidecar), so it must track
+    upserts and deletes; a warm search then constructs with zero jobs."""
     db = GrapeVectorDB(spark, str(tmp_path / "db"))
     db.add_documents(
         spark.createDataFrame(
@@ -218,7 +216,7 @@ def test_binary_route_sizes_from_sidecar(spark, emb, tmp_path, layout):
         ),
         emb.where("vec_id < 300"),
     )
-    db.build_index("binary", **layout)
+    db.build_index("binary")
 
     def check():
         assert db._row_count("index_packed") == db._read("index_packed").count()

@@ -4,22 +4,12 @@
    (col=val subdirs, no root-level files) — answering "absent" routed
    upsert_table into its first-write branch and silently discarded the
    whole existing corpus.
-2. write_table_bucketed on a path holding a PLAIN versioned table
-   numbers past BOTH layouts (it used to overwrite a committed t=N),
-   and the bucketed GC leaves the flat layout's committed dirs alone.
-3. A fully-emptied bucketed table reads back with its REAL schema
-   (recorded in the manifest), not a single NullType id column.
-4. The CAS-loser path unpersists the cached update batch (try/finally)
-   — each retry used to leak one persisted copy.
-5. compact() survives the legacy-flat-root-beside-uncommitted-t=N
+2. compact() survives the legacy-flat-root-beside-uncommitted-t=N
    state (current_table_path resolves to a glob that listStatus would
    treat as a literal name).
 """
 
 from __future__ import annotations
-
-import pytest
-from pyspark.sql import functions as F
 
 import grape_vector_db_spark.sources.tables as T
 
@@ -48,75 +38,6 @@ class TestTableExistsPartitionedLegacy:
         fs, P = T._hadoop_fs(spark, p)
         fs.mkdirs(P(f"{p}/t=3"))  # crashed writer's uncommitted claim
         assert not T.table_exists(spark, p)
-
-
-class TestBucketedMigrationFork:
-    def test_plain_versions_survive_bucketed_write(self, spark, tmpdir):
-        p = f"{tmpdir}/mig"
-        T.publish_table(spark, p, _df(spark, [(1, "a", "en")]))   # t=1
-        T.publish_table(
-            spark, p, _df(spark, [(1, "a", "en"), (2, "b", "fr")])
-        )                                                          # t=2
-        T.write_table_bucketed(
-            spark, p, _df(spark, [(5, "e", "xx")]), n_buckets=4, id_col="id"
-        )
-        # the bucketed version numbered PAST the plain ones (no clobber)
-        assert T._bucketed_versions(spark, p) == [3]
-        got = {r["id"] for r in T.read_table_bucketed(spark, p).collect()}
-        assert got == {5}
-        # the committed plain snapshot is still time-travel readable
-        old = {r["id"] for r in T.read_table_version(spark, p, 2).collect()}
-        assert old == {1, 2}
-        # and a follow-up merge + GC still leaves it in place
-        T.merge_upsert_bucketed(
-            spark, p, _df(spark, [(6, "f", "yy")]), id_col="id", keep=1
-        )
-        assert 2 in T.table_versions(spark, p)
-
-
-class TestBucketedEmptySchema:
-    def test_fully_emptied_table_keeps_schema(self, spark, tmpdir):
-        p = f"{tmpdir}/empty"
-        T.write_table_bucketed(
-            spark, p, _df(spark, [(1, "a", "en"), (2, "b", "fr")]),
-            n_buckets=4, id_col="id",
-        )
-        T.delete_ids_bucketed(
-            spark, p, spark.createDataFrame([(1,), (2,)], "id long"),
-            id_col="id",
-        )
-        out = T.read_table_bucketed(spark, p)
-        assert out.count() == 0
-        # real schema, not a lone NullType id column
-        assert set(out.columns) == {"id", "v", "lang", "bucket"}
-        assert dict(out.dtypes)["id"] == "bigint"
-
-
-class TestCasLoserUnpersists:
-    def test_merge_loser_leaves_no_cached_batch(
-        self, spark, tmpdir, monkeypatch
-    ):
-        p = f"{tmpdir}/cas"
-        T.write_table_bucketed(
-            spark, p, _df(spark, [(1, "a", "en")]), n_buckets=2, id_col="id"
-        )
-
-        def lose(*a, **k):
-            raise T.ConcurrentMergeError("simulated loss")
-
-        monkeypatch.setattr(T, "_cas_commit_touched", lose)
-        before = len(spark.sparkContext._jsc.getPersistentRDDs())
-        with pytest.raises(T.ConcurrentMergeError):
-            T.merge_upsert_bucketed(
-                spark, p, _df(spark, [(9, "z", "zz")]), id_col="id"
-            )
-        with pytest.raises(T.ConcurrentMergeError):
-            T.delete_ids_bucketed(
-                spark, p, spark.createDataFrame([(1,)], "id long"),
-                id_col="id",
-            )
-        after = len(spark.sparkContext._jsc.getPersistentRDDs())
-        assert after == before  # the designed abort path leaked caches
 
 
 class TestCompactGlobGuard:
