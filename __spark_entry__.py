@@ -648,10 +648,10 @@ def q_simhash_pairs(spark, sf_dir):
 
 def q_embedding_neardup(spark, sf_dir):
     """Exact all-pairs embedding near-dup via the distributed BLOCK-GEMM —
-    the default route: no driver collect, no corpus broadcast, no row cap
-    (vs the driver-matrix _fast path that regressed r2), and the dot
-    products run in BLAS instead of a per-pair Catalyst lambda (vs the
-    expression-fold equi-join — measured 1.7 s vs 11.9 s at sf0.1)."""
+    the one exact route: no driver collect, no corpus broadcast, no row
+    cap, and the dot products run in BLAS instead of a per-pair Catalyst
+    lambda (the expression-fold equi-join it replaced measured 11.9 s vs
+    1.7 s at sf0.1)."""
     return dedup.embedding_neardup_pairs_gemm(_emb(spark, sf_dir), threshold=0.5)
 
 
@@ -4231,17 +4231,17 @@ def q_pca_whiten(spark, sf_dir):
     the re-embed fix knn_hubness's docstring points at). Literal
     mu/components/eigenvalues shared with the oracle; pure narrow — 16
     dot folds per row, zero shuffle."""
-    from grape_vector_db_spark.operators.ann import _sql_double
+    from grape_vector_db_spark.functions.vector import sql_double
 
     mu, comps, eigs = _pca_components(sf_dir, k=16)
     emb = _emb(spark, sf_dir)
     # r11: the SAME zip_with/aggregate folds as before, but (a) built as
     # SQL text (the Column form cost ~1,100 py4j round trips of driver
-    # time per query build — the _rp_dot_sql fix), and (b) the centering
+    # time per query build), and (b) the centering
     # zip_with projected ONCE instead of inlined into all 16 component
     # expressions (16x per-row re-evaluation of the identical subtree).
     # Parsed expression trees are identical, so values are bit-identical.
-    mu_arr = ", ".join(_sql_double(m) for m in mu)
+    mu_arr = ", ".join(sql_double(m) for m in mu)
     base = emb.select(
         "vec_id",
         F.expr(
@@ -4252,9 +4252,9 @@ def q_pca_whiten(spark, sf_dir):
     cols = [
         F.expr(
             "(round(aggregate(zip_with(_c, array("
-            + ", ".join(_sql_double(c) for c in comp)
+            + ", ".join(sql_double(c) for c in comp)
             + ")," " (a, b) -> a * b), 0.0D, (acc, x) -> acc + x)"
-            f" / {_sql_double(math.sqrt(ev + 1e-6))}, 6)"
+            f" / {sql_double(math.sqrt(ev + 1e-6))}, 6)"
             # normalize -0.0 (sign-of-zero hash sensitivity)
             " + 0.0D)"
         ).alias(f"w{c}")

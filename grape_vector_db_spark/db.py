@@ -71,6 +71,17 @@ _TABLES = (
     "index_payload", "index_terms", "fusion_weights",
 )
 
+# the keyword options build_index accepts, per index kind
+_INDEX_KWARGS = {
+    "ivf": {"nlist", "replicas", "max_iter"},
+    "graph": {"k"},
+    "partition": {"column"},
+    "text": {"column"},
+    "payload": {"columns"},
+    "binary": set(),
+    "sq": set(),
+}
+
 
 @dataclass
 class SearchResponse:
@@ -1025,10 +1036,13 @@ class GrapeVectorDB:
 
     @_write_scope
     def build_index(self, kind: str = "ivf", **kwargs) -> None:
-        if "n_buckets" in kwargs:
+        if kind not in _INDEX_KWARGS:
+            raise ValueError(f"unknown index kind {kind!r}")
+        unknown = sorted(set(kwargs) - _INDEX_KWARGS[kind])
+        if unknown:
             raise ValueError(
-                "build_index(n_buckets=...) is gone: the bucket-manifest "
-                "layout was removed; every index uses the plain layout"
+                f"build_index({kind!r}) takes no {', '.join(unknown)}; it "
+                f"accepts {sorted(_INDEX_KWARGS[kind]) or 'no options'}"
             )
         emb = self.embeddings()
         if kind == "ivf":
@@ -1050,11 +1064,11 @@ class GrapeVectorDB:
             cents, assigned = ann.ivf_build(
                 emb, nlist, kwargs.get("max_iter", 5),
                 id_col="vec_id", vec_col=self.vec_col,
-                # FAISS inverted-list layout by default: posting rows
-                # carry the vector, so the persisted cluster-partitioned
-                # table serves searches as pure PARTITION PRUNING with
-                # zero joins (ivf_search_pruned) — the 100 TB shape
-                include_vectors=kwargs.get("include_vectors", True),
+                # FAISS inverted-list layout: posting rows carry the
+                # vector, so the persisted cluster-partitioned table
+                # serves searches as pure PARTITION PRUNING with zero
+                # joins (ivf_search_pruned) — the 100 TB shape
+                include_vectors=True,
                 replicas=replicas,
             )
             # the catalog pins the centroid/assignment pair
@@ -1172,8 +1186,6 @@ class GrapeVectorDB:
                 docs, id_col=self.id_col, text_col=col
             ).withColumnRenamed("doc_id", "vec_id")
             self._publish_text_index(terms, col)
-        else:
-            raise ValueError(f"unknown index kind {kind!r}")
 
     # -- payload posting index ----------------------------------------------
 

@@ -52,6 +52,7 @@ from ..functions.vector import (
     to_double_array,
     vector_lit,
 )
+from .dedup import _block_gemm, _cosine_matrix, _require_integer_ids
 from .search import cosine_vs_query
 
 
@@ -228,6 +229,7 @@ def _assign_literal(
     vectors near a cell boundary are findable from either side, trading
     ``replicas``x posting-list storage for recall at fixed nprobe.
     """
+    _require_integer_ids(src, ["id"], "IVF assignment")
     if replicas < 1:
         # a silent min(replicas, nlist) of 0 would emit an EMPTY
         # assignment per batch — the build "succeeds" with an empty
@@ -375,7 +377,9 @@ def ivf_build(
     ivf_search_pruned needs no join back to the corpus at all.
     ``replicas>1`` stores each vector in its ``replicas`` nearest cells
     (SPANN-style boundary replication) — recall at fixed nprobe rises
-    sharply for replicas x storage; searches dedup by id."""
+    sharply for replicas x storage; searches dedup by id. Non-integral
+    ids raise before any job runs."""
+    _require_integer_ids(df, [id_col], "ivf_build")
     cents = kmeans_fit(df, nlist, max_iter, id_col, vec_col)
     cents_py = {r["cluster"]: list(r["centroid"]) for r in cents.collect()}
     src = df.select(F.col(id_col).alias("id"), to_double_array(vec_col).alias("v"))
@@ -1146,58 +1150,6 @@ def ivf_search_pruned(
     )
 
 
-def save_pq_index(path: str, codebooks, codes: DataFrame) -> None:
-    """S13 persistence for PQ/IVF-PQ (reference persists its whole index
-    blob, src/query.rs:282-409; ours stays queryable as tables): the
-    codebooks as a tiny (j, cluster, codeword) parquet, the codes table
-    partitioned by coarse cell when present (IVF-PQ) so probed-cell reads
-    are partition pruning, plain parquet otherwise (flat PQ). Codes are
-    indices INTO these codebooks, so one catalog version pins the pair,
-    as :func:`save_index` pins centroids and assignments."""
-    spark = codes.sparkSession
-    rows = [
-        (j, c, [float(x) for x in cw])
-        for j, book in enumerate(codebooks)
-        for c, cw in enumerate(book)
-    ]
-    cluster = ["cluster"] if "cluster" in codes.columns else None
-    _save_tables(
-        spark,
-        path,
-        {
-            "codebooks": (
-                spark.createDataFrame(
-                    rows, "j int, cluster int, codeword array<double>"
-                ),
-                {},
-            ),
-            "codes": (codes, {"partition_by": cluster}),
-        },
-    )
-
-
-def load_pq_index(spark, path: str):
-    """Load a persisted PQ index -> (codebooks nested list, codes df) at
-    the pair its newest catalog names; shape validation mirrors the
-    reference's load-time checks."""
-    from ..sources.tables import read_catalog
-
-    cat = read_catalog(spark, path, ("codebooks", "codes"))
-    rows = _open(spark, path, cat, "codebooks").collect()
-    if not rows:
-        raise ValueError("empty codebook table")
-    m = max(r["j"] for r in rows) + 1
-    k = max(r["cluster"] for r in rows) + 1
-    codebooks: list[list[list[float] | None]] = [[None] * k for _ in range(m)]
-    for r in rows:
-        codebooks[r["j"]][r["cluster"]] = list(r["codeword"])
-    for j in range(m):
-        for c in range(k):
-            if codebooks[j][c] is None:
-                raise ValueError(f"codebook missing entry (j={j}, cluster={c})")
-    return codebooks, _open(spark, path, cat, "codes")
-
-
 class IvfIndex(NamedTuple):
     """An opened IVF index: the centroid table plus the LOCATION and
     schema of the cluster-partitioned assignments. Opening lists none
@@ -1308,72 +1260,6 @@ def random_projection_buckets(
     return folded.select("id", F.col("_rp")[0].alias("bucket"))
 
 
-def _sql_double(x: float) -> str:
-    """Exact SQL double literal — shared helper (functions.vector)."""
-    from ..functions.vector import sql_double
-
-    return sql_double(x)
-
-
-def _rp_dot_sql(v_sql: str, plane: list[float]) -> str:
-    """The dot-product fold as ONE SQL text expression —
-    aggregate(zip_with(v, array(...), (x, y) -> x * y), 0.0, +) — the
-    exact expression tree the Column-API version built, so results are
-    bit-identical. Built as text because the Column form cost one py4j
-    round trip per plane COORDINATE (~1,000 for a 16-plane table set):
-    ~1 s of pure driver time per query construction, at query rate the
-    dominant cost of the whole LSH family (guide §5: the driver should
-    do almost no work)."""
-    arr = ", ".join(_sql_double(c) for c in plane)
-    return (
-        f"aggregate(zip_with({v_sql}, array({arr}),"
-        " (x, y) -> x * y), 0.0D, (acc, x) -> acc + x)"
-    )
-
-
-def _rp_bucket_expr(v_sql: str, n_planes: int, dim: int, seed: int):
-    """Sign-bit bucket Column for one hyperplane table (MSB = plane 0).
-    ``v_sql`` is the SQL TEXT of the array<double> vector expression
-    (r11 — was a Column; text keeps construction at one py4j call).
-
-    The fold accumulates in LONG: an int accumulator overflows at
-    n_planes >= 32 (ANSI mode — Spark 4's default — fails the scan with
-    ArithmeticException; non-ANSI silently wraps negative, diverging
-    from any 64-bit oracle). 62 planes is the long ceiling, far past
-    any useful single-table width (the autosizer caps at 30)."""
-    if not isinstance(v_sql, str):
-        raise TypeError(
-            "_rp_bucket_expr takes the vector expression as SQL text "
-            "(e.g. 'embedding' or _vec_sql(col)), not a Column"
-        )
-    if n_planes > 62:
-        raise ValueError(
-            f"n_planes={n_planes} overflows the 64-bit bucket; use more "
-            "tables (OR-amplification) instead of wider ones"
-        )
-    planes = _md5_coords(f"{seed}:{{p}}:{{i}}", n_planes, dim)
-    bucket = "CAST(0 AS BIGINT)"
-    for plane in planes:
-        bit = (
-            f"(CASE WHEN {_rp_dot_sql(v_sql, plane)} > 0"
-            " THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
-        )
-        bucket = f"(({bucket}) * 2 + {bit})"
-    # int output below 32 planes (every existing caller/oracle's dtype —
-    # the value provably fits); long only where int can't hold it
-    if n_planes <= 31:
-        bucket = f"CAST({bucket} AS INT)"
-    return F.expr(bucket)
-
-
-def _vec_sql(vec_col: str) -> str:
-    """SQL text for the f64-cast vector column (to_double_array's
-    textual twin). Top-level column names only (kept for the SQL-fold
-    reference path and its tests); the Arrow kernel path resolves the
-    column through F.col, which also handles dotted/nested names."""
-    return f"CAST(`{vec_col}` AS ARRAY<DOUBLE>)"
-
-
 def _rp_fold_arrow(
     df: DataFrame,
     planes: list[list[float]],
@@ -1394,7 +1280,9 @@ def _rp_fold_arrow(
     row — measured ~0.8 s at sf0.1 for the 4x4 neardup family, the
     slowest query at both driver core counts; guide §4.2: hand whole
     batches to vectorized native code). Results are BIT-IDENTICAL to the
-    SQL fold, proven by construction rather than by an epsilon guard:
+    SQL fold (the DuckDB oracle's shape, and the parity reference in
+    tests/test_opt_r12.py), proven by construction rather than by an
+    epsilon guard:
     the kernel executes the SAME left-to-right IEEE-754 sequence
     acc = ((0.0 + v[0]*p[0]) + v[1]*p[1]) + ... for every (row, plane) —
     vectorized ACROSS rows (one numpy multiply + one add per dimension,
@@ -1619,20 +1507,15 @@ def ivf_index_stats(
 def _block_local_topk(xids, yids, X, Y, k: int, same_block: bool):
     """Per-row local top-``k`` of the cosine matrix ``X @ Y.T`` by
     (cosine DESC, dst id ASC) — the block kernel behind
-    :func:`knn_graph`. ``yids`` MUST be sorted ascending: the tie-break
-    then falls out of a single stable argsort on the negated rounded
-    scores (no per-row lexsort loop). Cosine follows the repo
-    convention (_gemm_pairs): 6-dp round, zero-norm rows score 0.0.
-    Self-pairs (same id on both sides) are excluded. Returns a pandas
-    DataFrame (src, dst, cosine) or None."""
-    xn = np.sqrt((X * X).sum(axis=1))
-    yn = np.sqrt((Y * Y).sum(axis=1))
-    denom = xn[:, None] * yn[None, :]
-    with np.errstate(divide="ignore", invalid="ignore"):
-        S = np.where(denom > 0, (X @ Y.T) / denom, 0.0)
-    S = np.round(S, 6)
+    :func:`knn_graph`, :func:`knn_graph_add` and :func:`knn_exact_for`.
+    ``yids`` MUST be sorted ascending: the tie-break then falls out of a
+    single stable argsort on the negated rounded scores (no per-row
+    lexsort loop). Cosines come from ``dedup._cosine_matrix`` (6-dp
+    round, zero-norm rows score 0.0). Self-pairs (same id on both sides)
+    are excluded. Returns a pandas DataFrame (src, dst, cosine) or
+    None."""
+    S = _cosine_matrix(X, Y)
     if same_block:
-        S = S.copy()
         S[xids[:, None] == yids[None, :]] = -np.inf
     kk = min(k, S.shape[1])
     if kk <= 0:
@@ -1650,6 +1533,24 @@ def _block_local_topk(xids, yids, X, Y, k: int, same_block: bool):
     )
 
 
+def _rank_topk(cand: DataFrame, k: int) -> DataFrame:
+    """The per-src cut of candidate edges ``(src, dst, cosine)`` to the
+    final ``(src, dst, rank, cosine)`` rows: rank 1..k by (cosine DESC,
+    dst ASC) in one partitioned window (never a single-partition sort).
+    Every candidate cosine comes from :func:`_block_local_topk`, already
+    rounded to 6 dp, so equal scores compare equal across builds."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("src").orderBy(
+        F.col("cosine").desc(), F.col("dst").asc()
+    )
+    return (
+        cand.withColumn("rank", F.row_number().over(w).cast("int"))
+        .where(F.col("rank") <= int(k))
+        .select("src", "dst", "rank", "cosine")
+    )
+
+
 def knn_graph(
     emb: DataFrame,
     k: int = 10,
@@ -1663,15 +1564,16 @@ def knn_graph(
     ASC), self excluded. The foundation for graph-based dedup
     communities, NN-descent seeding, and dataset-cartography maps.
 
-    Scale shape (the same distributed blocked GEMM as
-    ``dedup.embedding_neardup_pairs_gemm``, reshaped for top-k instead
-    of a threshold): vectors hash into B row-blocks, a broadcast
+    Scale shape (the blocked-GEMM fan-out ``dedup._block_gemm`` shared
+    with ``dedup.embedding_neardup_pairs_gemm``, reshaped for top-k
+    instead of a threshold): vectors hash into B row-blocks, a broadcast
     (i <= j) block-pair table fans B(B+1)/2 matmul tasks out, and each
     task emits only its block-LOCAL top-k per row (both directions for
     an off-diagonal pair). The global per-src reduce then sees at most
     k*B candidates per node — corpus-size-independent — and a
     partitioned window (never a single-partition sort) cuts the final
     top-k. No driver collect, no row cap; every task holds two blocks.
+    Non-integral ids raise before any job runs.
 
     The block-local cut loses nothing: the global top-k by (cosine,
     dst) is a subset of the union of per-block top-k under the SAME
@@ -1679,101 +1581,19 @@ def knn_graph(
     block pair (the kernel tie-breaks identically, so boundary ties
     survive too).
     """
-    from pyspark.sql import Window
 
-    spark = emb.sparkSession
-    if n_blocks is None:
-        n_blocks = max(1, math.ceil(emb.count() / rows_per_block))
-    v = to_double_array(vec_col)
+    def both_ways(ai, bi, A, B, same):
+        out = [_block_local_topk(ai, bi, A, B, k, same_block=same)]
+        if not same:
+            out.append(_block_local_topk(bi, ai, B, A, k, same_block=False))
+        out = [o for o in out if o is not None]
+        return pd.concat(out, ignore_index=True) if out else None
 
-    if n_blocks == 1:
-        flat = emb.select(F.col(id_col).alias("id"), v.alias("v")).coalesce(1)
-
-        def run_single(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            chunks = [pdf for pdf in batches if len(pdf)]
-            if not chunks:
-                return
-            ids = np.concatenate([c["id"].to_numpy(np.int64) for c in chunks])
-            X = np.asarray(
-                [row for c in chunks for row in c["v"]], dtype=np.float64
-            )
-            o = np.argsort(ids)
-            ids, X = ids[o], X[o]
-            out = _block_local_topk(ids, ids, X, X, k, same_block=True)
-            if out is not None:
-                yield out
-
-        cand = flat.mapInPandas(run_single, "src long, dst long, cosine double")
-    else:
-        base = emb.select(
-            F.col(id_col).alias("id"),
-            v.alias("v"),
-            F.pmod(F.col(id_col), F.lit(n_blocks)).cast("int").alias("block"),
-        )
-        # both join sides read mats: cache so the corpus scan + the
-        # collect_list shuffle run once, not twice (the dominant
-        # pre-GEMM cost). localCheckpoint, NOT persist: a CacheManager
-        # entry never frees without an explicit unpersist (the module
-        # rule at the top of this file), which no caller can issue
-        # against a lazily-returned graph — the facade re-runs this per
-        # rebuild, so persisted corpus-sized block tables would
-        # accumulate for the session lifetime. A checkpointed RDD frees
-        # via the ContextCleaner once the returned DataFrame is GC'd.
-        # Tradeoff: lineage is truncated, so an executor loss mid-build
-        # fails the (retryable) build job instead of recomputing.
-        mats = base.groupBy("block").agg(
-            F.collect_list("id").alias("ids"),
-            F.collect_list("v").alias("vecs"),
-        ).localCheckpoint(eager=False)
-        a = mats.select(
-            F.col("block").alias("ba"), F.col("ids").alias("ids_a"),
-            F.col("vecs").alias("vecs_a"),
-        )
-        b = mats.select(
-            F.col("block").alias("bb"), F.col("ids").alias("ids_b"),
-            F.col("vecs").alias("vecs_b"),
-        )
-        block_pairs = F.broadcast(
-            spark.createDataFrame(
-                [(i, j) for i in range(n_blocks) for j in range(i, n_blocks)],
-                "ba int, bb int",
-            )
-        )
-        joined = a.join(block_pairs, "ba").join(b, "bb").repartition(
-            n_blocks * (n_blocks + 1) // 2, "ba", "bb"
-        )
-
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                for row in pdf.itertuples(index=False):
-                    ai = np.asarray(row.ids_a, dtype=np.int64)
-                    bi = np.asarray(row.ids_b, dtype=np.int64)
-                    A = np.asarray(list(row.vecs_a), dtype=np.float64)
-                    B = np.asarray(list(row.vecs_b), dtype=np.float64)
-                    oa, ob = np.argsort(ai), np.argsort(bi)
-                    ai, A = ai[oa], A[oa]
-                    bi, B = bi[ob], B[ob]
-                    same = row.ba == row.bb
-                    out = _block_local_topk(ai, bi, A, B, k, same_block=same)
-                    if out is not None:
-                        yield out
-                    if not same:
-                        rev = _block_local_topk(
-                            bi, ai, B, A, k, same_block=False
-                        )
-                        if rev is not None:
-                            yield rev
-
-        cand = joined.mapInPandas(run, "src long, dst long, cosine double")
-
-    w = Window.partitionBy("src").orderBy(
-        F.col("cosine").desc(), F.col("dst").asc()
+    cand = _block_gemm(
+        emb, id_col, vec_col, n_blocks, rows_per_block, both_ways,
+        "src long, dst long, cosine double",
     )
-    return (
-        cand.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= k)
-        .select("src", "dst", "rank", "cosine")
-    )
+    return _rank_topk(cand, k)
 
 
 def mutual_knn_pairs(edges: DataFrame) -> DataFrame:
@@ -1855,8 +1675,8 @@ def knn_graph_add(
     ``ivf_drift``. Cosines for the new rows come from the SAME
     _block_local_topk BLAS kernel knn_graph uses (both directions of
     the corpus-x-batch pass), so old and fresh scores share one
-    numerical provenance; the window still ranks on the 6-dp ROUNDED
-    cosine (the repo-wide ranking contract) as defense in depth.
+    numerical provenance (6-dp rounded) and :func:`_rank_topk` ranks
+    them in one window.
 
     Scale shape: ONE Arrow scan of the corpus against the batch matrix
     (a delta-bounded driver artifact, the kmeans-centroid contract) in
@@ -1869,9 +1689,9 @@ def knn_graph_add(
     out-edges. No all-pairs stage, no per-pair Catalyst lambda (the
     expression-cosine draft of this pass was measured minutes-slow at a
     mere 20k x 2k — the GEMM kernel is the only right shape here).
+    Non-integral ids raise before any job runs.
     """
-    from pyspark.sql import Window
-
+    _require_integer_ids(emb, [id_col], "knn_graph_add")
     ids = batch_ids.select(F.col(id_col).alias("_bid")).distinct()
     v = to_double_array(vec_col)
     base = emb.select(F.col(id_col).alias("id"), v.alias("v"))
@@ -1932,22 +1752,7 @@ def knn_graph_add(
         .join(F.broadcast(ids.withColumnRenamed("_bid", "src")), "src", "left_anti")
         .join(F.broadcast(ids.withColumnRenamed("_bid", "dst")), "dst", "left_anti")
     )
-    cand = old.unionByName(scored)
-    # rank on the 6-dp ROUNDED cosine (the repo-wide ranking contract):
-    # old and fresh scores both come from the BLAS kernel, but the old
-    # ones were computed inside a DIFFERENT block pairing — float sums
-    # reassociate across block shapes, so an exact-duplicate vector can
-    # differ by an ulp between builds, and ranking raw values would
-    # flip the id tiebreak at the rank-k boundary (vs a rebuild's
-    # exact tie -> dst asc)
-    w = Window.partitionBy("src").orderBy(
-        F.round("cosine", 6).desc(), F.col("dst").asc()
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= k)
-        .select("src", "dst", "rank", "cosine")
-    )
+    return _rank_topk(old.unionByName(scored), k)
 
 
 def knn_exact_for(
@@ -1971,9 +1776,9 @@ def knn_exact_for(
     emitting per-query block-local top-k; a per-src window over <= k x
     n_chunks rows makes the global cut. Self-pairs excluded; ties break
     (cosine DESC, dst ASC) — identical to a full rebuild's ordering.
+    Non-integral ids raise before any job runs.
     """
-    from pyspark.sql import Window
-
+    _require_integer_ids(emb, [id_col], "knn_exact_for")
     ids = query_ids.select(F.col(id_col).alias("_qid")).distinct()
     v = to_double_array(vec_col)
     base = emb.select(F.col(id_col).alias("id"), v.alias("v"))
@@ -2001,14 +1806,8 @@ def knn_exact_for(
             if out is not None:
                 yield out
 
-    cand = base.mapInPandas(score, "src long, dst long, cosine double")
-    w = Window.partitionBy("src").orderBy(
-        F.round("cosine", 6).desc(), F.col("dst").asc()
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= kk)
-        .select("src", "dst", "rank", "cosine")
+    return _rank_topk(
+        base.mapInPandas(score, "src long, dst long, cosine double"), kk
     )
 
 
@@ -2482,8 +2281,6 @@ def kcore_peel(
     """
     if k < 1 or rounds < 1:
         raise ValueError("k and rounds must be >= 1")
-    from .dedup import _require_integer_ids
-
     _require_integer_ids(pairs, ("a", "b"), "kcore_peel")
     a, b = F.col("a").cast("long"), F.col("b").cast("long")
     edges = (

@@ -18,9 +18,9 @@ needs content-level dedup. Five tiers, cheapest first:
   keys per band, so a uniform corpus puts ~n/65k docs in a bucket);
   any pair within max_hamming matches exactly on >= 1 band. See
   simhash_pairs for the full scale analysis and the hot-bucket cap.
-- **embedding cosine**: exact self-join above a cosine threshold for
-  small/medium corpora; random-projection LSH bucketing (operators.ann)
-  prunes it at scale.
+- **embedding cosine**: exact all-pairs cosine above a threshold as a
+  distributed blocked GEMM; random-projection LSH bucketing
+  (operators.ann) prunes the pairs at scale, then one exact verify.
 
 All hashes go through functions.hashing.h32 (md5-derived) so the DuckDB
 oracle reproduces results exactly.
@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import h32, h32_word
 from ..functions.text import tokens, word_grams, ws_tokens
-from ..functions.vector import cosine_from_parts, dot, l2_norm, to_double_array
+from ..functions.vector import to_double_array
 
 
 def _require_integer_ids(df: DataFrame, cols, where: str) -> None:
@@ -1009,14 +1009,12 @@ def leakage_safe_split(
     return withc.select("doc_id", "cluster_id", expr.alias("split"))
 
 
-def _gemm_pairs(xids, yids, X, Y, same_block: bool, threshold: float):
-    """The shared blocked-GEMM pair kernel (used by both
-    embedding_neardup_pairs_gemm and semdedup_pairs so the rounding,
-    zero-norm guard, and id-ordering conventions cannot diverge): one
-    BLAS matmul, cosine rounded to 6 dp, then either the upper triangle
-    by id (same block) or min/max-ordered pairs (disjoint blocks).
-    Returns (a_ids, b_ids, cosines) numpy arrays, or None when no pair
-    clears the threshold."""
+def _cosine_matrix(X, Y):
+    """Cosine of every row of ``X`` against every row of ``Y`` as one BLAS
+    matmul, rounded to 6 dp; zero-norm rows score 0.0 (the engine
+    convention). The one cosine kernel of the exact pair and top-k
+    builds (:func:`_gemm_pairs`, ``ann._block_local_topk``), so their
+    rounding and zero-norm guard cannot diverge."""
     import numpy as np
 
     xn = np.sqrt((X * X).sum(axis=1))
@@ -1024,19 +1022,140 @@ def _gemm_pairs(xids, yids, X, Y, same_block: bool, threshold: float):
     denom = xn[:, None] * yn[None, :]
     with np.errstate(divide="ignore", invalid="ignore"):
         S = np.where(denom > 0, (X @ Y.T) / denom, 0.0)
-    S = np.round(S, 6)
+    return np.round(S, 6)
+
+
+def _gemm_pairs(xids, yids, X, Y, same_block: bool, threshold: float):
+    """Block-pair kernel of the exact threshold builds: pairs with cosine
+    >= ``threshold`` as a pandas ``(a, b, cosine)`` frame with a < b —
+    the upper triangle by id within one block, min/max-ordered ids
+    across two — or None when no pair clears the threshold."""
+    import numpy as np
+    import pandas as pd
+
+    S = _cosine_matrix(X, Y)
+    mask = S >= threshold
     if same_block:
-        mask = (S >= threshold) & (xids[:, None] < yids[None, :])
-        xi, yi = np.nonzero(mask)
-        a_out, b_out = xids[xi], yids[yi]
-    else:
-        mask = S >= threshold
-        xi, yi = np.nonzero(mask)
-        a_out = np.minimum(xids[xi], yids[yi])
-        b_out = np.maximum(xids[xi], yids[yi])
+        mask &= xids[:, None] < yids[None, :]
+    xi, yi = np.nonzero(mask)
     if not len(xi):
         return None
-    return a_out, b_out, S[xi, yi]
+    return pd.DataFrame(
+        {
+            "a": np.minimum(xids[xi], yids[yi]),
+            "b": np.maximum(xids[xi], yids[yi]),
+            "cosine": S[xi, yi],
+        }
+    )
+
+
+def _block_gemm(
+    emb: DataFrame,
+    id_col: str,
+    vec_col: str,
+    n_blocks: int | None,
+    rows_per_block: int,
+    kernel,
+    schema: str,
+    groups: tuple[str, ...] = (),
+    n_groups: int = 1,
+) -> DataFrame:
+    """The distributed blocked-GEMM fan-out shared by the exact cosine
+    builds (embedding_neardup_pairs_gemm, semdedup_pairs, ann.knn_graph).
+
+    Within each ``groups`` key (none, or e.g. an IVF ``cluster``) every
+    vector gets ``block = pmod(id, n_blocks)``; one shuffle collects each
+    (group, block) into aligned id and vector lists (two collect_lists
+    over one grouped row stream stay aligned); a broadcast i <= j
+    block-pair table fans the matrices out to one task per (group, i, j)
+    (``n_groups`` sizes that repartition); and ``kernel(ids_a, ids_b, A,
+    B, same_block)`` runs once per block pair with each side's ids sorted
+    ascending and its matrix rows in that order, returning a pandas frame
+    (or None) to which the group values are added. Without groups, a
+    corpus of one block skips the shuffle: a single task streams it into
+    one matrix. Every task holds at most two blocks; nothing is
+    collected on the driver. pmod, not %: Spark's % keeps the dividend's
+    sign, so a negative id would land in a block no pair covers.
+
+    Non-integral ids raise before any job runs. ``n_blocks=None`` sizes
+    the blocks from a count: ``ceil(n_rows / rows_per_block)``."""
+    import math
+    from collections.abc import Iterator
+
+    import numpy as np
+    import pandas as pd
+
+    _require_integer_ids(emb, [id_col], "a blocked cosine build")
+    if n_blocks is None:
+        n_blocks = max(1, math.ceil(emb.count() / rows_per_block))
+    base = emb.select(
+        F.col(id_col).alias("id"), to_double_array(vec_col).alias("v"), *groups
+    )
+
+    def matrix(ids, vecs):
+        ids = np.asarray(ids, dtype=np.int64)
+        X = np.asarray(list(vecs), dtype=np.float64)
+        o = np.argsort(ids)
+        return ids[o], X[o]
+
+    if n_blocks == 1 and not groups:
+        def run_single(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            chunks = [pdf for pdf in batches if len(pdf)]
+            if not chunks:
+                return
+            ids, X = matrix(
+                np.concatenate([c["id"].to_numpy(np.int64) for c in chunks]),
+                [row for c in chunks for row in c["v"]],
+            )
+            out = kernel(ids, ids, X, X, True)
+            if out is not None:
+                yield out
+
+        return base.coalesce(1).mapInPandas(run_single, schema)
+    # both join sides read mats: localCheckpoint, so the corpus scan and
+    # the collect_list shuffle and merge run once (without it the final
+    # aggregate ran per side: +12% shuffle read, ~10% slower knn_graph at
+    # sf1). Not persist: no caller can unpersist a cache entry behind a
+    # lazily returned frame; the checkpointed RDD frees via the
+    # ContextCleaner once the result is GC'd. Lineage is truncated, so
+    # an executor loss mid-build fails the (retryable) job.
+    mats = base.withColumn(
+        "block", F.pmod(F.col("id"), F.lit(n_blocks)).cast("int")
+    ).groupBy(*groups, "block").agg(
+        F.collect_list("id").alias("ids"), F.collect_list("v").alias("vecs")
+    ).localCheckpoint(eager=False)
+
+    def side(s: str) -> DataFrame:
+        return mats.select(
+            *groups, F.col("block").alias(f"b{s}"),
+            F.col("ids").alias(f"ids_{s}"), F.col("vecs").alias(f"vecs_{s}"),
+        )
+
+    block_pairs = F.broadcast(
+        emb.sparkSession.createDataFrame(
+            [(i, j) for i in range(n_blocks) for j in range(i, n_blocks)],
+            "ba int, bb int",
+        )
+    )
+    joined = (
+        side("a").join(block_pairs, "ba").join(side("b"), [*groups, "bb"])
+        .repartition(
+            n_groups * n_blocks * (n_blocks + 1) // 2, *groups, "ba", "bb"
+        )
+    )
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            for row in pdf.itertuples(index=False):
+                ai, A = matrix(row.ids_a, row.vecs_a)
+                bi, B = matrix(row.ids_b, row.vecs_b)
+                out = kernel(ai, bi, A, B, row.ba == row.bb)
+                if out is not None:
+                    for g in groups:
+                        out[g] = getattr(row, g)
+                    yield out
+
+    return joined.mapInPandas(run, schema)
 
 
 def embedding_neardup_pairs_gemm(
@@ -1048,7 +1167,8 @@ def embedding_neardup_pairs_gemm(
     rows_per_block: int = 4096,
 ) -> DataFrame:
     """Exact all-pairs cosine >= threshold (a < b) as a **distributed
-    blocked GEMM** — the fastest exact shape at every scale:
+    blocked GEMM** (:func:`_block_gemm`) — the exact near-dup path at
+    every scale:
 
     1. each vector gets ``block = id % B``; one shuffle aggregates each
        block into a dense matrix row (ids, flat vectors),
@@ -1057,102 +1177,21 @@ def embedding_neardup_pairs_gemm(
     3. each task runs ONE BLAS matmul (block_a x block_b^T) and emits the
        above-threshold id-ordered pairs via Arrow.
 
-    vs the expression-fold equi-join (embedding_neardup_pairs): the dot
-    product moves from a per-pair Catalyst lambda (~n^2*d interpreted
-    evals) into n^2*d FLOPs inside BLAS — measured 5-10x faster. vs the
-    driver-matrix path (_fast): no driver collect, no torrent broadcast,
-    no row cap — every task holds only two blocks (size n/B*d*8 bytes;
-    pick B so that's tens of MB at your corpus size). Sum order differs
-    from the fold by ~1e-15; absorbed by the 6-dp round.
+    The dot products run as n^2*d FLOPs inside BLAS, never as a per-pair
+    Catalyst lambda, and no task holds more than two blocks (size
+    n/B*d*8 bytes; pick B so that's tens of MB at your corpus size).
 
-    ``n_blocks`` defaults to ``ceil(n_rows / rows_per_block)`` from a cheap
-    count (parquet-metadata-fast), so a small corpus runs as a handful of
-    matmul tasks instead of fanning B(B+1)/2 near-empty Arrow tasks across
+    ``n_blocks`` defaults to ``ceil(n_rows / rows_per_block)`` from a
+    cheap count (parquet-metadata-fast), so a small corpus runs as one
+    matmul task instead of fanning B(B+1)/2 near-empty Arrow tasks across
     the Python worker pool — the task fan-out only grows when the data
     does. Pass ``n_blocks`` explicitly to skip the count.
     """
-    import math
-
-    import numpy as np
-    import pandas as pd
-    from collections.abc import Iterator
-
-    spark = emb.sparkSession
-    if n_blocks is None:
-        n_blocks = max(1, math.ceil(emb.count() / rows_per_block))
-    v = to_double_array(vec_col)
-
-    def pairs_of(xids, yids, X, Y, same_block):
-        out = _gemm_pairs(xids, yids, X, Y, same_block, threshold)
-        if out is None:
-            return None
-        a_out, b_out, cos = out
-        return pd.DataFrame({"a": a_out, "b": b_out, "cosine": cos})
-
-    if n_blocks == 1:
-        # Small corpus: one task, zero shuffles — stream the Arrow batches
-        # into a single matrix and matmul once. Skips the collect_list
-        # aggregation + block-pair join + repartition stages whose fixed
-        # cost dominates when the whole corpus fits one block.
-        flat = emb.select(F.col(id_col).alias("id"), v.alias("v")).coalesce(1)
-
-        def run_single(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            chunks = [pdf for pdf in batches if len(pdf)]
-            if not chunks:
-                return
-            ids = np.concatenate([c["id"].to_numpy(np.int64) for c in chunks])
-            X = np.asarray(
-                [row for c in chunks for row in c["v"]], dtype=np.float64
-            )
-            out = pairs_of(ids, ids, X, X, same_block=True)
-            if out is not None:
-                yield out
-
-        return flat.mapInPandas(run_single, "a long, b long, cosine double")
-    base = emb.select(
-        F.col(id_col).alias("id"),
-        v.alias("v"),
-        # pmod, not %: Spark's % keeps the dividend's sign, so a negative
-        # id would land in a block the broadcast block-pair table doesn't
-        # cover and silently vanish from the pair output
-        F.pmod(F.col(id_col), F.lit(n_blocks)).cast("int").alias("block"),
+    return _block_gemm(
+        emb, id_col, vec_col, n_blocks, rows_per_block,
+        lambda ai, bi, A, B, same: _gemm_pairs(ai, bi, A, B, same, threshold),
+        "a long, b long, cosine double",
     )
-    mats = base.groupBy("block").agg(
-        F.collect_list("id").alias("ids"),
-        F.collect_list("v").alias("vecs"),
-    )
-    a = mats.select(
-        F.col("block").alias("ba"), F.col("ids").alias("ids_a"),
-        F.col("vecs").alias("vecs_a"),
-    )
-    b = mats.select(
-        F.col("block").alias("bb"), F.col("ids").alias("ids_b"),
-        F.col("vecs").alias("vecs_b"),
-    )
-    block_pairs = F.broadcast(
-        spark.createDataFrame(
-            [(i, j) for i in range(n_blocks) for j in range(i, n_blocks)],
-            "ba int, bb int",
-        )
-    )
-    joined = a.join(block_pairs, "ba").join(b, "bb").repartition(
-        n_blocks * (n_blocks + 1) // 2, "ba", "bb"
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                out = pairs_of(
-                    np.asarray(row.ids_a, dtype=np.int64),
-                    np.asarray(row.ids_b, dtype=np.int64),
-                    np.asarray(list(row.vecs_a), dtype=np.float64),
-                    np.asarray(list(row.vecs_b), dtype=np.float64),
-                    same_block=(row.ba == row.bb),
-                )
-                if out is not None:
-                    yield out
-
-    return joined.mapInPandas(run, "a long, b long, cosine double")
 
 
 #: Target expected bucket size for auto-sized RP-LSH. Total candidate
@@ -1219,8 +1258,8 @@ def embedding_neardup_pairs_lsh(
     all-pairs. Pair recall at angle theta is 1 - (1 - (1-theta/pi)^p)^L:
     the (4, 8) default holds ~0.8+ at cosine 0.5 where a single 8-plane
     table measured 0.14 (RECALL.md) — OR-amplification is what makes LSH
-    usable below the S-curve knee; the exact variants remain the
-    ground-truth companions.
+    usable below the S-curve knee; :func:`embedding_neardup_pairs_gemm`
+    is the exact all-pairs companion that recall is measured against.
 
     Scale guards (both needed at corpus scale — with p planes there are
     only 2^p buckets per table, so n_planes MUST be sized to the corpus;
@@ -1339,59 +1378,10 @@ def embedding_neardup_pairs_lsh(
         .select("p.a", "p.b")
         .distinct()
     )
-    # size-routed exact verify (see _cosine_verify_auto): hydration
-    # joins while the vector side broadcasts, per-block vector shipping
-    # past the row bound (pairs then carry 16 bytes, not ~1 KB)
-    return _cosine_verify_auto(
+    return _block_cosine_verify(
         cand, emb, emb, threshold, "a", "b", id_col, vec_col,
         a_count=known_count, b_count=known_count,
     )
-
-
-# Row bound above which the exact cosine verify ships vectors per BLOCK
-# instead of hydrating both vectors onto every candidate pair row. Below
-# it the vector side broadcasts into the hydration joins (no shuffle)
-# and the per-pair Arrow columns are cheap — measured FASTER at sf0.1
-# (3.3 vs 3.6 s interleaved A/B, 472k candidates, 2k vectors), so small
-# corpora keep the simple shape. Above it the hydration joins must
-# shuffle ~1 KB of vector per candidate (twice), while block shipping
-# moves 16 bytes per pair + each 4096-row block matrix once — the
-# guide §8 proxy-shuffle rule.
-_BLOCK_VERIFY_MIN_ROWS = 200_000
-
-
-def _cosine_verify_auto(
-    cand: DataFrame,
-    a_emb: DataFrame,
-    b_emb: DataFrame,
-    threshold: float,
-    a_name: str = "a",
-    b_name: str = "b",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    a_count: int | None = None,
-    b_count: int | None = None,
-) -> DataFrame:
-    """Route the exact pair verify by corpus size: per-pair hydration
-    joins + :func:`_arrow_cosine_verify` while every vector side is
-    small enough to broadcast (counts unknown => assumed small — callers
-    that know their corpus is big pass ``a_count``/``b_count``, and the
-    autosized paths always do), :func:`_block_cosine_verify` past
-    ``_BLOCK_VERIFY_MIN_ROWS``. Both paths emit bit-identical rows
-    (two-way exceptAll pinned in tests)."""
-    known = max(a_count or 0, b_count or 0)
-    if known > _BLOCK_VERIFY_MIN_ROWS:
-        return _block_cosine_verify(
-            cand, a_emb, b_emb, threshold, a_name, b_name, id_col,
-            vec_col, a_count=a_count, b_count=b_count,
-        )
-    v = to_double_array(vec_col)
-    paired = cand.join(
-        a_emb.select(F.col(id_col).alias(a_name), v.alias("va")), a_name
-    ).join(
-        b_emb.select(F.col(id_col).alias(b_name), v.alias("vb")), b_name
-    )
-    return _arrow_cosine_verify(paired, threshold, a_name, b_name)
 
 
 def _block_cosine_verify(
@@ -1407,26 +1397,23 @@ def _block_cosine_verify(
     b_count: int | None = None,
     rows_per_block: int = 4096,
 ) -> DataFrame:
-    """Exact cosine verify of candidate id PAIRS with per-BLOCK vector
-    shipping (guide §8 "decide with small rows, move big rows once"):
-    the old shape joined both 64-double vectors onto every pair row, so
-    the Arrow boundary carried ~1 KB per candidate (measured ~480 MB /
-    ~5.7 s for the 472k sf0.1 LSH candidates — the dominant phase of
-    embedding_neardup_lsh, while the dots themselves are ~30 MFLOP).
-    Here pairs carry 16 bytes of ids; vectors travel once per (a-block,
-    b-block) verify task as two dense matrices (the knn_graph /
-    pairs_gemm block idiom), a ~60x per-pair byte cut that grows with
-    dim. Tasks salt by pair hash only while Ba*Bb alone cannot fill the
-    cluster (salt count = ceil(defaultParallelism / (Ba*Bb)), so big
-    corpora pay zero matrix duplication and small ones stay parallel).
+    """Exact cosine verify of candidate id PAIRS — the one verify of the
+    LSH near-dup paths — with per-BLOCK vector shipping (guide §8
+    "decide with small rows, move big rows once"): pairs carry 16 bytes
+    of ids, and vectors travel once per (a-block, b-block) verify task
+    as two dense matrices (the _block_gemm idiom). Hydrating both
+    64-double vectors onto every pair row instead carried ~1 KB per
+    candidate across the Arrow boundary, and measured slower at sf0.1
+    and sf1 (CHANGES.md). Tasks salt by pair hash only while Ba*Bb alone
+    cannot fill the cluster (salt count = ceil(defaultParallelism /
+    (Ba*Bb)), so big corpora pay zero matrix duplication and small ones
+    stay parallel). ``a_count`` / ``b_count`` size the blocks; each one
+    left None costs a count job.
 
-    Numerics are IDENTICAL to :func:`_arrow_cosine_verify`: the same
-    numpy row-gather, (A*A).sum / sqrt norms, row-wise einsum dot,
-    np.round(cos, 6), zero-norm -> 0.0 — per-pair results are the same
-    doubles (two-way exceptAll pinned in tests). Ids absent from the
-    vector tables drop, matching the old inner hydration joins; NULL
-    vectors are excluded from the matrices (the old shape crashed on
-    them inside np.asarray). Requires integral ids (pmod blocking) —
+    Per pair: a numpy row-gather, (A*A).sum / sqrt norms, a row-wise
+    einsum dot, np.round(cos, 6), zero-norm -> 0.0. Ids absent from the
+    vector tables drop (an inner-join contract); NULL vectors are
+    excluded from the matrices. Requires integral ids (pmod blocking) —
     every caller's contract already.
     """
     import numpy as np
@@ -1543,50 +1530,6 @@ def _block_cosine_verify(
     )
 
 
-def _arrow_cosine_verify(
-    paired: DataFrame,
-    threshold: float,
-    a_name: str = "a",
-    b_name: str = "b",
-) -> DataFrame:
-    """Vectorized Arrow verify over ``(a_name, b_name, va, vb)`` rows:
-    OR-amplification multiplies candidates, and a Catalyst higher-order
-    fold evaluates its lambda per element (candidates x dim interpreted
-    calls); one numpy einsum per batch does the same dot products in
-    BLAS time. Sum order differs from the fold by ~1e-15 — absorbed by
-    the 6-dp round (same note as the GEMM path). Zero-norm vectors
-    score 0.0 per the engine convention."""
-    import numpy as np
-    import pandas as pd
-    from collections.abc import Iterator
-
-    def verify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            A = np.asarray(list(pdf["va"]), dtype=np.float64)
-            B = np.asarray(list(pdf["vb"]), dtype=np.float64)
-            denom = np.sqrt((A * A).sum(axis=1)) * np.sqrt((B * B).sum(axis=1))
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = np.where(
-                    denom > 0, np.einsum("ij,ij->i", A, B) / denom, 0.0
-                )
-            cos = np.round(cos, 6)
-            m = cos >= threshold
-            if m.any():
-                yield pd.DataFrame(
-                    {
-                        a_name: pdf[a_name].to_numpy()[m],
-                        b_name: pdf[b_name].to_numpy()[m],
-                        "cosine": cos[m],
-                    }
-                )
-
-    return paired.mapInPandas(
-        verify, f"{a_name} long, {b_name} long, cosine double"
-    )
-
-
 def incremental_embedding_neardup(
     batch_emb: DataFrame,
     corpus_emb: DataFrame,
@@ -1658,10 +1601,7 @@ def incremental_embedding_neardup(
         .select("batch_id", "corpus_id")
         .distinct()
     )
-    # size-routed exact verify (see _cosine_verify_auto): the batch
-    # side is delta-sized; a big corpus side ships per-block instead of
-    # per-pair
-    return _cosine_verify_auto(
+    return _block_cosine_verify(
         cand, batch_emb, corpus_emb, threshold,
         a_name="batch_id", b_name="corpus_id",
         id_col=id_col, vec_col=vec_col, b_count=known_count,
@@ -1929,75 +1869,6 @@ def hamming_pairs(
     return pairs.where(F.col("hamming") <= max_hamming)
 
 
-def embedding_neardup_pairs(
-    emb: DataFrame,
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_blocks: int = 16,
-) -> DataFrame:
-    """(a, b, cosine) pairs with cosine >= threshold, a < b — exact
-    all-pairs. Correct at any scale but O(n^2); the scale path prunes
-    candidates with ann.random_projection_buckets first (same verify step).
-
-    Shape: a **blocked self-join** — both sides get ``block = id % B`` and
-    meet through a broadcast (block_a, block_b) pair table, making both
-    joins hash equi-joins (whole-stage codegen) instead of a
-    BroadcastNestedLoopJoin (interpreted row loop; measured >2x slower).
-    At cluster scale the blocks also bound per-task pair counts, so skew
-    can't concentrate the quadratic work. Norms are computed once per
-    vector (persisted base), so per-pair work is one dot fold + one divide.
-    """
-    spark = emb.sparkSession
-    v = to_double_array(vec_col)
-    base = emb.select(
-        F.col(id_col).alias("id"),
-        v.alias("v"),
-        l2_norm(v).alias("nrm"),
-        # pmod, not %: Spark's % keeps the dividend's sign, so a negative
-        # id would land in a block the pair table never covers (same fix
-        # as the gemm path)
-        F.pmod(F.col(id_col), F.lit(n_blocks)).cast("int").alias("block"),
-        # localCheckpoint, NOT persist: no caller can unpersist a cache
-        # entry backing a lazily-returned pair frame, and CacheManager
-        # entries never free on GC — repeated calls would pin one
-        # corpus-sized copy each. The checkpointed RDD frees via the
-        # ContextCleaner once the result is GC'd (lineage truncation:
-        # an executor loss mid-run fails the retryable job instead of
-        # recomputing).
-    ).localCheckpoint(eager=False)
-    x = base.select(
-        F.col("id").alias("a"), F.col("v").alias("va"), F.col("nrm").alias("na"),
-        F.col("block").alias("ba"),
-    )
-    y = base.select(
-        F.col("id").alias("b"), F.col("v").alias("vb"), F.col("nrm").alias("nb"),
-        F.col("block").alias("bb"),
-    )
-    block_pairs = F.broadcast(
-        spark.createDataFrame(
-            [(i, j) for i in range(n_blocks) for j in range(n_blocks)],
-            "ba int, bb int",
-        )
-    )
-    return (
-        x.join(block_pairs, "ba")
-        .join(y, "bb")
-        .where(F.col("a") < F.col("b"))
-        .select(
-            "a",
-            "b",
-            F.round(
-                cosine_from_parts(
-                    dot(F.col("va"), F.col("vb")), F.col("na"), F.col("nb")
-                ),
-                6,
-            ).alias("cosine"),
-        )
-        .where(F.col("cosine") >= threshold)
-    )
-
-
 def semdedup_pairs(
     emb: DataFrame,
     assigned: DataFrame,
@@ -2015,81 +1886,31 @@ def semdedup_pairs(
 
     Scale design: the cluster assignment IS the blocking — pairing cost
     drops from O(n^2) to sum_c n_c^2, and each cluster is further
-    sub-blocked by ``pmod(id, nb)`` into the same blocked-GEMM shape as
-    embedding_neardup_pairs_gemm: one BLAS matmul per (cluster, i <= j)
-    block pair, pairs streamed out via Arrow. ``nb`` scales with the
-    LARGEST cluster so a hot cluster fans out across tasks instead of
-    pinning one.
+    sub-blocked by ``pmod(id, nb)`` into the blocked-GEMM fan-out
+    (:func:`_block_gemm` with ``cluster`` as its group column): one BLAS
+    matmul per (cluster, i <= j) block pair, pairs streamed out via
+    Arrow. ``nb`` scales with the LARGEST cluster so a hot cluster fans
+    out across tasks instead of pinning one.
     """
     import math
-    from collections.abc import Iterator
 
-    import numpy as np
-    import pandas as pd
-
-    spark = emb.sparkSession
-    v = to_double_array(vec_col)
     # size nb from the assignment table ALONE (id -> cluster, no vectors):
     # a cheap aggregate instead of an extra full emb-join pass.
-    max_c = (
-        assigned.groupBy("cluster").count().agg(F.max("count")).first()[0]
+    max_c, n_clusters = (
+        assigned.groupBy("cluster").count()
+        .agg(F.max("count"), F.count("*")).first()
     )
     nb = max(1, math.ceil((max_c or 0) / rows_per_block))
-    base = (
-        emb.select(F.col(id_col).alias("id"), v.alias("v"))
-        .join(assigned.select("id", "cluster"), "id")
+    return _block_gemm(
+        emb.select(id_col, vec_col).join(
+            assigned.select(F.col("id").alias(id_col), "cluster"), id_col
+        ),
+        id_col, vec_col, nb, rows_per_block,
+        lambda ai, bi, A, B, same: _gemm_pairs(ai, bi, A, B, same, threshold),
+        "a long, b long, cluster int, cosine double",
+        groups=("cluster",),
+        n_groups=max(1, n_clusters),
     )
-    base = base.withColumn(
-        "block", F.pmod(F.col("id"), F.lit(nb)).cast("int")
-    )
-    mats = base.groupBy("cluster", "block").agg(
-        F.collect_list("id").alias("ids"),
-        F.collect_list("v").alias("vecs"),
-    )
-    a = mats.select(
-        "cluster", F.col("block").alias("ba"),
-        F.col("ids").alias("ids_a"), F.col("vecs").alias("vecs_a"),
-    )
-    b = mats.select(
-        "cluster", F.col("block").alias("bb"),
-        F.col("ids").alias("ids_b"), F.col("vecs").alias("vecs_b"),
-    )
-    block_pairs = F.broadcast(
-        spark.createDataFrame(
-            [(i, j) for i in range(nb) for j in range(i, nb)],
-            "ba int, bb int",
-        )
-    )
-    joined = (
-        a.join(block_pairs, "ba")
-        .join(b, ["cluster", "bb"])
-        .repartition("cluster", "ba", "bb")
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                out = _gemm_pairs(
-                    np.asarray(row.ids_a, dtype=np.int64),
-                    np.asarray(row.ids_b, dtype=np.int64),
-                    np.asarray(list(row.vecs_a), dtype=np.float64),
-                    np.asarray(list(row.vecs_b), dtype=np.float64),
-                    same_block=(row.ba == row.bb),
-                    threshold=threshold,
-                )
-                if out is None:
-                    continue
-                a_out, b_out, cos = out
-                yield pd.DataFrame(
-                    {
-                        "a": a_out,
-                        "b": b_out,
-                        "cluster": np.full(len(a_out), row.cluster),
-                        "cosine": cos,
-                    }
-                )
-
-    return joined.mapInPandas(run, "a long, b long, cluster int, cosine double")
 
 
 def semdedup_prune(pairs: DataFrame) -> DataFrame:

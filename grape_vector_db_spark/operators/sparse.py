@@ -407,7 +407,10 @@ def class_tfidf_top_terms(
     toked = df.select(
         F.col(class_col).alias("class"), tokens(text_col).alias("toks")
     )
-    exploded = toked.select("class", F.explode("toks").alias("term"))
+    # explode_outer + IS NOT NULL, not explode: see doc_terms
+    exploded = toked.select(
+        "class", F.explode_outer("toks").alias("term")
+    ).where(F.col("term").isNotNull())
     # ctf feeds THREE consumers (scored, ftot, a_row) and Catalyst prunes
     # each branch to a different schema, so no exchange ever reuses — the
     # corpus tokenize+explode+aggregate ran 3x per call (plan-verified:

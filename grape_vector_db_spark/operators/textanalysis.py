@@ -206,9 +206,12 @@ def token_entropy(
     (0, 0.0) instead of silently vanishing.
     """
     toked = df.select(F.col(id_col).alias("doc_id"), tokens(text_col).alias("_t"))
-    terms = toked.where(F.size("_t") > 0).select(
-        "doc_id", F.explode("_t").alias("term")
-    )
+    # explode_outer + IS NOT NULL: a size filter or an inner explode
+    # (InferFiltersFromGenerate) copies the tokenizer into a pushed-down
+    # filter (functions.text.doc_terms)
+    terms = toked.select(
+        "doc_id", F.explode_outer("_t").alias("term")
+    ).where(F.col("term").isNotNull())
     counts = terms.groupBy("doc_id", "term").agg(F.count("*").alias("c"))
     per_doc = counts.groupBy("doc_id").agg(
         F.sum("c").alias("n_tokens"),

@@ -412,7 +412,7 @@ def _hadoop_fs(spark: SparkSession, path: str):
 
 
 def _write_control(spark: SparkSession, file_path: str, body: dict) -> None:
-    """Write a small JSON control file (catalog / backup manifest)
+    """Write a small JSON control file (a backup manifest) in place
     by temp write + rename, so a reader never sees a torn file. A failed
     rename raises: a manifest that did not land is no commit."""
     fs, P = _hadoop_fs(spark, file_path)
@@ -1022,9 +1022,12 @@ def commit_catalog(
     if tables == base.tables:
         return
     path, nxt = f"{root}/_catalog", base.version + 1
+    fs, P = _hadoop_fs(spark, path)
 
     def stage(dest: str):
-        _write_control(spark, f"{dest}/{_CATALOG}", {"tables": tables})
+        # the writer-private stage makes a direct write enough (the
+        # publish_table sidecar rule); _claim checks the file arrived
+        _put_json(fs, P(f"{dest}/{_CATALOG}"), {"tables": tables})
         return [_CATALOG]
 
     _commit(spark, path, nxt, stage)

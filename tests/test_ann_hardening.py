@@ -6,15 +6,13 @@
 2. The IVF-PQ residual lookup keys by the ACTUAL cluster id — a dense
    positional array silently subtracted the wrong/absent centroid for
    non-contiguous centroid tables (externally trained, dropped cell).
-3. save_pq_index commits the codebooks/codes version PAIR in one
-   catalog version (the save_index rule): a crash between the two publishes
-   must not pair new codebooks with codes encoded under the old ones.
-4. _rp_bucket_expr folds in LONG (int overflowed at n_planes >= 32
-   under ANSI) and rejects widths past the 64-bit ceiling.
-5. kmeans_fit stays correct on the capped/spread-init path (the
+3. The RP bucket kernel emits LONG buckets past 31 planes (an int
+   fold overflowed at n_planes >= 32 under ANSI), int below, and
+   rejects widths past the 64-bit ceiling.
+4. kmeans_fit stays correct on the capped/spread-init path (the
    k-means++ D^2 loop is k*sample*dim SINGLE-THREADED driver flops —
    unboundedly slow at autosized nlist for 1e9 rows).
-6. knn_pagerank raises the module's conventional ValueError on an
+5. knn_pagerank raises the module's conventional ValueError on an
    empty corpus (was: ZeroDivisionError at plan construction).
 """
 
@@ -57,59 +55,32 @@ def test_ivfpq_residuals_with_noncontiguous_cluster_ids(spark):
         assert r["codes"] is not None and len(r["codes"]) == 2
 
 
-def test_save_pq_index_commits_version_pair(spark, tmpdir):
-    from grape_vector_db_spark.sources.tables import (
-        publish_table,
-        read_catalog,
-    )
-
-    path = f"{tmpdir}/pqidx"
-    codebooks = [[[0.0], [1.0]]]
-    codes = spark.createDataFrame(
-        [(1, [0]), (2, [1])], "id long, codes array<int>"
-    )
-    ann.save_pq_index(path, codebooks, codes)
-    cat = read_catalog(spark, path, ("codebooks", "codes"))
-    assert cat.version == 1 and set(cat.tables) == {"codebooks", "codes"}
-    # simulate a crashed half-rebuild: a NEWER codes version lands but
-    # the catalog (the real commit point) was never re-written
-    bogus = spark.createDataFrame([(9, [1])], "id long, codes array<int>")
-    publish_table(spark, f"{path}/codes", bogus)
-    _, got = ann.load_pq_index(spark, path)
-    # the reader opens the PAIRED version, not the newest one
-    assert {r["id"] for r in got.collect()} == {1, 2}
-    # a fresh SAVE re-points the pair and the new codes become visible
-    ann.save_pq_index(path, codebooks, bogus)
-    _, got2 = ann.load_pq_index(spark, path)
-    assert {r["id"] for r in got2.collect()} == {9}
-
-
 class TestRpBucketWidth:
     def test_wide_table_folds_in_long(self, spark):
         df = spark.createDataFrame(
             [(1, [float(i % 3) - 1.0 for i in range(8)])],
             "vec_id long, embedding array<double>",
         )
-        out = df.select(
-            ann._rp_bucket_expr(
-                "embedding", n_planes=40, dim=8, seed=1
-            ).alias("bucket")
-        ).collect()
-        assert out[0]["bucket"] >= 0  # no ANSI overflow, no wrap
+        out = ann.random_projection_tables(
+            df, n_planes=40, n_tables=1, dim=8, seed=1
+        )
+        assert dict(out.dtypes)["bucket"] == "bigint"
+        assert out.collect()[0]["bucket"] >= 0  # no ANSI overflow, no wrap
 
     def test_past_long_ceiling_raises(self, spark):
+        df = spark.createDataFrame(
+            [(1, [1.0] * 8)], "vec_id long, embedding array<double>"
+        )
         with pytest.raises(ValueError, match="n_planes"):
-            ann._rp_bucket_expr("embedding", 63, 8, 1)
+            ann.random_projection_tables(df, n_planes=63, dim=8, seed=1)
 
     def test_narrow_tables_keep_int_dtype(self, spark):
         # every existing caller/oracle compares against int buckets
         df = spark.createDataFrame(
             [(1, [1.0, -1.0])], "vec_id long, embedding array<double>"
         )
-        out = df.select(
-            ann._rp_bucket_expr(
-                "embedding", n_planes=4, dim=2, seed=1
-            ).alias("bucket")
+        out = ann.random_projection_tables(
+            df, n_planes=4, n_tables=1, dim=2, seed=1
         )
         assert dict(out.dtypes)["bucket"] == "int"
 

@@ -16,6 +16,9 @@
 7. stats() reports the text inverted index (tombstones excluded).
 8. A docs-batch tenant move refreshes the partition layout even when
    an unrelated embeddings batch rides along.
+9. Graph and IVF builds refuse non-integral (UUID) ids before any job
+   runs and publish nothing; sq and binary still build and serve.
+10. build_index rejects keyword arguments its kind does not take.
 """
 
 from __future__ import annotations
@@ -129,3 +132,47 @@ def test_docs_tenant_move_with_embeddings_batch_refreshes_layout(
     # pre-fix the metadata-move branch was gated on embeddings IS None,
     # so doc 3's layout row stayed under the old lang
     assert row["lang"] == "xx"
+
+
+def test_graph_and_ivf_builds_refuse_uuid_ids(spark, emb, tmp_path):
+    import uuid
+
+    rows = emb.where("vec_id < 40").select("vec_id", "embedding").collect()
+    vecs = spark.createDataFrame(
+        [(str(uuid.UUID(int=r["vec_id"] + 1)), r["embedding"]) for r in rows],
+        "vec_id string, embedding array<double>",
+    )
+    db = GrapeVectorDB(spark, str(tmp_path / "db"))
+    db.add_documents(
+        vecs.select(F.col("vec_id").alias("doc_id"), F.lit("doc").alias("text")),
+        vecs,
+    )
+    version = db._catalog().version
+    for kind in ("graph", "ivf"):
+        jobs = spark.sparkContext.statusTracker().getJobIdsForGroup()
+        with pytest.raises(ValueError, match="'vec_id' is string"):
+            db.build_index(kind)
+        assert spark.sparkContext.statusTracker().getJobIdsForGroup() == jobs
+        assert db._catalog().version == version
+        assert not db._has("index_graph") and not db._has("index_ivf/centroids")
+    qv = list(rows[3]["embedding"])
+    for kind in ("sq", "binary"):
+        db.build_index(kind)
+        got = db.search(vector=qv, limit=3, index=kind).collect()
+        assert got[0]["vec_id"] == str(uuid.UUID(int=4))
+
+
+@pytest.mark.parametrize(
+    "kind", ["ivf", "graph", "partition", "text", "payload", "binary", "sq"]
+)
+def test_build_index_rejects_keywords_its_kind_does_not_take(
+    spark, docs, emb, tmp_path, kind
+):
+    db = GrapeVectorDB(spark, str(tmp_path / "db"))
+    db.add_documents(docs.limit(20), emb.limit(20))
+    version = db._catalog().version
+    with pytest.raises(ValueError, match="takes no K"):
+        db.build_index(kind, K=16)
+    with pytest.raises(ValueError, match="takes no include_vectors"):
+        db.build_index(kind, include_vectors=False)
+    assert db._catalog().version == version

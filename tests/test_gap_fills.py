@@ -153,52 +153,6 @@ def test_index_save_load_roundtrip(spark, emb):
         shutil.rmtree(d, ignore_errors=True)
 
 
-def test_pq_index_save_load_roundtrip(spark, emb):
-    """S13 parity for PQ: persisted codebooks + codes reproduce the same
-    search results as the in-memory index."""
-    d = tempfile.mkdtemp(prefix="gvdb_pqidx_")
-    try:
-        qv = search.query_vector_of(emb, 0)
-        cbs, codes = ann.pq_build(emb, m=8, k=16, max_iter=2)
-        want = [(r["vec_id"], r["score"]) for r in
-                ann.pq_search(emb, cbs, codes, qv, k=5, rescore=30).collect()]
-        ann.save_pq_index(d, cbs, codes)
-        cbs2, codes2 = ann.load_pq_index(spark, d)
-        assert cbs2 == cbs
-        got = [(r["vec_id"], r["score"]) for r in
-               ann.pq_search(emb, cbs2, codes2, qv, k=5, rescore=30).collect()]
-        assert got == want
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-
-
-def test_ivfpq_index_save_load_partitioned(spark, emb):
-    """IVF-PQ codes persist partitioned by coarse cell (partition-pruned
-    probed reads) and search equally after reload."""
-    d = tempfile.mkdtemp(prefix="gvdb_ivfpqidx_")
-    try:
-        qv = search.query_vector_of(emb, 0)
-        cents, cbs, codes = ann.ivfpq_build(emb, nlist=4, m=8, k=16, max_iter=2)
-        want = [(r["vec_id"], r["score"]) for r in ann.ivfpq_search(
-            emb, cents, cbs, codes, qv, k=5, nprobe=4, rescore=30).collect()]
-        ann.save_pq_index(d, cbs, codes)
-        # codes live in a versioned dir (atomic swap on rebuild); the
-        # partitioned layout sits inside the current version
-        import os
-
-        from grape_vector_db_spark.sources.tables import current_table_path
-
-        vdir = current_table_path(spark, f"{d}/codes")
-        assert "/t=" in vdir
-        assert any(f.startswith("cluster=") for f in os.listdir(vdir))
-        cbs2, codes2 = ann.load_pq_index(spark, d)
-        got = [(r["vec_id"], r["score"]) for r in ann.ivfpq_search(
-            emb, cents, cbs2, codes2, qv, k=5, nprobe=4, rescore=30).collect()]
-        assert got == want
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-
-
 def test_ivf_build_fixed_pruned_matches_flat(spark, emb):
     """The persisted partition-pruned flat-IVF path returns exactly what
     the in-memory ivf_flat_search returns."""

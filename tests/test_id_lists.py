@@ -76,21 +76,22 @@ def test_graph_search_and_get_documents_build_one_in_expression(
 def test_ids_of_another_type_than_the_column_fall_back_to_isin(
     spark, emb, tmp_path
 ):
-    """An id whose Python type is not the column's (``knn_graph`` gives
-    bigint ``dst`` ids over string vector ids; a caller passes ints for
-    string doc ids) has no literal of the column's type: the predicate
-    falls back to ``isin`` and Spark's implicit cast, as before."""
+    """An id whose Python type is not the column's (a graph with bigint
+    ``dst`` ids over string vector ids; a caller passes ints for string
+    doc ids) has no literal of the column's type: the predicate falls
+    back to ``isin`` and Spark's implicit cast, as before."""
     from pyspark.sql.types import LongType, StringType
 
     spell = vector.id_literal(StringType())
     assert spell(7) is None and spell("7") == "CAST(X'37' AS STRING)"
     assert vector.id_literal(LongType())("7") is None
 
-    vecs = emb.where("vec_id < 40").select(
+    ints = emb.where("vec_id < 40").select("vec_id", "embedding")
+    vecs = ints.select(
         F.col("vec_id").cast("string").alias("vec_id"), "embedding"
     )
     edges = spark.createDataFrame(
-        [tuple(r) for r in ann.knn_graph(vecs, k=4).select("src", "dst").collect()],
+        [tuple(r) for r in ann.knn_graph(ints, k=4).select("src", "dst").collect()],
         "src long, dst long",
     )
     qv = list(emb.where("vec_id = 3").head()["embedding"])

@@ -228,21 +228,40 @@ def test_ngram_hot_shingle_cap_bounds_pairs(spark):
     assert uncapped.count() > len(got)
 
 
+def _all_pairs_cosine(emb, threshold):
+    """Driver-side all-pairs reference: one numpy dot per pair, cosine
+    rounded to 6 dp, pairs (a < b) at or above ``threshold``."""
+    import numpy as np
+
+    rows = sorted(
+        (r["vec_id"], np.asarray(r["embedding"], dtype=np.float64))
+        for r in emb.select("vec_id", "embedding").collect()
+    )
+    out = []
+    for i, (a, x) in enumerate(rows):
+        for b, y in rows[i + 1:]:
+            cos = round(float(x @ y / (np.linalg.norm(x) * np.linalg.norm(y))), 6)
+            if cos >= threshold:
+                out.append((a, b, cos))
+    return sorted(out)
+
+
 def test_embedding_neardup_gemm_matches_exact(spark, emb):
-    """Block-GEMM exact all-pairs must be pair-identical to the
-    expression-fold path — including pairs whose smaller id lives in the
-    HIGHER block (n_blocks=3 forces cross-block id inversions)."""
-    gemm = sorted(
-        (r["a"], r["b"], r["cosine"])
-        for r in dedup.embedding_neardup_pairs_gemm(
-            emb, threshold=0.3, n_blocks=3
-        ).collect()
-    )
-    exact = sorted(
-        (r["a"], r["b"], r["cosine"])
-        for r in dedup.embedding_neardup_pairs(emb, threshold=0.3).collect()
-    )
-    assert gemm == exact and len(gemm) > 0
+    """Block-GEMM exact all-pairs must be pair-identical to an all-pairs
+    reference — including pairs whose smaller id lives in the HIGHER
+    block (n_blocks=3 forces cross-block id inversions) — and to its own
+    single-block path."""
+    def gemm(n_blocks):
+        return sorted(
+            (r["a"], r["b"], r["cosine"])
+            for r in dedup.embedding_neardup_pairs_gemm(
+                emb, threshold=0.3, n_blocks=n_blocks
+            ).collect()
+        )
+
+    blocked = gemm(3)
+    assert blocked == _all_pairs_cosine(emb, 0.3) and len(blocked) > 0
+    assert gemm(1) == blocked
 
 
 def test_embedding_neardup_lsh_subset_of_exact(spark, emb):
@@ -251,7 +270,7 @@ def test_embedding_neardup_lsh_subset_of_exact(spark, emb):
     threshold; every reported pair shares a bucket."""
     exact = {
         (r["a"], r["b"]): r["cosine"]
-        for r in dedup.embedding_neardup_pairs(emb, threshold=0.2).collect()
+        for r in dedup.embedding_neardup_pairs_gemm(emb, threshold=0.2).collect()
     }
     lsh = {
         (r["a"], r["b"]): r["cosine"]
@@ -417,7 +436,7 @@ def test_embedding_neardup_lsh_autosizes_from_known_count(spark, emb):
     auto-cap threshold a finite bucket_cap is applied by default."""
     exact = {
         (r["a"], r["b"]): r["cosine"]
-        for r in dedup.embedding_neardup_pairs(emb, threshold=0.2).collect()
+        for r in dedup.embedding_neardup_pairs_gemm(emb, threshold=0.2).collect()
     }
     auto = {
         (r["a"], r["b"]): r["cosine"]

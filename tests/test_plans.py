@@ -85,6 +85,34 @@ def test_doc_terms_tokenizes_each_document_once(spark, docs):
     assert plan.count("filter(transform(split(") == 1, plan
 
 
+def test_token_entropy_tokenizes_each_document_once(spark, docs):
+    """token_entropy explodes with explode_outer + IS NOT NULL (the
+    doc_terms form): a size filter or an inner explode copied the
+    tokenizer into a pushed-down filter (3 copies)."""
+    from grape_vector_db_spark.operators import textanalysis
+
+    plan = optimized_of(
+        textanalysis.token_entropy(docs.where(F.col("doc_id") >= 0))
+    )
+    assert plan.count("filter(transform(split(") == 1, plan
+
+
+def test_class_tfidf_tokenizes_each_document_once(spark, docs, monkeypatch):
+    """class_tfidf_top_terms' per-class term counts (materialized by a
+    localCheckpoint, so read from the checkpointed frame's plan) hold
+    the tokenizer once: an inner explode copied it 3 times."""
+    seen = []
+    real = type(docs).localCheckpoint
+
+    def spy(self, *a, **kw):
+        seen.append(optimized_of(self))
+        return real(self, *a, **kw)
+
+    monkeypatch.setattr(type(docs), "localCheckpoint", spy)
+    sparse.class_tfidf_top_terms(docs.where(F.col("doc_id") >= 0), top_k=5)
+    assert [p.count("filter(transform(split(") for p in seen] == [1], seen
+
+
 def test_point_lookup_pushdown(spark):
     # uncached table: see test_filter_pushdown_reaches_parquet
     orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")

@@ -50,6 +50,18 @@ def _persistent_rdds(spark) -> int:
     return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
 
 
+def _pin_persistent_rdds(spark) -> list:
+    """Hold a reference to every RDD persisted now. An earlier test's
+    dropped localCheckpoint is otherwise released by the ContextCleaner
+    whenever a garbage collection reaches it, which can be in the middle
+    of the write under test (the count then falls)."""
+    pinned = []
+    it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
+    while it.hasNext():
+        pinned.append(it.next()._2())
+    return pinned
+
+
 @pytest.fixture()
 def db(spark, tmp_path):
     inst = GrapeVectorDB(spark, str(tmp_path / "db"))
@@ -146,6 +158,7 @@ def test_nondeterministic_batch_lands_identically_everywhere(db, spark):
 
 
 def test_materialized_inputs_are_released(db, spark):
+    pinned = _pin_persistent_rdds(spark)
     before = _persistent_rdds(spark)
     db.add_documents(
         spark.createDataFrame([_doc(i, 1) for i in range(150, 170)], DOC_SCHEMA),
@@ -162,6 +175,7 @@ def test_materialized_inputs_are_released(db, spark):
     assert _persistent_rdds(spark) == before
     # the rejected batch published nothing
     assert db.documents().where("doc_id = 170").count() == 0
+    assert len(pinned) == before
 
 
 def _sidecar(db, table: str) -> dict:
