@@ -52,9 +52,7 @@ from .sources.tables import (
     Catalog,
     ConcurrentMergeError,
     _entry_dir,
-    _hadoop_fs,
     _sidecar_schema,
-    bucket_manifest_dirs,
     commit_catalog,
     materialized,
     merge_upsert,
@@ -366,10 +364,11 @@ class GrapeVectorDB:
     def _write(self, body):
         """Run ``body`` as one facade write on the newest catalog plus
         its own pending versions, then one catalog commit. A
-        ConcurrentMergeError (a lost table claim or catalog CAS) re-runs
-        the body on the winner's catalog, at most _WRITE_ATTEMPTS times;
-        callers materialize their inputs first, so a retry re-reads only
-        stored tables. A write called inside another joins it."""
+        ConcurrentMergeError (a table or catalog commit that lost its
+        claim rename or its re-check) re-runs the body on the winner's
+        catalog, at most _WRITE_ATTEMPTS times; callers materialize
+        their inputs first, so a retry re-reads only stored tables. A
+        write called inside another joins it."""
         if self._base is not None:
             return body()
         for attempt in range(self._WRITE_ATTEMPTS):
@@ -404,16 +403,9 @@ class GrapeVectorDB:
         partition_by: list[str] | None = None,
         extra_stats: dict | None = None,
     ) -> None:
-        entry = self._entry(table)
-        if entry is not None and entry[1] not in ("plain", "flat"):
-            # a table catalogued in the removed bucket-manifest layout:
-            # no reader can use its version dirs, and having no
-            # _SUCCESS marker they would block this publish's claim.
-            # Only they go: a concurrent rebuild's claim or commit here
-            # never holds _MANIFEST.json
-            fs, P = _hadoop_fs(self.spark, self.base)
-            for d in bucket_manifest_dirs(self.spark, self._path(table)):
-                fs.delete(P(d), True)
+        # a version dir of the removed bucket-manifest layout has no
+        # _SUCCESS marker: the publish numbers past it, and catalog
+        # retention deletes it once the table moves on
         version = publish_table(
             self.spark, self._path(table), df, keep=None,
             stats_exprs=stats_exprs, partition_by=partition_by,
@@ -440,7 +432,7 @@ class GrapeVectorDB:
         st = read_table_stats(self.spark, self._path(table), version=key[0])
         if st is not None:
             # a version committed through the staged protocol always has
-            # its sidecar (staged before the marker), so None means a
+            # its sidecar (staged with the marker), so None means a
             # legacy version — or one whose writer predates the protocol
             # and wrote _STATS.json after _SUCCESS. It is not cached: in
             # that window caching None would keep it (e.g. _ivf_replicas

@@ -1938,15 +1938,17 @@ def _positional_grams(
     exploded from every token position (0-based) of the
     whitespace-lowered token stream. One explode, corpus-token-count
     rows — both span operators read the SAME construction so their
-    owner/coverage pairing can never drift."""
+    owner/coverage pairing can never drift. posexplode_outer + IS NOT
+    NULL, not a size filter or an inner posexplode: those copy the
+    tokenizer into a pushed-down filter (functions.text.doc_terms)."""
     toks = ws_tokens(text_col)
     base = df.select(F.col(id_col).alias("doc_id"), toks.alias("toks")).select(
         "doc_id", "toks", F.size("toks").alias("n_tokens")
     )
-    grams = base.where(F.col("n_tokens") >= n).select(
+    grams = base.select(
         "doc_id",
-        F.posexplode(word_grams(F.col("toks"), n)).alias("pos", "gram"),
-    )
+        F.posexplode_outer(word_grams(F.col("toks"), n)).alias("pos", "gram"),
+    ).where(F.col("gram").isNotNull())
     return base, grams
 
 
@@ -2165,8 +2167,8 @@ def trim_duplicate_spans(
         .distinct()
     )
     pos_toks = base.select(
-        "doc_id", F.posexplode("toks").alias("ti", "tok")
-    )
+        "doc_id", F.posexplode_outer("toks").alias("ti", "tok")
+    ).where(F.col("tok").isNotNull())
     kept = pos_toks.join(cut, ["doc_id", "ti"], "left_anti")
     rebuilt = kept.groupBy("doc_id").agg(
         F.concat_ws(

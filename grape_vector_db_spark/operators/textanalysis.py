@@ -1063,21 +1063,24 @@ def collocations(
     toked = df.select(
         _ws_tokens(text_col).alias("_t")
     ).where(F.length(F.trim(F.col(text_col))) > 0)
+    # explode_outer + IS NOT NULL and no size filter: either would copy
+    # the tokenizer into a pushed-down filter (functions.text.doc_terms)
     uni = (
-        toked.select(F.explode("_t").alias("w"))
+        toked.select(F.explode_outer("_t").alias("w"))
+        .where(F.col("w").isNotNull())
         .groupBy("w")
         .agg(F.count("*").alias("c"))
     )
-    pairs = toked.where(F.size("_t") >= 2).select(
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.size("_t") - 2),
-                lambda i: F.struct(
-                    F.col("_t")[i].alias("w1"), F.col("_t")[i + 1].alias("w2")
-                ),
+    m = F.greatest(F.size("_t") - 1, F.lit(0))  # bigrams; 0 for short docs
+    pairs = toked.select(
+        F.explode_outer(
+            F.zip_with(
+                F.slice("_t", 1, m),
+                F.slice("_t", 2, m),
+                lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
             )
         ).alias("p")
-    )
+    ).where(F.col("p").isNotNull())
     # one bigram explode only: the total-pair count derives from the
     # per-pair count table (sum of n), and because both branches share
     # the identical groupBy subplan, ReuseExchange materializes the

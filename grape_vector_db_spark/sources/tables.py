@@ -349,21 +349,23 @@ def exists(df: DataFrame, id_value, id_col: str = "id") -> bool:
 # -- versioned table layout (staged, single-winner commit) -------------------
 #
 # Every mutating write publishes a NEW directory {path}/t={N+1} through
-# one commit (:func:`_commit`): stage, CAS-claim, re-check, then the
-# _SUCCESS marker beside the staged files (a table's _STATS.json, a
-# catalog's _CATALOG.json). A version is visible iff its marker exists,
-# so readers see the old or the new version, never a partial one or one
-# without its stats; writers that read the same t=N race to ONE winner,
-# each loser raising ConcurrentMergeError having published nothing (the
-# reference's two-tree sled transaction, src/advanced_storage.rs:145-191).
-# The last ``keep`` versions survive GC for in-flight readers. Filesystem
-# ops go through the Hadoop FileSystem API (HDFS/object stores; on the
-# latter the staged rename is a copy).
+# one commit (:func:`_commit`): ONE rename of a writer-private stage
+# holding the files, the sidecar (a table's _STATS.json, a catalog's
+# _CATALOG.json) and the _SUCCESS marker. A version is visible iff its
+# marker exists, so readers see the old or the new version, never a
+# partial one. Numbering skips every t=N dir on disk, so a dir a stopped
+# writer left is never waited on. Writers that read the same t=N race to
+# ONE winner, each loser raising ConcurrentMergeError having published
+# nothing (the reference's two-tree sled transaction,
+# src/advanced_storage.rs:145-191). The last ``keep`` versions survive
+# GC for in-flight readers. Filesystem ops go through the Hadoop
+# FileSystem API (HDFS/object stores; on the latter the rename is a
+# copy).
 
 _SUCCESS = "_SUCCESS"
 
-# a staged or claimed artifact older than this without a marker cannot
-# belong to a live writer (a claim->commit window is seconds)
+# a stage older than this cannot belong to a live writer (a stage lives
+# for one Spark write)
 _STALE_CLAIM_MS = 24 * 3600 * 1000
 
 
@@ -466,22 +468,34 @@ def _read_control(spark: SparkSession, file_path: str) -> dict | None:
     return json.loads(text)
 
 
-def _commit(spark: SparkSession, path: str, nxt: int, stage_write) -> None:
-    """Publish version ``t={nxt}`` of the table at ``path`` — the one
-    commit protocol of every versioned writer:
+def _commit(
+    spark: SparkSession, path: str, base: int, stage_write, keep: int | None
+) -> int:
+    """Publish the next version of the table at ``path`` over version
+    ``base`` (0: none) and return its number — the one commit protocol
+    of every versioned writer:
 
-    1. ``stage_write(stage)`` writes the version's files into a
-       writer-unique dot-dir and returns the entries that must arrive
-       with the claim;
-    2. :func:`_claim` renames the stage onto ``t={nxt}``;
-    3. a committed version at or past ``nxt`` means a stale snapshot
-       (retention can GC the contended dir before our rename, so the
-       rename alone would succeed): abort;
-    4. the empty ``_SUCCESS`` marker is created — the commit point.
+    1. :func:`_reap_abandoned` lists ``path``; the version is numbered
+       past every ``t=N`` dir on it, committed or not;
+    2. ``stage_write(stage)`` writes the version's files, sidecar and
+       ``_SUCCESS`` into a writer-unique dot-dir and returns the entries
+       that must arrive with the claim;
+    3. :func:`_claim` renames the stage onto ``t={nxt}``: the commit;
+    4. one listing right after the rename re-checks that the only
+       committed version above ``base`` is ours, else we delete ours
+       and raise. A writer who read our version needs at least a Spark
+       write before it can commit on top, which outlasts one listing,
+       so an abort here means a freed slot (retention under newer
+       commits) or a gap (a commit after our base read), never a
+       commit built on ours;
+    5. the token is deleted; with ``keep``, retention deletes the
+       step-1 dirs below the ``keep`` newest commits, dead ones too.
 
-    A failure after the claim releases it, so the next writer can take
-    the version at once; a killed writer's claim is adopted once stale."""
+    Nothing is created after the rename: a writer stopped at any step
+    leaves no version or a whole one."""
     fs, P = _hadoop_fs(spark, path)
+    listed = _reap_abandoned(spark, path)
+    nxt = max(listed, default=0) + 1
     stage = f"{path}/.stage-t{nxt}-{uuid.uuid4().hex[:8]}"
     try:
         parts = stage_write(stage)
@@ -491,18 +505,26 @@ def _commit(spark: SparkSession, path: str, nxt: int, stage_write) -> None:
     token = _claim(spark, path, stage, nxt, parts)
     target = f"{path}/t={nxt}"
     try:
-        latest = _versions_with_marker(spark, path)
-        if latest and latest[-1] >= nxt:
+        committed = _versions_with_marker(spark, path)
+        newer = [v for v in committed if v > base]
+        if newer != [nxt]:
             raise ConcurrentMergeError(
-                f"version t={latest[-1]} committed under {path} while this "
-                f"write (based on t={nxt - 1}) was in flight; re-read and retry"
+                f"versions {newer} committed under {path} while this write "
+                f"(based on t={base}) was in flight; re-read and retry"
             )
-        fs.create(P(f"{target}/{_SUCCESS}"), True).close()
     except Exception:
-        if not fs.exists(P(f"{target}/{_SUCCESS}")):
-            fs.delete(P(target), True)  # ours by token, never committed
+        _drop(fs, P, target)
         raise
     fs.delete(P(f"{target}/{token}"), False)
+    if keep is not None:
+        _retain_versions(spark, path, committed[-max(keep, 1):], listed)
+    return nxt
+
+
+def _drop(fs, P, vdir: str) -> None:
+    """Delete our version dir, marker first, so no reader sees it torn."""
+    fs.delete(P(f"{vdir}/{_SUCCESS}"), False)
+    fs.delete(P(vdir), True)
 
 
 def _claim(
@@ -512,48 +534,26 @@ def _claim(
     nxt: int,
     parts: list[str],
 ) -> str:
-    """CAS-claim ``t={nxt}`` by renaming ``stage`` onto it (the one claim
-    rename of this module) and return the ownership token the claim
-    holds until its marker lands; raise :class:`ConcurrentMergeError`
-    when another writer holds the version.
+    """CAS-claim ``t={nxt}`` by renaming the complete ``stage`` onto it
+    (the one claim rename of this module, and the commit point) and
+    return the ownership token it carries; raise
+    :class:`ConcurrentMergeError` when another writer holds the version.
 
     Ownership is POSITIVE: we own ``t={nxt}`` iff the writer-unique
     token that rode in our stage sits directly under it (HDFS refuses
     an existing destination, posix renames INTO it). A stage deleted out
     of band makes the token create re-make an EMPTY stage, so every
-    entry of ``parts`` must arrive with the claim too.
-
-    A marker-less ``t={nxt}`` that is EMPTY (a live claim always holds
-    its token) or older than ``_STALE_CLAIM_MS`` is a crashed writer's
-    claim that can never commit: it is adopted (deleted, then claimed),
-    or every later writer would find it and raise forever. Until then
-    the error states the claim's age and when it becomes adoptable."""
+    entry of ``parts`` (``_SUCCESS`` among them) must arrive with the
+    claim too."""
     fs, P = _hadoop_fs(spark, path)
     stage_name = stage.rsplit("/", 1)[1]
     token = f"._CLAIM-{stage_name[len('.stage-'):]}"
     fs.create(P(f"{stage}/{token}"), True).close()
     vdir = f"{path}/t={nxt}"
-    target = P(vdir)
-    taken = fs.exists(target)
-    held = ""  # why a marker-less claim still blocks this write
-    if taken and not fs.exists(P(f"{vdir}/{_SUCCESS}")):
-        now_ms = int(time.time() * 1000)
-        age_ms = now_ms - fs.getFileStatus(target).getModificationTime()
-        if age_ms > _STALE_CLAIM_MS or not fs.listStatus(target):
-            fs.delete(target, True)
-            taken = False
-        else:
-            age_s, stale_s = age_ms // 1000, _STALE_CLAIM_MS // 1000
-            held = (
-                f"; its claim has no commit marker and is {age_s} s old: "
-                f"if that writer stopped, the claim becomes adoptable at "
-                f"{stale_s} s old, in {stale_s - age_s} s"
-            )
-    if not taken:
-        fs.rename(P(stage), target)
+    fs.rename(P(stage), P(vdir))
     claimed = fs.exists(P(f"{vdir}/{token}"))
     if claimed and not all(fs.exists(P(f"{vdir}/{p}")) for p in parts):
-        fs.delete(target, True)  # ours by token; bogus — remove it
+        _drop(fs, P, vdir)  # ours by token; bogus — remove it
         claimed = False
     if not claimed:
         # posix rename-into: our stage may have landed NESTED inside
@@ -562,27 +562,29 @@ def _claim(
         fs.delete(P(stage), True)
         raise ConcurrentMergeError(
             f"version t={nxt} under {path} was claimed by a concurrent "
-            f"writer (this write read t={nxt - 1}){held}; re-read and retry"
+            "writer; re-read and retry"
         )
     return token
 
 
-def _reap_abandoned(spark: SparkSession, path: str, newest: int) -> None:
-    """GC of crashed writers' leftovers: stage dot-dirs, and claims past
-    the ``newest`` commit without a ``_SUCCESS`` marker, once
-    older than ``_STALE_CLAIM_MS`` (the age keeps a live writer's safe)."""
+def _reap_abandoned(spark: SparkSession, path: str) -> list[int]:
+    """Every ``t=N`` dir under ``path``, committed or not, from ONE
+    listing that also deletes crashed writers' stage dot-dirs older than
+    ``_STALE_CLAIM_MS`` (the age keeps a live writer's safe). A stopped
+    writer leaves nothing else to reap: its version dir is committed,
+    or a dead dir that numbering skips and retention deletes."""
     fs, P = _hadoop_fs(spark, path)
+    if not fs.exists(P(path)):
+        return []  # a first publish
     cutoff_ms = int(time.time() * 1000) - _STALE_CLAIM_MS
+    out = []
     for st in fs.listStatus(P(path)):
         name = st.getPath().getName()
-        stage = name.startswith(".stage-t")
-        claim = _is_version_dir_name(name) and int(name[2:]) > newest
-        if (
-            (stage or claim)
-            and st.getModificationTime() < cutoff_ms
-            and (stage or not fs.exists(P(st.getPath(), _SUCCESS)))
-        ):
+        if _is_version_dir_name(name):
+            out.append(int(name[2:]))
+        elif name.startswith(".stage-t") and st.getModificationTime() < cutoff_ms:
             fs.delete(st.getPath(), True)
+    return out
 
 
 _GLOB_SPECIALS = set("*?[]{}\\")
@@ -621,11 +623,11 @@ def table_versions(spark: SparkSession, path: str) -> list[int]:
 
 def current_table_path(spark: SparkSession, path: str) -> str:
     """Current committed version dir; legacy flat tables (no t=N yet,
-    e.g. user-created parquet) resolve to the table root. If a crashed
-    FIRST publish left an uncommitted t=N beside legacy root files, the
-    root resolves to a ``*.parquet`` glob so partition discovery never
-    mixes the two depths (the next publish adopts the crashed claim, see
-    :func:`_claim`)."""
+    e.g. user-created parquet) resolve to the table root. If a stopped
+    FIRST publish left a dead t=N beside legacy root files, the root
+    resolves to a ``*.parquet`` glob so partition discovery never mixes
+    the two depths (the next publish numbers past the dead dir and its
+    retention deletes it)."""
     vs = table_versions(spark, path)
     if vs:
         return f"{path}/t={vs[-1]}"
@@ -705,9 +707,9 @@ def _is_version_dir_name(name: str) -> bool:
 
 _STATS_FILE = "_STATS.json"
 
-# staged writes leave _SUCCESS out: the stage is renamed into place
-# before the commit re-check, so Spark's own marker would publish early
-_NO_SUCCESS_FILE = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
+# Spark's own _SUCCESS, written into the stage, is the commit marker:
+# it is asked for even where a session turns it off
+_MARK_SUCCESS = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
 
 
 def read_table_stats(
@@ -756,12 +758,11 @@ def publish_table(
     from pyspark.sql import Observation
 
     vs = table_versions(spark, path)
-    nxt = (vs[-1] if vs else 0) + 1
     obs = Observation()
     aggs = [F.count(F.lit(1)).alias("rows")] + [
         F.expr(e).alias(name) for name, e in (stats_exprs or {}).items()
     ]
-    w = df.observe(obs, *aggs).write.option(_NO_SUCCESS_FILE, "false")
+    w = df.observe(obs, *aggs).write.option(_MARK_SUCCESS, "true")
     if partition_by:
         w = w.partitionBy(*partition_by)
     fs, P = _hadoop_fs(spark, path)
@@ -777,13 +778,9 @@ def publish_table(
             P(f"{dest}/{_STATS_FILE}"),
             {**obs.get, **(extra_stats or {}), "schema": df.schema.json()},
         )
-        return [_STATS_FILE]
+        return [_STATS_FILE, _SUCCESS]
 
-    _commit(spark, path, nxt, stage)
-    _reap_abandoned(spark, path, nxt)
-    if keep is not None:
-        for old in vs[: -(keep - 1)] if keep > 1 else vs:
-            fs.delete(P(f"{path}/t={old}"), True)
+    nxt = _commit(spark, path, vs[-1] if vs else 0, stage, keep)
     if not vs:
         # Migrated a legacy flat table: its root-level DATA files are now
         # shadowed by t=1 — remove them so a raw reader of the table root
@@ -932,22 +929,19 @@ def drop_bucketed(spark: SparkSession, table_name: str) -> None:
     spark.sql(f"DROP TABLE IF EXISTS {table_name}")
 
 
-def _retain_versions(spark: SparkSession, path: str, live: list[int]) -> None:
+def _retain_versions(
+    spark: SparkSession, path: str, live: list[int], listed: list[int] | None = None
+) -> None:
     """Retention: every version dir below the oldest ``live`` one is
-    deleted. Versions at or above it are live or a writer in flight
-    builds on them."""
-    if not live:
-        return
+    deleted, committed or dead. Versions at or above it are live or a
+    writer in flight builds on them. ``listed``: the commit's own
+    listing of ``path``, reused."""
     fs, P = _hadoop_fs(spark, path)
-    floor = min(live)
-    for st in fs.listStatus(P(path)):
-        name = st.getPath().getName()
-        if (
-            st.isDirectory()
-            and _is_version_dir_name(name)
-            and int(name[2:]) < floor
-        ):
-            fs.delete(st.getPath(), True)
+    if listed is None:
+        listed = _reap_abandoned(spark, path)
+    for v in listed:
+        if v < min(live):
+            fs.delete(P(f"{path}/t={v}"), True)
 
 
 # -- catalog: one commit pins several tables ----------------------------------
@@ -956,10 +950,12 @@ def _retain_versions(spark: SparkSession, path: str, live: list[int]) -> None:
 # indexes; the centroid/assignment pair of an IVF index; the
 # codebook/code pair of a PQ index) are pinned by one more versioned
 # file, {root}/_catalog/t={M}/_CATALOG.json, mapping each table (a path
-# under root) to its committed version and layout. A writer publishes
-# its table versions with keep=None, then commits catalog M+1 through
-# _commit; no catalog reader sees those versions before that. A writer
-# stopped between two table commits leaves catalog M whole, and of two
+# under root) to its committed version and layout. A writer that read
+# catalog M publishes its table versions with keep=None, then commits
+# the next catalog through _commit with M as its base; no catalog reader
+# sees those versions before that. A writer stopped before the catalog
+# rename leaves catalog M whole (its table versions are never named and
+# retention deletes them); one stopped after it has committed. Of two
 # writers that read catalog M one commits and the other raises
 # ConcurrentMergeError (the reference's multi-tree sled transaction,
 # ref:src/advanced_storage.rs:177-191). Retention follows the catalogs:
@@ -1014,25 +1010,24 @@ def commit_catalog(
     base: Catalog,
     tables: dict[str, tuple[int, str]],
 ) -> None:
-    """Commit ``tables`` as catalog ``base.version + 1`` (nothing when
-    they equal the base's; a lost race raises ConcurrentMergeError),
-    then keep, of every table it moved and of the catalog itself, only
-    the versions the two newest catalogs reference (and newer ones:
-    writers in flight)."""
+    """Commit ``tables`` as the next catalog over ``base``, the catalog
+    the writer read (nothing when they equal the base's; a lost race
+    raises ConcurrentMergeError), then keep, of every table it moved
+    and of the catalog itself, only the versions the two newest
+    catalogs reference (and newer ones: writers in flight)."""
     if tables == base.tables:
         return
-    path, nxt = f"{root}/_catalog", base.version + 1
+    path = f"{root}/_catalog"
     fs, P = _hadoop_fs(spark, path)
 
     def stage(dest: str):
-        # the writer-private stage makes a direct write enough (the
-        # publish_table sidecar rule); _claim checks the file arrived
+        # the writer-private stage makes direct writes enough (the
+        # publish_table sidecar rule); _claim checks both arrived
         _put_json(fs, P(f"{dest}/{_CATALOG}"), {"tables": tables})
-        return [_CATALOG]
+        fs.create(P(f"{dest}/{_SUCCESS}"), True).close()
+        return [_CATALOG, _SUCCESS]
 
-    _commit(spark, path, nxt, stage)
-    _reap_abandoned(spark, path, nxt)
-    _retain_versions(spark, path, [base.version, nxt])
+    _commit(spark, path, base.version, stage, keep=2)
     for table, entry in tables.items():
         old = base.tables.get(table)
         if old != entry:

@@ -19,9 +19,10 @@ This module holds the stream operators that are their own capability:
   windows with a watermark for late data, and a z-score gate.
 
 On plain parquet each micro-batch publishes new table versions through
-sources.tables.publish_table, whose commit point is written after the
-staged data and _STATS.json: a crash mid-batch leaves readers on the
-previous version, and the replayed batch publishes normally. foreachBatch
+sources.tables.publish_table, whose commit point is one rename of a
+stage holding the data, _STATS.json and _SUCCESS: a crash mid-batch
+leaves readers on the previous version or on the whole new one, and the
+replayed batch publishes normally. foreachBatch
 runs one micro-batch at a time, so a stream never races itself; a second
 writer on the same table races to a single winner, and the loser's batch
 fails with ConcurrentMergeError (nothing published) for the restarted

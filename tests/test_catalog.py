@@ -9,8 +9,10 @@ with every index kind are stopped after each table commit in turn (a
 ``Crash`` is a BaseException, the in-process stand-in for a killed
 writer). A fresh instance then still reads the pre-write rows of every
 table and answers a cached search as before, the next write succeeds,
-and every index equals a fresh build. Two writers racing on separate
-instances both land. A warm read lists the filesystem at most once.
+and every index equals a fresh build. A writer killed right after a
+claim rename (the commit point) never blocks the next write. Two
+writers racing on separate instances both land. A warm read lists the
+filesystem at most once.
 """
 
 from __future__ import annotations
@@ -153,6 +155,59 @@ def test_stopped_write_leaves_the_previous_catalog(
         assert set(NEW) <= docs
     else:
         assert not docs & set(DOOMED)
+    _assert_fresh_build(after)
+    shutil.rmtree(d, ignore_errors=True)
+
+
+@pytest.mark.parametrize("stop", ["table", "catalog"])
+@pytest.mark.parametrize("op", ["add", "delete"])
+def test_write_killed_after_a_claim_rename_never_blocks_the_next(
+    spark, store, monkeypatch, op, stop
+):
+    """A writer killed right after the rename of its first table commit,
+    or of its catalog commit: the rename committed that version whole,
+    so the next write on a fresh instance succeeds at once, no dir
+    aged. Readers see the previous rows after a table stop, the killed
+    write's rows after a catalog stop."""
+    d = _copy(store, f"renamed-{op}-{stop}")
+    real_claim, real_list = T._claim, T._versions_with_marker
+    renamed = []
+
+    def claim(spark_, path, *args, **kwargs):
+        token = real_claim(spark_, path, *args, **kwargs)
+        if stop == "table" or path.endswith("/_catalog"):
+            renamed.append(path)
+        return token
+
+    def listing(*args, **kwargs):  # the step after the rename
+        if renamed:
+            raise Crash()
+        return real_list(*args, **kwargs)
+
+    monkeypatch.setattr(T, "_claim", claim)
+    monkeypatch.setattr(T, "_versions_with_marker", listing)
+    with pytest.raises(Crash):
+        _write(GrapeVectorDB(spark, d), store, op)
+    monkeypatch.undo()
+    assert renamed[0].endswith("/_catalog") == (stop == "catalog")
+
+    killed = GrapeVectorDB(spark, d)
+    rows = _snapshot(killed)
+    if stop == "table":
+        assert rows == store["rows"]
+    else:
+        _assert_fresh_build(killed)
+
+    after = GrapeVectorDB(spark, d)
+    _write(after, store, op)
+    docs = {r["doc_id"] for r in after.documents().collect()}
+    if op == "add":
+        assert set(NEW) <= docs
+    else:
+        assert not docs & set(DOOMED)
+    if stop == "catalog":
+        # the killed write had landed: repeating it changes no row
+        assert _snapshot(GrapeVectorDB(spark, d)) == rows
     _assert_fresh_build(after)
     shutil.rmtree(d, ignore_errors=True)
 
@@ -340,7 +395,8 @@ def test_bucketed_layout_is_gone_and_an_old_entry_raises_until_rebuilt(
     old.build_index("sq")
     assert old._entry("index_sq")[1] == "plain"
     assert old.search(vector=qv, limit=5, index="sq").collect() == want
-    # the rebuild deleted the legacy version dirs, nothing a writer made
+    # the rebuild numbered past the legacy dir and a writer's dir alike,
+    # and deleted neither
     assert os.path.isdir(live_claim)
     shutil.rmtree(live_claim)
 

@@ -1,15 +1,18 @@
 """One commit protocol for every versioned table (sources/tables.py
-``_commit``): a publish stages its files, CAS-claims ``t={N+1}``,
-re-checks the committed versions and only then writes ``_SUCCESS``.
+``_commit``): a publish numbers its version past every ``t=N`` dir on
+disk, stages its files, sidecar and ``_SUCCESS`` together, commits them
+with ONE CAS rename onto ``t={N+1}``, then re-checks the committed
+versions.
 
-Fault injection: a writer stopped after each step (staged, claimed,
-marker written, GC) leaves readers on a committed version whose stats
-are readable, and the next write succeeds. A stop is a ``Crash`` (a
-BaseException, so no cleanup handler runs — the in-process stand-in for
-a killed writer) raised from the step that follows. Races: two writers
-that listed the same version produce exactly one winner. Crashed
-writers' stages and claims are reaped or adopted once stale, never
-while a live writer may own them.
+Fault injection: a writer stopped after each step (staged, renamed, GC)
+leaves readers on a committed version whose stats are readable, and the
+next write succeeds at once. A stop is a ``Crash`` (a BaseException, so
+no cleanup handler runs — the in-process stand-in for a killed writer)
+raised from the step that follows. Races: two writers that listed the
+same version produce exactly one winner. A marker-less ``t=N`` dir
+(a stopped writer's, a legacy layout's) never blocks a write and is
+never read; crashed writers' stages are reaped once stale, never while
+a live writer may own them. A publish lists the table three times.
 """
 
 from __future__ import annotations
@@ -94,7 +97,7 @@ def test_stopped_writer_leaves_last_commit_and_next_write_succeeds(
     assert len(_stages(p)) == 1 and not os.path.exists(f"{p}/t=2")
     readers_on([1], committed)
 
-    # 2) stopped after the claim, before the marker (in the re-check)
+    # 2) stopped right after the claim rename (in the re-check)
     def fail_after_claim(exc):
         real_claim, real_list = T._claim, T._versions_with_marker
         claimed = []
@@ -111,49 +114,37 @@ def test_stopped_writer_leaves_last_commit_and_next_write_succeeds(
         monkeypatch.setattr(T, "_claim", claim)
         monkeypatch.setattr(T, "_versions_with_marker", listing)
 
-    # an error the writer survives releases its claim at once
+    # an error the writer survives drops its version again
     fail_after_claim(IOError("disk"))
     with pytest.raises(IOError):
         lay.write(spark, p, 1)
     monkeypatch.undo()
     assert not os.path.exists(f"{p}/t=2")
-    readers_on([1])
-    # a killed writer's claim holds the version while it may be live ...
+    readers_on([1], committed)
+    # a killed writer's rename has committed the version whole
     fail_after_claim(Crash())
     with pytest.raises(Crash):
         lay.write(spark, p, 1)
     monkeypatch.undo()
-    assert glob.glob(f"{p}/t=2/._CLAIM-*")  # not adoptable while fresh
-    # ... a write meanwhile raises, naming the claim's age and when it
-    # becomes adoptable (a stopped writer is diagnosable from the error)
-    with pytest.raises(
-        T.ConcurrentMergeError,
-        match=r"no commit marker and is \d+ s old: .* adoptable at 86400 s "
-        r"old, in \d+ s",
-    ):
-        lay.write(spark, p, 1)
-    readers_on([1], committed)
-    # ... and is adopted once stale; the stale stage of 1) is reaped
-    _age(f"{p}/t=2")
-    for s in _stages(p):
-        _age(f"{p}/{s}")
-    lay.write(spark, p, 1)
     committed = lay.expected(1)
     readers_on([1, 2], committed)
-    assert _stages(p) == []
 
-    # 3) stopped after the marker, before GC: the new version is live
-    monkeypatch.setattr(T, "_reap_abandoned", crash)
+    # 3) the next write succeeds at once, no dir aged; stopped after
+    # its commit, before GC, the new version is live
+    monkeypatch.setattr(T, "_retain_versions", crash)
     with pytest.raises(Crash):
         lay.write(spark, p, 2)
     monkeypatch.undo()
     committed = lay.expected(2)
     readers_on([1, 2, 3], committed)
 
-    # 4) a complete write after it: GC back to keep=2 versions
+    # 4) a complete write after it: GC back to keep=2 versions, the
+    # killed writer's claim token going with its version; the fresh
+    # stage of 1) may be a live writer's, so it stays
     lay.write(spark, p, 3)
     readers_on([3, 4], lay.expected(3))
     assert not glob.glob(f"{p}/t=*/._CLAIM-*")
+    assert len(_stages(p)) == 1
 
 
 def _hashes(d):
@@ -256,10 +247,10 @@ def test_concurrent_merge_loser_aborts_cleanly(spark, tmp_path, monkeypatch):
 def test_concurrent_merge_stale_snapshot_detected_after_gc(
     spark, tmp_path, monkeypatch
 ):
-    """Commit step 3: under keep=1 retention the contended version dir
-    can be deleted before the straggler's rename — the rename then
-    SUCCEEDS, and only the committed-version re-check stands between a
-    stale snapshot and a silent lost update.
+    """The re-check after the rename: under keep=1 retention the
+    contended version dir can be deleted before the straggler's rename —
+    the rename then SUCCEEDS, and only the committed-version re-check
+    stands between a stale snapshot and a silent lost update.
 
     The straggler read t=1 and staged its merge; before its claim two
     keep=1 upserts commit t=2 and t=3, and t=3's retention deletes t=2."""
@@ -316,52 +307,52 @@ def test_gc_reaps_only_stale_merge_stages(spark, tmp_path):
     assert T.table_versions(spark, p) == [1, 2]
 
 
-def test_crashed_claim_is_adopted_by_next_merge(spark, tmp_path):
-    """A writer that died between the CAS claim rename and the marker
-    write leaves an uncommitted t=N+1 dir. Writes must ADOPT (delete and
-    re-claim) it once it is older than the stale-claim cutoff — GC alone
-    cannot help, because GC only runs after a successful write, so the
-    corpse would otherwise mean permanent ConcurrentMergeError for the
-    table (ADVICE r7 medium)."""
+def _dead_dir(p, v, aged, junk):
+    """A marker-less ``t={v}``: a stopped writer's or a legacy layout's."""
+    d = os.path.join(p, f"t={v}")
+    os.makedirs(d)
+    if junk:
+        with open(os.path.join(d, "part-junk.parquet"), "wb") as f:
+            f.write(b"not a real parquet")
+    if aged:
+        _age(d)
+    return d
+
+
+@pytest.mark.parametrize("junk", [False, True], ids=["empty", "junk"])
+@pytest.mark.parametrize("aged", [False, True], ids=["fresh", "aged"])
+def test_dead_version_dir_never_blocks_a_write(spark, tmp_path, aged, junk):
+    """A marker-less t=N+1, fresh or two days old, empty or holding a
+    junk parquet file: publish_table and upsert_table number past it at
+    once, no reader ever reads it, and retention deletes it once it
+    falls below the kept floor."""
     p = str(tmp_path / "tbl")
     T.publish_table(spark, p, _base(spark))
-    corpse = os.path.join(p, "t=2")
-    os.makedirs(corpse)
-    junk = os.path.join(corpse, "part-junk.parquet")
-    with open(junk, "wb") as f:
-        f.write(b"not a real parquet")
-    _age(corpse)
+    dead = _dead_dir(p, 2, aged, junk)
 
-    _upsert(spark, p, [(7, "revived", 700.0)])
+    T.publish_table(spark, p, _base(spark))
+    assert T.table_versions(spark, p) == [1, 3]
+    assert os.path.isdir(dead)  # not below the kept floor t=1 yet
+    _upsert(spark, p, [(7, "w", 700.0)])
     got = _texts(spark, p)
-    assert got[7] == "revived" and len(got) == 200
-    assert T.table_versions(spark, p) == [1, 2]
-    # the corpse's junk did not leak into the adopted version
-    assert not os.path.exists(junk)
+    assert got[7] == "w" and got[9] == "text-9" and len(got) == 200
+    assert T.table_versions(spark, p) == [3, 4]
+    assert not os.path.exists(dead)
 
 
-def test_fresh_uncommitted_claim_still_loses(spark, tmp_path):
-    """A RECENT marker-less t=N+1 may belong to a live writer between
-    its claim and its marker commit — a write must NOT adopt it."""
+def test_dead_dirs_past_the_next_version_are_skipped(spark, tmp_path):
+    """Dead dirs well past the newest commit are numbered over, then
+    retained away like any version below the floor."""
     p = str(tmp_path / "tbl")
     T.publish_table(spark, p, _base(spark))
-    os.makedirs(os.path.join(p, "t=2", "cluster=0"))
-    with pytest.raises(T.ConcurrentMergeError):
-        _upsert(spark, p, [(7, "late", 700.0)])
-
-
-def test_gc_reaps_stale_crashed_claims(spark, tmp_path):
-    """Defense in depth: GC (which runs after every successful write)
-    also reaps marker-less t=* dirs older than the cutoff, even ones
-    beyond the next contended version."""
-    p = str(tmp_path / "tbl")
-    T.publish_table(spark, p, _base(spark))
-    corpse = os.path.join(p, "t=9")
-    os.makedirs(corpse)
-    _age(corpse)
+    dead = [_dead_dir(p, v, aged=False, junk=True) for v in (5, 9)]
     _upsert(spark, p, [(7, "w", 7.0)])
-    assert not os.path.isdir(corpse)
-    assert T.table_versions(spark, p) == [1, 2]
+    assert T.table_versions(spark, p) == [1, 10]
+    _upsert(spark, p, [(8, "w", 8.0)])
+    assert T.table_versions(spark, p) == [10, 11]
+    assert not any(os.path.exists(d) for d in dead)
+    got = _texts(spark, p)
+    assert got[7] == got[8] == "w" and len(got) == 200
 
 
 def test_out_of_band_stage_deletion_cannot_misclaim(spark, tmp_path, monkeypatch):
@@ -389,6 +380,41 @@ def test_out_of_band_stage_deletion_cannot_misclaim(spark, tmp_path, monkeypatch
     assert _texts(spark, p)[7] == "text-7"
     _upsert(spark, p, [(7, "real", 700.0)])
     assert _texts(spark, p)[7] == "real"
+
+
+class _Listings:
+    """Counts listStatus/globStatus calls on every handle _hadoop_fs
+    hands out."""
+
+    def __init__(self, fs, counts):
+        self._fs, self._counts = fs, counts
+
+    def __getattr__(self, name):
+        if name in ("listStatus", "globStatus"):
+            self._counts[name] = self._counts.get(name, 0) + 1
+        return getattr(self._fs, name)
+
+
+def test_a_publish_lists_the_table_three_times(spark, tmp_path, monkeypatch):
+    """A publish over an existing table lists it three times: the base
+    version (a glob), the numbering listing — which also reaps stale
+    stages and names the dirs retention deletes — and the re-check (a
+    glob). One rename replacing the marker step added no listing."""
+    p = str(tmp_path / "tbl")
+    T.publish_table(spark, p, _base(spark))
+    real, counts = T._hadoop_fs, {}
+
+    def counted(spark_, path):
+        fs, P = real(spark_, path)
+        return _Listings(fs, counts), P
+
+    monkeypatch.setattr(T, "_hadoop_fs", counted)
+    for keep in (2, 2, None):
+        counts.clear()
+        T.publish_table(spark, p, _base(spark), keep=keep)
+        assert counts == {"globStatus": 2, "listStatus": 1}, keep
+    monkeypatch.undo()
+    assert T.table_versions(spark, p) == [2, 3, 4]
 
 
 def test_facade_write_retries_bounded_attempts(spark, docs, tmp_path, monkeypatch):

@@ -8,10 +8,11 @@ parquet filter pushdown, these fail even though results stay correct.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from conftest import SF_DIR
-from grape_vector_db_spark.operators import search, sparse
+from grape_vector_db_spark.operators import dedup, search, sparse, textanalysis
 from grape_vector_db_spark.operators.search import query_vector_of
 
 
@@ -89,12 +90,28 @@ def test_token_entropy_tokenizes_each_document_once(spark, docs):
     """token_entropy explodes with explode_outer + IS NOT NULL (the
     doc_terms form): a size filter or an inner explode copied the
     tokenizer into a pushed-down filter (3 copies)."""
-    from grape_vector_db_spark.operators import textanalysis
-
     plan = optimized_of(
         textanalysis.token_entropy(docs.where(F.col("doc_id") >= 0))
     )
     assert plan.count("filter(transform(split(") == 1, plan
+
+
+@pytest.mark.parametrize(
+    "op",
+    [
+        lambda d: textanalysis.collocations(d, min_count=5, top_k=50),
+        lambda d: dedup.dup_span_coverage(d, n=5, min_df=2),
+        lambda d: dedup.trim_duplicate_spans(d, n=5, min_df=2),
+    ],
+    ids=["collocations", "dup_span_coverage", "trim_duplicate_spans"],
+)
+def test_ws_token_explodes_tokenize_once_per_branch(spark, docs, op):
+    """Each explode branch of these operators holds the whitespace
+    tokenizer once (explode_outer + IS NOT NULL): a size filter or an
+    inner explode copied it into pushed-down filters (13, 9 and 8
+    copies over 5, 5 and 4 explodes)."""
+    plan = optimized_of(op(docs.where(F.col("doc_id") >= 0)))
+    assert plan.count("filter(split(") == plan.count("Generate "), plan
 
 
 def test_class_tfidf_tokenizes_each_document_once(spark, docs, monkeypatch):
@@ -295,7 +312,6 @@ def test_incremental_probe_bounded_shuffles_no_cartesian(spark):
     no CartesianProduct / nested-loop join anywhere, and no
     single-partition exchange — the properties that keep the daily
     delta probe linear in index size at 100 TB."""
-    from grape_vector_db_spark.operators import dedup
     from grape_vector_db_spark.plans.audit import audit_plan
 
     corpus = spark.createDataFrame(
@@ -315,8 +331,6 @@ def test_incremental_probe_bounded_shuffles_no_cartesian(spark):
 def test_winnow_fingerprints_is_shuffle_free(spark):
     """Winnowing must stay a narrow per-row expression chain: the k-gram
     hash and window-min selection never justify an Exchange."""
-    from grape_vector_db_spark.operators import dedup
-
     df = spark.createDataFrame(
         [(1, "some document text for winnowing")], "doc_id long, text string"
     )
@@ -327,8 +341,6 @@ def test_winnow_fingerprints_is_shuffle_free(spark):
 def test_bpe_segment_is_shuffle_free(spark):
     """Applying trained BPE merges is chained replaces — zero Exchange
     regardless of merge-list length."""
-    from grape_vector_db_spark.operators import textanalysis
-
     df = spark.createDataFrame(
         [(1, "low lower lowest")], "doc_id long, text string"
     )
