@@ -132,10 +132,11 @@ def test_stopped_write_leaves_the_previous_catalog(
     real, seen = T._commit, []
 
     def commit(*args, **kwargs):
-        real(*args, **kwargs)
+        version = real(*args, **kwargs)
         seen.append(args[1])
         if len(seen) == stop_after + 1:
             raise Crash()
+        return version
 
     monkeypatch.setattr(T, "_commit", commit)
     with pytest.raises(Crash):
