@@ -364,11 +364,11 @@ class GrapeVectorDB:
     def _write(self, body):
         """Run ``body`` as one facade write on the newest catalog plus
         its own pending versions, then one catalog commit. A
-        ConcurrentMergeError (a table or catalog commit that lost its
-        claim rename or its re-check) re-runs the body on the winner's
-        catalog, at most _WRITE_ATTEMPTS times; callers materialize
-        their inputs first, so a retry re-reads only stored tables. A
-        write called inside another joins it."""
+        ConcurrentMergeError (a table or catalog commit that found a
+        newer one or lost its claim rename) re-runs the body on the
+        winner's catalog, at most _WRITE_ATTEMPTS times; callers
+        materialize their inputs first, so a retry re-reads only stored
+        tables. A write called inside another joins it."""
         if self._base is not None:
             return body()
         for attempt in range(self._WRITE_ATTEMPTS):

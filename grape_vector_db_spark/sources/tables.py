@@ -353,16 +353,19 @@ def exists(df: DataFrame, id_value, id_col: str = "id") -> bool:
 # holding the files, the sidecar (a table's _STATS.json, a catalog's
 # _CATALOG.json) and the _SUCCESS marker. A version is visible iff its
 # marker exists, so readers see the old or the new version, never a
-# partial one. Numbering skips every t=N dir on disk, so a dir a stopped
-# writer left is never waited on. Writers that read the same t=N race to
-# ONE winner, each loser raising ConcurrentMergeError having published
-# nothing (the reference's two-tree sled transaction,
+# partial one. Numbering skips every marker-less t=N dir on disk, so a
+# dir a stopped writer left is never waited on. Writers that read the
+# same t=N race to ONE winner, each loser raising ConcurrentMergeError
+# having published nothing (the reference's two-tree sled transaction,
 # src/advanced_storage.rs:145-191). The last ``keep`` versions survive
 # GC for in-flight readers. Filesystem ops go through the Hadoop
 # FileSystem API (HDFS/object stores; on the latter the rename is a
-# copy).
+# copy, so _SUCCESS follows it, and it is no CAS: one writer a table).
 
 _SUCCESS = "_SUCCESS"
+
+# schemes whose directory rename is atomic; elsewhere it is a copy
+_ATOMIC_RENAME_SCHEMES = ("file", "hdfs")
 
 # a stage older than this cannot belong to a live writer (a stage lives
 # for one Spark write)
@@ -475,36 +478,44 @@ def _commit(
     ``base`` (0: none) and return its number — the one commit protocol
     of every versioned writer:
 
-    1. :func:`_reap_abandoned` lists ``path``; the version is numbered
-       past every ``t=N`` dir on it, committed or not;
+    1. :func:`_reap_abandoned` lists ``path``; a version committed above
+       ``base`` aborts this stale write before it renames anything, and
+       the version is numbered past the dead dirs above ``base``;
     2. ``stage_write(stage)`` writes the version's files, sidecar and
        ``_SUCCESS`` into a writer-unique dot-dir and returns the entries
        that must arrive with the claim;
     3. :func:`_claim` renames the stage onto ``t={nxt}``: the commit;
     4. one listing right after the rename re-checks that the only
        committed version above ``base`` is ours, else we delete ours
-       and raise. A writer who read our version needs at least a Spark
-       write before it can commit on top, which outlasts one listing,
-       so an abort here means a freed slot (retention under newer
-       commits) or a gap (a commit after our base read), never a
-       commit built on ours;
+       and raise: a slot retention freed under newer commits, or a gap
+       (a commit between our listing and rename). A writer building on
+       ours needs a Spark write first, which outlasts one listing;
     5. the token is deleted; with ``keep``, retention deletes the
        step-1 dirs below the ``keep`` newest commits, dead ones too.
 
     Nothing is created after the rename: a writer stopped at any step
-    leaves no version or a whole one."""
+    leaves no version or a whole one. Only where the rename is a copy
+    does ``_SUCCESS`` follow it, so no reader sees a partial copy."""
     fs, P = _hadoop_fs(spark, path)
     listed = _reap_abandoned(spark, path)
+    if any(v > base and fs.exists(P(f"{path}/t={v}/{_SUCCESS}")) for v in listed):
+        raise ConcurrentMergeError(f"{path} moved past t={base}; re-read and retry")
     nxt = max(listed, default=0) + 1
     stage = f"{path}/.stage-t{nxt}-{uuid.uuid4().hex[:8]}"
+    copy = fs.getScheme() not in _ATOMIC_RENAME_SCHEMES
     try:
         parts = stage_write(stage)
+        if copy:
+            fs.delete(P(f"{stage}/{_SUCCESS}"), False)
+            parts.remove(_SUCCESS)
     except Exception:
         fs.delete(P(stage), True)
         raise
     token = _claim(spark, path, stage, nxt, parts)
     target = f"{path}/t={nxt}"
     try:
+        if copy:
+            fs.create(P(f"{target}/{_SUCCESS}"), True).close()
         committed = _versions_with_marker(spark, path)
         newer = [v for v in committed if v > base]
         if newer != [nxt]:

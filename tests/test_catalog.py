@@ -11,8 +11,9 @@ writer). A fresh instance then still reads the pre-write rows of every
 table and answers a cached search as before, the next write succeeds,
 and every index equals a fresh build. A writer killed right after a
 claim rename (the commit point) never blocks the next write. Two
-writers racing on separate instances both land. A warm read lists the
-filesystem at most once.
+writers racing on separate instances both land, and one whose catalog
+went stale before its catalog commit renames nothing. A warm read lists
+the filesystem at most once.
 """
 
 from __future__ import annotations
@@ -210,6 +211,57 @@ def test_write_killed_after_a_claim_rename_never_blocks_the_next(
         # the killed write had landed: repeating it changes no row
         assert _snapshot(GrapeVectorDB(spark, d)) == rows
     _assert_fresh_build(after)
+    shutil.rmtree(d, ignore_errors=True)
+
+
+def test_a_catalog_commit_over_a_stale_catalog_renames_nothing(
+    spark, store, monkeypatch
+):
+    """Writer B read catalog M; writer A commits M+1 before B's catalog
+    commit, and B is armed to stop right after a catalog claim rename.
+    B must raise before that rename and land on a retry over A's
+    catalog: renaming its stale catalog onto M+2 would serve a catalog
+    without A's write as the newest, for good once B was killed there.
+    A fresh reader between B's two attempts sees A's rows."""
+    d = _copy(store, "stale-catalog")
+    m = GrapeVectorDB(spark, d)._catalog().version
+    real_commit, real_claim = T._commit, T._claim
+    seen = {"renamed": []}
+
+    def commit(spark_, path, base, *args, **kwargs):
+        if not path.endswith("/_catalog") or "base" in seen:
+            return real_commit(spark_, path, base, *args, **kwargs)
+        seen["base"] = base
+        _write(GrapeVectorDB(spark, d), store, "add")  # A: catalog M+1
+        seen["armed"] = True
+        try:
+            return real_commit(spark_, path, base, *args, **kwargs)
+        finally:
+            seen["armed"] = False
+            seen["between"] = {
+                r["doc_id"]
+                for r in GrapeVectorDB(spark, d).documents().collect()
+            }
+
+    def claim(spark_, path, *args, **kwargs):
+        token = real_claim(spark_, path, *args, **kwargs)
+        if seen.get("armed"):
+            seen["renamed"].append(path)
+            raise Crash()
+        return token
+
+    monkeypatch.setattr(T, "_commit", commit)
+    monkeypatch.setattr(T, "_claim", claim)
+    _write(GrapeVectorDB(spark, d), store, "delete")  # B
+    monkeypatch.undo()
+    assert seen["base"] == m and seen["renamed"] == []
+    assert set(NEW) <= seen["between"]
+
+    db = GrapeVectorDB(spark, d)
+    assert db._catalog().version == m + 2
+    docs = {r["doc_id"] for r in db.documents().collect()}
+    assert set(NEW) <= docs and not docs & set(DOOMED)
+    _assert_fresh_build(db)
     shutil.rmtree(d, ignore_errors=True)
 
 

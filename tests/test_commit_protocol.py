@@ -9,7 +9,9 @@ leaves readers on a committed version whose stats are readable, and the
 next write succeeds at once. A stop is a ``Crash`` (a BaseException, so
 no cleanup handler runs — the in-process stand-in for a killed writer)
 raised from the step that follows. Races: two writers that listed the
-same version produce exactly one winner. A marker-less ``t=N`` dir
+same version produce exactly one winner, and a writer that lists a
+version committed after the one it read renames nothing. Where the
+rename is a copy, the marker follows it. A marker-less ``t=N`` dir
 (a stopped writer's, a legacy layout's) never blocks a write and is
 never read; crashed writers' stages are reaped once stale, never while
 a live writer may own them. A publish lists the table three times.
@@ -185,6 +187,76 @@ def test_writers_that_listed_the_same_version_have_one_winner(
     assert lay.versions(spark, p) == [1, 2]
     lay.check_marked(spark, p)
     assert _stages(p) == []
+
+
+def test_a_writer_that_read_a_stale_version_renames_nothing(
+    spark, tmp_path, monkeypatch
+):
+    """The loser read t=1, then the winner commits t=2 in full before the
+    loser lists the table, and the loser is armed to stop right after a
+    claim rename. It must raise before renaming: a rename onto t=3 would
+    serve its stale rows as the newest version until its re-check
+    dropped them, and for good once it was stopped in between."""
+    lay = _Plain()
+    p = str(tmp_path / "tbl")
+    lay.create(spark, p, _rows(spark, "s0", range(20)))
+    real_list, real_claim = T._versions_with_marker, T._claim
+    renamed = []
+
+    def claim_then_stop(*a, **kw):
+        renamed.append(real_claim(*a, **kw))
+        raise Crash()
+
+    def read_then_overtaken(spark_, path):
+        out = real_list(spark_, path)
+        monkeypatch.setattr(T, "_versions_with_marker", real_list)
+        lay.write(spark, p, 2)
+        monkeypatch.setattr(T, "_claim", claim_then_stop)
+        return out
+
+    monkeypatch.setattr(T, "_versions_with_marker", read_then_overtaken)
+    with pytest.raises(T.ConcurrentMergeError, match="moved past t=1"):
+        lay.write(spark, p, 1)
+    monkeypatch.undo()
+    assert renamed == []
+    assert lay.versions(spark, p) == [1, 2]
+    assert lay.read(spark, p) == lay.expected(2)
+    assert not os.path.exists(f"{p}/t=3") and _stages(p) == []
+
+
+def test_a_copy_rename_filesystem_gets_its_marker_after_the_copy(
+    spark, tmp_path, monkeypatch
+):
+    """Where a rename is a file-by-file copy (an object store), the stage
+    carries no _SUCCESS and the marker is created after the rename, so
+    no reader sees a copy in progress as a version. A writer stopped
+    between the two leaves a dead dir that the next write numbers past."""
+    p = str(tmp_path / "tbl")
+    T.publish_table(spark, p, _base(spark))
+    monkeypatch.setattr(T, "_ATOMIC_RENAME_SCHEMES", ())
+    real_claim, staged = T._claim, []
+
+    def claim(spark_, path, stage, *a, **kw):
+        staged.append(sorted(os.listdir(stage)))
+        token = real_claim(spark_, path, stage, *a, **kw)
+        if len(staged) == 1:
+            raise Crash()
+        return token
+
+    monkeypatch.setattr(T, "_claim", claim)
+    with pytest.raises(Crash):
+        _upsert(spark, p, [(7, "stopped", 7.0)])
+    assert "_SUCCESS" not in staged[0] and "_STATS.json" in staged[0]
+    assert os.path.isdir(f"{p}/t=2")
+    assert T.table_versions(spark, p) == [1]
+    assert _texts(spark, p)[7] == "text-7"
+
+    _upsert(spark, p, [(7, "w", 7.0)])
+    monkeypatch.undo()
+    assert "_SUCCESS" not in staged[1]
+    assert T.table_versions(spark, p) == [1, 3]
+    assert T.read_table_stats(spark, p)["rows"] == 200
+    assert _texts(spark, p)[7] == "w"
 
 
 # -- upsert races, crashed writers' leftovers, facade retry budget ---------
